@@ -80,7 +80,7 @@ object LakeMetaProbe {
     // --- bloom-ledger cost at many-small-files scale (r12) -----------------
     //
     // Bloom bits ride the stats blob, so a bloom'd table's needle lookup
-    // pays ONE ledger read at planning; this measures that read against
+    // pays ONE version-record read at planning; this measures that read against
     // the skip it buys and against the no-bloom control (which must open
     // every straddling file). Bits deliberately sized small (2^13) for
     // the many-tiny-files regime — the option's own guidance: size bits
@@ -96,8 +96,10 @@ object LakeMetaProbe {
       .option("bloomFilterColumns", "id")
       .option("bloomFilterBits", (1 << 13).toString)
       .save(bRoot)
-    val ledgerKb =
-      java.nio.file.Files.size(java.nio.file.Paths.get(bRoot, "_graft_stats.json")) / 1024
+    // the record every planning of the table reads (files, vectors, facts)
+    val recordKb = java.nio.file.Files.size(graft.sources.LakeSinkFiles.versionsDir(bRoot)
+      .resolve(graft.sources.LakeSinkFiles.versionName(
+        graft.sources.LakeSinkFiles.listVersions(bRoot).last))) / 1024
     spark.read.format("graft.sources.LakeSink").load(bRoot)
       .filter(col("id") === 1L).collect() // warm
     val needle = bloomFiles.toLong * 20 / 2 + 1 // always inside the id range
@@ -114,7 +116,7 @@ object LakeMetaProbe {
       s""""count_pushed_ms":${f1(tCount)},"rollup_pushed_ms":${f1(tRollup)},""" +
       s""""pruned_plan_ms":${f1(tPrunedPlan)},"files_table_ms":${f1(tFilesTable)},""" +
       s""""snapshot_count_ms":${f1(tSnapshot)},""" +
-      s""""bloom_files":$bloomFiles,"bloom_ledger_kb":$ledgerKb,""" +
+      s""""bloom_files":$bloomFiles,"bloom_record_kb":$recordKb,""" +
       s""""bloom_needle_ms":${f1(tNeedle)}}""")
     spark.stop()
   }

@@ -711,7 +711,7 @@ object Corpus {
     // r15: the train-doc total is the sum of the per-lang counts — one
     // L-row aggregate instead of another full scan of the train split
     // (identical value: every doc lands in exactly one lang group).
-    val tot = pri.agg(sum($"dl").as("dt"))
+    val tot = trainTotal(pri)
     val grid = vocab
       .crossJoin(broadcast(pri.select($"lang")))
       .join(cnt, Seq("lang", "w"), "left")
@@ -749,6 +749,12 @@ object Corpus {
     cnt.unpersist(blocking = false)
     out
   }
+
+  /** ml05's train-doc total over its per-lang counts `pri(lang, dl)` — 0
+    * for an empty train split, like the count of the split it replaced
+    * (a bare sum over zero rows would be NULL). */
+  private[graft] def trainTotal(pri: DataFrame): DataFrame =
+    pri.agg(coalesce(sum(col("dl")), lit(0L)).as("dt"))
 
   /** ml05's DuckDB training/scoring CTE block (ends in `rk`, the ranked
     * per-(doc, candidate) scores) — shared with ml08's evaluation so the

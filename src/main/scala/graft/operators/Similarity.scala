@@ -324,9 +324,7 @@ object Similarity {
     // tie-break are bit-compatible with the old
     // max(struct(ccos, ncid, v, nrm)) (cid unique ⇒ v/nrm were never
     // compared).
-    val packed = cents
-      .agg(sort_array(collect_list(struct($"cid", $"cv", $"cnrm"))).as("kc"))
-    val assigned = c.crossJoin(broadcast(packed))
+    val assigned = c.crossJoin(broadcast(centroidPack(cents, $"cid", $"cv", $"cnrm")))
       .withColumn("b", VectorExpressions.argmaxCos($"v", $"nrm", $"kc"))
       .select($"b.id".as("cid"), $"vec_id".as("neighbor_id"),
         $"v".as("cv2"), $"nrm".as("cnrm2"))
@@ -1443,6 +1441,15 @@ object Similarity {
     * (x−y)² parity). */
   private def sqDistExpr: Column = VectorExpressions.sqDist(col("v"), col("cv"))
 
+  /** The ONE-ROW broadcast pack `kc` of the centroid `fields` (id first,
+    * sorted by it) that the argmin/argmax kernels scan — or ZERO rows for
+    * an empty centroid set, so the cross join assigns nothing (as the
+    * join the kernels replaced did) instead of one null-centroid row per
+    * vector. */
+  private[graft] def centroidPack(cents: DataFrame, fields: Column*): DataFrame =
+    cents.agg(sort_array(collect_list(struct(fields: _*))).as("kc"))
+      .where(size(col("kc")) > 0)
+
   /** One Lloyd assignment: nearest centroid per vector (tie-break by cid —
     * deterministic because the distances are bit-identical by
     * construction). r15 (guide §2.4): the ≤k centroids pack into ONE
@@ -1455,11 +1462,9 @@ object Similarity {
     * empty clusters (it loops the live array); its distance loop and
     * (dist ASC, cid ASC) tie-break are bit-compatible with the old
     * min(struct(dist, cid, v)) (cid unique ⇒ v was never compared). */
-  private def kmAssign(c: DataFrame, cents: DataFrame): DataFrame = {
+  private[graft] def kmAssign(c: DataFrame, cents: DataFrame): DataFrame = {
     VectorExpressions.register(c.sparkSession)
-    val packed = cents
-      .agg(sort_array(collect_list(struct(col("cid"), col("cv")))).as("kc"))
-    c.crossJoin(broadcast(packed))
+    c.crossJoin(broadcast(centroidPack(cents, col("cid"), col("cv"))))
       .withColumn("b", VectorExpressions.argminSq(col("v"), col("kc")))
       .select(col("vec_id"), col("v"), col("b.id").as("cid"),
         col("b.dist").as("dist"))

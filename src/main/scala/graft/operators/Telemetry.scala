@@ -1808,11 +1808,11 @@ object Telemetry {
        FROM ($twinSql) WHERE id < 700 ORDER BY id"""
 
   /** t42 — COUNT(*) from commit-time metadata under the differential
-    * (the `_graft_counts.json` ledger + LakeSinkAggScan — the
+    * (the version record's row counts + LakeSinkAggScan — the
     * footer-row-count role parquet gets for free and gzip JSON does
     * not have): the twin is CTAS'd DATE-partitioned (version 1), a
-    * shifted batch appended (version 2, ledger merged), one partition
-    * metadata-DELETEd (version 3, ledger trimmed with the retired
+    * shifted batch appended (version 2, counts recorded), one partition
+    * metadata-DELETEd (version 3, counts dropped with the retired
     * files), and the query answers a global count plus a
     * partition-filtered count — both completely pushed (LakeCountsSpec
     * pins `graft-lake-agg` in the plan and zero residual aggregation),
@@ -1854,7 +1854,7 @@ object Telemetry {
     * ([[graft.sources.LakeSinkStats]] — the parquet-footer/Iceberg-manifest
     * stats role for the gzip JSON lake): the twin is CTAS'd id-range-
     * clustered into 8 files; the query mixes (a) min/max aggregates that
-    * answer COMPLETELY from the commit-time `_graft_stats.json` ledger
+    * answer COMPLETELY from the version record's per-file stats
     * (LakeStatsSpec pins `graft-lake-agg` + zero residual aggregation)
     * with (b) filtered aggregates whose scans SKIP the files whose
     * [lo, hi] provably cannot match (LakeStatsSpec pins the skip counts)
@@ -2170,12 +2170,12 @@ object Telemetry {
        ORDER BY t.key"""
 
   /** t52 — METADATA-ANSWERED TIME TRAVEL under the differential
-    * (r11: [[graft.sources.LakeSinkFiles.recordVersion]] snapshots the
-    * counts/stats/delete ledgers INTO every version record, trimmed to
-    * that version's file list): the twin is CTAS'd DATE-partitioned
+    * (every version record carries its files' counts, stats and delete
+    * vectors — [[graft.sources.LakeSinkFiles.recordVersion]]): the twin
+    * is CTAS'd DATE-partitioned
     * (version 1) and a shifted batch appended (version 2); the query
     * answers count/min/max against BOTH snapshots via `VERSION AS OF` —
-    * each pushed completely to its OWN version's recorded ledgers
+    * each pushed completely to its OWN version's recorded facts
     * (LakeVersionSpec pins the `graft-lake-agg` plan, the frozen-history
     * law under a later merge-on-read DELETE, and the legacy-record scan
     * fallback) — hash-checked against DuckDB recomputing both states
@@ -2502,7 +2502,7 @@ object Telemetry {
 
   /** t58 — sorted storage-partitioned join under the differential (r11:
     * [[graft.sources.LakeSinkScan]]'s `SupportsReportOrdering` over the
-    * `_graft_sorted.json` ledger): customer and orders land BUCKETED 8
+    * version record's sort claims): customer and orders land BUCKETED 8
     * ways on the customer key AND `sortBy`-sorted on it (the clustered
     * write leaves ONE internally-sorted file per bucket dir), so under
     * `v2.bucketing.enabled` the merge join on the source key plans with
@@ -2568,7 +2568,7 @@ object Telemetry {
     * metadata pushdown answers for the restored state, vacuum makes a
     * version non-restorable loudly.
     *
-    * Scale shape: O(changed files) renames + three ledger writes —
+    * Scale shape: O(changed files) renames + one version record —
     * the accidental-damage undo button at any scale. */
   def t59Restore(s: SparkSession, dir: String): DataFrame = {
     val lakeRoot = TempLakes.catalog(s, "t59")

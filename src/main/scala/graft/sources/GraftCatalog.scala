@@ -266,10 +266,8 @@ class GraftCatalog extends TableCatalog with SupportsNamespaces
           s"$catalogName: bad version '$version' for ${ident.name()} " +
             s"(available: ${LakeSinkFiles.listVersions(dir).mkString(",")}; " +
             s"${e.getMessage})") }
-    val (schema, partCols, files) = LakeSinkFiles.readVersion(dir, v)
-    new LakeSinkSnapshotTable(schema, dir, partCols, files, v,
-      s"$catalogName.lake.${ident.name()}",
-      deletes = LakeSinkFiles.readVersionDeletes(dir, v))
+    new LakeSinkSnapshotTable(LakeSinkFiles.snapshot(dir, v), dir,
+      s"$catalogName.lake.${ident.name()}")
   }
 
   /** `TIMESTAMP AS OF <ts>` — greatest version committed at or before the
@@ -281,10 +279,8 @@ class GraftCatalog extends TableCatalog with SupportsNamespaces
         s"$catalogName: no version of ${ident.name()} at or before " +
           s"timestamp $timestamp (earliest: " +
           s"${LakeSinkFiles.listVersions(dir).headOption.getOrElse("none")})"))
-    val (schema, partCols, files) = LakeSinkFiles.readVersion(dir, v)
-    new LakeSinkSnapshotTable(schema, dir, partCols, files, v,
-      s"$catalogName.lake.${ident.name()}",
-      deletes = LakeSinkFiles.readVersionDeletes(dir, v))
+    new LakeSinkSnapshotTable(LakeSinkFiles.snapshot(dir, v), dir,
+      s"$catalogName.lake.${ident.name()}")
   }
 
   private def lakeSnapshotDir(ident: Identifier): String = {

@@ -111,10 +111,12 @@ private[graft] object LakeCdf {
     * the streaming micro-batches and the batch range read. */
   private[sources] def legsFor(path: String, partCols: Seq[String],
       v: Long, prev: Option[Long]): Seq[LakeCdfInputPartition] = {
-    val filesPrev = prev.map(LakeSinkFiles.readVersion(path, _)._3).getOrElse(Seq.empty)
-    val filesV = LakeSinkFiles.readVersion(path, v)._3
-    val delsPrev = prev.map(LakeSinkFiles.readVersionDeletes(path, _)).getOrElse(Map.empty)
-    val delsV = LakeSinkFiles.readVersionDeletes(path, v)
+    val snapPrev = prev.map(LakeSinkFiles.snapshot(path, _))
+    val snapV = LakeSinkFiles.snapshot(path, v)
+    val filesPrev = snapPrev.map(_.files).getOrElse(Seq.empty)
+    val filesV = snapV.files
+    val delsPrev = snapPrev.map(_.deletes).getOrElse(Map.empty)
+    val delsV = snapV.deletes
     val root = Paths.get(path)
     val identityKeys = LakePart.parseAll(partCols)
       .filter(_.isIdentity).map(_.dirKey).toSet
@@ -282,10 +284,12 @@ private[sources] class LakeCdfMicroBatchStream(cdfSchema: StructType,
   /** Changed-file count of version `v` against its committed predecessor
     * — the admission currency (adds + removes + vector-leg files). */
   private def changedFiles(v: Long, prev: Option[Long]): Int = {
-    val filesPrev = prev.map(LakeSinkFiles.readVersion(path, _)._3).getOrElse(Seq.empty)
-    val filesV = LakeSinkFiles.readVersion(path, v)._3
-    val delsPrev = prev.map(LakeSinkFiles.readVersionDeletes(path, _)).getOrElse(Map.empty)
-    val delsV = LakeSinkFiles.readVersionDeletes(path, v)
+    val snapPrev = prev.map(LakeSinkFiles.snapshot(path, _))
+    val snapV = LakeSinkFiles.snapshot(path, v)
+    val filesPrev = snapPrev.map(_.files).getOrElse(Seq.empty)
+    val filesV = snapV.files
+    val delsPrev = snapPrev.map(_.deletes).getOrElse(Map.empty)
+    val delsV = snapV.deletes
     val common = filesPrev.toSet.intersect(filesV.toSet)
     // a vector that changed in EITHER direction makes the file a changed
     // file: newly-vectored positions replay as deletes, un-vectored

@@ -31,7 +31,7 @@ private[graft] object LakeMetadataTables {
     case "files" => StructType(Seq(
       StructField("file", StringType, nullable = false),
       StructField("partition", StringType, nullable = false),
-      StructField("rows", LongType, nullable = true), // null = pre-ledger file
+      StructField("rows", LongType, nullable = true), // null = no recorded count
       StructField("size_bytes", LongType, nullable = false),
       StructField("has_stats", BooleanType, nullable = false)))
     case "history" => StructType(Seq(
@@ -45,33 +45,32 @@ private[graft] object LakeMetadataTables {
     case "deletes" => StructType(Seq( // merge-on-read delete vectors
       StructField("file", StringType, nullable = false),
       StructField("deleted_rows", LongType, nullable = false),
-      StructField("live_rows", LongType, nullable = true))) // null = pre-ledger file
+      StructField("live_rows", LongType, nullable = true))) // null = no recorded count
     case other => throw new IllegalArgumentException(s"no metadata table $other")
   }
 
-  /** Compute the metadata rows — called at PLANNING so every query sees
-    * the table's live state. */
+  /** Compute the metadata rows — called at PLANNING from the latest
+    * version record, so every query sees the table's last commit. */
   def rowsOf(kind: String, path: String): Seq[Array[Any]] = {
-    val partCols = LakeSinkFiles.readManifest(path).map(_._2).getOrElse(Seq.empty)
     val root = Paths.get(path)
     def partOf(rel: String): String =
       Option(Paths.get(rel).getParent).map(_.toString).getOrElse("")
+    lazy val snap = LakeSinkFiles.latest(path)
+    lazy val counts = snap.counts
+    lazy val dels = snap.deletes
     kind match {
       case "files" =>
-        val counts = LakeSinkFiles.readCounts(path)
-        val stats = LakeSinkStats.readBlobs(path)
-        val dels = LakeSinkDeletes.read(path)
-        LakeSinkFiles.listLive(path, partCols).map { case (p, _) =>
-          val rel = root.relativize(p).toString
+        val stats = snap.stats
+        snap.files.sorted.map { rel =>
           Array[Any](
             UTF8String.fromString(rel),
             UTF8String.fromString(partOf(rel)),
-            // LIVE rows: ledger count minus the delete vector
+            // LIVE rows: recorded count minus the delete vector
             counts.get(rel).map(n => java.lang.Long.valueOf(
               n - dels.get(rel).map(_.length.toLong).getOrElse(0L))).orNull,
-            java.lang.Long.valueOf(Files.size(p)),
+            java.lang.Long.valueOf(Files.size(root.resolve(rel))),
             java.lang.Boolean.valueOf(stats.contains(rel)))
-        }.sortBy(_(0).toString)
+        }
       case "history" =>
         LakeSinkFiles.listVersions(path).map { v =>
           val (_, _, files) = LakeSinkFiles.readVersion(path, v)
@@ -83,11 +82,7 @@ private[graft] object LakeMetadataTables {
             java.lang.Long.valueOf(files.size.toLong))
         }
       case "partitions" =>
-        val counts = LakeSinkFiles.readCounts(path)
-        val dels = LakeSinkDeletes.read(path)
-        LakeSinkFiles.listLive(path, partCols)
-          .map { case (p, _) => root.relativize(p).toString }
-          .groupBy(partOf).toSeq.sortBy(_._1)
+        snap.files.groupBy(partOf).toSeq.sortBy(_._1)
           .map { case (part, rels) =>
             val cs = rels.map(rel => counts.get(rel)
               .map(_ - dels.get(rel).map(_.length.toLong).getOrElse(0L)))
@@ -102,10 +97,8 @@ private[graft] object LakeMetadataTables {
         // compaction-candidate view of merge-on-read state (a file here
         // pays a read-side cursor and blocks min/max pushdown until
         // compaction materializes its vector)
-        val counts = LakeSinkFiles.readCounts(path)
-        val live = LakeSinkFiles.listLive(path, partCols)
-          .map { case (p, _) => root.relativize(p).toString }.toSet
-        LakeSinkDeletes.read(path).toSeq
+        val live = snap.files.toSet
+        dels.toSeq
           .filter { case (rel, vec) => vec.nonEmpty && live.contains(rel) }
           .sortBy(_._1)
           .map { case (rel, vec) =>

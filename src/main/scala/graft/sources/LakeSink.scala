@@ -44,6 +44,14 @@ import org.apache.spark.sql.util.CaseInsensitiveStringMap
   *     write) sees its marker and discards the re-staged files; a crash
   *     MID-commit re-moves under the same names (REPLACE_EXISTING), so
   *     the retry converges file-by-file instead of duplicating.
+  *   - Every commit then lands ONE version record
+  *     `_graft_versions/v<n>` by temp + atomic move — the commit's
+  *     visibility point and the only store of per-file facts. Fields:
+  *     `schema`, `partitionCols` (+ optional `renames`/`dropped`),
+  *     `deletes` (delete vectors), `counts` (rows per file), `stats`
+  *     (column stat blobs), `sorted` (sort claims) and `files` (the
+  *     full relative file list). Live reads plan from the latest record,
+  *     `VERSION AS OF` from an older one (see [[LakeSinkFiles.recordVersion]]).
   *
   * 100 TB story: every byte moves task→staging→destination on the
   * executor/driver that owns it — the driver handles only O(#tasks)
@@ -90,17 +98,15 @@ class LakeSink extends TableProvider {
         // recorded version; `snapshotFiles` (newline-joined relative
         // names) optionally narrows to a subset — the version-diff (CDC)
         // read path, see [[LakeVersions.changes]]
-        val (sch, partCols, files) = LakeSinkFiles.readVersion(path, v)
-        val rels = Option(properties.get("snapshotFiles"))
-          .map(_.split("\n").toSeq.map(_.trim).filter(_.nonEmpty))
-          .getOrElse(files)
+        val snap = LakeSinkFiles.snapshot(path, v)
+        val narrowed = Option(properties.get("snapshotFiles"))
+          .map(fs => snap.narrow(fs.split("\n").toSeq.map(_.trim).filter(_.nonEmpty)))
+          .getOrElse(snap)
         // CDF delete-leg mode: restrict the read to exactly the listed
         // (file, position) rows — see LakeVersions.changes
         val includes = Option(properties.get("includePositions"))
           .map(LakeSinkDeletes.parse).getOrElse(Map.empty[String, Array[Long]])
-        new LakeSinkSnapshotTable(sch, path, partCols, rels, v,
-          s"graft_lake_sink($path)",
-          deletes = LakeSinkFiles.readVersionDeletes(path, v),
+        new LakeSinkSnapshotTable(narrowed, path, s"graft_lake_sink($path)",
           includePositions = includes)
       case None if java.lang.Boolean.parseBoolean(properties.get("readChangeFeed")) =>
         // streaming change-data feed over the version log — see [[LakeCdf]]
@@ -330,8 +336,7 @@ private[graft] class LakeSinkTable(writeSchema: StructType, path: String,
 
   /** SQL `TRUNCATE TABLE graft.lake.t` — the same metadata-only
     * retire-everything as a truncating overwrite, recorded as a version
-    * (the pre-truncate snapshot stays readable until VACUUM; counts and
-    * stats ledgers are trimmed by the retire). */
+    * (the pre-truncate snapshot stays readable until VACUUM). */
   override def truncateTable(): Boolean = {
     val removed = LakeSinkFiles.truncateDest(path)
     LakeSinkFiles.recordVersion(path, Seq.empty, removed)
@@ -550,7 +555,7 @@ private[graft] class LakeSinkTable(writeSchema: StructType, path: String,
   /** `graft.*` table properties act as per-TABLE default write options
     * (prefix stripped: graft.ndvColumns -> ndvColumns, …) — explicit
     * per-write options override them. The Delta table-properties role:
-    * declare the ledger configuration once at CREATE, every writer
+    * declare the stats configuration once at CREATE, every writer
     * (batch, streaming, CTAS) inherits it. */
   override def newWriteBuilder(info: LogicalWriteInfo): WriteBuilder = {
     val merged = new java.util.HashMap[String, String]()
@@ -704,7 +709,7 @@ private[sources] class LakeSinkWriteBuilder(schema: StructType, path: String,
   * very high volume, where per-task parallelism beats file count);
   * `.option("sortBy", "a,b")` additionally requests a within-task sort —
   * written files then cover tight [lo, hi] ranges on those columns,
-  * which is exactly what makes the per-file stats ledger selective
+  * which is exactly what makes the per-file stats facts selective
   * ([[LakeSinkStats]]). */
 private[sources] class LakeSinkWrite(schema: StructType, path: String,
     mode: LakeWriteMode, partCols: Seq[String], queryId: String = "",
@@ -802,12 +807,12 @@ private[sources] class LakeSinkWrite(schema: StructType, path: String,
         "writes are exactly-once per query already (use foreachBatch for " +
         "an idempotent batch append keyed on the batch id)")
     // an EXPLICIT sortBy on a stream refuses (epoch commits record no
-    // sorted-ledger claims, so the option's promise cannot hold — the
+    // sort claims, so the option's promise cannot hold — the
     // silent-drop anti-pattern); an INHERITED graft.sortBy default stands
     // down like it does on subset appends (r14 option audit)
     require(sortCols.isEmpty || !explicitSortBy,
       "LakeSink: sortBy is a batch-write option — streaming epoch commits " +
-        "record no sorted-ledger claims (write sorted batches via " +
+        "record no sort claims (write sorted batches via " +
         "foreachBatch, or compact afterwards: compaction preserves claims)")
     // mergeSchema on a stream: a restarted query whose upstream gained a
     // column evolves the manifest at its FIRST committed epoch, through
@@ -852,8 +857,6 @@ private[graft] object LakeSinkFiles {
       partHistory: Seq[String] = Seq.empty,
       tableProps: Seq[(String, String)] = Seq.empty,
       defaults: Seq[(String, String, String)] = Seq.empty): Unit = {
-    val renBody = renames.toSeq.sortBy(_._1)
-      .map { case (l, ps) => s"$l=${ps.mkString("|")}" }.mkString(";")
     // column DEFAULTs: (name, declared SQL, writer-token of the folded
     // value) triples — the token is EXACTLY what the writer would emit
     // for the value, so the scanner's typed decode is its inverse.
@@ -868,18 +871,16 @@ private[graft] object LakeSinkFiles {
     // TBLPROPERTIES, same codec (pair order = definition order)
     val propBody = tableProps
       .map { case (k, v) => s"$k\u0001$v" }.mkString("\u0002")
-    val json = s"""{"schema":"${LakeSink.jsonEscape(schema.toDDL)}"""" +
-      s""","partitionCols":"${LakeSink.jsonEscape(partCols.mkString(","))}"""" +
-      (if (renames.nonEmpty) s""","renames":"${LakeSink.jsonEscape(renBody)}"""" else "") +
-      (if (dropped.nonEmpty) s""","dropped":"${LakeSink.jsonEscape(dropped.mkString(","))}"""" else "") +
-      (if (constraints.nonEmpty) s""","constraints":"${LakeSink.jsonEscape(conBody)}"""" else "") +
-      (if (partHistory.nonEmpty)
-        s""","partColsHistory":"${LakeSink.jsonEscape(partHistory.mkString(";"))}"""" else "") +
-      (if (tableProps.nonEmpty)
-        s""","tblprops":"${LakeSink.jsonEscape(propBody)}"""" else "") +
-      (if (defaults.nonEmpty)
-        s""","defaults":"${LakeSink.jsonEscape(defBody)}"""" else "") +
-      "}"
+    def opt(k: String, present: Boolean, v: => String) =
+      if (present) Seq(k -> v) else Seq.empty
+    val json = renderFields(
+      Seq("schema" -> schema.toDDL, "partitionCols" -> partCols.mkString(",")) ++
+        opt("renames", renames.nonEmpty, renamesBody(renames)) ++
+        opt("dropped", dropped.nonEmpty, dropped.mkString(",")) ++
+        opt("constraints", constraints.nonEmpty, conBody) ++
+        opt("partColsHistory", partHistory.nonEmpty, partHistory.mkString(";")) ++
+        opt("tblprops", tableProps.nonEmpty, propBody) ++
+        opt("defaults", defaults.nonEmpty, defBody))
     val tmp = Paths.get(path, s".schema.${java.util.UUID.randomUUID.toString.take(8)}.tmp")
     Files.write(tmp, json.getBytes(StandardCharsets.UTF_8))
     Files.move(tmp, manifestPath(path), StandardCopyOption.REPLACE_EXISTING,
@@ -893,47 +894,38 @@ private[graft] object LakeSinkFiles {
     * dirKeys), temporal pruning matches each file's OWN generation's dir,
     * and SPJ stands down (the active KeyGroupedPartitioning cannot
     * describe them). See [[LakeMaintenance.evolvePartitionSpec]]. */
-  def readManifestPartHistory(path: String): Seq[String] = {
+  def readManifestPartHistory(path: String): Seq[String] =
+    manifestField(path, "partColsHistory").toSeq
+      .flatMap(_.split(";")).map(_.trim).filter(_.nonEmpty)
+
+  /** One optional manifest field: None without a manifest or the field. */
+  private def manifestField(path: String, key: String): Option[String] = {
     val p = manifestPath(path)
-    if (!Files.isRegularFile(p)) return Seq.empty
-    val json = new String(Files.readAllBytes(p), StandardCharsets.UTF_8)
-    if (!json.contains(""""partColsHistory":"""")) return Seq.empty
-    jsonField(json, "partColsHistory", s"manifest at $p")
-      .split(";").toSeq.map(_.trim).filter(_.nonEmpty)
+    if (!Files.isRegularFile(p)) None
+    else jsonFieldOpt(new String(Files.readAllBytes(p), StandardCharsets.UTF_8),
+      key, s"manifest at $p")
   }
+
+  /** Entries of the manifest's list codec: control-char separated entries
+    * of control-char separated parts (see [[writeManifest]]). */
+  private def manifestEntries(path: String, key: String): Seq[Array[String]] =
+    manifestField(path, key).toSeq.flatMap(_.split("\u0002"))
+      .filter(_.nonEmpty).map(_.split("\u0001", 3))
 
   /** The table's stored CHECK constraints: (name, predicate SQL) in
     * definition order. Enforced at write time (the engine injects the
     * checks from [[LakeSinkTable.constraints]]); evolved through
     * `ALTER TABLE ADD/DROP CONSTRAINT` ([[GraftCatalog.alterTable]]). */
-  def readManifestConstraints(path: String): Seq[(String, String)] = {
-    val p = manifestPath(path)
-    if (!Files.isRegularFile(p)) return Seq.empty
-    val json = new String(Files.readAllBytes(p), StandardCharsets.UTF_8)
-    if (!json.contains(""""constraints":"""")) return Seq.empty
-    jsonField(json, "constraints", s"manifest at $p")
-      .split("\u0002").iterator.filter(_.nonEmpty).map { e =>
-        val i = e.indexOf('\u0001')
-        e.substring(0, i) -> e.substring(i + 1)
-      }.toSeq
-  }
+  def readManifestConstraints(path: String): Seq[(String, String)] =
+    manifestEntries(path, "constraints").map(e => e(0) -> e.drop(1).mkString("\u0001"))
 
   /** The table's stored TBLPROPERTIES: (key, value) in definition order.
     * Served through [[LakeSinkTable.properties]] (SHOW TBLPROPERTIES),
     * evolved via ALTER TABLE SET/UNSET TBLPROPERTIES, and preserved by
     * every manifest rewrite. `graft.*` keys double as per-TABLE default
     * write options (see [[LakeSinkTable.newWriteBuilder]]). */
-  def readManifestProps(path: String): Seq[(String, String)] = {
-    val p = manifestPath(path)
-    if (!Files.isRegularFile(p)) return Seq.empty
-    val json = new String(Files.readAllBytes(p), StandardCharsets.UTF_8)
-    if (!json.contains(""""tblprops":"""")) return Seq.empty
-    jsonField(json, "tblprops", s"manifest at $p")
-      .split("\u0002").iterator.filter(_.nonEmpty).map { e =>
-        val i = e.indexOf('\u0001')
-        e.substring(0, i) -> e.substring(i + 1)
-      }.toSeq
-  }
+  def readManifestProps(path: String): Seq[(String, String)] =
+    manifestEntries(path, "tblprops").map(e => e(0) -> e.drop(1).mkString("\u0001"))
 
   /** Stored column DEFAULTs: (logical name, declared SQL, writer-token of
     * the folded value) in definition order. The token feeds the scanner's
@@ -943,17 +935,12 @@ private[graft] object LakeSinkFiles {
     * CURRENT-default INSERT filling through [[LakeSinkTable.columns]].
     * Defaults are immutable per column (ALTER COLUMN SET DEFAULT is
     * refused), so live defaults are historically exact for snapshots. */
-  def readManifestDefaults(path: String): Seq[(String, String, String)] = {
-    val p = manifestPath(path)
-    if (!Files.isRegularFile(p)) return Seq.empty
-    val json = new String(Files.readAllBytes(p), StandardCharsets.UTF_8)
-    if (!json.contains(""""defaults":"""")) return Seq.empty
-    jsonField(json, "defaults", s"manifest at $p")
-      .split("\u0002").iterator.filter(_.nonEmpty).map { e =>
-        val parts = e.split("\u0001", 3)
-        (parts(0), parts(1), parts(2))
-      }.toSeq
-  }
+  def readManifestDefaults(path: String): Seq[(String, String, String)] =
+    manifestEntries(path, "defaults").map(e => (e(0), e(1), e(2)))
+
+  private def renamesBody(renames: Map[String, Seq[String]]): String =
+    renames.toSeq.sortBy(_._1)
+      .map { case (l, ps) => s"$l=${ps.mkString("|")}" }.mkString(";")
 
   private def parseRenames(body: String): Map[String, Seq[String]] =
     body.split(";").iterator.map(_.trim).filter(_.nonEmpty).map { e =>
@@ -964,17 +951,15 @@ private[graft] object LakeSinkFiles {
   /** Evolution state from a JSON blob holding optional `renames`/`dropped`
     * fields (the manifest or a version record): (physical→logical alias
     * map, ignored physical names). */
-  private def evolutionOf(json: String, where: String): (Map[String, String], Set[String]) = {
-    val aliases =
-      if (!json.contains(""""renames":"""")) Map.empty[String, String]
-      else parseRenames(jsonField(json, "renames", where))
-        .flatMap { case (logical, phys) => phys.map(_ -> logical) }
-    val dropped =
-      if (!json.contains(""""dropped":"""")) Set.empty[String]
-      else jsonField(json, "dropped", where)
-        .split(",").map(_.trim).filter(_.nonEmpty).toSet
-    (aliases, dropped)
+  private[sources] def evolutionOf(json: String, where: String): (Map[String, String], Set[String]) = {
+    val (renames, dropped) = renamesOf(json, where)
+    (renames.flatMap { case (logical, phys) => phys.map(_ -> logical) }, dropped.toSet)
   }
+
+  private def renamesOf(json: String, where: String): (Map[String, Seq[String]], Seq[String]) =
+    (jsonFieldOpt(json, "renames", where).map(parseRenames).getOrElse(Map.empty),
+      jsonFieldOpt(json, "dropped", where).toSeq
+        .flatMap(_.split(",")).map(_.trim).filter(_.nonEmpty))
 
   /** The live table's evolution state: (physical→logical aliases, ignored
     * physical names). Empty for never-evolved tables. */
@@ -990,25 +975,7 @@ private[graft] object LakeSinkFiles {
   def readManifestRenames(path: String): (Map[String, Seq[String]], Seq[String]) = {
     val p = manifestPath(path)
     if (!Files.isRegularFile(p)) return (Map.empty, Seq.empty)
-    val json = new String(Files.readAllBytes(p), StandardCharsets.UTF_8)
-    val renames =
-      if (!json.contains(""""renames":"""")) Map.empty[String, Seq[String]]
-      else parseRenames(jsonField(json, "renames", s"manifest at $p"))
-    val dropped =
-      if (!json.contains(""""dropped":"""")) Seq.empty[String]
-      else jsonField(json, "dropped", s"manifest at $p")
-        .split(",").map(_.trim).filter(_.nonEmpty).toSeq
-    (renames, dropped)
-  }
-
-  /** A recorded version's evolution state — snapshots decode old files
-    * under the aliases of THEIR commit (pre-evolution versions show
-    * pre-evolution names with no aliasing at all). */
-  def readVersionEvolution(path: String, v: Long): (Map[String, String], Set[String]) = {
-    val p = versionsDir(path).resolve(versionName(v))
-    if (!Files.isRegularFile(p) || Files.size(p) == 0) return (Map.empty, Set.empty)
-    evolutionOf(new String(Files.readAllBytes(p), StandardCharsets.UTF_8),
-      s"version record $p")
+    renamesOf(new String(Files.readAllBytes(p), StandardCharsets.UTF_8), s"manifest at $p")
   }
 
   /** Manifest policy at commit: a TRUNCATING write owns the table and
@@ -1130,101 +1097,34 @@ private[graft] object LakeSinkFiles {
     Some((schema, parts))
   }
 
-  // --- row-count ledger (aggregate pushdown) ---------------------------------
-  //
-  // `_graft_counts.json` maps each committed RELATIVE file name to its row
-  // count (tasks count as they write; commits merge, [[retire]] removes) —
-  // the statistics sidecar that lets `SELECT count(*) FROM graft.lake.t`
-  // answer from metadata without decompressing a byte (the footer-row-count
-  // role parquet gets for free and gzip JSON does not have).
+  /** Render a flat JSON object of escaped string fields — the shape of
+    * the manifest and of every version record ([[jsonField]] reads it). */
+  private[sources] def renderFields(fields: Seq[(String, String)]): String =
+    fields.map { case (k, v) => s""""$k":"${LakeSink.jsonEscape(v)}"""" }
+      .mkString("{", ",", "}")
 
-  def countsPath(path: String): Path = Paths.get(path, "_graft_counts.json")
-
-  /** (rel → rows) line codec — shared by the live ledger file and the
-    * per-version ledger SNAPSHOTS [[recordVersion]] embeds. */
-  def encodeCountLines(m: Map[String, Long]): String =
-    m.toSeq.sorted.map { case (k, v) => s"$k:$v" }.mkString("\n")
-
-  def decodeCountLines(body: String): Map[String, Long] =
-    body.split("\n").iterator.map(_.trim).filter(_.nonEmpty).map { line =>
-      val i = line.lastIndexOf(':')
-      line.substring(0, i) -> line.substring(i + 1).toLong
-    }.toMap
-
-  def readCounts(path: String): Map[String, Long] = {
-    val p = countsPath(path)
-    if (!Files.isRegularFile(p)) return Map.empty
-    val json = new String(Files.readAllBytes(p), StandardCharsets.UTF_8)
-    decodeCountLines(jsonField(json, "files", s"counts ledger at $p"))
-  }
-
-  /** Merge-and-replace the ledger (read → apply → temp + atomic move).
-    * Driver-side only, under the sink's single-writer commit contract. */
-  def updateCounts(path: String, add: Map[String, Long],
-      remove: Seq[String]): Unit = {
-    if (add.isEmpty && remove.isEmpty) return
-    val merged = (readCounts(path) -- remove) ++ add
-    val body = encodeCountLines(merged)
-    val json = s"""{"files":"${LakeSink.jsonEscape(body)}"}"""
-    val tmp = Paths.get(path, s".counts.${java.util.UUID.randomUUID.toString.take(8)}.tmp")
-    Files.write(tmp, json.getBytes(StandardCharsets.UTF_8))
-    Files.move(tmp, countsPath(path), StandardCopyOption.REPLACE_EXISTING,
-      StandardCopyOption.ATOMIC_MOVE)
-  }
-
-  // --- sorted-files ledger (sort-free scans) ----------------------------------
-  //
-  // `_graft_sorted.json` maps each committed RELATIVE file name to the
-  // sort columns its write's `sortBy` ordered it by. SOUND BY
-  // CONSTRUCTION: entries are added ONLY by producers that actually
-  // order their output — the batch commit of a write that declared
-  // `sortBy`, and COMPACTION when every input of a merged group carried
-  // the same claim (it k-way-merges on the key and re-declares; see
-  // LakeMaintenance.compact). Files from every other producer (streaming
-  // epochs, ReplaceData, delta DML, Z-order's own ordering) simply
-  // never appear, so no invalidation logic exists to forget. Consumed by
-  // [[LakeSinkScan.outputOrdering]]: a scan whose every input partition
-  // is ONE ledgered file (immutable once committed) reports the recorded
-  // per-partition ordering — with storage-partitioned joins, that is the
-  // exchange-free AND sort-free merge join (see t58).
-
-  def sortedPath(path: String): Path = Paths.get(path, "_graft_sorted.json")
-
-  def readSorted(path: String): Map[String, Seq[String]] = {
-    val p = sortedPath(path)
-    if (!Files.isRegularFile(p)) return Map.empty
-    val json = new String(Files.readAllBytes(p), StandardCharsets.UTF_8)
-    jsonField(json, "files", s"sorted ledger at $p")
-      .split("\n").iterator.map(_.trim).filter(_.nonEmpty).map { line =>
-        val i = line.lastIndexOf(':')
-        line.substring(0, i) -> line.substring(i + 1).split(",").toSeq.filter(_.nonEmpty)
-      }.toMap
-  }
-
-  def updateSorted(path: String, add: Map[String, Seq[String]],
-      remove: Seq[String]): Unit = {
-    if (add.isEmpty && remove.isEmpty) return
-    if (add.isEmpty && !Files.isRegularFile(sortedPath(path))) return
-    val merged = (readSorted(path) -- remove) ++ add
-    val body = merged.toSeq.sortBy(_._1)
-      .map { case (k, cols) => s"$k:${cols.mkString(",")}" }.mkString("\n")
-    val json = s"""{"files":"${LakeSink.jsonEscape(body)}"}"""
-    val tmp = Paths.get(path, s".sorted.${java.util.UUID.randomUUID.toString.take(8)}.tmp")
-    Files.write(tmp, json.getBytes(StandardCharsets.UTF_8))
-    Files.move(tmp, sortedPath(path), StandardCopyOption.REPLACE_EXISTING,
-      StandardCopyOption.ATOMIC_MOVE)
-  }
+  /** [[jsonField]] for an optional field: None when the object lacks it. */
+  private[sources] def jsonFieldOpt(json: String, key: String, where: String): Option[String] =
+    if (json.contains(s""""$key":"""")) Some(jsonField(json, key, where)) else None
 
   // --- version log (time travel) ---------------------------------------------
   //
   // Every DATA-changing commit (batch job, streaming epoch, ReplaceData,
   // partition DELETE, compaction) appends a snapshot record
-  // `_graft_versions/v<n>` holding the table's full committed RELATIVE file
-  // list plus the schema/partitioning AT THAT COMMIT — the minimal
-  // Iceberg/Delta versioned-manifest contract. Rewrites RETIRE files (move
+  // `_graft_versions/v<n>` — the minimal Iceberg/Delta versioned-manifest
+  // contract, and the ONLY store of per-file facts. Its flat JSON fields:
+  //   schema, partitionCols   the table AT THAT COMMIT (DDL, comma list)
+  //   renames, dropped        schema-evolution state (optional)
+  //   deletes                 delete vectors of its files ([[LakeSinkDeletes]])
+  //   counts                  `rel:rows` lines (count(*) pushdown)
+  //   stats                   `rel`, SOH, blob lines ([[LakeSinkStats]])
+  //   sorted                  `rel:col,col` sort claims (sort-free scans)
+  //   files                   the full committed RELATIVE file list
+  // Live reads read the LATEST record ([[latest]]), time travel an older
+  // one ([[snapshot]]) — one code path, so a commit becomes visible at the
+  // one atomic move that lands its record. Rewrites RETIRE files (move
   // under `_graft_retired/`, same relative path) instead of deleting, so
-  // older snapshots stay readable until VACUUM reclaims them. Single-writer
-  // semantics, like the sink itself.
+  // older snapshots stay readable until VACUUM reclaims them.
 
   /** Move committed files out of the readable lake but keep their bytes
     * for recorded versions. A retired-name COLLISION (the same relative
@@ -1254,10 +1154,7 @@ private[graft] object LakeSinkFiles {
         retired += rel.toString
       }
     }
-    updateCounts(path, Map.empty, retired.toSeq) // ledgers track LIVE files only
-    LakeSinkStats.updateBlobs(path, Map.empty, retired.toSeq)
     LakeSinkDeletes.update(path, Map.empty, retired.toSeq)
-    updateSorted(path, Map.empty, retired.toSeq)
     retired.toSeq
   }
 
@@ -1328,16 +1225,18 @@ private[graft] object LakeSinkFiles {
   }
 
   /** Record the NEXT version snapshot (call after promote/retire and
-    * manifest reconciliation), passing the commit's own file DELTA.
+    * manifest reconciliation), passing the commit's own file DELTA and
+    * the facts its writers reported for the files it adds ([[LakeFacts]]).
     * Returns the recorded version id.
     *
-    * The recorded file list is MANIFEST ARITHMETIC, not a directory walk
-    * (the Iceberg manifest-list move): our view = the committed
-    * predecessor's recorded list − our retires + our adds. That makes the
-    * record a true SNAPSHOT even while a peer is mid-promote — a peer's
-    * half-promoted files can never leak into our version (the
-    * cross-committer isolation gap the tree walk had) — and commit cost
-    * is O(record size), not O(walk of a million-file tree).
+    * The recorded file list AND its facts are MANIFEST ARITHMETIC, not a
+    * directory walk (the Iceberg manifest-list move): our view = the
+    * committed predecessor's recorded list − our retires + our adds, and
+    * the same for each fact map. That makes the record a true SNAPSHOT
+    * even while a peer is mid-promote — a peer's half-promoted files can
+    * never leak into our version (the cross-committer isolation gap the
+    * tree walk had) — and commit cost is O(record size), not O(walk of a
+    * million-file tree).
     *
     * Concurrency contract: the id is RESERVED atomically (see
     * [[reserveVersion]]), so concurrent committers each durably record
@@ -1347,84 +1246,116 @@ private[graft] object LakeSinkFiles {
     * predecessor would drop that peer's already-promoted files from the
     * chain — so we fall back to the tree walk for exactly that record
     * (the pre-r11 superset/subset behavior, never lost bytes); the next
-    * uncontended commit re-converges the chain to walk-free arithmetic. */
+    * uncontended commit re-converges the chain to walk-free arithmetic.
+    * The peer's files then carry no facts in our record: readers scan
+    * them (never a guess) until ANALYZE backfills them. */
   def recordVersion(path: String): Long =
     recordVersion(path, Seq.empty, Seq.empty)
 
-  def recordVersion(path: String, adds: Seq[String], removes: Seq[String]): Long = {
+  def recordVersion(path: String, adds: Seq[String], removes: Seq[String],
+      facts: LakeFacts = LakeFacts()): Long = {
     val (schema, partCols) = readManifest(path).getOrElse(
       throw new IllegalStateException(
         s"LakeSink: recording a version at $path before any manifest"))
-    val dir = versionsDir(path)
-    Files.createDirectories(dir)
     val v = reserveVersion(path)
     // predecessor chain below OUR id (peers reserving after us get higher
     // ids, so everything relevant is already visible)
     val below = rawVersions(path).filter(_._1 < v)
-    val baseId = below.collect { case (id, p) if Files.size(p) > 0 => id }.lastOption
+    val base = below.collect { case (id, p) if Files.size(p) > 0 => id }
+      .lastOption.map(snapshot(path, _))
     val pendingAboveBase = below.exists { case (id, p) =>
-      Files.size(p) == 0 && baseId.forall(id > _) }
-    val rels: Seq[String] = baseId match {
+      Files.size(p) == 0 && base.forall(b => id > b.version.get) }
+    val rels: Seq[String] = base match {
       case Some(b) if !pendingAboveBase =>
-        ((readVersion(path, b)._3.toSet -- removes) ++ adds).toSeq.sorted
+        ((b.files.toSet -- removes) ++ adds).toSeq.sorted
       case _ =>
         // bootstrap (first record) or a peer mid-commit: walk the tree
         val root = Paths.get(path)
         LakeSinkPartitions.listCommitted(path, partCols)
           .map { case (p, _) => root.relativize(p).toString }.sorted
     }
-    // snapshot the delete-vector ledger AND the counts/stats ledgers INTO
-    // the record, trimmed to this version's files: `VERSION AS OF` must
-    // apply exactly the vectors of its commit, and with the ledgers it
-    // also ANSWERS count/min/max from metadata like a live read (later
-    // commits mutate the live ledgers, not history)
     val relSet = rels.toSet
-    val delBody = LakeSinkDeletes.serialize(
-      LakeSinkDeletes.read(path).filter { case (r, _) => relSet.contains(r) })
-    val countsBody = encodeCountLines(
-      readCounts(path).filter { case (r, _) => relSet.contains(r) })
-    val statsBody = LakeSinkStats.encodeLines(
-      LakeSinkStats.readBlobs(path).filter { case (r, _) => relSet.contains(r) })
+    // the delete-vector union is snapshotted too, trimmed to this
+    // version's files: `VERSION AS OF` applies exactly its commit's vectors
+    val deletes = LakeSinkDeletes.read(path).filter { case (r, _) => relSet.contains(r) }
     // schema-evolution state rides into the record: snapshot reads decode
     // old files under the aliases of THEIR commit
     val (renames, droppedCols) = readManifestRenames(path)
-    val renBody = renames.toSeq.sortBy(_._1)
-      .map { case (l, ps) => s"$l=${ps.mkString("|")}" }.mkString(";")
-    val json = s"""{"schema":"${LakeSink.jsonEscape(schema.toDDL)}"""" +
-      s""","partitionCols":"${LakeSink.jsonEscape(partCols.mkString(","))}"""" +
-      (if (renames.nonEmpty) s""","renames":"${LakeSink.jsonEscape(renBody)}"""" else "") +
-      (if (droppedCols.nonEmpty) s""","dropped":"${LakeSink.jsonEscape(droppedCols.mkString(","))}"""" else "") +
-      s""","deletes":"${LakeSink.jsonEscape(delBody)}"""" +
-      s""","counts":"${LakeSink.jsonEscape(countsBody)}"""" +
-      s""","stats":"${LakeSink.jsonEscape(statsBody)}"""" +
-      s""","files":"${LakeSink.jsonEscape(rels.mkString("\n"))}"}"""
-    val tmp = dir.resolve(s".v.${java.util.UUID.randomUUID.toString.take(8)}.tmp")
-    Files.write(tmp, json.getBytes(StandardCharsets.UTF_8))
-    // we own the reserved name — replacing our own empty marker is safe
-    Files.move(tmp, dir.resolve(versionName(v)), StandardCopyOption.REPLACE_EXISTING,
-      StandardCopyOption.ATOMIC_MOVE)
+    writeRecord(path, v,
+      Seq("schema" -> schema.toDDL, "partitionCols" -> partCols.mkString(",")) ++
+        (if (renames.nonEmpty) Seq("renames" -> renamesBody(renames)) else Nil) ++
+        (if (droppedCols.nonEmpty) Seq("dropped" -> droppedCols.mkString(",")) else Nil),
+      deletes, (base.map(_.facts).getOrElse(LakeFacts()) ++ facts).only(relSet),
+      rels, None)
     v
   }
 
-  /** The LIVE file list from the LATEST version record — planning is then
-    * O(read one record) instead of an O(#files) directory walk (the
-    * measured lake_meta_probe scale gap this closes), and every plan is a
-    * consistent SNAPSHOT of the last commit: a peer's half-promoted files
-    * are invisible until its own record lands. Falls back to the walk
-    * only for a directory with no recorded version (bootstrap). */
-  def listLive(path: String, partCols: Seq[String]): Seq[(Path, Seq[(String, String)])] =
+  /** Write record `v` via temp + atomic move: the one step that makes a
+    * commit visible. `mtime` pins the commit instant when an amendment
+    * replaces an existing record ([[amendFacts]]). */
+  private def writeRecord(path: String, v: Long, head: Seq[(String, String)],
+      deletes: Map[String, Array[Long]], facts: LakeFacts, rels: Seq[String],
+      mtime: Option[java.nio.file.attribute.FileTime]): Unit = {
+    val dir = versionsDir(path)
+    val json = renderFields(head ++
+      Seq("deletes" -> LakeSinkDeletes.serialize(deletes)) ++ facts.fields ++
+      Seq("files" -> rels.mkString("\n")))
+    val tmp = dir.resolve(s".v.${java.util.UUID.randomUUID.toString.take(8)}.tmp")
+    Files.write(tmp, json.getBytes(StandardCharsets.UTF_8))
+    mtime.foreach(Files.setLastModifiedTime(tmp, _))
+    // the name is ours to replace: our own empty reservation, or the
+    // record an amendment rewrites
+    Files.move(tmp, dir.resolve(versionName(v)), StandardCopyOption.REPLACE_EXISTING,
+      StandardCopyOption.ATOMIC_MOVE)
+  }
+
+  /** Merge `facts` into the LATEST record IN PLACE, for its own files
+    * only — ANALYZE's backfill, which adds no version. The rewrite keeps
+    * the record's id and its mtime (the commit instant `timestampAsOf`
+    * resolves by) and lands at one atomic move. A commit racing it may
+    * base on the pre-amendment record; the backfill is advisory metadata
+    * and the next ANALYZE redoes what such a race drops. Returns the
+    * amended record's files. */
+  def amendFacts(path: String, facts: LakeFacts): Set[String] = {
+    val v = listVersions(path).lastOption.getOrElse(return Set.empty)
+    val mtime = Files.getLastModifiedTime(versionsDir(path).resolve(versionName(v)))
+    val snap = snapshot(path, v)
+    val files = snap.files.toSet
+    writeRecord(path, v,
+      Seq("schema", "partitionCols", "renames", "dropped")
+        .flatMap(k => snap.field(k).map(k -> _)),
+      snap.deletes, (snap.facts ++ facts).only(files), snap.files, Some(mtime))
+    files
+  }
+
+  /** The LATEST record — what every live reader plans from: a consistent
+    * SNAPSHOT of the last commit (a peer's half-promoted files are
+    * invisible until its own record lands), read in O(one record) instead
+    * of an O(#files) directory walk. A directory with no recorded version
+    * yet (bootstrap) falls back to the walk, with no facts. */
+  def latest(path: String): LakeSnapshot =
     listVersions(path).lastOption match {
-      case None => LakeSinkPartitions.listCommitted(path, partCols)
-      case Some(v) =>
+      case Some(v) => snapshot(path, v)
+      case None =>
+        val (schema, partCols) = readManifest(path).getOrElse((new StructType(), Seq.empty))
         val root = Paths.get(path)
-        readVersion(path, v)._3.map { rel =>
-          val p = root.resolve(rel)
-          (p, LakeSinkPartitions.kvsOf(root, p, partCols))
-        }
+        new LakeSnapshot(None, schema, partCols,
+          LakeSinkPartitions.listCommitted(path, partCols)
+            .map { case (p, _) => root.relativize(p).toString }.sorted,
+          "", s"unrecorded table at $path")
     }
 
-  /** Read one recorded snapshot: (schema, partition cols, relative files). */
-  def readVersion(path: String, v: Long): (StructType, Seq[String], Seq[String]) = {
+  /** The live files with their decoded partition directories. */
+  def listLive(path: String, partCols: Seq[String]): Seq[(Path, Seq[(String, String)])] = {
+    val root = Paths.get(path)
+    latest(path).files.map { rel =>
+      val p = root.resolve(rel)
+      (p, LakeSinkPartitions.kvsOf(root, p, partCols))
+    }
+  }
+
+  /** Read one recorded version. */
+  def snapshot(path: String, v: Long): LakeSnapshot = {
     val p = versionsDir(path).resolve(versionName(v))
     require(Files.isRegularFile(p),
       s"LakeSink: no recorded version $v at $path " +
@@ -1434,47 +1365,21 @@ private[graft] object LakeSinkFiles {
         "(commit in flight or crashed) — not readable history")
     val json = new String(Files.readAllBytes(p), StandardCharsets.UTF_8)
     val where = s"version record $p"
-    val schema = StructType.fromDDL(jsonField(json, "schema", where))
-    val parts = LakePart.split(jsonField(json, "partitionCols", where))
-    val files = jsonField(json, "files", where)
-      .split("\n").map(_.trim).filter(_.nonEmpty).toSeq
-    (schema, parts, files)
+    new LakeSnapshot(Some(v), StructType.fromDDL(jsonField(json, "schema", where)),
+      LakePart.split(jsonField(json, "partitionCols", where)),
+      jsonField(json, "files", where).split("\n").map(_.trim).filter(_.nonEmpty).toSeq,
+      json, where)
   }
 
-  /** A recorded version's delete-vector snapshot (empty for records
-    * written before merge-on-read deletes existed). */
-  def readVersionDeletes(path: String, v: Long): Map[String, Array[Long]] = {
-    val p = versionsDir(path).resolve(versionName(v))
-    if (!Files.isRegularFile(p) || Files.size(p) == 0) return Map.empty
-    val json = new String(Files.readAllBytes(p), StandardCharsets.UTF_8)
-    if (!json.contains(""""deletes":"""")) Map.empty // legacy record
-    else LakeSinkDeletes.parse(jsonField(json, "deletes", s"version record $p"))
+  /** One recorded snapshot's (schema, partition cols, relative files). */
+  def readVersion(path: String, v: Long): (StructType, Seq[String], Seq[String]) = {
+    val s = snapshot(path, v)
+    (s.schema, s.partCols, s.files)
   }
 
-  /** A recorded version's counts-ledger snapshot — None for records
-    * written before per-version ledgers existed (snapshot aggregates then
-    * fall back to scanning, never a guess). */
-  def readVersionCounts(path: String, v: Long): Option[Map[String, Long]] = {
-    val p = versionsDir(path).resolve(versionName(v))
-    if (!Files.isRegularFile(p) || Files.size(p) == 0) return None
-    val json = new String(Files.readAllBytes(p), StandardCharsets.UTF_8)
-    if (!json.contains(""""counts":"""")) None // legacy record
-    else Some(decodeCountLines(jsonField(json, "counts", s"version record $p")))
-  }
+  /** The latest record's sort claims (rel → columns its write ordered by). */
+  def readSorted(path: String): Map[String, Seq[String]] = latest(path).sorted
 
-  /** A recorded version's stats-ledger snapshot — None for legacy records. */
-  def readVersionStats(path: String, v: Long): Option[Map[String, String]] = {
-    val p = versionsDir(path).resolve(versionName(v))
-    if (!Files.isRegularFile(p) || Files.size(p) == 0) return None
-    val json = new String(Files.readAllBytes(p), StandardCharsets.UTF_8)
-    if (!json.contains(""""stats":"""")) None // legacy record
-    else Some(LakeSinkStats.decodeLines(
-      jsonField(json, "stats", s"version record $p")))
-  }
-
-  /** Greatest recorded version whose commit instant is ≤ `micros` (file
-    * mtime is the commit instant — same convention as Delta's
-    * `timestampAsOf`). */
   // --- named refs (tags) over the version log ---------------------------------
   //
   // `_graft_tags.json` maps tag NAMES to version ids — the Iceberg
@@ -1508,6 +1413,9 @@ private[graft] object LakeSinkFiles {
       StandardCopyOption.ATOMIC_MOVE)
   }
 
+  /** Greatest recorded version whose commit instant is ≤ `micros` (file
+    * mtime is the commit instant — same convention as Delta's
+    * `timestampAsOf`). */
   def versionAtTimestamp(path: String, micros: Long): Option[Long] =
     listVersions(path).filter { v =>
       Files.getLastModifiedTime(versionsDir(path).resolve(versionName(v)))
@@ -1564,14 +1472,85 @@ private[graft] object LakeSinkFiles {
       LakeSinkPartitions.listCommitted(path, Seq.empty).map(_._1.toString))
 }
 
+/** Per-file facts a version record carries, keyed by RELATIVE file name:
+  * row counts, column-stat blobs ([[LakeSinkStats]]) and sort claims.
+  * Files are immutable once committed, so a fact never goes stale; a file
+  * missing from a map simply has no such fact and readers SCAN it — never
+  * a guess. Sort claims are sound by construction: only producers that
+  * actually order their output add them (a `sortBy` batch write, and
+  * compaction's k-way merge of equally-claimed inputs); streaming epochs,
+  * row-level rewrites and Z-order never do, so no invalidation logic
+  * exists to forget. */
+private[graft] case class LakeFacts(counts: Map[String, Long] = Map.empty,
+    stats: Map[String, String] = Map.empty,
+    sorted: Map[String, Seq[String]] = Map.empty) {
+  /** Right-biased union (`o` wins per file and kind). */
+  def ++(o: LakeFacts): LakeFacts =
+    LakeFacts(counts ++ o.counts, stats ++ o.stats, sorted ++ o.sorted)
+  def only(keep: String => Boolean): LakeFacts =
+    LakeFacts(counts.filter(e => keep(e._1)), stats.filter(e => keep(e._1)),
+      sorted.filter(e => keep(e._1)))
+  /** The record fields (see the version-log notes in [[LakeSinkFiles]]). */
+  def fields: Seq[(String, String)] = Seq(
+    "counts" -> counts.toSeq.sorted.map { case (k, n) => s"$k:$n" }.mkString("\n"),
+    "stats" -> LakeSinkStats.encodeLines(stats),
+    "sorted" -> sorted.toSeq.sortBy(_._1)
+      .map { case (k, cols) => s"$k:${cols.mkString(",")}" }.mkString("\n"))
+}
+
+private[graft] object LakeFacts {
+  /** The facts one commit's writers reported; a `sortBy` write claims
+    * every file it wrote (each task's files are subsequences of its
+    * sorted stream). */
+  def of(commits: Seq[LakeSinkCommit], sortCols: Seq[String] = Seq.empty): LakeFacts =
+    LakeFacts(commits.flatMap(_.counted).toMap, commits.flatMap(_.statted).toMap,
+      if (sortCols.isEmpty) Map.empty
+      else commits.flatMap(_.staged).map(_ -> sortCols).toMap)
+
+  /** `rel:value` lines (rel may itself contain ':'). */
+  private[sources] def lines(body: String): Iterator[(String, String)] =
+    body.split("\n").iterator.map(_.trim).filter(_.nonEmpty).map { line =>
+      val i = line.lastIndexOf(':')
+      line.substring(0, i) -> line.substring(i + 1)
+    }
+}
+
+/** One decoded version record ([[LakeSinkFiles.snapshot]] /
+  * [[LakeSinkFiles.latest]]) — the unit every reader plans from. `version`
+  * is None only for a table with no record yet. Every other field
+  * decodes lazily and on its own: most reads need only the files, and
+  * the stats blobs (bloom filters included) are by far the largest. */
+private[graft] final class LakeSnapshot(val version: Option[Long],
+    val schema: StructType, val partCols: Seq[String], val files: Seq[String],
+    record: String, where: String) {
+  def field(key: String): Option[String] =
+    LakeSinkFiles.jsonFieldOpt(record, key, where)
+  lazy val deletes: Map[String, Array[Long]] =
+    field("deletes").map(LakeSinkDeletes.parse).getOrElse(Map.empty)
+  lazy val counts: Map[String, Long] = field("counts").toSeq
+    .flatMap(LakeFacts.lines).map { case (k, n) => k -> n.toLong }.toMap
+  lazy val stats: Map[String, String] =
+    field("stats").map(LakeSinkStats.decodeLines).getOrElse(Map.empty)
+  lazy val sorted: Map[String, Seq[String]] = field("sorted").toSeq
+    .flatMap(LakeFacts.lines).map { case (k, cs) => k -> cs.split(",").toSeq.filter(_.nonEmpty) }
+    .toMap
+  def facts: LakeFacts = LakeFacts(counts, stats, sorted)
+  /** (physical → logical aliases, ignored physical names) AT this commit. */
+  lazy val evolution: (Map[String, String], Set[String]) =
+    LakeSinkFiles.evolutionOf(record, where)
+  /** The same record restricted to a subset of its files (CDF legs). */
+  def narrow(rels: Seq[String]): LakeSnapshot =
+    new LakeSnapshot(version, schema, partCols, rels, record, where)
+}
+
 private[graft] case class LakeSinkCommit(staged: Seq[String],
     counts: Seq[Long] = Seq.empty, stats: Seq[String] = Seq.empty)
     extends WriterCommitMessage {
   /** (rel name → row count) pairs when the writer counted (always, for
     * this sink's own writers; possibly absent for hand-built messages). */
   def counted: Seq[(String, Long)] = staged.zip(counts)
-  /** (rel name → encoded column min/max blob) pairs — feeds
-    * `_graft_stats.json` (see [[LakeSinkStats]]). */
+  /** (rel name → encoded column min/max blob) pairs — the record's
+    * stats facts (see [[LakeSinkStats]]). */
   def statted: Seq[(String, String)] = staged.zip(stats)
 }
 private[sources] case object LakeSinkNoData extends WriterCommitMessage
@@ -1665,14 +1644,8 @@ private[graft] class LakeSinkBatchWrite(schema: StructType, path: String,
     LakeSinkFiles.promote(path, staged)
     LakeSinkFiles.reconcileManifest(path, schema, partCols,
       replace = mode == LakeTruncate, mergeSchema = mergeSchema)
-    LakeSinkFiles.updateCounts(path, committed.flatMap(_.counted).toMap, Seq.empty)
-    LakeSinkStats.updateBlobs(path, committed.flatMap(_.statted).toMap, Seq.empty)
-    // a sortBy write's files are each internally ordered (the engine's
-    // within-task sort; a task's per-directory files are subsequences of
-    // its sorted stream) — record them for sort-free scans
-    if (sortCols.nonEmpty)
-      LakeSinkFiles.updateSorted(path, staged.map(_ -> sortCols).toMap, Seq.empty)
-    LakeSinkFiles.recordVersion(path, staged, removed ++ txnRetired)
+    LakeSinkFiles.recordVersion(path, staged, removed ++ txnRetired,
+      LakeFacts.of(committed, sortCols))
     // the txn marker is written LAST, via temp + atomic move: a crash
     // anywhere earlier leaves no marker, and the replay's deterministic
     // names re-converge the partial state before committing it
@@ -1726,9 +1699,7 @@ private[graft] class LakeSinkStreamingWrite(schema: StructType, path: String,
       LakeSinkFiles.promote(path, staged)
       LakeSinkFiles.reconcileManifest(path, schema, partCols, replace = false,
         mergeSchema = mergeSchema)
-      LakeSinkFiles.updateCounts(path, committed.flatMap(_.counted).toMap, Seq.empty)
-      LakeSinkStats.updateBlobs(path, committed.flatMap(_.statted).toMap, Seq.empty)
-      LakeSinkFiles.recordVersion(path, staged, Seq.empty)
+      LakeSinkFiles.recordVersion(path, staged, Seq.empty, LakeFacts.of(committed))
       // marker via temp + atomic move: a crash can't leave a marker for
       // an epoch whose files never promoted
       val tmp = LakeSinkFiles.commitsDir(path).resolve(s".$qtag$epochId.tmp")
@@ -1796,11 +1767,11 @@ private[sources] class LakeSinkDataWriter(schema: StructType, path: String,
   // one open stream per partition-value directory this task has seen
   private val streams =
     scala.collection.mutable.LinkedHashMap.empty[String, OutputStreamWriter]
-  // rows written per staged file — feeds the `_graft_counts.json` ledger
+  // rows written per staged file — the record's counts facts
   // (count(*) answers from metadata, see LakeSinkAggScan)
   private val rowCounts =
     scala.collection.mutable.LinkedHashMap.empty[String, Long]
-  // per-file column [lo, hi] trackers — feed `_graft_stats.json`
+  // per-file column [lo, hi] trackers — the record's stats facts
   // (file skipping + min/max pushdown, see LakeSinkStats)
   private val statTrackers = scala.collection.mutable.LinkedHashMap
     .empty[String, Array[Option[LakeSinkStats.ColTracker]]]

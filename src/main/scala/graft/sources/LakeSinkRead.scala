@@ -33,14 +33,14 @@ import org.apache.spark.unsafe.types.UTF8String
 private[sources] class LakeSinkScanBuilder(fullSchema: StructType, path: String,
     partCols: Seq[String],
     onPlanned: Seq[String] => Unit = _ => (),
-    snapshot: Option[Seq[String]] = None,
+    // a time-travel read's version record; None = a live read of the
+    // latest record, taken once per builder (scan planning, pushdown and
+    // statistics then all see the same commit)
+    snapshot: Option[LakeSnapshot] = None,
     allowAgg: Boolean = true,
     triggerLimits: (Option[Int], Option[Long], Option[Long]) = (None, None, None),
-    snapshotDeletes: Map[String, Array[Long]] = Map.empty,
     includePositions: Map[String, Array[Long]] = Map.empty,
     onPlannedDeletes: Map[String, Array[Long]] => Unit = _ => (),
-    snapshotCounts: Option[Map[String, Long]] = None,
-    snapshotStats: Option[Map[String, String]] = None,
     evolution: Option[(Map[String, String], Set[String])] = None) extends ScanBuilder
     with SupportsPushDownRequiredColumns with SupportsPushDownFilters
     with SupportsPushDownAggregates {
@@ -51,11 +51,12 @@ private[sources] class LakeSinkScanBuilder(fullSchema: StructType, path: String,
   private var partFilters: Array[Filter] = Array.empty
   private var dataFilters: Array[Filter] = Array.empty
   private var aggPushed: Option[(Seq[Array[Any]], StructType, String)] = None
+  private lazy val snap: LakeSnapshot = snapshot.getOrElse(LakeSinkFiles.latest(path))
   // memoized metaRows: the engine calls supportCompletePushDown then
   // pushAggregation with the SAME Aggregation on one single-threaded
-  // builder — without the cache each call re-walks the committed file
-  // tree and re-reads both ledgers (O(#files) listing, twice, on exactly
-  // the many-small-files tables the ledgers exist to serve)
+  // builder — without the cache each call re-folds the facts of every
+  // file (O(#files), twice, on exactly the many-small-files tables the
+  // facts exist to serve)
   private var metaCache: Option[(Aggregation, Option[(Seq[Array[Any]], StructType, String)])] = None
 
   override def pruneColumns(requiredSchema: StructType): Unit =
@@ -85,14 +86,13 @@ private[sources] class LakeSinkScanBuilder(fullSchema: StructType, path: String,
   //
   // A lake table's gzip JSON files have no footer stats, so without
   // metadata `SELECT count(*)` (or min/max) decompresses EVERY byte; the
-  // commit-time ledgers (`_graft_counts.json` row counts,
-  // `_graft_stats.json` per-file column [lo, hi]) make them O(#files)
-  // driver arithmetic. COMPLETE pushdown only — legal exactly when every
-  // engine filter was consumed at planning (partition equalities; pruning
-  // composes: the fold covers only kept files) and every kept file has
-  // the needed ledger entry (pre-ledger files fall back to scanning —
-  // never a guess). count(partition col) ≡ count(*): the writer refuses
-  // NULL partition values.
+  // version record's per-file facts (row counts, column [lo, hi]) make
+  // them O(#files) driver arithmetic. COMPLETE pushdown only — legal
+  // exactly when every engine filter was consumed at planning (partition
+  // equalities; pruning composes: the fold covers only kept files) and
+  // every kept file has the needed fact (a file without one falls back to
+  // scanning — never a guess). count(partition col) ≡ count(*): the
+  // writer refuses NULL partition values.
 
   private def isPartCol(e: org.apache.spark.sql.connector.expressions.Expression): Boolean =
     e match {
@@ -104,10 +104,10 @@ private[sources] class LakeSinkScanBuilder(fullSchema: StructType, path: String,
     * group (one group total when there is no GROUP BY), each carrying the
     * group's partition values followed by the per-function answers — or
     * None when anything is unanswerable (unsupported function, group-by
-    * on a data column, residual filter, snapshot read, missing ledger
-    * entry). GROUP BY partition columns is answerable because a group IS
-    * a set of whole files: per-group counts sum that set's ledger rows,
-    * per-group min/max fold that set's stats intervals. */
+    * on a data column, residual filter, missing fact). GROUP BY partition
+    * columns is answerable because a group IS a set of whole files:
+    * per-group counts sum that set's recorded rows, per-group min/max
+    * fold that set's stats intervals. */
   private def metaRows(agg: Aggregation): Option[(Seq[Array[Any]], StructType, String)] =
     metaCache match {
       case Some((a, r)) if a eq agg => r
@@ -119,9 +119,7 @@ private[sources] class LakeSinkScanBuilder(fullSchema: StructType, path: String,
 
   private def metaRows0(agg: Aggregation): Option[(Seq[Array[Any]], StructType, String)] = {
     // includePositions (a CDF row-subset read) can never answer from
-    // file-granular ledgers; snapshot reads CAN — their version record
-    // carries its own ledger snapshots (legacy records without them fall
-    // back to scanning, never a guess)
+    // file-granular facts
     if (!allowAgg || includePositions.nonEmpty || dataFilters.nonEmpty ||
         agg.aggregateExpressions.isEmpty)
       return None
@@ -131,48 +129,36 @@ private[sources] class LakeSinkScanBuilder(fullSchema: StructType, path: String,
       case _ => return None
     }
     val root = Paths.get(path)
-    val kept: Seq[(String, Seq[(String, String)])] = (snapshot match {
-      case Some(rels) =>
-        rels.map(rel => (rel, LakeSinkPartitions.kvsOf(root, root.resolve(rel), partCols)))
-      case None =>
-        LakeSinkFiles.listLive(path, partCols)
-          .map { case (p, kvs) => (root.relativize(p).toString, kvs) }
-    }).filter { case (_, kvs) => LakeSinkPartitions.keeps(fullSchema, kvs, partFilters) }
+    val kept: Seq[(String, Seq[(String, String)])] = snap.files
+      .map(rel => (rel, LakeSinkPartitions.kvsOf(root, root.resolve(rel), partCols)))
+      .filter { case (_, kvs) => LakeSinkPartitions.keeps(fullSchema, kvs, partFilters) }
     // merge-on-read delete vectors: count(*) stays EXACT (subtract the
     // vector sizes); min/max/count(col)/partition-value folds FALL BACK
     // for any kept file carrying a vector — the recorded stats may
-    // describe deleted rows. Snapshot reads answer from THEIR version's
-    // recorded ledgers, live reads from the live ones.
-    val (counts, stats, dels) = snapshot match {
-      case Some(_) =>
-        (snapshotCounts.getOrElse(return None),
-          snapshotStats.getOrElse(return None), snapshotDeletes)
-      case None =>
-        (LakeSinkFiles.readCounts(path), LakeSinkStats.readBlobs(path),
-          LakeSinkDeletes.read(path))
-    }
+    // describe deleted rows (each fact kind decodes only when a function
+    // needs it: a plain count(*) never touches the stats)
+    val dels = snap.deletes
     // pre-rename files' stats entries carry PHYSICAL names — translate
     val aliasMap = evolution
       .getOrElse(LakeSinkFiles.readManifestEvolution(path))._1
     def hasVector(rels: Seq[String]): Boolean = rels.exists(dels.contains)
 
     def countOf(rels: Seq[String]): Option[Any] = {
-      val cs = rels.map(rel => counts.get(rel)
+      val cs = rels.map(rel => snap.counts.get(rel)
         .map(_ - dels.get(rel).map(_.length.toLong).getOrElse(0L)))
       if (cs.forall(_.isDefined)) Some(java.lang.Long.valueOf(cs.flatten.sum))
       else None
     }
 
-    /** count(DATA col) = Σ per file (rows − nulls): needs the counts
-      * ledger AND a null-counting stats entry for EVERY kept file
-      * (legacy entries without a null count ⇒ scan fallback, never a
-      * guess). */
+    /** count(DATA col) = Σ per file (rows − nulls): needs a row count
+      * AND a null-counting stats entry for EVERY kept file (legacy
+      * entries without a null count ⇒ scan fallback, never a guess). */
     def countColOf(rels: Seq[String], f: StructField): Option[Any] = {
       if (hasVector(rels)) return None // deleted rows' null-ness unknown
       val per = rels.map { rel =>
         for {
-          n <- counts.get(rel)
-          blob <- stats.get(rel)
+          n <- snap.counts.get(rel)
+          blob <- snap.stats.get(rel)
           cs <- LakeSinkStats.decode(blob, fullSchema, aliasMap).get(f.name)
           nulls <- cs.nulls
         } yield n - nulls
@@ -187,7 +173,7 @@ private[sources] class LakeSinkScanBuilder(fullSchema: StructType, path: String,
       * min/max ignore nulls). */
     def minmaxOf(rels: Seq[String], f: StructField, isMin: Boolean): Option[Any] = {
       if (hasVector(rels)) return None // a bound's row may be deleted
-      val entries = rels.map(rel => stats.get(rel)
+      val entries = rels.map(rel => snap.stats.get(rel)
         .flatMap(b => LakeSinkStats.decode(b, fullSchema, aliasMap).get(f.name)))
       if (entries.exists(_.isEmpty)) return None // some file unrecorded
       val bounds = entries.flatten.flatMap(_.bounds)
@@ -211,7 +197,7 @@ private[sources] class LakeSinkScanBuilder(fullSchema: StructType, path: String,
       }
 
     /** min/max of a PARTITION column over a file set: fold the decoded
-      * directory values — no ledger needed, values are never null. */
+      * directory values — no stats needed, values are never null. */
     def partMinmaxOf(files: Seq[(String, Seq[(String, String)])],
         f: StructField, isMin: Boolean): Option[Any] = {
       // a vector could hide every row of the boundary file
@@ -297,13 +283,13 @@ private[sources] class LakeSinkScanBuilder(fullSchema: StructType, path: String,
       new LakeSinkAggScan(path, partFilters, fnDesc, rows, schema)
     case None =>
       new LakeSinkScan(fullSchema, required, path, partCols, partFilters,
-        dataFilters, onPlanned, snapshot, triggerLimits, snapshotDeletes,
+        dataFilters, onPlanned, snap, snapshot.isDefined, triggerLimits,
         includePositions, onPlannedDeletes, evolution)
   }
 }
 
 /** The completely-pushed-down aggregate scan: one row PER GROUP folded
-  * from the commit-time ledgers — zero data files opened. */
+  * from the version record's facts — zero data files opened. */
 private[sources] class LakeSinkAggScan(path: String, partFilters: Array[Filter],
     fnDesc: String, rows: Seq[Array[Any]], aggSchema: StructType)
     extends Scan with Batch {
@@ -442,13 +428,15 @@ private[sources] object LakeSinkPartitions {
 private[sources] class LakeSinkScan(fullSchema: StructType, required: StructType,
     path: String, partCols: Seq[String], partFilters: Array[Filter],
     dataFilters: Array[Filter] = Array.empty,
-    onPlanned: Seq[String] => Unit = _ => (),
-    snapshot: Option[Seq[String]] = None,
-    triggerLimits: (Option[Int], Option[Long], Option[Long]) = (None, None, None),
-    snapshotDeletes: Map[String, Array[Long]] = Map.empty,
-    includePositions: Map[String, Array[Long]] = Map.empty,
-    onPlannedDeletes: Map[String, Array[Long]] => Unit = _ => (),
-    evolution: Option[(Map[String, String], Set[String])] = None)
+    onPlanned: Seq[String] => Unit,
+    // the record this scan plans from — the latest for a live read
+    snap: LakeSnapshot,
+    // a time-travel read (VERSION/TIMESTAMP AS OF) rather than a live one
+    timeTravel: Boolean,
+    triggerLimits: (Option[Int], Option[Long], Option[Long]),
+    includePositions: Map[String, Array[Long]],
+    onPlannedDeletes: Map[String, Array[Long]] => Unit,
+    evolution: Option[(Map[String, String], Set[String])])
     extends Scan with Batch with SupportsReportStatistics
     with SupportsRuntimeFiltering
     with SupportsReportPartitioning
@@ -523,9 +511,9 @@ private[sources] class LakeSinkScan(fullSchema: StructType, required: StructType
 
   // --- reported per-partition ordering (sort-free scans) ----------------------
   //
-  // A scan whose every input partition is ONE file recorded in the
-  // sorted-files ledger (written under `sortBy` — see
-  // [[LakeSinkFiles.updateSorted]]) reports that ordering ascending:
+  // A scan whose every input partition is ONE file carrying a sort claim
+  // in the record (written under `sortBy` — see [[LakeFacts]]) reports
+  // that ordering ascending:
   // delete vectors / CDF include-lists only FILTER a file's row stream,
   // never reorder it, so the claim survives merge-on-read state. Combined
   // with SPJ's KeyGroupedPartitioning (one sorted file per bucket dir
@@ -533,27 +521,21 @@ private[sources] class LakeSinkScan(fullSchema: StructType, required: StructType
   // ZERO exchanges and ZERO sorts — the fully co-located layout a 100 TB
   // fact-fact join wants (t58 pins it under the differential). Recorded
   // names translate through the live alias map (a rename keeps ordering);
-  // any unledgered file, multi-file group, dropped/pruned column, or
+  // any unclaimed file, multi-file group, dropped/pruned column, or
   // disagreeing column list reports nothing (sound by construction —
-  // files from unsorted producers simply never enter the ledger).
+  // files from unsorted producers simply never carry a claim).
   override def outputOrdering():
       Array[org.apache.spark.sql.connector.expressions.SortOrder] = {
     val none = Array.empty[org.apache.spark.sql.connector.expressions.SortOrder]
-    val ledger = LakeSinkFiles.readSorted(path) // absent on most tables
-    if (ledger.isEmpty) return none
+    val claims = snap.sorted // empty on most tables
+    if (claims.isEmpty) return none
     val perPart: Seq[Seq[String]] = planInputPartitions().toSeq.map {
       case p: LakeSinkInputPartition => Seq(p.file)
       case g: LakeSinkGroupPartition => g.files.map(_.file).toSeq
     }
     if (perPart.isEmpty || perPart.exists(_.length != 1)) return none
-    val root = Paths.get(path)
-    val retiredP = LakeSinkFiles.retiredDir(path)
-    val recorded: Seq[Option[Seq[String]]] = perPart.map { fs =>
-      val p = Paths.get(fs.head)
-      val rel = (if (p.startsWith(retiredP)) retiredP.relativize(p)
-                 else root.relativize(p)).toString
-      ledger.get(rel)
-    }
+    val recorded: Seq[Option[Seq[String]]] =
+      perPart.map(fs => claims.get(relOf(Paths.get(fs.head))))
     if (recorded.exists(_.isEmpty)) return none
     val lists = recorded.map(_.get).distinct
     if (lists.length != 1) return none
@@ -611,23 +593,24 @@ private[sources] class LakeSinkScan(fullSchema: StructType, required: StructType
     s"graft-lake-scan path=$path partFilters=[${partFilters.mkString(",")}]" +
       (if (dataFilters.nonEmpty) s" dataFilters=[${dataFilters.mkString(",")}]" else "") +
       (if (skippedFiles >= 0) s" skippedFiles=$skippedFiles" else "") +
-      snapshot.map(fs => s" snapshot=${fs.length}files").getOrElse("")
+      (if (timeTravel) s" snapshot=${snap.files.length}files" else "")
   override def toBatch: Batch = this
 
-  /** A VERSION/TIMESTAMP AS OF read plans the RECORDED file list, each
-    * name resolved live-first then against `_graft_retired/` (a rewrite
-    * moved it there); a name found in neither was vacuumed — fail loudly
-    * rather than return a silently partial snapshot. */
-  private def snapshotFiles(rels: Seq[String]): Seq[(Path, Seq[(String, String)])] = {
+  /** Every read plans its record's file list, each name resolved
+    * live-first then against `_graft_retired/` (a rewrite moved it there
+    * — also a commit landing while a live read plans the record before
+    * it); a name found in neither was vacuumed — fail loudly rather than
+    * return a silently partial snapshot. Resolved once per scan. */
+  private lazy val resolvedFiles: Seq[(Path, Seq[(String, String)])] = {
     val root = Paths.get(path)
-    rels.map { rel =>
+    snap.files.map { rel =>
       val live = root.resolve(rel)
       val p =
         if (Files.isRegularFile(live)) live
         else {
           val r = LakeSinkFiles.retiredDir(path).resolve(rel)
           require(Files.isRegularFile(r),
-            s"LakeSink time travel: snapshot file $rel was vacuumed from $path")
+            s"LakeSink: recorded file $rel was vacuumed from $path")
           r
         }
       // partition values decode from the RELATIVE name (shared by the
@@ -646,24 +629,18 @@ private[sources] class LakeSinkScan(fullSchema: StructType, required: StructType
       case g: LakeSinkGroupPartition => g.files.toSeq.map(f => Paths.get(f.file))
     }
     private val bytes = planned.map(Files.size(_)).sum
-    // EXACT row count from the commit-time ledger when every planned file
-    // is recorded (pruned + skipped files excluded) — feeds the CBO the
-    // number a parquet footer would; empty when any file is unrecorded.
-    // Snapshot scans subtract THEIR version's recorded vectors (the same
-    // vecs selection planInputPartitions applies — the live ledger could
-    // under- or over-count a snapshot), and rel names resolve
-    // retired-aware (a snapshot file under _graft_retired/ keys the
-    // ledgers by its ORIGINAL relative name).
+    // EXACT row count from the record's counts when every planned file
+    // has one (pruned + skipped files excluded) — feeds the CBO the
+    // number a parquet footer would; empty when any file lacks one. The
+    // record's vectors are subtracted, and rel names resolve
+    // retired-aware (a file under _graft_retired/ keys the facts by its
+    // ORIGINAL relative name).
     private val rows: java.util.OptionalLong = {
-      val ledger = LakeSinkFiles.readCounts(path)
-      val dels =
-        if (snapshot.isDefined) snapshotDeletes else LakeSinkDeletes.read(path)
-      val root = Paths.get(path)
-      val retired = LakeSinkFiles.retiredDir(path)
+      val counts = snap.counts
+      val dels = snap.deletes
       val cs = planned.map { p =>
-        val rel = (if (p.startsWith(retired)) retired.relativize(p)
-                   else root.relativize(p)).toString
-        ledger.get(rel).map(_ - dels.get(rel).map(_.length.toLong).getOrElse(0L))
+        val rel = relOf(p)
+        counts.get(rel).map(_ - dels.get(rel).map(_.length.toLong).getOrElse(0L))
       }
       if (cs.nonEmpty && cs.forall(_.isDefined))
         java.util.OptionalLong.of(cs.flatten.sum)
@@ -676,9 +653,9 @@ private[sources] class LakeSinkScan(fullSchema: StructType, required: StructType
     /** Column-level statistics for the CBO (`spark.sql.cbo.enabled`):
       * distinctCount folds the per-file NDV registers (opt-in
       * `ndvColumns` writes — elementwise max, then one HLL estimate for
-      * exactly the PRUNED file set), nullCount sums the ledger's null
+      * exactly the PRUNED file set), nullCount sums the recorded null
       * counts, min/max fold the [lo, hi] bounds. A column reports only
-      * what EVERY planned file recorded (the ledgers' usual
+      * what EVERY planned file recorded (the facts' usual
       * complete-or-silent policy); with no recorded columns the map is
       * empty and the optimizer falls back to rows/bytes. This is what
       * lets join ORDER and broadcast decisions on lake tables stop
@@ -693,23 +670,18 @@ private[sources] class LakeSinkScan(fullSchema: StructType, required: StructType
         ColumnStatistics]()
       // the engine consults columnStats() on EVERY logical-stats request
       // (transformV2Stats, unconditionally) — but only the CBO ever reads
-      // attributeStats, so skip the ledger decode entirely when it is off
-      // (keeps default planning zero-overhead at 10k-file ledgers)
+      // attributeStats, so skip the stats decode entirely when it is off
+      // (keeps default planning zero-overhead at 10k-file tables)
       if (!org.apache.spark.sql.internal.SQLConf.get.cboEnabled) return out
-      // live scans only: a snapshot's pinned ledgers serve the aggregate
-      // pushdown path (LakeSinkScanBuilder); CBO column stats on time
-      // travel add nothing a historical query plans on
-      if (snapshot.isDefined) return out
-      val blobs = LakeSinkStats.readBlobs(path)
+      // live scans only: a snapshot's facts serve the aggregate pushdown
+      // path (LakeSinkScanBuilder); CBO column stats on time travel add
+      // nothing a historical query plans on
+      if (timeTravel) return out
+      val blobs = snap.stats
       val aliasMap = evolution
         .getOrElse(LakeSinkFiles.readManifestEvolution(path))._1
-      val root = Paths.get(path)
-      val retired = LakeSinkFiles.retiredDir(path)
-      val decoded = planned.map { p =>
-        val rel = (if (p.startsWith(retired)) retired.relativize(p)
-                   else root.relativize(p)).toString
-        blobs.get(rel).map(LakeSinkStats.decode(_, fullSchema, aliasMap))
-      }
+      val decoded = planned.map(p =>
+        blobs.get(relOf(p)).map(LakeSinkStats.decode(_, fullSchema, aliasMap)))
       if (decoded.isEmpty || decoded.exists(_.isEmpty)) return out
       val perFile = decoded.flatten
       fullSchema.fields.iterator
@@ -792,11 +764,15 @@ private[sources] class LakeSinkScan(fullSchema: StructType, required: StructType
     }
   }
 
+  /** A planned file's RELATIVE name — the key of every fact and vector. */
+  private def relOf(p: Path): String = {
+    val retiredP = LakeSinkFiles.retiredDir(path)
+    (if (p.startsWith(retiredP)) retiredP.relativize(p)
+     else Paths.get(path).relativize(p)).toString
+  }
+
   override def planInputPartitions(): Array[InputPartition] = {
-    val all = snapshot match {
-      case Some(rels) => snapshotFiles(rels)
-      case None       => LakeSinkFiles.listLive(path, partCols)
-    }
+    val all = resolvedFiles
     val (rtPart, rtData) = runtimeFilters.partition(isPartFilter)
     val effPart = partFilters ++ rtPart
     val effData = dataFilters ++ rtData
@@ -804,14 +780,14 @@ private[sources] class LakeSinkScan(fullSchema: StructType, required: StructType
       .filter { case (_, kvs) => LakeSinkPartitions.keeps(fullSchema, kvs, effPart) }
     // per-file [lo, hi] stats skipping: drop files a residual (planned or
     // runtime) data filter PROVABLY cannot match (files are immutable once
-    // committed, so a ledger entry is always current; unrecorded files are
+    // committed, so a recorded stat is always current; unrecorded files are
     // kept — the engine still re-evaluates the filter on every surviving
     // row, so a skip is a pure I/O save, never a semantics change).
     // Temporal partition dirs prune through the SAME interval algebra: a
     // `days(ts)` file's dir value proves an inclusive epoch-micros
     // interval for ts, fed to mayMatch as a synthetic stat — so a plain
     // `ts BETWEEN` predicate opens only the matching day dirs (the hidden-
-    // partitioning contract, no stats ledger needed).
+    // partitioning contract, no recorded stats needed).
     // temporal pruning covers EVERY generation of an evolved table: each
     // file matches the dirKey of whichever spec wrote it (a `ts BETWEEN`
     // skips old day-dirs AND new hour-dirs; a file matching none is kept)
@@ -841,12 +817,11 @@ private[sources] class LakeSinkScan(fullSchema: StructType, required: StructType
     val taken =
       if (effData.isEmpty) kept
       else {
-        val blobs = LakeSinkStats.readBlobs(path)
+        val blobs = snap.stats
         val aliasMap = evolution
           .getOrElse(LakeSinkFiles.readManifestEvolution(path))._1
-        val root = Paths.get(path)
         kept.filter { case (p, kvs) =>
-          val fs = blobs.get(root.relativize(p).toString)
+          val fs = blobs.get(relOf(p))
             .map(LakeSinkStats.decode(_, fullSchema, aliasMap))
           val synth = temporalStats(kvs)
           effData.forall(f => LakeSinkStats.mayMatch(fs, fullSchema, f) &&
@@ -857,22 +832,15 @@ private[sources] class LakeSinkScan(fullSchema: StructType, required: StructType
     // row-level operations record the planned group (file) set — the
     // exact files a ReplaceData commit must swap out (last planning wins)
     onPlanned(taken.map(_._1.toString))
-    // merge-on-read delete vectors: live reads apply the CURRENT ledger,
-    // snapshot reads apply exactly their version's recorded vectors; in
-    // CDF delete-leg mode (includePositions) the read is restricted to
-    // the listed positions instead
-    val vecs: Map[String, Array[Long]] =
-      if (snapshot.isDefined) snapshotDeletes else LakeSinkDeletes.read(path)
+    // merge-on-read delete vectors: every read applies exactly its
+    // record's vectors; in CDF delete-leg mode (includePositions) the read
+    // is restricted to the listed positions instead
+    val vecs: Map[String, Array[Long]] = snap.deletes
     // row-level operations also record the vector snapshot their rewrite
     // content was computed against — a concurrent merge-on-read DELETE
     // (which touches no data file) is then detected at their commit
     // (LakeSinkDeletes.requireUnchanged), not silently undone
     onPlannedDeletes(vecs)
-    val rootP = Paths.get(path)
-    val retiredP = LakeSinkFiles.retiredDir(path)
-    def relOf(p: Path): String =
-      (if (p.startsWith(retiredP)) retiredP.relativize(p)
-       else rootP.relativize(p)).toString
     def mk(p: Path, kvs: Seq[(String, String)]): LakeSinkInputPartition = {
       val rel = if (vecs.isEmpty && includePositions.isEmpty) "" else relOf(p)
       // readers restore identity dir values into columns; bucket-id dirs
@@ -947,19 +915,20 @@ private[sources] class LakeSinkMicroBatchStream(fullSchema: StructType,
     with org.apache.spark.sql.connector.read.streaming.SupportsTriggerAvailableNow {
   import org.apache.spark.sql.connector.read.streaming.{CompositeReadLimit, Offset, ReadAllAvailable, ReadLimit, ReadMaxFiles, ReadMaxRows}
 
-  private def committed(): Seq[String] =
-    LakeSinkFiles.listLive(path, partCols).map(_._1.toString).sorted
+  private def committed(snap: LakeSnapshot): Seq[String] =
+    snap.files.map(Paths.get(path).resolve(_).toString).sorted
 
   // AvailableNow pins the availability horizon at query start: every
   // batch drains toward the SAME snapshot even while writers keep
   // committing, so the query terminates (the FileStreamSource contract)
   private var horizon: Option[Seq[String]] = None
-  override def prepareForTriggerAvailableNow(): Unit = horizon = Some(committed())
+  override def prepareForTriggerAvailableNow(): Unit =
+    horizon = Some(committed(LakeSinkFiles.latest(path)))
 
   /** `maxFilesPerTrigger` / `maxRowsPerTrigger` read options bound the
     * ADMITTED backlog per micro-batch — tailing a 100 TB lake from an old
     * checkpoint must not plan one monster batch. Rows are bounded from
-    * the commit-time counts ledger (whole files admit until the cap; an
+    * the latest record's row counts (whole files admit until the cap; an
     * unrecorded file closes its batch — progress is still guaranteed
     * because the first fresh file always admits). */
   override def getDefaultReadLimit: ReadLimit =
@@ -971,11 +940,11 @@ private[sources] class LakeSinkMicroBatchStream(fullSchema: StructType,
       case _               => ReadLimit.allAvailable()
     }
 
-  private def admitted(fresh: Seq[String], limit: ReadLimit): Seq[String] = limit match {
+  private def admitted(fresh: Seq[String], limit: ReadLimit,
+      counts: Map[String, Long]): Seq[String] = limit match {
     case _: ReadAllAvailable => fresh
     case f: ReadMaxFiles     => fresh.take(f.maxFiles)
     case r: ReadMaxRows =>
-      val counts = LakeSinkFiles.readCounts(path)
       val root = Paths.get(path)
       val out = scala.collection.mutable.ListBuffer.empty[String]
       var acc = 0L
@@ -989,7 +958,7 @@ private[sources] class LakeSinkMicroBatchStream(fullSchema: StructType,
       }
       out.toSeq
     case c: CompositeReadLimit => // most restrictive member (admissions
-      c.getReadLimits.map(l => admitted(fresh, l)).minBy(_.size) // are prefixes)
+      c.getReadLimits.map(l => admitted(fresh, l, counts)).minBy(_.size) // are prefixes)
     case _ => fresh
   }
 
@@ -1015,9 +984,10 @@ private[sources] class LakeSinkMicroBatchStream(fullSchema: StructType,
 
   override def latestOffset(start: Offset, limit: ReadLimit): Offset = {
     val seen = start.asInstanceOf[LakeSinkOffset].files
-    val avail = horizon.getOrElse(committed())
+    val snap = LakeSinkFiles.latest(path)
+    val avail = horizon.getOrElse(committed(snap))
     val fresh = avail.filterNot(seen.toSet)
-    LakeSinkOffset((seen ++ admitted(byteCapped(fresh), limit)).sorted)
+    LakeSinkOffset((seen ++ admitted(byteCapped(fresh), limit, snap.counts)).sorted)
   }
 
   override def initialOffset(): Offset = LakeSinkOffset(Seq.empty)
@@ -1032,7 +1002,7 @@ private[sources] class LakeSinkMicroBatchStream(fullSchema: StructType,
     // written and vector-deleted before its batch must not surface);
     // vectors landing AFTER admission are history the stream already
     // emitted — the documented append-only streaming contract
-    val vecs = LakeSinkDeletes.read(path)
+    val vecs = LakeSinkFiles.latest(path).deletes
     val identityKeys = LakePart.parseAll(partCols)
       .filter(_.isIdentity).map(_.dirKey).toSet
     fresh.map { f =>
@@ -1351,12 +1321,11 @@ private[graft] class LakeSinkReplaceBatchWrite(schema: StructType,
       throw e
     }
     LakeSinkFiles.promote(path, committed.flatMap(_.staged))
-    LakeSinkFiles.updateCounts(path, committed.flatMap(_.counted).toMap, Seq.empty)
-    LakeSinkStats.updateBlobs(path, committed.flatMap(_.statted).toMap, Seq.empty)
     // RETIRE (not delete) the replaced group files: pre-command snapshots
     // in the version log stay readable until VACUUM
     val removed = LakeSinkFiles.retire(path, oldFiles())
-    LakeSinkFiles.recordVersion(path, committed.flatMap(_.staged), removed)
+    LakeSinkFiles.recordVersion(path, committed.flatMap(_.staged), removed,
+      LakeFacts.of(committed))
     Files.write(Paths.get(path, "_SUCCESS"), Array.empty[Byte])
   }
   override def abort(messages: Array[WriterCommitMessage]): Unit = {
@@ -1456,9 +1425,8 @@ private[graft] class LakeSinkDeltaBatchWrite(schema: StructType, path: String,
     // window ReplaceData documents
     LakeSinkDeletes.update(path, adds, Seq.empty)
     LakeSinkFiles.promote(path, inserted.flatMap(_.staged))
-    LakeSinkFiles.updateCounts(path, inserted.flatMap(_.counted).toMap, Seq.empty)
-    LakeSinkStats.updateBlobs(path, inserted.flatMap(_.statted).toMap, Seq.empty)
-    LakeSinkFiles.recordVersion(path, inserted.flatMap(_.staged), Seq.empty)
+    LakeSinkFiles.recordVersion(path, inserted.flatMap(_.staged), Seq.empty,
+      LakeFacts.of(inserted))
     Files.write(Paths.get(path, "_SUCCESS"), Array.empty[Byte])
   }
   override def abort(messages: Array[WriterCommitMessage]): Unit = {

@@ -1,8 +1,5 @@
 package graft.sources
 
-import java.nio.charset.StandardCharsets
-import java.nio.file.{Files, Path, Paths, StandardCopyOption}
-
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.sources._
 import org.apache.spark.sql.types._
@@ -11,9 +8,9 @@ import org.apache.spark.unsafe.types.UTF8String
 /** Per-file column min/max statistics for lake tables — the footer-stats
   * role parquet row groups and Iceberg manifests play, for a gzip
   * JSON-lines lake that has neither. Writers track [lo, hi] per data
-  * column while serializing (zero extra passes); commits merge the
-  * entries into `_graft_stats.json`; retire/truncate/partition-DELETE
-  * trim them with the files; compaction folds originals' intervals.
+  * column while serializing (zero extra passes); each commit records the
+  * entries in its version record's `stats` field (base − removes + adds,
+  * like the file list); compaction folds originals' intervals.
   *
   * Two read-side consumers:
   *  - FILE SKIPPING: a pushed-but-residual data filter (`id < 100`,
@@ -41,14 +38,12 @@ private[graft] object LakeSinkStats {
 
   val MaxStringChars = 256
 
-  // ledger encoding separators (control chars survive the jsonEscape
+  // encoding separators (control chars survive the jsonEscape
   // round trip; none can appear in file names, column names, or the
   // numeric/Base64 value encodings)
-  private val FileSep  = '\u0001' // ledger line: rel <sep> blob
+  private val FileSep  = '\u0001' // record line: rel <sep> blob
   private val EntrySep = '\u0002' // between column entries of one blob
   private val FieldSep = '\u0003' // within an entry: col, lo, hi
-
-  def statsPath(path: String): Path = Paths.get(path, "_graft_stats.json")
 
   /** Is this a column type stats understand? (DateType joined with the
     * temporal partition transforms — a days(d) source is a DATA column.) */
@@ -66,12 +61,12 @@ private[graft] object LakeSinkStats {
   // column-index / Delta `bloomFilter` role) closes that: `id = X` skips
   // every file whose filter provably lacks X. OPT-IN per write via
   // `.option("bloomFilterColumns", "id")` (+ `bloomFilterBits`, default
-  // 2^17) — the sorted-ledger pattern: only declaring writes carry
+  // 2^17) — the sort-claim pattern: only declaring writes carry
   // filters, absent filters keep the file, so the skip is sound by
   // construction. Bits ride the stats blob as a 5th entry part (Base64),
-  // so all five commit-site hooks + retire + the per-version snapshots
-  // carry them with zero new plumbing; compaction ORs same-size filters
-  // (vector-free fold) or rebuilds them (materialize re-parse).
+  // so every version record carries them with zero new plumbing;
+  // compaction ORs same-size filters (vector-free fold) or rebuilds them
+  // (materialize re-parse).
 
   val DefaultBloomBits: Int = 1 << 17 // 16 KiB/column/file ≈ 10 bits/row at 13k rows
   private val BloomK = 6
@@ -92,8 +87,7 @@ private[graft] object LakeSinkStats {
   // guess). The payload rides the stats blob as a TAGGED trailing part
   // (':' + Base64 — ':' is in neither the Base64 alphabet nor a number,
   // so the part kind is unambiguous next to an untagged bloom part at any
-  // arity) — all commit-site hooks + retire + per-version snapshots carry
-  // it with zero new plumbing.
+  // arity) — every version record carries it with zero new plumbing.
 
   val NdvRegisters: Int = 256 // σ ≈ 1.04/√256 ≈ 6.5% — CBO-grade
 
@@ -525,11 +519,9 @@ private[graft] object LakeSinkStats {
   def blobOf(ts: Array[Option[ColTracker]]): String =
     ts.flatten.flatMap(_.encoded).mkString(EntrySep.toString)
 
-  // --- ledger I/O (same temp + atomic-move protocol as the counts ledger) ----
+  // --- record codec ------------------------------------------------------------
 
-  /** (rel → blob) line codec — shared by the live ledger file and the
-    * per-version ledger SNAPSHOTS [[LakeSinkFiles.recordVersion]] embeds
-    * (metadata-answered time travel). */
+  /** (rel → blob) line codec of a version record's `stats` field. */
   def encodeLines(m: Map[String, String]): String =
     m.toSeq.sorted.map { case (k, v) => s"$k$FileSep$v" }.mkString("\n")
 
@@ -539,26 +531,9 @@ private[graft] object LakeSinkStats {
       line.substring(0, i) -> line.substring(i + 1)
     }.toMap
 
-  def readBlobs(path: String): Map[String, String] = {
-    val p = statsPath(path)
-    if (!Files.isRegularFile(p)) return Map.empty
-    val json = new String(Files.readAllBytes(p), StandardCharsets.UTF_8)
-    decodeLines(LakeSinkFiles.jsonField(json, "files", s"stats ledger at $p"))
-  }
-
-  /** Driver-side merge-and-replace, under the sink's single-writer commit
-    * contract (mirrors [[LakeSinkFiles.updateCounts]]). */
-  def updateBlobs(path: String, add: Map[String, String],
-      remove: Seq[String]): Unit = {
-    if (add.isEmpty && remove.isEmpty) return
-    val merged = (readBlobs(path) -- remove) ++ add
-    val body = encodeLines(merged)
-    val json = s"""{"files":"${LakeSink.jsonEscape(body)}"}"""
-    val tmp = Paths.get(path, s".stats.${java.util.UUID.randomUUID.toString.take(8)}.tmp")
-    Files.write(tmp, json.getBytes(StandardCharsets.UTF_8))
-    Files.move(tmp, statsPath(path), StandardCopyOption.REPLACE_EXISTING,
-      StandardCopyOption.ATOMIC_MOVE)
-  }
+  /** The latest record's stats blobs (rel → blob). */
+  def readBlobs(path: String): Map[String, String] =
+    LakeSinkFiles.latest(path).stats
 
   // --- decoded form ------------------------------------------------------------
 

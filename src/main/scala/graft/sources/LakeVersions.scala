@@ -12,6 +12,8 @@ import org.apache.spark.sql.connector.read.ScanBuilder
 import org.apache.spark.sql.types._
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
 
+import scala.jdk.CollectionConverters._
+
 /** A `VERSION AS OF` / `TIMESTAMP AS OF` view of a lake table — the
   * snapshot recorded by [[LakeSinkFiles.recordVersion]] at one commit:
   * that commit's schema (pre-evolution versions show pre-evolution
@@ -25,30 +27,23 @@ import org.apache.spark.sql.util.CaseInsensitiveStringMap
   * partition-equality pruning as a live read; this is the versioned-
   * manifest contract (Iceberg snapshots / Delta versions) at its minimal
   * useful surface. */
-private[graft] class LakeSinkSnapshotTable(snapSchema: StructType, path: String,
-    partCols: Seq[String], relFiles: Seq[String], version: Long,
+private[graft] class LakeSinkSnapshotTable(snap: LakeSnapshot, path: String,
     tableName: String,
-    deletes: Map[String, Array[Long]] = Map.empty,
     includePositions: Map[String, Array[Long]] = Map.empty)
     extends Table with SupportsRead {
-  override def name(): String = s"$tableName@v$version"
-  override def schema(): StructType = snapSchema
+  override def name(): String = s"$tableName@v${snap.version.get}"
+  override def schema(): StructType = snap.schema
   override def partitioning(): Array[Transform] =
-    partCols.map(org.apache.spark.sql.connector.expressions.Expressions.identity)
+    snap.partCols.map(org.apache.spark.sql.connector.expressions.Expressions.identity)
       .toArray
   override def capabilities(): util.Set[TableCapability] =
     util.EnumSet.of(TableCapability.BATCH_READ)
+  // the version's OWN facts (count/min/max push down like a live read)
+  // and its OWN schema-evolution state: a pre-rename snapshot shows
+  // pre-rename names with no aliasing at all
   override def newScanBuilder(options: CaseInsensitiveStringMap): ScanBuilder =
-    new LakeSinkScanBuilder(schema, path, partCols, snapshot = Some(relFiles),
-      snapshotDeletes = deletes, includePositions = includePositions,
-      // the version's OWN ledger snapshots: count/min/max against a
-      // snapshot then push down like a live read (None for legacy
-      // records → scan fallback)
-      snapshotCounts = LakeSinkFiles.readVersionCounts(path, version),
-      snapshotStats = LakeSinkFiles.readVersionStats(path, version),
-      // …and its OWN schema-evolution state: a pre-rename snapshot shows
-      // pre-rename names with no aliasing at all
-      evolution = Some(LakeSinkFiles.readVersionEvolution(path, version)))
+    new LakeSinkScanBuilder(schema, path, snap.partCols, snapshot = Some(snap),
+      includePositions = includePositions, evolution = Some(snap.evolution))
 }
 
 /** Version-log read surfaces beyond plain time travel. */
@@ -75,8 +70,9 @@ object LakeVersions {
   def changes(spark: SparkSession, path: String, from: Long, to: Long):
       org.apache.spark.sql.DataFrame = {
     require(from <= to, s"LakeVersions.changes: from=$from must be <= to=$to")
-    val (_, _, filesFrom) = LakeSinkFiles.readVersion(path, from)
-    val (_, _, filesTo) = LakeSinkFiles.readVersion(path, to)
+    val snapFrom = LakeSinkFiles.snapshot(path, from)
+    val snapTo = LakeSinkFiles.snapshot(path, to)
+    val (filesFrom, filesTo) = (snapFrom.files, snapTo.files)
     val added = filesTo.diff(filesFrom)
     val removed = filesFrom.diff(filesTo)
     def read(rels: Seq[String], v: Long) = spark.read
@@ -90,8 +86,7 @@ object LakeVersions {
     // legs — the read replays exactly those (file, position) rows under
     // `from`'s visibility (they were live there by construction), so the
     // diff law stays exact without any file change
-    val delsFrom = LakeSinkFiles.readVersionDeletes(path, from)
-    val delsTo = LakeSinkFiles.readVersionDeletes(path, to)
+    val (delsFrom, delsTo) = (snapFrom.deletes, snapTo.deletes)
     val common = filesFrom.toSet.intersect(filesTo.toSet)
     val newlyDeleted: Map[String, Array[Long]] = common.iterator.flatMap { rel =>
       val before = delsFrom.getOrElse(rel, Array.empty[Long]).toSet
@@ -185,19 +180,15 @@ object LakeMaintenance {
     val (tblSchema, partCols) = LakeSinkFiles.readManifest(path).getOrElse(
       throw new IllegalArgumentException(s"LakeMaintenance: no lake table at $path"))
     val root = Paths.get(path)
+    // planning reads the latest record once: files, vectors and facts
+    val snap = LakeSinkFiles.latest(path)
     // merge-on-read delete vectors MATERIALIZE here: a compacted group's
     // survivors are line-filtered (position = line index in JSON-lines),
     // so a single-file directory carrying a vector is also a compaction
     // candidate — the rewrite reclaims the read-side filtering cost
-    val dels = LakeSinkDeletes.read(path)
-    val dirGroups = LakeSinkFiles.listLive(path, partCols)
-      .filter { case (_, kvs) =>
-        partitions.forall { case (k, v) => kvs.contains(k -> v) }
-      }
-      .map { case (p, _) => root.relativize(p).toString }
-      .groupBy(rel => Option(Paths.get(rel).getParent).map(_.toString).getOrElse(""))
+    val dels = snap.deletes
+    val dirGroups = scopedDirs(snap, partitions)
       .filter { case (_, rels) => rels.size > 1 || rels.exists(dels.contains) }
-      .toSeq.sortBy(_._1)
     // bin-pack within each directory: first-fit-decreasing on compressed
     // size keeps every merged input sum ≤ target (a single oversized
     // file stays its own bin); drop 1-file vector-free bins — rewriting
@@ -237,19 +228,15 @@ object LakeMaintenance {
     // one merge task per compacted partition directory; a group whose
     // originals carry delete vectors takes the MATERIALIZE path: survivor
     // lines are copied AND re-parsed through fresh stats/count trackers,
-    // so the rewrite fully restores metadata pushdown (the ledgers of a
+    // so the rewrite fully restores metadata pushdown (the facts of a
     // vector-free group carry over arithmetically — no parse needed).
     // Bloom coverage survives the rewrite: a column any original carried
     // a filter for is re-tracked at the originals' max size (the
     // vector-free fold ORs the original filters instead — see
     // LakeSinkStats.mergeBlobs)
-    val bloomLedger = LakeSinkStats.readBlobs(path)
-    // ONE decode pass per original feeds BOTH coverage maps (the ledger
+    // ONE decode pass per original feeds every coverage map (the stats
     // decode dominates metadata cost at many files — review r13)
-    val decodedByRel: Map[String, LakeSinkStats.FileStats] =
-      groups.flatMap(_._2).distinct.flatMap(r =>
-        bloomLedger.get(r).map(b =>
-          r -> LakeSinkStats.decode(b, tblSchema, evoAliases))).toMap
+    val decodedByRel = decodeStats(snap, groups.flatMap(_._2), tblSchema, evoAliases)
     val groupBloomCols: Seq[Map[String, Int]] = groups.map { case (_, rels) =>
       rels.flatMap(r => decodedByRel.get(r).toSeq.flatMap(_.toSeq.collect {
         case (n, cs) if cs.bloom.isDefined => n -> cs.bloom.get.length * 8
@@ -269,17 +256,16 @@ object LakeMaintenance {
       })).toSet
     }
     // SORTEDNESS preservation: when EVERY input of a group carries the
-    // SAME sorted-ledger claim, the merge is a K-WAY MERGE on the claimed
+    // SAME sort claim, the merge is a K-WAY MERGE on the claimed
     // key instead of a concatenation, and the output re-declares the
     // claim — routine maintenance must not silently demote t58's
     // zero-exchange-zero-sort merge joins back to sorting. (Z-order
     // rightly DROPS claims: it reorders by the z-value, not the key.)
     // Each entry: (recorded claim for re-declaration, live key columns
     // for comparison — recorded names pre-date renames).
-    val sortedLedger = LakeSinkFiles.readSorted(path)
     val groupSorted: Seq[Option[(Seq[String], Seq[String])]] =
       groups.map { case (_, rels) =>
-        val claims = rels.map(sortedLedger.get)
+        val claims = rels.map(snap.sorted.get)
         if (claims.forall(_.isDefined) && claims.flatten.distinct.size == 1 &&
             claims.head.get.nonEmpty) {
           val recorded = claims.head.get
@@ -317,7 +303,7 @@ object LakeMaintenance {
           gSort match {
             case Some((_, liveCols)) =>
               // K-WAY MERGE on the claimed key: inputs are individually
-              // sorted (sound by the ledger's construction), so merging
+              // sorted (sound by the claims' construction), so merging
               // by a comparator that REFINES Spark's sort order keeps
               // the output Spark-sorted; ties break by file index for
               // determinism. Per-line key parse is the price — paid only
@@ -472,7 +458,7 @@ object LakeMaintenance {
     // touching it (requireUnchanged against the `dels` snapshot the
     // materialize pass filtered with — rewriting survivors from the
     // stale vector set would silently resurrect the concurrently-deleted
-    // rows, and retire()'s ledger consolidation would drop their fresh
+    // rows, and retire()'s vector consolidation would drop their fresh
     // vector entries). Loser aborts loudly, table untouched, staged
     // merges swept.
     try {
@@ -485,53 +471,37 @@ object LakeMaintenance {
       throw e
     }
     LakeSinkFiles.promote(path, stagedNames)
-    // merged row counts: a MATERIALIZED group records its exact recount;
-    // a vector-free group carries the sum of the originals' ledger
-    // entries (omitted when any original is unrecorded — count(*) then
-    // falls back to scanning, never lies)
-    val ledger = LakeSinkFiles.readCounts(path)
-    val mergedCounts = groups.zipWithIndex.flatMap { case ((dirRel, rels), i) =>
-      val prefix = if (dirRel.isEmpty) "" else s"$dirRel/"
-      val name = s"${prefix}part-c$tag-$i.json.gz"
-      fresh.get(name) match {
-        case Some((n, _)) => Some(name -> n)
-        case None =>
-          val cs = rels.map(ledger.get)
-          if (cs.forall(_.isDefined)) Some(name -> cs.flatten.sum) else None
-      }
-    }.toMap
-    LakeSinkFiles.updateCounts(path, mergedCounts, Seq.empty)
-    // merged column stats: a MATERIALIZED group records the re-derived
-    // blob (metadata pushdown fully restored after the rewrite); a
-    // vector-free group folds the originals' interval hulls (dropped when
-    // any original is unrecorded — skipping/min-max then degrade, never
-    // lie)
-    val statsLedger = LakeSinkStats.readBlobs(path)
-    val mergedStats = groups.zipWithIndex.flatMap { case ((dirRel, rels), i) =>
-      val prefix = if (dirRel.isEmpty) "" else s"$dirRel/"
-      val name = s"${prefix}part-c$tag-$i.json.gz"
-      fresh.get(name) match {
-        case Some((_, blob)) => Some(name -> blob)
-        case None =>
-          val bs = rels.map(statsLedger.get)
-          if (bs.forall(_.isDefined))
-            Some(name -> LakeSinkStats.mergeBlobs(bs.flatten, tblSchema))
-          else None
-      }
-    }.toMap
-    LakeSinkStats.updateBlobs(path, mergedStats, Seq.empty)
-    // sorted claims: a k-way-merged group's output re-declares the
-    // originals' RECORDED column list (read-time alias translation keeps
-    // working); concatenated groups stay unclaimed as before
-    val mergedSorted = groups.zip(groupSorted).zipWithIndex.flatMap {
-      case (((dirRel, _), sc), i) =>
-        val prefix = if (dirRel.isEmpty) "" else s"$dirRel/"
-        sc.map { case (recorded, _) => s"${prefix}part-c$tag-$i.json.gz" -> recorded }
-    }.toMap
-    LakeSinkFiles.updateSorted(path, mergedSorted, Seq.empty)
+    // merged facts per output file (staged in group order):
+    //  - row counts: a MATERIALIZED group records its exact recount; a
+    //    vector-free group carries the sum of the originals' counts
+    //    (omitted when any original lacks one — count(*) then falls back
+    //    to scanning, never lies);
+    //  - column stats: a MATERIALIZED group records the re-derived blob
+    //    (metadata pushdown fully restored after the rewrite); a
+    //    vector-free group folds the originals' interval hulls (dropped
+    //    when any original lacks stats — skipping/min-max then degrade,
+    //    never lie);
+    //  - sort claims: a k-way-merged group's output re-declares the
+    //    originals' RECORDED column list (read-time alias translation
+    //    keeps working); concatenated groups stay unclaimed.
+    val merged = groups.zip(groupSorted).zipWithIndex.map {
+      case (((dirRel, rels), sc), i) =>
+        val name = s"${if (dirRel.isEmpty) "" else s"$dirRel/"}part-c$tag-$i.json.gz"
+        def all[T](m: Map[String, T]): Option[Seq[T]] = {
+          val vs = rels.map(m.get)
+          if (vs.forall(_.isDefined)) Some(vs.flatten) else None
+        }
+        LakeFacts(
+          fresh.get(name).map(_._1).orElse(all(snap.counts).map(_.sum))
+            .map(name -> _).toMap,
+          fresh.get(name).map(_._2)
+            .orElse(all(snap.stats).map(LakeSinkStats.mergeBlobs(_, tblSchema)))
+            .map(name -> _).toMap,
+          sc.map { case (recorded, _) => name -> recorded }.toMap)
+    }.foldLeft(LakeFacts())(_ ++ _)
     val removed = LakeSinkFiles.retire(path, groups.flatMap(_._2).map(rel =>
       root.resolve(rel).toString))
-    LakeSinkFiles.recordVersion(path, stagedNames, removed)
+    LakeSinkFiles.recordVersion(path, stagedNames, removed, merged)
     (groups.size, groups.map(_._2.size).sum, stagedNames.size)
   }
 
@@ -551,8 +521,8 @@ object LakeMaintenance {
     * the z-value plus a within-partition sort gives `nFiles` output
     * tasks, each writing one file over a contiguous z-range — committed
     * through the ordinary truncating-overwrite protocol (the pre-rewrite
-    * snapshot stays readable until VACUUM; counts + stats ledgers are
-    * rebuilt by the write itself). Equal-width buckets keep the bucketing
+    * snapshot stays readable until VACUUM; the write itself records the
+    * new files' facts). Equal-width buckets keep the bucketing
     * a broadcast-free scalar expression; skewed dimensions only loosen
     * per-file boxes, never correctness, and the range partitioner still
     * balances ROWS per file by sampling the z-values.
@@ -629,14 +599,24 @@ object LakeMaintenance {
     * 100 TB story: you z-order yesterday's partition when its stream
     * closes — one partition-sized shuffle, not a table-sized one; the
     * rest of the table is not even listed. */
-  /** Decode the scope's originals' stats entries once (aliases applied)
-    * — shared by the coverage re-declaration below. */
-  private def originalsDecoded(ledger: Map[String, String], rels: Seq[String],
-      schema: StructType, path: String): Map[String, LakeSinkStats.FileStats] = {
-    val (aliases, _) = LakeSinkFiles.readManifestEvolution(path)
-    rels.distinct.flatMap(r => ledger.get(r).map(b =>
+  /** The record's files grouped by partition DIRECTORY (sorted), kept
+    * when the directory carries every `partitions` (dir key → value) pair
+    * — the `… WHERE` scope compaction and Z-order share. */
+  private def scopedDirs(snap: LakeSnapshot,
+      partitions: Map[String, String]): Seq[(String, Seq[String])] =
+    snap.files
+      .filter(rel => partitions.forall { case (k, v) =>
+        Option(Paths.get(rel).getParent).exists(d =>
+          d.iterator().asScala.exists(_.toString == s"$k=$v")) })
+      .groupBy(rel => Option(Paths.get(rel).getParent).map(_.toString).getOrElse(""))
+      .toSeq.sortBy(_._1)
+
+  /** Decode the recorded stats of `rels` once (aliases applied) — the
+    * input of every coverage re-declaration. */
+  private def decodeStats(snap: LakeSnapshot, rels: Seq[String],
+      schema: StructType, aliases: Map[String, String]): Map[String, LakeSinkStats.FileStats] =
+    rels.distinct.flatMap(r => snap.stats.get(r).map(b =>
       r -> LakeSinkStats.decode(b, schema, aliases))).toMap
-  }
 
   def zorder(spark: SparkSession, path: String, cols: Seq[String],
       nFiles: Int, partitions: Map[String, String]): (Int, Int) = {
@@ -666,25 +646,19 @@ object LakeMaintenance {
     partitions.keys.foreach(k => require(dirKeys.contains(k),
       s"zorder: $k is not a partition dir key of ${partCols.mkString(",")}"))
     val root = Paths.get(path)
-    val dels = LakeSinkDeletes.read(path)
-    val dirGroups: Seq[(String, Seq[String])] = LakeSinkFiles.listLive(path, partCols)
-      .filter { case (_, kvs) =>
-        partitions.forall { case (k, v) => kvs.contains(k -> v) }
-      }
-      .map { case (p, _) => root.relativize(p).toString }
-      .groupBy(rel => Option(Paths.get(rel).getParent).map(_.toString).getOrElse(""))
-      .toSeq.sortBy(_._1)
+    val snap = LakeSinkFiles.latest(path)
+    val dels = snap.deletes
+    val dirGroups = scopedDirs(snap, partitions)
     require(dirGroups.nonEmpty,
       s"zorder: no partition directory matches $partitions")
-    val vNow = LakeSinkFiles.listVersions(path).lastOption.getOrElse(
+    val vNow = snap.version.getOrElse(
       throw new IllegalStateException(s"zorder: no committed version at $path"))
     // bloom/NDV coverage survives the rewrite like compact's: re-declare
     // any column the scope's originals carried (at their max bloom size)
     // as write options on the temp lake — without this the rewrite would
-    // silently strip the ledgers the table was configured for (review r13)
-    val zLedger = LakeSinkStats.readBlobs(path)
-    val (schemaT, _) = LakeSinkFiles.readManifest(path).get
-    val zDecoded = originalsDecoded(zLedger, dirGroups.flatMap(_._2), schemaT, path)
+    // silently strip the stats the table was configured for (review r13)
+    val zDecoded = decodeStats(snap, dirGroups.flatMap(_._2), schema,
+      LakeSinkFiles.readManifestEvolution(path)._1)
     val zBloom: Map[String, Int] = zDecoded.values.flatten.collect {
       case (n, cs) if cs.bloom.isDefined => n -> cs.bloom.get.length * 8
     }.groupBy(_._1).map { case (n, ms) => n -> ms.map(_._2).max }
@@ -694,8 +668,7 @@ object LakeMaintenance {
     val k = cols.size
     val originals = dirGroups.flatMap(_._2)
     val stagedNames = scala.collection.mutable.ArrayBuffer.empty[String]
-    val addCounts = scala.collection.mutable.Map.empty[String, Long]
-    val addStats = scala.collection.mutable.Map.empty[String, String]
+    var addFacts = LakeFacts()
     dirGroups.zipWithIndex.foreach { case ((_, rels), di) =>
       // snapshot-read exactly this directory's files at the CURRENT
       // version — its recorded vectors apply, so the rewrite
@@ -740,17 +713,15 @@ object LakeMaintenance {
         if (zNdv.nonEmpty)
           w = w.option("ndvColumns", zNdv.toSeq.sorted.mkString(","))
         w.save(tmpT.toString)
-        val tmpCounts = LakeSinkFiles.readCounts(tmpT.toString)
-        val tmpStats = LakeSinkStats.readBlobs(tmpT.toString)
-        LakeSinkFiles.listLive(tmpT.toString, partCols).foreach { case (p, _) =>
-          val rel = tmpT.relativize(p).toString
+        // the temp lake's record carries the rewritten files' facts
+        val tmpSnap = LakeSinkFiles.latest(tmpT.toString)
+        tmpSnap.files.foreach { rel =>
           val dest = LakeSinkFiles.stagingDir(path).resolve(rel)
           Option(dest.getParent).foreach(Files.createDirectories(_))
-          Files.move(p, dest, StandardCopyOption.REPLACE_EXISTING)
+          Files.move(tmpT.resolve(rel), dest, StandardCopyOption.REPLACE_EXISTING)
           stagedNames += rel
-          tmpCounts.get(rel).foreach(n => addCounts(rel) = n)
-          tmpStats.get(rel).foreach(b => addStats(rel) = b)
         }
+        addFacts = addFacts ++ tmpSnap.facts
       } finally {
         if (Files.exists(tmpT)) {
           val it = Files.walk(tmpT).sorted(java.util.Comparator.reverseOrder()).iterator()
@@ -767,11 +738,9 @@ object LakeMaintenance {
       throw e
     }
     LakeSinkFiles.promote(path, stagedNames.toSeq)
-    LakeSinkFiles.updateCounts(path, addCounts.toMap, Seq.empty)
-    LakeSinkStats.updateBlobs(path, addStats.toMap, Seq.empty)
     val removed = LakeSinkFiles.retire(path,
       originals.map(rel => root.resolve(rel).toString))
-    LakeSinkFiles.recordVersion(path, stagedNames.toSeq, removed)
+    LakeSinkFiles.recordVersion(path, stagedNames.toSeq, removed, addFacts)
     (originals.size, stagedNames.size)
   }
 
@@ -788,8 +757,8 @@ object LakeMaintenance {
     * debt; the alternative — path indirection into the source — is what
     * object stores force on Delta, and its vacuum hazard is exactly
     * what this design avoids). Falls back to a byte copy if the
-    * filesystem refuses the link. Ledgers (counts/stats/sorted/delete
-    * vectors) are trimmed to the live set and copied; the manifest
+    * filesystem refuses the link. Facts (counts/stats/sort claims) and
+    * delete vectors are copied from the source record; the manifest
     * carries the full evolution state (renames/dropped/constraints/
     * partition-spec history); the clone's history STARTS at version 1
     * (its version records are its own — time travel into pre-clone
@@ -803,7 +772,7 @@ object LakeMaintenance {
 
   /** `versionAsOf = Some(v)` clones the source's RECORDED version v
     * instead of the live state (branch-from-history): the file list,
-    * schema, delete vectors, and ledger snapshots are the version
+    * schema, delete vectors, and facts are the version
     * record's own, names resolve live-first then `_graft_retired/`
     * (a vacuumed file refuses loudly — no silently partial clone), and
     * the clone's links pin the historical inodes so a LATER source
@@ -820,31 +789,23 @@ object LakeMaintenance {
     val srcRoot = Paths.get(srcPath)
     val dstRoot = Paths.get(dstPath)
     val retired = LakeSinkFiles.retiredDir(srcPath)
-    val (schema, partCols, files, counts, stats, vecs, renames, dropped) =
-      versionAsOf match {
-        case Some(v) =>
-          val (sch, pc, fs) = LakeSinkFiles.readVersion(srcPath, v)
-          val (ren, drp) = {
-            val (aliases, ignored) = LakeSinkFiles.readVersionEvolution(srcPath, v)
-            // invert the per-version alias map back to the manifest form
-            (aliases.toSeq.groupBy(_._2)
-              .map { case (l, ps) => l -> ps.map(_._1) }, ignored.toSeq)
-          }
-          (sch, pc, fs.sorted,
-            LakeSinkFiles.readVersionCounts(srcPath, v).getOrElse(Map.empty),
-            LakeSinkFiles.readVersionStats(srcPath, v).getOrElse(Map.empty),
-            LakeSinkFiles.readVersionDeletes(srcPath, v), ren, drp)
-        case None =>
-          val (sch, pc) = LakeSinkFiles.readManifest(srcPath).get
-          val live = LakeSinkFiles.listLive(srcPath, pc)
-            .map { case (p, _) => srcRoot.relativize(p).toString }.sorted
-          val ls = live.toSet
-          val (ren, drp) = LakeSinkFiles.readManifestRenames(srcPath)
-          (sch, pc, live,
-            LakeSinkFiles.readCounts(srcPath).filter(e => ls(e._1)),
-            LakeSinkStats.readBlobs(srcPath).filter(e => ls(e._1)),
-            LakeSinkDeletes.read(srcPath).filter(e => ls(e._1)), ren, drp)
-      }
+    // files, vectors and facts come from ONE record: the requested
+    // version's, or the latest for a live clone
+    val snap = versionAsOf.map(LakeSinkFiles.snapshot(srcPath, _))
+      .getOrElse(LakeSinkFiles.latest(srcPath))
+    val files = snap.files.sorted
+    val (schema, partCols, renames, dropped) = versionAsOf match {
+      case Some(_) =>
+        // invert the per-version alias map back to the manifest form
+        val (aliases, ignored) = snap.evolution
+        (snap.schema, snap.partCols,
+          aliases.toSeq.groupBy(_._2).map { case (l, ps) => l -> ps.map(_._1) },
+          ignored.toSeq)
+      case None =>
+        val (sch, pc) = LakeSinkFiles.readManifest(srcPath).get
+        val (ren, drp) = LakeSinkFiles.readManifestRenames(srcPath)
+        (sch, pc, ren, drp)
+    }
     files.foreach { rel =>
       val live = srcRoot.resolve(rel)
       val from =
@@ -863,16 +824,9 @@ object LakeMaintenance {
         Files.copy(from, to, StandardCopyOption.REPLACE_EXISTING)
       }
     }
-    LakeSinkFiles.updateCounts(dstPath, counts, Seq.empty)
-    LakeSinkStats.updateBlobs(dstPath, stats, Seq.empty)
-    if (versionAsOf.isEmpty) {
-      val fileSet = files.toSet
-      LakeSinkFiles.updateSorted(dstPath,
-        LakeSinkFiles.readSorted(srcPath).filter(e => fileSet(e._1)), Seq.empty)
-    }
-    if (vecs.nonEmpty)
+    if (snap.deletes.nonEmpty)
       LakeSinkDeletes.update(dstPath,
-        vecs.map { case (k, v) => k -> v.toSeq }, Seq.empty)
+        snap.deletes.map { case (k, v) => k -> v.toSeq }, Seq.empty)
     LakeSinkFiles.writeManifest(dstPath, schema, partCols, renames, dropped,
       if (versionAsOf.isEmpty) LakeSinkFiles.readManifestConstraints(srcPath)
       else Seq.empty,
@@ -887,7 +841,7 @@ object LakeMaintenance {
       LakeSinkFiles.readManifestProps(srcPath),
       LakeSinkFiles.readManifestDefaults(srcPath)
         .filter(d => schema.fieldNames.contains(d._1)))
-    LakeSinkFiles.recordVersion(dstPath, files, Seq.empty)
+    LakeSinkFiles.recordVersion(dstPath, files, Seq.empty, snap.facts)
     files.size
   }
 
@@ -1020,14 +974,14 @@ object LakeMaintenance {
     * relative names (a vacuumed file fails the restore loudly — the
     * bytes are gone), live files outside the target retire, the
     * manifest returns to the target's schema + evolution state, and the
-    * counts/stats/delete ledgers are SET from the target version's
-    * recorded snapshots — so count(*)/min-max pushdown answer for the
+    * facts and delete vectors are SET from the target version's
+    * record — so count(*)/min-max pushdown answer for the
     * restored state immediately, and merge-on-read deletes committed
     * AFTER the target are correctly undone. Single-writer maintenance,
     * like compaction. Returns (files returned, files retired).
     *
-    * 100 TB story: restore cost is O(changed files) renames + three
-    * ledger writes — the accidental-TRUNCATE undo button at any scale. */
+    * 100 TB story: restore cost is O(changed files) renames + one
+    * version record — the accidental-TRUNCATE undo button at any scale. */
   /** TAG a recorded version with a durable name (`None` = the latest) —
     * the Iceberg-tag role: `VERSION AS OF 'name'` resolves it and VACUUM
     * pins the tagged record + the retired files it references, so the tag
@@ -1070,10 +1024,10 @@ object LakeMaintenance {
   }
 
   def restore(path: String, version: Long): (Int, Int) = {
-    val (sch, partCols, wantRels) = LakeSinkFiles.readVersion(path, version)
+    val target = LakeSinkFiles.snapshot(path, version)
+    val (sch, partCols, wantRels) = (target.schema, target.partCols, target.files)
     val root = Paths.get(path)
-    val live = LakeSinkFiles.listLive(path, partCols)
-      .map { case (p, _) => root.relativize(p).toString }.toSet
+    val live = LakeSinkFiles.latest(path).files.toSet
     val want = wantRels.toSet
     // 1. bring the target's retired files back (bytes are immutable; the
     // move leaves no retired residue, so a LATER rewrite can retire the
@@ -1103,7 +1057,7 @@ object LakeMaintenance {
     // 3. manifest back to the target's schema + evolution state (the
     // retired post-target files are the only ones the rollback could
     // disagree with)
-    val (aliases, ignored) = LakeSinkFiles.readVersionEvolution(path, version)
+    val (aliases, ignored) = target.evolution
     // the pre-restore ACTIVE spec joins the history when the target's
     // spec differs — post-target files may still exist... they retire in
     // step 2, but the returned files were written under the TARGET's
@@ -1128,22 +1082,16 @@ object LakeMaintenance {
       tableProps = LakeSinkFiles.readManifestProps(path),
       defaults = LakeSinkFiles.readManifestDefaults(path)
         .filter(d => sch.fieldNames.contains(d._1)))
-    // 4. ledgers SET from the target's recorded snapshots (files are
-    // immutable, so re-adding still-live entries is idempotent; a legacy
-    // record without snapshots degrades to scan fallback, never a guess)
-    LakeSinkFiles.readVersionCounts(path, version)
-      .foreach(c => LakeSinkFiles.updateCounts(path, c, Seq.empty))
-    LakeSinkFiles.readVersionStats(path, version)
-      .foreach(b => LakeSinkStats.updateBlobs(path, b, Seq.empty))
-    // delete vectors: EXACTLY the target's state for its files — first
+    // 4. delete vectors: EXACTLY the target's state for its files — first
     // clear every live entry for them (update removes AFTER unioning
     // adds, so a single clear+add call would strip the adds too), then
     // append the target's recorded vectors
     LakeSinkDeletes.update(path, Map.empty, wantRels)
-    val vDels = LakeSinkFiles.readVersionDeletes(path, version)
-      .map { case (k, v) => k -> v.toSeq }
+    val vDels = target.deletes.map { case (k, v) => k -> v.toSeq }
     if (vDels.nonEmpty) LakeSinkDeletes.update(path, vDels, Seq.empty)
-    LakeSinkFiles.recordVersion(path, returned, removed)
+    // 5. facts SET from the target's record (files are immutable, so
+    // re-stating still-live files' facts is idempotent)
+    LakeSinkFiles.recordVersion(path, returned, removed, target.facts)
     (returned.size, removed.size)
   }
 
@@ -1207,11 +1155,11 @@ object LakeMaintenance {
     * each needy file is re-read through the scanner's own parser
     * ([[JsonLineParser]] — renames/widening/DEFAULT prefills all apply)
     * and the writer's own trackers ([[LakeSinkStats.trackers]]), so the
-    * ledger entry an analyzed file gets is byte-compatible with one the
+    * stats blob an analyzed file gets is byte-compatible with one the
     * writer would have produced had the options been set at write time.
-    * Covers: bounds/nulls for ledger-absent files AND for files whose
+    * Covers: bounds/nulls for stats-absent files AND for files whose
     * never-dying-tracker (numeric/temporal) columns lack entries — the
-    * post-evolution backfill; row counts for counts-ledger-missed files
+    * post-evolution backfill; row counts for files the record lacks
     * (count-pushdown completeness); and opt-in NDV registers /
     * histograms / bloom filters per column. A requested bloom column
     * whose existing filter has a DIFFERENT size is re-analyzed at the
@@ -1225,16 +1173,17 @@ object LakeMaintenance {
     * entry absence can be permanent and an absence trigger would break
     * the no-op contract.)
     *
-    * Only the live stats ledger updates: the next plan sees the coverage
-    * immediately, while snapshot reads keep their version's RECORDED
-    * (pre-analyze) ledgers — historically exact, degrading to scans as
-    * they always did. Stats cover ALL written rows (delete vectors are
+    * ANALYZE adds no version: it amends the LATEST record in place
+    * ([[LakeSinkFiles.amendFacts]]), so the next plan sees the coverage
+    * immediately, while older versions keep their RECORDED
+    * (pre-analyze) facts — degrading to scans as they always did.
+    * Stats cover ALL written rows (delete vectors are
     * not subtracted — the writer's own semantics; consumers already
     * treat vectored files specially). Returns (files analyzed, live
     * files skipped as already covered).
     *
     * 100 TB story: the CBO features (t71 NDV broadcast flips, t79
-    * histogram selectivity) are only as good as their ledger coverage,
+    * histogram selectivity) are only as good as their stats coverage,
     * and a table loaded before anyone set `graft.ndvColumns` has none —
     * ANALYZE is the retrofit path every warehouse has (one distributed
     * linear pass over exactly the uncovered files), instead of "rewrite
@@ -1283,21 +1232,17 @@ object LakeMaintenance {
       }, s"LakeMaintenance.analyze: bloom filter on $c is unsupported")
       f.name
     }
-    val root = Paths.get(path)
-    val rels = LakeSinkFiles.listLive(path, partCols)
-      .map { case (p, _) => root.relativize(p).toString }
-    val ledger = LakeSinkStats.readBlobs(path)
+    val snap = LakeSinkFiles.latest(path)
+    val rels = snap.files
     val (evoAliases, evoIgnored) = LakeSinkFiles.readManifestEvolution(path)
     val evoDefaults = LakeSinkDefaults.internalMap(path, dataSchema)
-    val decoded: Map[String, LakeSinkStats.FileStats] = rels.flatMap(r =>
-      ledger.get(r).map(b =>
-        r -> LakeSinkStats.decode(b, tblSchema, evoAliases))).toMap
-    // a file needs work when: it has no ledger line at all; a requested
+    val decoded = decodeStats(snap, rels, tblSchema, evoAliases)
+    // a file needs work when: it has no stats at all; a requested
     // column's ENTRY or PART is missing (an entry can be missing because
     // the file pre-dates the column — the re-parse default/null-fills
     // it); a requested bloom column's filter has the WRONG SIZE (the
     // sizing knob must resize, not silently no-op — review r14); the
-    // counts ledger misses the file (count-pushdown completeness); or a
+    // record has no row count for it (count-pushdown completeness); or a
     // CONVERGENT-tracker column (numeric/temporal — trackers that can
     // never die) lacks its bounds entry entirely, the post-evolution
     // bounds-backfill case. String columns are deliberately NOT part of
@@ -1316,7 +1261,7 @@ object LakeMaintenance {
         case _ => false
       }) => f.name
     }.toSeq
-    val counts = LakeSinkFiles.readCounts(path)
+    val counts = snap.counts
     val needy = rels.filter { rel =>
       !decoded.contains(rel) ||
         !counts.contains(rel) ||
@@ -1373,22 +1318,14 @@ object LakeMaintenance {
         } finally in.close()
         rel -> ((rows, LakeSinkStats.blobOf(trackers)))
       }.collect().toSeq
-    // a concurrent rewrite may have retired an analyzed file — a blob
-    // for a dead file would plant a garbage ledger line; trim to the
-    // still-live set (analyze is advisory metadata, no abort needed)
-    val liveNow = LakeSinkFiles.listLive(path, partCols)
-      .map { case (p, _) => root.relativize(p).toString }.toSet
-    val adds = fresh.filter(e => liveNow(e._1))
-    LakeSinkStats.updateBlobs(path,
-      adds.map { case (r, (_, b)) => r -> b }.toMap, Seq.empty)
-    // counts backfill rides the same pass: only for files the counts
-    // ledger MISSES (recorded entries are already exact — never replace;
-    // re-read the ledger here, a commit may have landed since planning)
-    val countsNow = LakeSinkFiles.readCounts(path)
-    LakeSinkFiles.updateCounts(path,
-      adds.collect { case (r, (n, _)) if !countsNow.contains(r) => r -> n }.toMap,
-      Seq.empty)
-    (adds.size, rels.size - needy.size)
+    // amend the LATEST record in place (no new version): it keeps only
+    // facts of its own files, so a file a concurrent rewrite retired
+    // meanwhile gets none. Counts backfill rides the same pass, only for
+    // files the record MISSED (recorded counts are already exact)
+    val live = LakeSinkFiles.amendFacts(path, LakeFacts(
+      counts = fresh.collect { case (r, (n, _)) if !counts.contains(r) => r -> n }.toMap,
+      stats = fresh.map { case (r, (_, b)) => r -> b }.toMap))
+    (fresh.count(e => live(e._1)), rels.size - needy.size)
   }
 
   /** Total committed data files of a lake table (maintenance metric). */

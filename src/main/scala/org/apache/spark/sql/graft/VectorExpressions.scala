@@ -2,6 +2,7 @@ package org.apache.spark.sql.graft
 
 import org.apache.spark.sql.{Column, SparkSession, SparkSessionExtensions}
 import org.apache.spark.sql.catalyst.FunctionIdentifier
+import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, ExpectsInputTypes, Expression, ExpressionInfo, TernaryExpression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.ArrayData
@@ -280,6 +281,36 @@ object GraftArgmin {
   private def cmp(a: Double, b: Double): Int =
     if (a == b) 0 else java.lang.Double.compare(a, b)
 
+  private def isVector(dt: DataType): Boolean = dt match {
+    case ArrayType(DoubleType, _) => true
+    case _                        => false
+  }
+
+  /** Analysis-time input check shared by [[ArgminSq]] and [[ArgmaxCos]]:
+    * `v` is array<double>, the optional norm a double, and `kc` an array
+    * of structs of exactly (int, array<double>[, double]) — field names
+    * are free, the kernels read positions. A wrong type is refused here
+    * instead of failing (or misreading) inside a task. */
+  def checkInputs(fn: String, v: DataType, nrm: Option[DataType],
+      kc: DataType): TypeCheckResult = {
+    val extra = nrm.map(_ => DoubleType).toSeq
+    val packOk = kc match {
+      case ArrayType(StructType(fs), _) =>
+        fs.length == 2 + extra.size && fs(0).dataType == IntegerType &&
+          isVector(fs(1).dataType) && fs.drop(2).map(_.dataType).toSeq == extra
+      case _ => false
+    }
+    def fail(what: String, want: String, got: DataType) =
+      TypeCheckResult.TypeCheckFailure(
+        s"$fn: $what must be $want, got ${got.catalogString}")
+    if (!isVector(v)) fail("the vector", "array<double>", v)
+    else if (nrm.exists(_ != DoubleType)) fail("the norm", "double", nrm.get)
+    else if (!packOk)
+      fail("the packed entries", s"array<struct<int, array<double>${
+        extra.map(_ => ", double").mkString}>>", kc)
+    else TypeCheckResult.TypeCheckSuccess
+  }
+
   /** kc: array<struct<id int, cv array<double>>> in id-ASCENDING order;
     * returns struct(dist, id) of the squared-L2 argmin over the entries
     * (dist accumulated left-to-right exactly like [[SqDist]]; ties keep
@@ -373,6 +404,9 @@ case class ArgminSq(left: Expression, right: Expression)
 
   override def prettyName: String = "graft_argmin_sq"
 
+  override def checkInputDataTypes(): TypeCheckResult =
+    GraftArgmin.checkInputs(prettyName, left.dataType, None, right.dataType)
+
   override protected def nullSafeEval(v: Any, kc: Any): Any =
     GraftArgmin.argminSq(v.asInstanceOf[ArrayData], kc.asInstanceOf[ArrayData])
 
@@ -402,6 +436,10 @@ case class ArgmaxCos(first: Expression, second: Expression, third: Expression)
   override def nullable: Boolean = true
 
   override def prettyName: String = "graft_argmax_cos"
+
+  override def checkInputDataTypes(): TypeCheckResult =
+    GraftArgmin.checkInputs(prettyName, first.dataType, Some(second.dataType),
+      third.dataType)
 
   override protected def nullSafeEval(v: Any, nrm: Any, kc: Any): Any =
     GraftArgmin.argmaxCos(v.asInstanceOf[ArrayData],

@@ -1170,4 +1170,13 @@ class CorpusSpec extends GraftSpec {
       Seq((1L, "a", "a", "a")).toDF("doc_id", "pa", "pb", "pc")).collect()(0)
     assert(sc.getAs[Double]("alpha") == 1.0, sc.toString)
   }
+
+  test("ml05 train total on an empty train split is 0, and scoring yields no rows") {
+    import spark.implicits._
+    val pri = Seq.empty[(String, Long)].toDF("lang", "dl")
+    assert(Corpus.trainTotal(pri).collect().map(_.getLong(0)).toSeq == Seq(0L),
+      "an empty split must total 0, not NULL")
+    val docs = Seq((1L, "aa", "cat dog")).toDF("doc_id", "lang", "text")
+    assert(Corpus.naiveBayes(docs.limit(0), docs).count() == 0L)
+  }
 }

@@ -162,9 +162,8 @@ class GraftAnalyzeSpec extends GraftSpec {
       (0 until 100).map(i => (i.toLong, s"v$i")).toDF("id", "v")
         .repartitionByRange(4, col("id"))
         .writeTo("graft.lake.leg").create()
-      // simulate a pre-ledger legacy table: drop the live ledgers
-      Files.delete(LakeSinkStats.statsPath(s"$lake/leg"))
-      Files.delete(LakeSinkFiles.countsPath(s"$lake/leg"))
+      // simulate a legacy table: strip the facts from its latest record
+      LakeRecords.stripFacts(s"$lake/leg", "stats", "counts")
       // precondition: no skipping, count falls back to a scan
       val before = spark.table("graft.lake.leg").filter(col("id") < 25)
       assert(skippedOf(ranPlan(before)) == 0, "precondition: nothing to skip with")
@@ -296,7 +295,7 @@ class GraftAnalyzeSpec extends GraftSpec {
       // treat the files as needy and restore count(*) pushdown
       (0 until 50).map(i => (i.toLong, s"v$i")).toDF("id", "v")
         .writeTo("graft.lake.co").create()
-      Files.delete(LakeSinkFiles.countsPath(s"$lake/co"))
+      LakeRecords.stripFacts(s"$lake/co", "counts")
       val cntBefore = spark.table("graft.lake.co").agg(count(lit(1)))
       assert(!cntBefore.queryExecution.executedPlan.toString.contains("graft-lake-agg"))
       assert(cntBefore.collect()(0).getLong(0) == 50L)

@@ -904,9 +904,9 @@ class GraftCatalogSpec extends GraftSpec {
       val all = canon(spark.table("graft.lake.ev"))
       assert(all.size == 12)
       // HIDDEN-partitioning pruning: a plain ts predicate opens only the
-      // matching day dirs. Remove the stats ledger first so the only
+      // matching day dirs. Strip the recorded stats first so the only
       // possible skip mechanism is the synthetic temporal-dir interval.
-      Files.delete(Paths.get(lake, "ev", "_graft_stats.json"))
+      LakeRecords.stripFacts(s"$lake/ev", "stats")
       val q = spark.table("graft.lake.ev")
         .filter(col("ts") >= expr("timestamp'2026-02-02 00:00:00'") &&
           col("ts") < expr("timestamp'2026-02-03 00:00:00'"))

@@ -393,7 +393,7 @@ class LakeStatsSpec extends GraftSpec {
       // composes with the partition rollup machinery: per-group count(col)
       // still sums (rows − nulls) — and a deleted ledger degrades to a
       // full scan with identical answers, never a guess
-      Files.deleteIfExists(LakeSinkStats.statsPath(s"$lake/nc"))
+      LakeRecords.stripFacts(s"$lake/nc", "stats")
       val c2 = spark.table("graft.lake.nc").agg(count(col("s")).as("n"))
       assert(!c2.queryExecution.executedPlan.toString.contains("graft-lake-agg"),
         "no stats ledger -> count(col) must fall back to scanning")
@@ -410,7 +410,7 @@ class LakeStatsSpec extends GraftSpec {
       (0 until 40).map(i => (i.toLong, i.toString)).toDF("id", "v")
         .repartitionByRange(4, col("id"))
         .writeTo("graft.lake.fb").create()
-      Files.deleteIfExists(LakeSinkStats.statsPath(s"$lake/fb"))
+      LakeRecords.stripFacts(s"$lake/fb", "stats")
       val q = spark.table("graft.lake.fb").filter(col("id") < 10)
       assert(skippedOf(ranPlan(q)) == 0, "no stats -> nothing skipped")
       assert(q.count() == 10)

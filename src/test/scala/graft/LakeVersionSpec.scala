@@ -637,10 +637,10 @@ class LakeVersionSpec extends GraftSpec {
       // the full read serves both generations
       val all = canon(spark.table("graft.lake.pe"))
       assert(all.size == 6 && gen1.forall(all.contains))
-      // cross-generation TEMPORAL pruning: with the stats ledger gone, a
+      // cross-generation TEMPORAL pruning: with the recorded stats gone, a
       // plain ts filter must still prune old DAY dirs and new HOUR dirs
       // through each file's own generation's interval
-      Files.deleteIfExists(Paths.get(s"$lake/pe", "_graft_stats.json"))
+      LakeRecords.stripFacts(s"$lake/pe", "stats")
       val q = spark.table("graft.lake.pe")
         .filter(col("ts") >= expr("timestamp'2026-03-02 00:00:00'") &&
           col("ts") < expr("timestamp'2026-03-03 03:00:00'"))

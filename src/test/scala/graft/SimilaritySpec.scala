@@ -809,4 +809,16 @@ class SimilaritySpec extends GraftSpec {
   test("similarity oracles cover every query (all hash-checked since r4)") {
     assert(Similarity.oracles.keySet == Similarity.queries.keySet)
   }
+
+  test("k-means assignment against an EMPTY centroid set yields zero rows") {
+    import spark.implicits._
+    val c = Seq((1L, Seq(0.0, 1.0)), (2L, Seq(2.0, 3.0))).toDF("vec_id", "v")
+    val none = Seq.empty[(Int, Seq[Double])].toDF("cid", "cv")
+    assert(Similarity.centroidPack(none, $"cid", $"cv").count() == 0L)
+    assert(Similarity.kmAssign(c, none).count() == 0L,
+      "no centroid may assign no row — never one null-cid row per vector")
+    // the guard keeps the non-empty case: every vector gets its centroid
+    val one = Seq((0, Seq(0.0, 0.0))).toDF("cid", "cv")
+    assert(Similarity.kmAssign(c, one).select($"cid").as[Int].collect().toSeq == Seq(0, 0))
+  }
 }

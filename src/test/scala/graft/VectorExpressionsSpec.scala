@@ -182,4 +182,30 @@ class VectorExpressionsSpec extends GraftSpec {
       assert(!noRw.queryExecution.optimizedPlan.toString.contains("graft_dot_strict"))
     } finally spark.experimental.extraOptimizations = prev
   }
+
+  test("graft_argmin_sq / graft_argmax_cos refuse wrong input types at analysis") {
+    VectorExpressions.register(spark)
+    val pack2 = "array(named_struct('id', 1, 'cv', array(1.0D, 2.0D)))"
+    val pack3 = "array(named_struct('id', 1, 'cv', array(1.0D, 2.0D), 'cnrm', 2.0D))"
+    // well-typed calls analyze and evaluate
+    assert(spark.sql(s"SELECT graft_argmin_sq(array(1.0D, 2.0D), $pack2).id")
+      .collect()(0).getInt(0) == 1)
+    assert(spark.sql(s"SELECT graft_argmax_cos(array(1.0D, 2.0D), 2.0D, $pack3).id")
+      .collect()(0).getInt(0) == 1)
+    def refused(sql: String, what: String): Unit = {
+      val e = intercept[org.apache.spark.sql.AnalysisException](spark.sql(sql))
+      assert(e.getMessage.contains(what), e.getMessage)
+    }
+    // array<int> vectors
+    refused(s"SELECT graft_argmin_sq(array(1, 2), $pack2)", "array<double>")
+    refused(s"SELECT graft_argmax_cos(array(1, 2), 2.0D, $pack3)", "array<double>")
+    // mis-shaped packed structs: a bigint id, a missing norm, a string vector
+    refused("SELECT graft_argmin_sq(array(1.0D), " +
+      "array(named_struct('id', 1L, 'cv', array(1.0D))))", "packed entries")
+    refused(s"SELECT graft_argmax_cos(array(1.0D, 2.0D), 2.0D, $pack2)", "packed entries")
+    refused("SELECT graft_argmin_sq(array(1.0D), " +
+      "array(named_struct('id', 1, 'cv', array('a'))))", "packed entries")
+    // a non-double norm
+    refused(s"SELECT graft_argmax_cos(array(1.0D, 2.0D), 'x', $pack3)", "norm")
+  }
 }
