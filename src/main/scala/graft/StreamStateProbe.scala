@@ -41,6 +41,7 @@ object StreamStateProbe {
       .config("spark.sql.shuffle.partitions", sys.env.getOrElse("SPARK_GRAFT_CPUS", "32"))
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.ui.enabled", "false")
+      .config("spark.sql.extensions", "graft.plans.GraftViewExtensions")
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     import spark.implicits._

@@ -505,14 +505,20 @@ case class GraftAnalyzeCommand(catalogName: String, catalog: GraftCatalog,
   }
 }
 
-/** `spark.sql.extensions=graft.plans.GraftViewExtensions` — just the
-  * view machinery (the umbrella GraftExtensions also installs it, plus
-  * the vector kernels; this narrow class exists so the test session can
-  * add views without globally activating VectorKernelRule, whose specs
-  * A/B it per-test). */
+/** `spark.sql.extensions=graft.plans.GraftViewExtensions` — the view
+  * machinery and the local checkpoint manager (the umbrella
+  * GraftExtensions also installs both, plus the vector kernels; this
+  * narrow class exists so the test session can add views without globally
+  * activating VectorKernelRule, whose specs A/B it per-test).
+  *
+  * Extensions apply once the session's SparkContext exists and before its
+  * shared state copies the context's Hadoop conf, so the checkpoint
+  * manager set there reaches every Hadoop conf the session derives. */
 class GraftViewExtensions
     extends (org.apache.spark.sql.SparkSessionExtensions => Unit) {
   override def apply(ext: org.apache.spark.sql.SparkSessionExtensions): Unit = {
+    org.apache.spark.sql.graft.ConnectorBridge.activeContext.foreach(sc =>
+      graft.streaming.LocalCheckpointFileManager.install(sc.hadoopConfiguration))
     ext.injectParser((session, delegate) => new GraftViewSqlParser(session, delegate))
     ext.injectResolutionRule(session => new GraftViewSubstitution(session))
   }

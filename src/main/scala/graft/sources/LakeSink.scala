@@ -1699,7 +1699,10 @@ private[graft] class LakeSinkStreamingWrite(schema: StructType, path: String,
       LakeSinkFiles.promote(path, staged)
       LakeSinkFiles.reconcileManifest(path, schema, partCols, replace = false,
         mergeSchema = mergeSchema)
-      LakeSinkFiles.recordVersion(path, staged, Seq.empty, LakeFacts.of(committed))
+      // an epoch that staged nothing (a no-data batch) changes no file:
+      // its record would copy the previous one, so only the marker lands
+      if (staged.nonEmpty)
+        LakeSinkFiles.recordVersion(path, staged, Seq.empty, LakeFacts.of(committed))
       // marker via temp + atomic move: a crash can't leave a marker for
       // an epoch whose files never promoted
       val tmp = LakeSinkFiles.commitsDir(path).resolve(s".$qtag$epochId.tmp")

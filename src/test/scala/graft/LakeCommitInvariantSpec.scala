@@ -4,6 +4,7 @@ import java.nio.file.{Files, Paths}
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
+import org.apache.spark.sql.connector.write.WriterCommitMessage
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType}
 import org.apache.spark.unsafe.types.UTF8String
@@ -161,21 +162,32 @@ class LakeCommitInvariantSpec extends GraftSpec {
     }
   }
 
+  /** A streaming sink on a fresh `(id BIGINT, v STRING)` table under a
+    * new query id, and `stage(epoch, ids)`: the epoch's one task writing
+    * `ids` and committing (no ids: the task's no-data message). */
+  private class EpochSink(lake: String, table: String) {
+    private val schema = StructType(Seq(StructField("id", LongType), StructField("v", StringType)))
+    spark.sql(s"CREATE TABLE graft.lake.$table (id BIGINT, v STRING)")
+    val path = s"$lake/$table"
+    private val queryId = java.util.UUID.randomUUID.toString
+    val qtag = s"q${queryId.filter(_ != '-').take(8)}-"
+    private val factory = new LakeSinkStreamingWriterFactory(schema, path, qtag = qtag)
+    val sink = new LakeSinkStreamingWrite(schema, path, queryId = queryId)
+    def stage(epoch: Long, ids: Seq[Long]): WriterCommitMessage = {
+      val w = factory.createWriter(0, epoch, epoch)
+      ids.foreach(i => w.write(new GenericInternalRow(
+        Array[Any](i, UTF8String.fromString(s"r$i")))))
+      w.commit()
+    }
+  }
+
   test("crash states: readers see exactly v; the next commit records a correct v+1") {
     withLake { lake =>
-      val schema = StructType(Seq(StructField("id", LongType), StructField("v", StringType)))
-      spark.sql("CREATE TABLE graft.lake.cr (id BIGINT, v STRING)")
-      val path = s"$lake/cr"
-      val queryId = java.util.UUID.randomUUID.toString
-      val factory = new LakeSinkStreamingWriterFactory(schema, path,
-        qtag = s"q${queryId.filter(_ != '-').take(8)}-")
-      val sink = new LakeSinkStreamingWrite(schema, path, queryId = queryId)
-      def stage(epoch: Long, ids: Seq[Long]): LakeSinkCommit = {
-        val w = factory.createWriter(0, epoch, epoch)
-        ids.foreach(i => w.write(new GenericInternalRow(
-          Array[Any](i, UTF8String.fromString(s"r$i")))))
-        w.commit().asInstanceOf[LakeSinkCommit]
-      }
+      val es = new EpochSink(lake, "cr")
+      val path = es.path
+      val sink = es.sink
+      def stage(epoch: Long, ids: Seq[Long]): LakeSinkCommit =
+        es.stage(epoch, ids).asInstanceOf[LakeSinkCommit]
       def visible: Seq[String] = canon(spark.table("graft.lake.cr"))
       def atVersion(v: Long): Seq[String] =
         canon(spark.sql(s"SELECT * FROM graft.lake.cr VERSION AS OF $v"))
@@ -221,6 +233,34 @@ class LakeCommitInvariantSpec extends GraftSpec {
         LakeSinkFiles.snapshot(path, v + 2).files.toSet ++ next.staged,
         "the record after the hole = the last record's files + the new epoch's")
       assertInvariant(lake, "cr")
+    }
+  }
+
+  test("an empty streaming epoch writes its marker and records no version") {
+    withLake { lake =>
+      val es = new EpochSink(lake, "ee")
+      es.sink.commit(0L, Array(es.stage(0L, Seq(1L, 2L))))
+      val v = latest(es.path)
+      val record = LakeSinkFiles.versionsDir(es.path).resolve(LakeSinkFiles.versionName(v))
+      val before = Files.readAllBytes(record).toSeq
+      es.sink.commit(1L, Array(es.stage(1L, Seq.empty)))
+      assert(LakeSinkFiles.listVersions(es.path) == Seq(v), "a no-data epoch adds no version")
+      assert(Files.readAllBytes(record).toSeq == before)
+      assert(Files.exists(LakeSinkFiles.commitsDir(es.path).resolve(s"${es.qtag}1")),
+        "the no-data epoch's marker must land")
+      // a replay of the epoch (restart before the checkpoint's commit)
+      // finds the marker and discards what it staged
+      val replay = es.stage(1L, Seq(9L)).asInstanceOf[LakeSinkCommit]
+      es.sink.commit(1L, Array(replay))
+      assert(latest(es.path) == v)
+      assert(replay.staged.forall(rel =>
+        !Files.exists(LakeSinkFiles.stagingDir(es.path).resolve(rel)) &&
+          !Files.exists(Paths.get(es.path, rel))), "the replay must discard")
+      assert(canon(spark.table("graft.lake.ee")) == Seq("[1,r1]", "[2,r2]"))
+      // the next epoch with data records v's successor
+      es.sink.commit(2L, Array(es.stage(2L, Seq(3L))))
+      assert(latest(es.path) == v + 1)
+      assertInvariant(lake, "ee")
     }
   }
 }
