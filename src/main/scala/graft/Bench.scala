@@ -1,31 +1,18 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.util.Locale
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    // the driver environment is a 32-thread local JVM; shuffle.partitions
-    // matches so every core gets exactly one reduce partition
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
     // median-of-REPS per query: this VM has episodic CPU steal that can
     // randomly inflate single-shot timings 5-30 s (measured r3: a uniform
     // ~1.4x drift on code-untouched queries) — the median of 3 independent
     // runs makes cross-round deltas attributable to code, not the VM
     val reps = sys.env.getOrElse("SPARK_GRAFT_BENCH_REPS", "3").toInt.max(1)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.extensions", "graft.plans.GraftViewExtensions")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    // optional args = query keys to bench (default: all) — local iteration aid
+    val selected = Harness.select(args)
+    val spark = Harness.session(Harness.cores)
     // warmup: pay session/codegen/parquet-footer startup outside the timings
     try SparkEntry.entry(spark).count() catch { case _: Throwable => }
-    // optional args = query keys to bench (default: all) — local iteration aid
-    val unknown = args.toSet -- SparkEntry.queries.keySet
-    require(unknown.isEmpty, s"unknown query keys: ${unknown.mkString(", ")}")
-    val selected = if (args.nonEmpty) SparkEntry.queries.view.filterKeys(args.toSet).toMap
-                   else SparkEntry.queries
     val results = selected.map { case (name, fn) =>
       val times = (1 to reps).map { _ =>
         // per-rep session hygiene, outside the timed region: drop cached

@@ -2,7 +2,6 @@ package graft
 
 import java.util.Locale
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** One-off empirical probe of the lake METADATA tier at many-small-files
@@ -12,16 +11,12 @@ import org.apache.spark.sql.functions._
   * opted out), then measure the driver-side metadata answers a dashboard
   * would issue. Turns the "count(*) is O(#files) arithmetic at 100 TB"
   * plan-shape claims into wall-clock numbers. Not part of the driver
-  * contract; run via `tools/lake_meta_probe.sh`, results in CLAUDE.md. */
+  * contract; run via `tools/lake_meta_probe.sh`; earlier results are
+  * in `git show 0a8f65e:CLAUDE.md`. */
 object LakeMetaProbe {
   def main(args: Array[String]): Unit = {
     val targetFiles = args.headOption.map(_.toInt).getOrElse(3000)
-    val spark = SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")}]")
-      .config("spark.sql.shuffle.partitions", sys.env.getOrElse("SPARK_GRAFT_CPUS", "32"))
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Harness.session(Harness.cores)
 
     val days = 10
     val tasks = targetFiles / days // each task writes one file per day dir

@@ -1,7 +1,6 @@
 package graft
 
 import org.apache.spark.scheduler.{SparkListener, SparkListenerStageCompleted}
-import org.apache.spark.sql.SparkSession
 
 /** Per-stage timing attribution for named queries (the optimization round's
   * measurement loop, spark_optimization_guide §1): runs each query through
@@ -17,15 +16,9 @@ object Profile {
     require(args.length >= 2, "usage: Profile <sfDir> <queryKey>...")
     val sfDir = args(0)
     val names = args.drop(1)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
+    val selected = Harness.select(names)
     val reps = sys.env.getOrElse("SPARK_GRAFT_PROFILE_REPS", "1").toInt
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.extensions", "graft.plans.GraftViewExtensions")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = Harness.session(Harness.cores)
     try SparkEntry.entry(spark).count() catch { case _: Throwable => }
     val stages = new java.util.concurrent.ConcurrentLinkedQueue[St]()
     spark.sparkContext.addSparkListener(new SparkListener {
@@ -43,12 +36,9 @@ object Profile {
     names.foreach { n =>
       (1 to reps).foreach { rep =>
         stages.clear()
-        spark.catalog.clearCache()
-        spark.sparkContext.getPersistentRDDs.values
-          .foreach(_.unpersist(blocking = false))
-        System.gc()
+        Harness.clean(spark)
         val t0 = System.nanoTime()
-        SparkEntry.queries(n)(spark, sfDir)
+        selected(n)(spark, sfDir)
           .write.format("noop").mode("overwrite").save()
         val sec = (System.nanoTime() - t0) / 1e9
         Thread.sleep(400) // listener drain

@@ -1,7 +1,6 @@
 package graft
 
-import java.util.Locale
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** One-off empirical scale probe for the headline heavy queries: blow the
@@ -9,7 +8,7 @@ import org.apache.spark.sql.functions._
   * queries at each factor, and report fitted scaling exponents
   * (ln(t_f/t_1)/ln(f)) — turning the "linear at 100 TB" plan-shape claims
   * into measured slopes. Not part of the driver contract; run via
-  * `tools/scale_probe.sh`, results recorded in CLAUDE.md.
+  * `tools/scale_probe.sh`; earlier results are in `git show 0a8f65e:CLAUDE.md`.
   *
   * Replica construction keeps the per-replica structure of the base
   * corpus while keeping replicas DISJOINT, so the workload grows the way
@@ -44,19 +43,13 @@ object ScaleProbe {
   def main(args: Array[String]): Unit = {
     val base = args.headOption.getOrElse("/root/testdata/sf0.1")
     val out = "/tmp/graft_scale"
-    val reps = 2 // min-of-2: damp this VM's episodic CPU steal
-    val spark = SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")}]")
-      .config("spark.sql.shuffle.partitions", sys.env.getOrElse("SPARK_GRAFT_CPUS", "32"))
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Harness.session(Harness.cores)
 
     // factor lists per query: d09's edge source is the DOCUMENTED
     // quadratic d05 baseline, so it gets smaller factors (the probe is
     // expected to MEASURE that quadratic, not hide it); the declared
     // scale paths get the full 1/4/10 ladder.
-    val queries: Seq[(String, Seq[Int], (SparkSession, String) => DataFrame)] = Seq(
+    val queries: Seq[(String, Seq[Int], Harness.Query)] = Seq(
       // current probe set: the audit pair — d55's truth graph is (r11)
       // EXACT WITHIN a per-lang hash-rank stratum of ≤400 docs, so its
       // quadratic member is FLAT in corpus size (pre-r11 it was the
@@ -65,7 +58,7 @@ object ScaleProbe {
       // (Earlier sweeps' results — e08 0.85, d23 0.58, d11 0.62, d09
       // 3.40 quadratic-by-design, e14 0.20, d26 0.70, e15 0.78, d25
       // 0.79, e16 0.91, ml07 −0.13, ml08 0.27, d32 0.45, d31 0.88,
-      // s04 0.05, e31 0.89, ml27 0.21 — are recorded in CLAUDE.md.)
+      // s04 0.05, e31 0.89, ml27 0.21 — are in `git show 0a8f65e:CLAUDE.md`.)
       ("d55_snm_audit", Seq(1, 4), operators.TextOps.d55SnmAudit _),
       ("d56_snm_audit_sample", Seq(1, 4), operators.TextOps.d56SnmAuditSample _),
       // r13: the tokenizer pair — the replicate token-RENAMES words per
@@ -85,37 +78,7 @@ object ScaleProbe {
       ("q117_cramer_von_mises", Seq(1, 4), operators.Analytics.q117CramerVonMises _))
 
     // optional extra args narrow the probe to named queries
-    val selected = queries.filter { case (name, _, _) =>
-      args.length < 2 || args.drop(1).contains(name)
-    }
-
-    val factors = selected.flatMap(_._2).distinct.sorted
-    factors.foreach { f =>
-      replicate(spark, base, f, s"$out/x$f")
-      Console.err.println(s"generated x$f")
-    }
-
-    def time(fn: (SparkSession, String) => DataFrame, dir: String): Double =
-      (1 to reps).map { _ =>
-        spark.catalog.clearCache()
-        spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(blocking = false))
-        System.gc()
-        val t0 = System.nanoTime()
-        fn(spark, dir).write.format("noop").mode("overwrite").save()
-        (System.nanoTime() - t0) / 1e9
-      }.min
-
-    def f3(v: Double): String = String.format(Locale.ROOT, "%.3f", Double.box(v))
-    val rows = selected.map { case (name, fs, fn) =>
-      val times = fs.map(f => f -> time(fn, s"$out/x$f"))
-      val (f1, t1) = times.head
-      val (fN, tN) = times.last
-      val slope = math.log(tN / t1) / math.log(fN.toDouble / f1)
-      Console.err.println(s"$name: " + times.map { case (f, t) => s"x$f=${f3(t)}s" }
-        .mkString(" ") + s" slope=${f3(slope)}")
-      s""""$name":{${times.map { case (f, t) => s""""x$f":${f3(t)}""" }.mkString(",")},"slope":${f3(slope)}}"""
-    }
-    println(rows.mkString("{", ",", "}"))
+    Harness.slopes(spark, queries, args.drop(1).toSet, out)(replicate(spark, base, _, _))
     spark.stop()
   }
 }

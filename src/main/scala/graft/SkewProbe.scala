@@ -1,7 +1,6 @@
 package graft
 
-import java.util.Locale
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Adversarial-skew scale probe: the uniform [[ScaleProbe]] replicates the
@@ -13,8 +12,8 @@ import org.apache.spark.sql.functions._
   * with f (a ×10 corpus has ×10-larger cliques, not 10 disjoint copies).
   * That is exactly the load the capped-bucket designs (BandBucketCap,
   * salted rankings) exist for; measuring d11/m01/e09/s04 under it turns
-  * "the cap holds under skew" into a number. One-off diagnostic (results
-  * in CLAUDE.md), run via `tools/skew_probe.sh`.
+  * "the cap holds under skew" into a number. One-off diagnostic (earlier
+  * results in `git show 0a8f65e:CLAUDE.md`), run via `tools/skew_probe.sh`.
   */
 object SkewProbe {
   private val Offset = 10000000L
@@ -59,15 +58,9 @@ object SkewProbe {
   def main(args: Array[String]): Unit = {
     val base = args.headOption.getOrElse("/root/testdata/sf0.1")
     val out = "/tmp/graft_skew"
-    val reps = 2
-    val spark = SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")}]")
-      .config("spark.sql.shuffle.partitions", sys.env.getOrElse("SPARK_GRAFT_CPUS", "32"))
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Harness.session(Harness.cores)
 
-    val queries: Seq[(String, Seq[Int], (SparkSession, String) => DataFrame)] = Seq(
+    val queries: Seq[(String, Seq[Int], Harness.Query)] = Seq(
       ("m01_minhash_pairs", Seq(1, 4), operators.DedupLsh.m01MinHashPairs),
       ("d11_lsh_clusters", Seq(1, 4), operators.Corpus.d11LshClusters),
       ("e09_neardup_ann", Seq(1, 4), operators.Similarity.e09NearDupAnn),
@@ -93,37 +86,7 @@ object SkewProbe {
       ("d60_exact_substrings", Seq(1, 4), operators.TextOps.d60ExactSubstrings))
 
     // optional args beyond the base dir = query-name filter (local iteration)
-    val keyFilter = args.drop(1).toSet
-    val selected =
-      if (keyFilter.isEmpty) queries else queries.filter(q => keyFilter(q._1))
-
-    val factors = selected.flatMap(_._2).distinct.sorted
-    factors.foreach { f =>
-      replicateSkew(spark, base, f, s"$out/x$f")
-      Console.err.println(s"generated skewed x$f")
-    }
-
-    def time(fn: (SparkSession, String) => DataFrame, dir: String): Double =
-      (1 to reps).map { _ =>
-        spark.catalog.clearCache()
-        spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(blocking = false))
-        System.gc()
-        val t0 = System.nanoTime()
-        fn(spark, dir).write.format("noop").mode("overwrite").save()
-        (System.nanoTime() - t0) / 1e9
-      }.min
-
-    def f3(v: Double): String = String.format(Locale.ROOT, "%.3f", Double.box(v))
-    val rows = selected.map { case (name, fs, fn) =>
-      val times = fs.map(f => f -> time(fn, s"$out/x$f"))
-      val (f1, t1) = times.head
-      val (fN, tN) = times.last
-      val slope = math.log(tN / t1) / math.log(fN.toDouble / f1)
-      Console.err.println(s"$name: " + times.map { case (f, t) => s"x$f=${f3(t)}s" }
-        .mkString(" ") + s" slope=${f3(slope)}")
-      s""""$name":{${times.map { case (f, t) => s""""x$f":${f3(t)}""" }.mkString(",")},"slope":${f3(slope)}}"""
-    }
-    println(rows.mkString("{", ",", "}"))
+    Harness.slopes(spark, queries, args.drop(1).toSet, out)(replicateSkew(spark, base, _, _))
     spark.stop()
   }
 }

@@ -1,9 +1,7 @@
 package graft
 
 import java.sql.Timestamp
-import java.util.Locale
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.streaming.StreamingQuery
 
@@ -28,7 +26,8 @@ import graft.streaming.{EventRec, StreamOps}
   * the id set within the 1 h watermark), episodeStreamTimeout
   * (EventTimeTimeout GroupState — state is one row per user with an open
   * episode; the 90 % hot user holds ONE row no matter how many events it
-  * absorbs). One-off diagnostic (results in CLAUDE.md), run via
+  * absorbs). One-off diagnostic (earlier results in
+  * `git show 0a8f65e:CLAUDE.md`), run via
   * `tools/stream_state_probe.sh`.
   */
 object StreamStateProbe {
@@ -36,14 +35,7 @@ object StreamStateProbe {
 
   def main(args: Array[String]): Unit = {
     val base = args.headOption.getOrElse("/root/testdata/sf0.1")
-    val spark = SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")}]")
-      .config("spark.sql.shuffle.partitions", sys.env.getOrElse("SPARK_GRAFT_CPUS", "32"))
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.extensions", "graft.plans.GraftViewExtensions")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Harness.session(Harness.cores)
     import spark.implicits._
 
     val recs0: Seq[EventRec] = Tables.events(spark, base)
@@ -96,14 +88,13 @@ object StreamStateProbe {
       ("episodeStreamTimeout", rows =>
         replay(rows, in => noopSink(StreamOps.episodeStreamTimeout(in.toDS()), "append"))))
 
-    def f3(v: Double): String = String.format(Locale.ROOT, "%.3f", Double.box(v))
     val out = ops.map { case (name, run) =>
       val (r1, b1) = run(skewed(1))
       val (r4, b4) = run(skewed(4))
       val slope = math.log(r4.toDouble / r1.toDouble) / math.log(4.0)
       Console.err.println(s"$name: x1 peak ${r1} rows/${b1} B, " +
-        s"x4 peak ${r4} rows/${b4} B, state-rows slope ${f3(slope)}")
-      s""""$name":{"x1_rows":$r1,"x4_rows":$r4,"x1_bytes":$b1,"x4_bytes":$b4,"slope":${f3(slope)}}"""
+        s"x4 peak ${r4} rows/${b4} B, state-rows slope ${Harness.f3(slope)}")
+      s""""$name":{"x1_rows":$r1,"x4_rows":$r4,"x1_bytes":$b1,"x4_bytes":$b4,"slope":${Harness.f3(slope)}}"""
     }
     println(out.mkString("{", ",", "}"))
     spark.stop()

@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
@@ -8,22 +7,9 @@ object Verify {
     val (sfDir, outDir) = (args(0), args(1))
     // optional extra args = query keys to dump (default: all) — local
     // iteration aid; the driver always runs the full set
-    val keyFilter = args.drop(2).toSet
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.extensions", "graft.plans.GraftViewExtensions")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val selected = Harness.select(args.drop(2))
+    val spark = Harness.session(Harness.cores)
     new java.io.File(outDir).mkdirs()
-    // a typo'd key must not look like a clean pass — fail loudly
-    val unknown = keyFilter -- SparkEntry.queries.keySet
-    require(unknown.isEmpty, s"unknown query keys: ${unknown.mkString(", ")}")
-    val selected = if (keyFilter.nonEmpty)
-      SparkEntry.queries.view.filterKeys(keyFilter).toMap else SparkEntry.queries
     selected.foreach { case (name, fn) =>
       // same per-query hygiene as Bench: caches and checkpoint blocks a
       // query leaves behind (d10's bigram cache, d09/d11 localCheckpoints,

@@ -384,12 +384,11 @@ object Advanced {
     // ONE array-percentile aggregate per column: scalar percentile()
     // calls each buffer the whole group separately (the q73 lesson —
     // 2x buffering here for identical values; array mode sorts once)
-    Tables.lineitem(s, dir)
-      // r15 perf: projected pinned fan-out so the percentile partial
-      // buffers build across the session's parallelism instead of the
-      // scan's 3 splits (q46's pattern, identical values).
-      .select($"l_returnflag", $"l_quantity", $"l_extendedprice")
-      .repartition(s.sessionState.conf.numShufflePartitions, $"l_extendedprice")
+    // projected fan-out so the percentile partial buffers build across
+    // the session's parallelism, not the scan's few splits (q46's
+    // pattern, identical values)
+    Skew.fanOut(Tables.lineitem(s, dir)
+      .select($"l_returnflag", $"l_quantity", $"l_extendedprice"), $"l_extendedprice")
       .groupBy($"l_returnflag")
       .agg(count(lit(1)).as("n"),
         percentile($"l_quantity", array(lit(0.5), lit(0.9))).as("qp"),

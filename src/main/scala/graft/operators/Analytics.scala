@@ -392,8 +392,8 @@ object Analytics {
     * sketch on both stages. */
   def q46RobustStats(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
-    val li = Tables.lineitem(s, dir).select($"l_returnflag", $"l_extendedprice")
-      .repartition(s.sessionState.conf.numShufflePartitions, $"l_extendedprice")
+    val li = Skew.fanOut(Tables.lineitem(s, dir)
+      .select($"l_returnflag", $"l_extendedprice"), $"l_extendedprice")
     val med = li.groupBy($"l_returnflag")
       .agg(r(percentile($"l_extendedprice", lit(0.5)), 6).as("med"))
     li.join(broadcast(med), "l_returnflag")
@@ -435,14 +435,11 @@ object Analytics {
     * is map-side-combinable. */
   def q71WinsorizedStats(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
-    // r15 perf: pinned high-cardinality fan-out so the exact-percentile
-    // partial buffers build (and serialize) across the session's full
-    // parallelism instead of the scan's few splits (q46's fix: measured
-    // 3.15 -> 1.98 s there, same shape here; the count tracks
-    // numShufflePartitions — scale-adaptive, AQE can't collapse it).
-    winsorizedStats(Tables.lineitem(s, dir)
-      .select($"l_returnflag".as("seg"), $"l_extendedprice".as("x"))
-      .repartition(s.sessionState.conf.numShufflePartitions, $"x"))
+    // the exact-percentile partial buffers build across the session's
+    // parallelism, not the scan's few splits (q46 measured 3.15 -> 1.98 s
+    // with the fan-out; same shape here)
+    winsorizedStats(Skew.fanOut(Tables.lineitem(s, dir)
+      .select($"l_returnflag".as("seg"), $"l_extendedprice".as("x")), $"x"))
   }
 
   /** q71's core over (seg, x) — exposed for the hand-computed 1..100
@@ -494,9 +491,9 @@ object Analytics {
     * the 100 TB drop-in), then a map-side-combinable count scan. */
   def q73EquidepthHist(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
-    // r15 perf: same pinned percentile-partial fan-out as q46/q71.
-    equidepthHist(Tables.lineitem(s, dir).select($"l_extendedprice".as("x"))
-      .repartition(s.sessionState.conf.numShufflePartitions, $"x"))
+    // the same percentile-partial fan-out as q46/q71
+    equidepthHist(Skew.fanOut(Tables.lineitem(s, dir)
+      .select($"l_extendedprice".as("x")), $"x"))
   }
 
   /** q73's core over (x) — exposed for the 1..100 hand-computed spec. */
@@ -839,15 +836,13 @@ object Analytics {
   def q23StatsAgg(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
     def m(c: org.apache.spark.sql.Column) = sum(c.cast("decimal(38,10)")).cast("double")
-    // r15 perf: the decimal-moment partials ran entirely in the scan's 3
+    // the decimal-moment partials ran entirely in the sf0.1 scan's 3
     // splits (profiled: one 3-task 2.8 s stage was the whole query).
-    // Project to the 3 needed columns, then a pinned high-cardinality
-    // fan-out builds the partials across the session's parallelism; the
-    // decimal sums are exact and order-free, so values are unchanged
-    // (q46's pattern; count tracks numShufflePartitions).
-    Tables.lineitem(s, dir)
-      .select($"l_returnflag", $"l_quantity", $"l_extendedprice")
-      .repartition(s.sessionState.conf.numShufflePartitions, $"l_extendedprice")
+    // Project to the 3 needed columns, then fan out so the partials build
+    // across the session's parallelism; the decimal sums are exact and
+    // order-free, so values are unchanged.
+    Skew.fanOut(Tables.lineitem(s, dir)
+      .select($"l_returnflag", $"l_quantity", $"l_extendedprice"), $"l_extendedprice")
       .groupBy($"l_returnflag")
       .agg(count(lit(1)).as("n"),
         m($"l_quantity").as("sx"),
@@ -891,10 +886,9 @@ object Analytics {
     import s.implicits._
     def m(c: org.apache.spark.sql.Column) = sum(c.cast("decimal(38,10)")).cast("double")
     val slope = ($"n" * $"sxy" - $"sx" * $"sy") / ($"n" * $"sxx" - $"sx" * $"sx")
-    // r15 perf: q23's projected pinned fan-out for the decimal partials.
-    Tables.lineitem(s, dir)
-      .select($"l_linestatus", $"l_quantity", $"l_extendedprice")
-      .repartition(s.sessionState.conf.numShufflePartitions, $"l_extendedprice")
+    // q23's projected fan-out for the decimal partials
+    Skew.fanOut(Tables.lineitem(s, dir)
+      .select($"l_linestatus", $"l_quantity", $"l_extendedprice"), $"l_extendedprice")
       .groupBy($"l_linestatus")
       .agg(count(lit(1)).as("n0"),
         m($"l_quantity").as("sx"),

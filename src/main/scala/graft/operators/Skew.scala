@@ -1,6 +1,8 @@
 package graft.operators
 
 import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.execution.FileSourceScanExec
+import org.apache.spark.sql.execution.datasources.FilePartition
 import org.apache.spark.sql.functions._
 
 /** Skew mitigation primitives (SURVEY.md: "salting for skew, AQE for
@@ -46,4 +48,29 @@ object Skew {
       .groupBy(col("k"))
       .agg(sum(col("partial")).cast("double").as("total"))
   }
+
+  /** Fan a partial aggregate's input out to the session's parallelism
+    * when its scans have fewer splits than `numShufflePartitions`: the
+    * partials (exact decimal moments, percentile buffers) then build on
+    * every core instead of the few tasks a single small file gives. A
+    * scan that already has that many splits builds them in parallel as
+    * it is, so it gets no extra full-table exchange. Decided from the
+    * input's physical plan, which planning lists but runs no job for. */
+  def fanOut(df: DataFrame, key: Column): DataFrame = {
+    val n = df.sparkSession.sessionState.conf.numShufflePartitions
+    if (scanSplits(df) < n) df.repartition(n, key) else df
+  }
+
+  /** Input splits of the file scans `df` plans, counting at most one per
+    * file: a parquet row group is read by the one split holding its
+    * midpoint, so a single file cut into many byte ranges may still give
+    * only one working task per row group. */
+  private[graft] def scanSplits(df: DataFrame): Int =
+    df.queryExecution.sparkPlan.collectLeaves().collect {
+      case f: FileSourceScanExec =>
+        val parts = f.inputRDD.partitions
+        val files = parts.iterator.collect { case p: FilePartition => p.files }
+          .flatMap(_.iterator.map(_.filePath)).toSet.size
+        math.min(parts.length, files)
+    }.sum
 }

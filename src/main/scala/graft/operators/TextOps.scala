@@ -705,7 +705,7 @@ object TextOps {
     // rn2 div W ∈ {rn div W, rn div W + 1}, so joining on
     // (blk, band-bucket) with the b side exploded to its two buckets
     // yields the IDENTICAL pair set with ≤ 2W²-per-bucket candidates —
-    // 2W·n total, linear in block size (re-probed slope in CLAUDE.md)
+    // 2W·n total, linear in block size (re-probed slope in `git show 0a8f65e:CLAUDE.md`)
     val a = keyed.select($"blk", $"rn", $"doc_id".as("ida"), $"ts".as("ta"))
       .withColumn("ga", expr(s"rn div $SnmW"))
     val b = keyed.select($"blk".as("blk2"), $"rn".as("rn2"),
@@ -895,7 +895,7 @@ object TextOps {
     * shrinks is the honest price of the flat cost. d55 stays the
     * exact-validation twin. Measured (ScaleProbe, sf0.1 replicated
     * ×1/×4): fixed-p d55 slope 3.30 (×4 = 447 s) vs adaptive d56 — see
-    * CLAUDE.md r10 probe numbers. One row. */
+    * the r10 probe numbers in `git show 0a8f65e:CLAUDE.md`. One row. */
   def d56SnmAuditSample(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
     val docs = Tables.documents(s, dir)
@@ -1783,7 +1783,7 @@ object TextOps {
     * scan-local per document, embarrassingly parallel at any corpus
     * size; the explode multiplies rows only by the per-doc chunk count.
     * Oracle via DuckDB list_slice over the zipped-unnest index pattern
-    * (CLAUDE.md generate_series gotcha). */
+    * (CLAUDE.md invariant 7, the generate_series quirk). */
   def d12ChunkSplit(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
     val Size = 64

@@ -4,7 +4,7 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.execution.SparkPlan
 import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
 import org.apache.spark.sql.execution.exchange.{BroadcastExchangeLike, ShuffleExchangeLike}
-import graft.operators.{Relational, Telemetry, TextOps}
+import graft.operators.{Relational, Skew, Telemetry, TextOps}
 
 /** Plan-shape regression guards: the scale story is "minimal shuffles,
   * broadcast dims, pushdown" — these specs pin the shuffle counts so a
@@ -91,7 +91,7 @@ class PlanShapeSpec extends GraftSpec {
     // r15: a pinned high-cardinality repartition ahead of the percentile
     // aggregate builds the value-buffering partials across the session's
     // parallelism (q46's fix) — one deliberate extra exchange.
-    assert(countShuffles(graft.operators.Advanced.q33Percentiles(spark, sfTiny)) <= 3)
+    assert(countShuffles(graft.operators.Advanced.q33Percentiles(spark, sfTiny)) == 3)
   }
 
   test("q28 distribution windows: one window shuffle + one sort") {
@@ -100,7 +100,11 @@ class PlanShapeSpec extends GraftSpec {
 
   test("q35 regression aggregates: pinned partial fan-out + one agg exchange + one sort") {
     // r15: q33's deliberate pinned fan-out ahead of the decimal moments.
-    assert(countShuffles(graft.operators.Analytics.q35RegressionAgg(spark, sfTiny)) <= 3)
+    assert(countShuffles(graft.operators.Analytics.q35RegressionAgg(spark, sfTiny)) == 3)
+  }
+
+  test("q23 stats aggregates: pinned partial fan-out + one agg exchange + one sort") {
+    assert(countShuffles(graft.operators.Analytics.q23StatsAgg(spark, sfTiny)) == 3)
   }
 
   test("q36 fuzzy match: broadcast build side + pinned probe repartition only") {
@@ -167,34 +171,19 @@ class PlanShapeSpec extends GraftSpec {
     // r3 review: e05/e07 sized their centroid stride with count() and d05
     // probed the vocabulary with distinct().count() — full corpus passes
     // before the query proper. Construction must now be fully lazy.
-    val tracker = spark.sparkContext.statusTracker
-    def settledJobCount: Int = {
-      // job-start events reach the status store asynchronously: wait until
-      // the value is stable across two polls. Track the MAX job id, not
-      // the id-list LENGTH: job ids are globally monotone, while the
-      // status store EVICTS old entries past spark.ui.retainedJobs — once
-      // the full suite's job total crossed that cliff, counts DECREASED
-      // between polls and the calibrated allowances went negative
-      // (measured: allowed = -197 on the 635-test suite).
-      def maxId: Int = tracker.getJobIdsForGroup(null).foldLeft(-1)(math.max)
-      var prev = -2
-      var cur = maxId
-      while (cur != prev) { Thread.sleep(200); prev = cur; cur = maxId }
-      cur
-    }
     // calibrate: a bare parquet read may itself launch a footer/schema job
     // — that is table loading, not a sizing pass, so subtract it
-    val a0 = settledJobCount
+    val a0 = settledJobId
     Tables.embeddings(spark, sfTiny)
-    val perEmb = settledJobCount - a0
-    val b0 = settledJobCount
+    val perEmb = settledJobId - a0
+    val b0 = settledJobId
     Tables.documents(spark, sfTiny)
-    val perDoc = settledJobCount - b0
-    val before = settledJobCount
+    val perDoc = settledJobId - b0
+    val before = settledJobId
     graft.operators.Similarity.e05IvfAnn(spark, sfTiny) // reads embeddings
     graft.operators.Similarity.e07PqQuantize(spark, sfTiny) // reads embeddings
     TextOps.d05JaccardPairs(spark, sfTiny) // reads documents
-    val after = settledJobCount
+    val after = settledJobId
     val allowed = 2 * perEmb + perDoc
     assert(after - before <= allowed,
       s"query construction launched ${after - before} job(s); only $allowed table-read job(s) allowed")
@@ -286,5 +275,55 @@ class PlanShapeSpec extends GraftSpec {
     // target + source sides of the full-outer join each exchange once;
     // the presentation sort is the only other shuffle
     assert(countShuffles(graft.operators.Advanced.q44MergeUpsert(spark, sfTiny)) <= 3)
+  }
+
+  // -- the partial-aggregate fan-out (Skew.fanOut) -------------------------
+
+  private val fanOutQueries = Seq[Harness.Query](
+    graft.operators.Analytics.q23StatsAgg, graft.operators.Analytics.q35RegressionAgg,
+    graft.operators.Analytics.q46RobustStats, graft.operators.Analytics.q71WinsorizedStats,
+    graft.operators.Analytics.q73EquidepthHist, graft.operators.Advanced.q33Percentiles)
+
+  test("fan-out: a scan with a split per core plans one exchange fewer, same values") {
+    val dir = java.nio.file.Files.createTempDirectory("graft_fanout").toString
+    val parts = 2 * spark.sessionState.conf.numShufflePartitions
+    try {
+      Tables.lineitem(spark, sfTiny).repartition(parts)
+        .write.parquet(s"$dir/lineitem.parquet")
+      assert(Skew.scanSplits(Tables.lineitem(spark, dir)) >=
+        spark.sessionState.conf.numShufflePartitions)
+      val many = graft.operators.Analytics.q23StatsAgg(spark, dir)
+      assert(countShuffles(many) ==
+        countShuffles(graft.operators.Analytics.q23StatsAgg(spark, sfTiny)) - 1)
+      assert(many.collect().toSeq ==
+        graft.operators.Analytics.q23StatsAgg(spark, sfTiny).collect().toSeq)
+    } finally org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(dir))
+  }
+
+  test("fan-out: one file cut into a byte range per core keeps the exchange") {
+    // sfTiny's lineitem is one file of one row group: many byte ranges,
+    // one working task, so the partials still need the fan-out
+    val key = "spark.sql.files.maxPartitionBytes"
+    val prev = spark.conf.getOption(key)
+    spark.conf.set(key, "16k")
+    try {
+      assert(Tables.lineitem(spark, sfTiny).rdd.getNumPartitions >=
+        spark.sessionState.conf.numShufflePartitions)
+      assert(Skew.scanSplits(Tables.lineitem(spark, sfTiny)) == 1)
+      assert(countShuffles(graft.operators.Analytics.q23StatsAgg(spark, sfTiny)) == 3)
+    } finally prev.fold(spark.conf.unset(key))(spark.conf.set(key, _))
+  }
+
+  test("fan-out: building the six fanned-out queries runs no Spark job") {
+    // the decision plans the scan; only the parquet read itself may run
+    // its footer job, so calibrate that away as the ANN test does
+    val a0 = settledJobId
+    Tables.lineitem(spark, sfTiny)
+    val perRead = settledJobId - a0
+    val before = settledJobId
+    fanOutQueries.foreach(_(spark, sfTiny))
+    val after = settledJobId
+    assert(after - before <= fanOutQueries.size * perRead,
+      s"construction launched ${after - before} job(s); only table reads allowed")
   }
 }
