@@ -1,5 +1,4 @@
 package graft
-import java.util.Locale
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
@@ -20,11 +19,7 @@ object Bench {
         // (MLlib training caches, localCheckpoint blocks) — without this,
         // leftover storage + deferred GC lands on whichever run comes next
         // and makes timings order-dependent.
-        spark.catalog.clearCache()
-        // non-blocking: a blocking unpersist intermittently stalls 15-50 s
-        // in local mode; the following System.gc gives removal a window
-        spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(blocking = false))
-        System.gc()
+        Harness.clean(spark)
         val t0 = System.nanoTime()
         // noop sink, not count(): count() lets Parquet count-star pushdown
         // and partial-agg collapse under-time scan-heavy shapes; the noop
@@ -41,7 +36,7 @@ object Bench {
       val sec = if (ok.isEmpty) -1.0 else ok.sorted.apply((ok.size - 1) / 2)
       name -> sec
     }
-    def f3(v: Double): String = String.format(Locale.ROOT, "%.3f", Double.box(v))
+    import Harness.f3
     // 3-decimal rounding keeps the whole line short enough to survive the
     // driver's bounded tail capture (full-precision lines got truncated →
     // unparseable in r1/r2); Locale.ROOT so a comma-decimal default locale

@@ -40,7 +40,9 @@ object Harness {
   }
 
   /** Bench's per-rep hygiene: drop cached plans and the RDD blocks a
-    * previous run left behind, then give their removal a GC window. */
+    * previous run left behind, then give their removal a GC window. The
+    * unpersist is non-blocking: a blocking one intermittently stalls
+    * 15-50 s in local mode. */
   def clean(spark: SparkSession): Unit = {
     spark.catalog.clearCache()
     spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(blocking = false))

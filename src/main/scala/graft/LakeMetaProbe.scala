@@ -20,7 +20,7 @@ object LakeMetaProbe {
 
     val days = 10
     val tasks = targetFiles / days // each task writes one file per day dir
-    val root = java.nio.file.Files.createTempDirectory("graft_meta_probe").toString
+    val root = graft.operators.TempLakes.dir("graft_meta_probe")
     spark.conf.set("spark.sql.catalog.graft_probe", "graft.sources.GraftCatalog")
     spark.conf.set("spark.sql.catalog.graft_probe.lake", root)
 
@@ -82,7 +82,7 @@ object LakeMetaProbe {
     // to the file's row count, compact before blooming a spray of
     // epoch-files.
     val bloomFiles = math.max(targetFiles / 6, 100)
-    val bRoot = java.nio.file.Files.createTempDirectory("graft_bloom_probe").toString
+    val bRoot = graft.operators.TempLakes.dir("graft_bloom_probe")
     spark.range(bloomFiles.toLong * 20)
       .select(col("id"), (col("id") % 997).cast("double").as("v"))
       .repartition(bloomFiles)

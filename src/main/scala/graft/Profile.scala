@@ -5,11 +5,15 @@ import org.apache.spark.scheduler.{SparkListener, SparkListenerStageCompleted}
 /** Per-stage timing attribution for named queries (the optimization round's
   * measurement loop, spark_optimization_guide §1): runs each query through
   * the same noop-sink methodology as Bench, with a stage listener that
-  * records per-stage wall time / task count / input / shuffle bytes. Stage
-  * names carry the call site (e.g. "localCheckpoint at Similarity.scala:
-  * 1999"), which maps stages back to operators without the UI. */
+  * records per-stage wall time / task count / input / shuffle bytes. Each
+  * stage prints its name and, in braces, the operation scopes of its RDDs
+  * (e.g. `{Exchange, WholeStageCodegen (2)}`), which map stages back to
+  * the SQL operators without the UI. The name alone is the call site that
+  * submitted the job (e.g. "localCheckpoint at Similarity.scala:1999"),
+  * except for stages AQE submits, which read
+  * "$anonfun$withThreadLocalCaptured$2 at CompletableFuture.java:…". */
 object Profile {
-  private case class St(name: String, ms: Long, tasks: Int,
+  private case class St(name: String, scopes: Seq[String], ms: Long, tasks: Int,
                         input: Long, shufR: Long, shufW: Long)
 
   def main(args: Array[String]): Unit = {
@@ -27,7 +31,9 @@ object Profile {
         val ms = (for { s <- si.submissionTime; c <- si.completionTime }
           yield c - s).getOrElse(-1L)
         val tm = si.taskMetrics
-        stages.add(St(si.name.linesIterator.next(), ms, si.numTasks,
+        val scopes = si.rddInfos.sortBy(_.id)
+          .flatMap(org.apache.spark.sql.graft.ConnectorBridge.scopeName).distinct
+        stages.add(St(si.name.linesIterator.next(), scopes, ms, si.numTasks,
           tm.inputMetrics.bytesRead,
           tm.shuffleReadMetrics.totalBytesRead,
           tm.shuffleWriteMetrics.bytesWritten))
@@ -48,7 +54,8 @@ object Profile {
           f"${ss.map(_.ms).sum} stage-ms =====")
         ss.take(30).foreach { s =>
           println(f"${s.ms}%6d ms ${s.tasks}%4d t  in=${s.input / 1024}%8d KB " +
-            f"sr=${s.shufR / 1024}%8d KB sw=${s.shufW / 1024}%8d KB  ${s.name}")
+            f"sr=${s.shufR / 1024}%8d KB sw=${s.shufW / 1024}%8d KB  ${s.name} " +
+            s.scopes.mkString("{", ", ", "}"))
         }
       }
     }

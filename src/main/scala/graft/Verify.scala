@@ -14,8 +14,7 @@ object Verify {
       // same per-query hygiene as Bench: caches and checkpoint blocks a
       // query leaves behind (d10's bigram cache, d09/d11 localCheckpoints,
       // MLlib training) must not accumulate across the full 70+-query run
-      spark.catalog.clearCache()
-      spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(blocking = false))
+      Harness.clean(spark)
       try fn(spark, sfDir).coalesce(1).write.mode("overwrite")
         .parquet(s"$outDir/$name")
       catch { case e: Throwable =>

@@ -2212,6 +2212,29 @@ object Telemetry {
        SELECT 'v2', count(*), min(id), max(id), max(temperature) FROM lk
        ORDER BY scope"""
 
+  /** Run `body` with session confs pinned, restoring them afterwards —
+    * `body` must materialize (e.g. `localCheckpoint(true)`) whatever plans
+    * under the pins, since restoring must not replan it. Captures the
+    * EXPLICIT setting only: `getOption` surfaces a conf's REGISTERED
+    * DEFAULT (true for `v2.bucketing.enabled` on this engine), so a naive
+    * getOption→restore would re-write the default as an explicit value
+    * and permanently flip every later scan in the session (measured as a
+    * cross-suite DPP failure); a conf unset before the call is unset
+    * again. */
+  private def withConfs[T](s: SparkSession, pins: (String, String)*)(body: => T): T = {
+    val prev = pins.map { case (k, _) =>
+      k -> (if (org.apache.spark.sql.internal.SQLConf.get.contains(k))
+        Some(s.conf.get(k)) else None)
+    }
+    try {
+      pins.foreach { case (k, v) => s.conf.set(k, v) }
+      body
+    } finally prev.foreach {
+      case (k, Some(v)) => s.conf.set(k, v)
+      case (k, None)    => s.conf.unset(k)
+    }
+  }
+
   /** t53 — BUCKET-TRANSFORM partitioning + storage-partitioned join under
     * the differential (r11: [[graft.sources.LakePart]] hidden
     * `bucket(n, col)` partitioning — the Iceberg bucket transform):
@@ -2240,20 +2263,8 @@ object Telemetry {
       .select(col("o_custkey").as("c_custkey"), col("o_orderkey"))
       .writeTo("graft_t53.lake.ord")
       .partitionedBy(bucket(8, col("c_custkey"))).create()
-    // capture the EXPLICIT setting only: `getOption` surfaces the conf's
-    // REGISTERED DEFAULT (true on this engine), so the naive
-    // getOption→restore pattern would re-write the default as an explicit
-    // `true` and permanently flip every later scan in the session into
-    // SPJ mode (which vetoes runtime filtering — measured as a
-    // cross-suite DPP failure). `get(key, sentinel)` sees only explicit
-    // settings; unset restores the true pre-call state.
-    val key = "spark.sql.sources.v2.bucketing.enabled"
-    val prevB: Option[String] =
-      if (org.apache.spark.sql.internal.SQLConf.get.contains(key))
-        Some(s.conf.get(key))
-      else None
-    try {
-      s.conf.set(key, "true")
+    // SPJ mode vetoes runtime filtering, so the pin must not outlive the query
+    withConfs(s, "spark.sql.sources.v2.bucketing.enabled" -> "true") {
       s.table("graft_t53.lake.cust")
         .join(s.table("graft_t53.lake.ord"), Seq("c_custkey"))
         .groupBy(col("c_mktsegment"))
@@ -2262,8 +2273,6 @@ object Telemetry {
         // the SPJ plan materializes under the pinned conf; restoring the
         // session conf afterwards must not replan it
         .localCheckpoint(true)
-    } finally {
-      prevB.fold(s.conf.unset(key))(v => s.conf.set(key, v))
     }
   }
 
@@ -2528,13 +2537,7 @@ object Telemetry {
       .writeTo("graft_t58.lake.ord")
       .partitionedBy(bucket(8, col("c_custkey")))
       .option("sortBy", "c_custkey").create()
-    val key = "spark.sql.sources.v2.bucketing.enabled"
-    val prevB: Option[String] =
-      if (org.apache.spark.sql.internal.SQLConf.get.contains(key))
-        Some(s.conf.get(key))
-      else None
-    try {
-      s.conf.set(key, "true")
+    withConfs(s, "spark.sql.sources.v2.bucketing.enabled" -> "true") {
       s.table("graft_t58.lake.cust")
         .join(s.table("graft_t58.lake.ord"), Seq("c_custkey"))
         .groupBy(col("c_mktsegment"))
@@ -2542,8 +2545,6 @@ object Telemetry {
           graft.operators.Num.rsum(col("o_totalprice"), 4).as("revenue"))
         .orderBy(col("c_mktsegment"))
         .localCheckpoint(true) // materialize under the pinned conf (t53)
-    } finally {
-      prevB.fold(s.conf.unset(key))(v => s.conf.set(key, v))
     }
   }
 
@@ -3167,14 +3168,8 @@ object Telemetry {
       .write.format(classOf[graft.sources.LakeSink].getName)
       .mode("append").option("ndvColumns", "user_id,event_id")
       .save(s"$lakeRoot/t71")
-    val keys = Seq("spark.sql.cbo.enabled" -> "true",
-      "spark.sql.autoBroadcastJoinThreshold" -> "65536")
-    val prev = keys.map { case (k, _) =>
-      k -> (if (org.apache.spark.sql.internal.SQLConf.get.contains(k))
-        Some(s.conf.get(k)) else None)
-    }
-    try {
-      keys.foreach { case (k, v) => s.conf.set(k, v) }
+    withConfs(s, "spark.sql.cbo.enabled" -> "true",
+        "spark.sql.autoBroadcastJoinThreshold" -> "65536") {
       val fact = s.read.format(classOf[graft.sources.LakeSink].getName)
         .load(s"$lakeRoot/t71")
       val dim = fact.filter(col("user_id") === 7L).select(col("event_id"))
@@ -3187,9 +3182,6 @@ object Telemetry {
       require(plan.contains("BroadcastHashJoin"),
         s"t71: the NDV estimate must broadcast the filtered side:\n${plan.take(900)}")
       out
-    } finally prev.foreach {
-      case (k, Some(v)) => s.conf.set(k, v)
-      case (k, None)    => s.conf.unset(k)
     }
   }
 
@@ -3305,9 +3297,9 @@ object Telemetry {
   val t74Sql: String = t04Sql
 
   /** t75 — TABLE PROPERTIES as per-table write defaults (r13: stored
-    * TBLPROPERTIES through [[graft.sources.LakeSinkFiles.writeManifest]]'s
-    * `tblprops` field — the Delta table-properties role; previously the
-    * engine silently DROPPED them): the table is created once with
+    * TBLPROPERTIES in [[graft.sources.LakeManifest]]'s `props`, the
+    * manifest's `tblprops` field — the Delta table-properties role;
+    * previously the engine silently DROPPED them): the table is created once with
     * `graft.ndvColumns`, every PLAIN catalog append inherits the NDV
     * registers (no per-write options anywhere), and t71's CBO broadcast
     * flip works off the property-configured ledger alone (asserted
@@ -3328,14 +3320,8 @@ object Telemetry {
     Tables.events(s, dir)
       .select(col("event_id"), col("user_id"), col("event_type"), col("value"))
       .writeTo("graft_t75.lake.ev").append() // plain append, zero options
-    val keys = Seq("spark.sql.cbo.enabled" -> "true",
-      "spark.sql.autoBroadcastJoinThreshold" -> "65536")
-    val prev = keys.map { case (k, _) =>
-      k -> (if (org.apache.spark.sql.internal.SQLConf.get.contains(k))
-        Some(s.conf.get(k)) else None)
-    }
-    try {
-      keys.foreach { case (k, v) => s.conf.set(k, v) }
+    withConfs(s, "spark.sql.cbo.enabled" -> "true",
+        "spark.sql.autoBroadcastJoinThreshold" -> "65536") {
       val fact = s.table("graft_t75.lake.ev")
       val dim = fact.filter(col("user_id") === 7L).select(col("event_id"))
       val joined = fact.join(dim, "event_id")
@@ -3347,9 +3333,6 @@ object Telemetry {
       require(plan.contains("BroadcastHashJoin"),
         s"t75: property-inherited NDV must broadcast the filtered side:\n${plan.take(900)}")
       out
-    } finally prev.foreach {
-      case (k, Some(v)) => s.conf.set(k, v)
-      case (k, None)    => s.conf.unset(k)
     }
   }
 
@@ -3541,14 +3524,8 @@ object Telemetry {
       .collect()
     require(a.length == 1 && a(0).getInt(0) == 0 && a(0).getInt(1) >= 1,
       s"t82: re-analyze must skip every covered file, got ${a.mkString(";")}")
-    val keys = Seq("spark.sql.cbo.enabled" -> "true",
-      "spark.sql.autoBroadcastJoinThreshold" -> "65536")
-    val prev = keys.map { case (k, _) =>
-      k -> (if (org.apache.spark.sql.internal.SQLConf.get.contains(k))
-        Some(s.conf.get(k)) else None)
-    }
-    try {
-      keys.foreach { case (k, v) => s.conf.set(k, v) }
+    withConfs(s, "spark.sql.cbo.enabled" -> "true",
+        "spark.sql.autoBroadcastJoinThreshold" -> "65536") {
       val fact = s.table("graft_t82.lake.ev")
       val dim = fact.filter(col("user_id") === 7L).select(col("event_id"))
       val joined = fact.join(dim, "event_id")
@@ -3560,9 +3537,6 @@ object Telemetry {
       require(plan.contains("BroadcastHashJoin"),
         s"t82: ANALYZE-retrofitted NDV must broadcast the filtered side:\n${plan.take(900)}")
       out
-    } finally prev.foreach {
-      case (k, Some(v)) => s.conf.set(k, v)
-      case (k, None)    => s.conf.unset(k)
     }
   }
 
@@ -3634,14 +3608,8 @@ object Telemetry {
     // >=900 rows at sf0.001) stays above it at every scale, while the
     // NDV-only misestimate (~20 rows) would dive under it — the spec's
     // control leg pins that misled broadcast
-    val keys = Seq("spark.sql.cbo.enabled" -> "true",
-      "spark.sql.autoBroadcastJoinThreshold" -> "4096")
-    val prev = keys.map { case (k, _) =>
-      k -> (if (org.apache.spark.sql.internal.SQLConf.get.contains(k))
-        Some(s.conf.get(k)) else None)
-    }
-    try {
-      keys.foreach { case (k, v) => s.conf.set(k, v) }
+    withConfs(s, "spark.sql.cbo.enabled" -> "true",
+        "spark.sql.autoBroadcastJoinThreshold" -> "4096") {
       val fact = s.table("graft_t79.lake.ev")
       val hot = fact.filter(col("sk") === 7L)
       val truth = hot.count()
@@ -3660,9 +3628,6 @@ object Telemetry {
         s"t79: the histogram must keep the hot slice off the broadcast " +
           s"path:\n${plan.take(900)}")
       out
-    } finally prev.foreach {
-      case (k, Some(v)) => s.conf.set(k, v)
-      case (k, None)    => s.conf.unset(k)
     }
   }
 

@@ -472,16 +472,17 @@ case class GraftAnalyzeCommand(catalogName: String, catalog: GraftCatalog,
     name: String, columns: Option[Seq[String]], allColumns: Boolean)
     extends LeafRunnableCommand {
   override def run(session: SparkSession): Seq[Row] = {
-    import graft.sources.{LakeMaintenance, LakeSinkFiles, LakeSinkStats}
+    import graft.sources.{LakeMaintenance, LakeManifest, LakeSinkStats}
     val root = catalog.lakeRootOpt.getOrElse(throw new IllegalStateException(
       s"$catalogName: catalog has no lake namespace configured"))
     require(!GraftViews.exists(root, name),
       s"ANALYZE TABLE: $catalogName.lake.$name is a stored VIEW — " +
         "analyze its base tables instead")
     val dir = java.nio.file.Paths.get(root, name).toString
-    val (tblSchema, partCols) = LakeSinkFiles.readManifest(dir).getOrElse(
+    val m = LakeManifest.read(dir).getOrElse(
       throw new IllegalArgumentException(
         s"ANALYZE TABLE: no lake table '$name' under $root"))
+    val (tblSchema, partCols) = (m.schema, m.partCols)
     val histOn = session.conf
       .get("spark.sql.statistics.histogram.enabled", "false").toBoolean
     def numericAxis(c: String): Boolean =

@@ -222,7 +222,7 @@ class GraftCatalog extends TableCatalog with SupportsNamespaces
     if (ns.length == 2 && ns(0) == "lake" && lakeRoot.isDefined &&
         LakeMetadataTables.Kinds.contains(ident.name())) {
       val dir = lakeTableDir(ns(1)).get
-      if (LakeSinkFiles.readManifest(dir.toString).isEmpty)
+      if (LakeManifest.read(dir.toString).isEmpty)
         throw new NoSuchTableException(ident)
       return new LakeMetaTable(ident.name(), dir.toString,
         s"$catalogName.lake.${ns(1)}.${ident.name()}")
@@ -230,11 +230,12 @@ class GraftCatalog extends TableCatalog with SupportsNamespaces
     if (ns.length != 1) throw new NoSuchTableException(ident)
     if (ns(0) == "lake" && lakeRoot.isDefined) {
       val dir = lakeTableDir(ident.name()).get
-      if (LakeSinkFiles.readManifest(dir.toString).isEmpty)
+      LakeManifest.read(dir.toString).orElse {
         recoverReplaced(ident.name(), dir)
-      LakeSinkFiles.readManifest(dir.toString) match {
-        case Some((schema, partCols)) =>
-          new LakeSinkTable(schema, dir.toString, partCols,
+        LakeManifest.read(dir.toString)
+      } match {
+        case Some(m) =>
+          new LakeSinkTable(m.schema, dir.toString, m.partCols,
             tableName = Some(s"$catalogName.lake.${ident.name()}"))
         case None => throw new NoSuchTableException(ident)
       }
@@ -378,7 +379,7 @@ class GraftCatalog extends TableCatalog with SupportsNamespaces
     props.map {
       case (k, v) if k.exists(_ < ' ') || v.exists(_ < ' ') =>
         // the manifest pair codec joins on u0001/u0002 — a control
-        // character in a key/value would corrupt readManifestProps'
+        // character in a key/value would corrupt LakeManifest.read's
         // split with no DDL-time signal (ADVICE r13); refuse all of
         // them (none has a legitimate use in a table property)
         throw new UnsupportedOperationException(
@@ -494,8 +495,8 @@ class GraftCatalog extends TableCatalog with SupportsNamespaces
     LakeSink.partitionExtractors(schema, partCols)
     val canonProps = validateGraftProps(schema, partCols, tableProps)
     Files.createDirectories(dir)
-    LakeSinkFiles.writeManifest(dir.toString, schema, partCols,
-      constraints = constraints, tableProps = canonProps, defaults = defaults)
+    LakeManifest.write(dir.toString, LakeManifest(schema, partCols,
+      constraints = constraints, props = canonProps, defaults = defaults))
   }
 
   // --- StagingTableCatalog (atomic CTAS / REPLACE TABLE AS SELECT) ------------
@@ -545,7 +546,7 @@ class GraftCatalog extends TableCatalog with SupportsNamespaces
 
   /** Schema evolution for lake tables — all metadata-only, zero file
     * rewrites (the Iceberg/Delta contract, field ids approximated by
-    * name history — see [[LakeSinkFiles.writeManifest]]):
+    * name history — see [[LakeManifest]]):
     *
     *  - ADD COLUMNS: appended, nullable; the JSON-lines reader null-fills
     *    fields absent from pre-evolution files.
@@ -571,10 +572,9 @@ class GraftCatalog extends TableCatalog with SupportsNamespaces
       throw new UnsupportedOperationException(
         s"$catalogName: ALTER TABLE is only supported for 'lake' tables")
     val dir = lakeTableDir(ident.name()).get
-    val (schema, partCols) = LakeSinkFiles.readManifest(dir.toString)
+    val live = LakeManifest.read(dir.toString)
       .getOrElse(throw new NoSuchTableException(ident))
-    val (renames0, dropped0) = LakeSinkFiles.readManifestRenames(dir.toString)
-    val cons0 = LakeSinkFiles.readManifestConstraints(dir.toString)
+    val (schema, partCols) = (live.schema, live.partCols)
     val partNames = LakePart.parseAll(partCols).map(_.name).toSet
     def takenNames(sch: StructType, renames: Map[String, Seq[String]],
         dropped: Seq[String]): Set[String] =
@@ -604,7 +604,7 @@ class GraftCatalog extends TableCatalog with SupportsNamespaces
       case _ => false
     }
     val (newSchema, newRenames, newDropped, newCons) =
-      schemaChanges.foldLeft((schema, renames0, dropped0, cons0)) {
+      schemaChanges.foldLeft((schema, live.renames, live.dropped, live.constraints)) {
         case ((sch, ren, drp, cons), ac: TableChange.AddConstraint) =>
           ac.constraint() match {
             case c: org.apache.spark.sql.connector.catalog.constraints.Check =>
@@ -723,8 +723,7 @@ class GraftCatalog extends TableCatalog with SupportsNamespaces
     // the exists-default old files read, and this engine keeps the two
     // identical by construction (immutable per column — which is also
     // what makes live defaults historically exact for snapshots).
-    val newDefaults = schemaChanges.foldLeft(
-      LakeSinkFiles.readManifestDefaults(dir.toString)) {
+    val newDefaults = schemaChanges.foldLeft(live.defaults) {
       case (ds, add: TableChange.AddColumn) if add.defaultValue() != null =>
         ds :+ defaultTriple(add.fieldNames()(0), add.dataType(), add.defaultValue())
       case (ds, ren: TableChange.RenameColumn) =>
@@ -739,8 +738,7 @@ class GraftCatalog extends TableCatalog with SupportsNamespaces
             "(current ≡ exists by construction); drop and re-add the column")
       case (ds, _) => ds
     }
-    val newProps = propChanges.foldLeft(
-      LakeSinkFiles.readManifestProps(dir.toString)) {
+    val newProps = propChanges.foldLeft(live.props) {
       case (ps, sp: TableChange.SetProperty)
           if !EngineProps.contains(sp.property) &&
             !sp.property.startsWith("option.") =>
@@ -763,13 +761,13 @@ class GraftCatalog extends TableCatalog with SupportsNamespaces
     val canonProps = validateGraftProps(newSchema, partCols, newProps)
     // unsupported data types must fail the DDL, not the next write
     LakeSink.serializers(LakeSink.dataSchema(newSchema, partCols))
-    LakeSinkFiles.writeManifest(dir.toString, newSchema, partCols,
-      newRenames, newDropped, newCons,
-      LakeSinkFiles.readManifestPartHistory(dir.toString), canonProps,
-      newDefaults)
+    val m = live.copy(schema = newSchema, renames = newRenames,
+      dropped = newDropped, constraints = newCons, props = canonProps,
+      defaults = newDefaults)
+    LakeManifest.write(dir.toString, m)
     // a schema change is a version transition: snapshots at or before it
     // keep the pre-evolution schema + aliases
-    LakeSinkFiles.recordVersion(dir.toString)
+    LakeSinkFiles.recordVersion(dir.toString, manifest = Some(m))
     new LakeSinkTable(newSchema, dir.toString, partCols,
       tableName = Some(s"$catalogName.lake.${ident.name()}"))
   }

@@ -91,7 +91,7 @@ private[sources] object GraftProcedures {
         !table.startsWith("."),
         s"$catalogName: table must be a plain lake table name, got '$table'")
       val d = java.nio.file.Paths.get(lakeRoot, table).toString
-      require(LakeSinkFiles.readManifest(d).isDefined,
+      require(LakeManifest.read(d).isDefined,
         s"$catalogName: no lake table '$table' under $lakeRoot")
       d
     }

@@ -197,6 +197,18 @@ private[graft] object LakeCdf {
     }.toArray
   }
 
+  /** The reader factory of batch and streaming change reads: the live
+    * manifest's evolution state and defaults, read once at planning. */
+  private[sources] def readerFactory(cdfSchema: StructType, path: String,
+      partCols: Seq[String]): PartitionReaderFactory = {
+    val m = LakeManifest.read(path).getOrElse(LakeManifest.Empty)
+    val (aliases, ignored) = m.evolution
+    val tableSchema = StructType(cdfSchema.fields.filterNot(f =>
+      f.name == ChangeTypeCol || f.name == CommitVersionCol))
+    new LakeCdfReaderFactory(tableSchema, cdfSchema, path, partCols, aliases, ignored,
+      LakeSinkDefaults.internalMap(m.defaults, LakeSink.dataSchema(tableSchema, partCols)))
+  }
+
   def cdfSchema(tableSchema: StructType): StructType = {
     Seq(ChangeTypeCol, CommitVersionCol).foreach { c =>
       require(!tableSchema.fieldNames.contains(c),
@@ -252,13 +264,8 @@ private[sources] class LakeCdfScan(cdfSchema: StructType, path: String,
       LakeSinkFiles.listVersions(path).lastOption.getOrElse(0L))
     LakeCdf.planRange(path, partCols, startingVersion.map(_ - 1).getOrElse(0L), endV)
   }
-  override def createReaderFactory(): PartitionReaderFactory = {
-    val (aliases, ignored) = LakeSinkFiles.readManifestEvolution(path)
-    val tableSchema = StructType(cdfSchema.fields.filterNot(f =>
-      f.name == LakeCdf.ChangeTypeCol || f.name == LakeCdf.CommitVersionCol))
-    new LakeCdfReaderFactory(tableSchema, cdfSchema, path, partCols, aliases, ignored,
-      LakeSinkDefaults.internalMap(path, LakeSink.dataSchema(tableSchema, partCols)))
-  }
+  override def createReaderFactory(): PartitionReaderFactory =
+    LakeCdf.readerFactory(cdfSchema, path, partCols)
 }
 
 /** Offset = the last version whose changes have been emitted. */
@@ -345,13 +352,8 @@ private[sources] class LakeCdfMicroBatchStream(cdfSchema: StructType,
       start.asInstanceOf[LakeCdfOffset].version,
       end.asInstanceOf[LakeCdfOffset].version)
 
-  override def createReaderFactory(): PartitionReaderFactory = {
-    val (aliases, ignored) = LakeSinkFiles.readManifestEvolution(path)
-    val tableSchema = StructType(cdfSchema.fields.filterNot(f =>
-      f.name == LakeCdf.ChangeTypeCol || f.name == LakeCdf.CommitVersionCol))
-    new LakeCdfReaderFactory(tableSchema, cdfSchema, path, partCols, aliases, ignored,
-      LakeSinkDefaults.internalMap(path, LakeSink.dataSchema(tableSchema, partCols)))
-  }
+  override def createReaderFactory(): PartitionReaderFactory =
+    LakeCdf.readerFactory(cdfSchema, path, partCols)
   override def commit(end: Offset): Unit = ()
   override def stop(): Unit = ()
 }

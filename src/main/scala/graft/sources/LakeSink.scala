@@ -71,7 +71,7 @@ class LakeSink extends TableProvider {
   override def supportsExternalMetadata(): Boolean = true
   override def inferSchema(options: CaseInsensitiveStringMap): StructType = {
     def manifestSchema: StructType =
-      LakeSinkFiles.readManifest(options.get("path")).map(_._1).getOrElse(
+      LakeManifest.read(options.get("path")).map(_.schema).getOrElse(
         throw new UnsupportedOperationException(
           "graft.sources.LakeSink: no _graft_schema.json manifest at " +
             s"'${options.get("path")}' — read an existing lake table, or pass " +
@@ -110,14 +110,14 @@ class LakeSink extends TableProvider {
           includePositions = includes)
       case None if java.lang.Boolean.parseBoolean(properties.get("readChangeFeed")) =>
         // streaming change-data feed over the version log — see [[LakeCdf]]
-        val (sch, partCols) = LakeSinkFiles.readManifest(path).getOrElse(
+        val m = LakeManifest.read(path).getOrElse(
           throw new UnsupportedOperationException(
             s"LakeSink CDF: no lake table at '$path'"))
-        new LakeCdfTable(sch, path, partCols)
+        new LakeCdfTable(m.schema, path, m.partCols)
       case None =>
         new LakeSinkTable(schema, path,
           Option(properties.get("partitionCols")).map(LakePart.split)
-            .orElse(LakeSinkFiles.readManifest(path).map(_._2))
+            .orElse(LakeManifest.read(path).map(_.partCols))
             .getOrElse(Seq.empty))
     }
   }
@@ -323,7 +323,7 @@ private[graft] class LakeSinkTable(writeSchema: StructType, path: String,
     * against existing rows at ADD time ([[GraftCatalog.alterTable]]). */
   override def constraints():
       Array[org.apache.spark.sql.connector.catalog.constraints.Constraint] =
-    LakeSinkFiles.readManifestConstraints(path).map { case (n, sql) =>
+    LakeManifest.read(path).toSeq.flatMap(_.constraints).map { case (n, sql) =>
       org.apache.spark.sql.connector.catalog.constraints.Constraint.check(n)
         .predicateSql(sql)
         .enforced(true)
@@ -405,7 +405,7 @@ private[graft] class LakeSinkTable(writeSchema: StructType, path: String,
     * value ([[LakeSinkDefaults]]). One declaration, both halves. */
   override def columns(): Array[org.apache.spark.sql.connector.catalog.Column] = {
     import org.apache.spark.sql.connector.catalog.{Column => V2Column, ColumnDefaultValue}
-    val byName = LakeSinkFiles.readManifestDefaults(path)
+    val byName = LakeManifest.read(path).toSeq.flatMap(_.defaults)
       .map(d => d._1 -> d).toMap
     writeSchema.fields.map { f =>
       byName.get(f.name) match {
@@ -549,7 +549,7 @@ private[graft] class LakeSinkTable(writeSchema: StructType, path: String,
   /** SHOW TBLPROPERTIES serves the manifest's stored property set. */
   override def properties(): util.Map[String, String] = {
     val m = new java.util.HashMap[String, String]()
-    LakeSinkFiles.readManifestProps(path).foreach { case (k, v) => m.put(k, v) }
+    LakeManifest.read(path).toSeq.flatMap(_.props).foreach { case (k, v) => m.put(k, v) }
     m
   }
   /** `graft.*` table properties act as per-TABLE default write options
@@ -560,7 +560,7 @@ private[graft] class LakeSinkTable(writeSchema: StructType, path: String,
   override def newWriteBuilder(info: LogicalWriteInfo): WriteBuilder = {
     val merged = new java.util.HashMap[String, String]()
     val writeCols = info.schema().fieldNames.toSet
-    LakeSinkFiles.readManifestProps(path).foreach { case (k, v) =>
+    LakeManifest.read(path).toSeq.flatMap(_.props).foreach { case (k, v) =>
       if (k.startsWith("graft.")) {
         // LOWERCASE the stripped key: info.options() keys arrive
         // lowercased (CaseInsensitiveStringMap), and a mixed-case twin
@@ -835,149 +835,6 @@ private[graft] object LakeSinkFiles {
   def versionsDir(path: String): Path = Paths.get(path, "_graft_versions")
   def retiredDir(path: String): Path = Paths.get(path, "_graft_retired")
 
-  /** Record the lake table's LOGICAL schema (data + partition columns,
-    * original order — DDL round-trips all supported types) so the table is
-    * readable by name with no user schema. Written via temp + atomic move
-    * at every successful commit; last writer wins, which is correct
-    * because appends require an identical schema anyway.
-    *
-    * Schema EVOLUTION state rides along (see [[GraftCatalog.alterTable]]):
-    * `renames` maps each logical column to the PHYSICAL field names it
-    * carried in files written before its rename(s) — readers resolve any
-    * alias to the logical column, so a rename is metadata-only (zero file
-    * rewrites, the Iceberg field-id contract approximated by name
-    * history); `dropped` lists physical names whose bytes remain in old
-    * files but must be IGNORED on read (a DROP COLUMN is metadata-only
-    * too). Name reuse after a drop/rename is refused at DDL time — the
-    * one ambiguity name-based evolution cannot represent. */
-  def writeManifest(path: String, schema: StructType, partCols: Seq[String],
-      renames: Map[String, Seq[String]] = Map.empty,
-      dropped: Seq[String] = Seq.empty,
-      constraints: Seq[(String, String)] = Seq.empty,
-      partHistory: Seq[String] = Seq.empty,
-      tableProps: Seq[(String, String)] = Seq.empty,
-      defaults: Seq[(String, String, String)] = Seq.empty): Unit = {
-    // column DEFAULTs: (name, declared SQL, writer-token of the folded
-    // value) triples — the token is EXACTLY what the writer would emit
-    // for the value, so the scanner's typed decode is its inverse.
-    // REMEMBER (r13 lesson): a new manifest field needs every
-    // writeManifest call site — all 8 pass `defaults` explicitly.
-    val defBody = defaults
-      .map { case (n, sql, tok) => s"$n\u0001$sql\u0001$tok" }.mkString("\u0002")
-    // (name, CHECK predicate SQL) pairs — control-char separators survive
-    // jsonEscape and can appear in neither identifiers nor SQL text
-    val conBody = constraints
-      .map { case (n, sql) => s"$n\u0001$sql" }.mkString("\u0002")
-    // TBLPROPERTIES, same codec (pair order = definition order)
-    val propBody = tableProps
-      .map { case (k, v) => s"$k\u0001$v" }.mkString("\u0002")
-    def opt(k: String, present: Boolean, v: => String) =
-      if (present) Seq(k -> v) else Seq.empty
-    val json = renderFields(
-      Seq("schema" -> schema.toDDL, "partitionCols" -> partCols.mkString(",")) ++
-        opt("renames", renames.nonEmpty, renamesBody(renames)) ++
-        opt("dropped", dropped.nonEmpty, dropped.mkString(",")) ++
-        opt("constraints", constraints.nonEmpty, conBody) ++
-        opt("partColsHistory", partHistory.nonEmpty, partHistory.mkString(";")) ++
-        opt("tblprops", tableProps.nonEmpty, propBody) ++
-        opt("defaults", defaults.nonEmpty, defBody))
-    val tmp = Paths.get(path, s".schema.${java.util.UUID.randomUUID.toString.take(8)}.tmp")
-    Files.write(tmp, json.getBytes(StandardCharsets.UTF_8))
-    Files.move(tmp, manifestPath(path), StandardCopyOption.REPLACE_EXISTING,
-      StandardCopyOption.ATOMIC_MOVE)
-  }
-
-  /** PRIOR partition specs of an evolved table (newest last; each entry
-    * one comma-joined spec string) — empty for never-evolved tables. A
-    * non-empty history means pre-evolution files live under old-spec
-    * directories: scans keep them (their kvs simply lack the active
-    * dirKeys), temporal pruning matches each file's OWN generation's dir,
-    * and SPJ stands down (the active KeyGroupedPartitioning cannot
-    * describe them). See [[LakeMaintenance.evolvePartitionSpec]]. */
-  def readManifestPartHistory(path: String): Seq[String] =
-    manifestField(path, "partColsHistory").toSeq
-      .flatMap(_.split(";")).map(_.trim).filter(_.nonEmpty)
-
-  /** One optional manifest field: None without a manifest or the field. */
-  private def manifestField(path: String, key: String): Option[String] = {
-    val p = manifestPath(path)
-    if (!Files.isRegularFile(p)) None
-    else jsonFieldOpt(new String(Files.readAllBytes(p), StandardCharsets.UTF_8),
-      key, s"manifest at $p")
-  }
-
-  /** Entries of the manifest's list codec: control-char separated entries
-    * of control-char separated parts (see [[writeManifest]]). */
-  private def manifestEntries(path: String, key: String): Seq[Array[String]] =
-    manifestField(path, key).toSeq.flatMap(_.split("\u0002"))
-      .filter(_.nonEmpty).map(_.split("\u0001", 3))
-
-  /** The table's stored CHECK constraints: (name, predicate SQL) in
-    * definition order. Enforced at write time (the engine injects the
-    * checks from [[LakeSinkTable.constraints]]); evolved through
-    * `ALTER TABLE ADD/DROP CONSTRAINT` ([[GraftCatalog.alterTable]]). */
-  def readManifestConstraints(path: String): Seq[(String, String)] =
-    manifestEntries(path, "constraints").map(e => e(0) -> e.drop(1).mkString("\u0001"))
-
-  /** The table's stored TBLPROPERTIES: (key, value) in definition order.
-    * Served through [[LakeSinkTable.properties]] (SHOW TBLPROPERTIES),
-    * evolved via ALTER TABLE SET/UNSET TBLPROPERTIES, and preserved by
-    * every manifest rewrite. `graft.*` keys double as per-TABLE default
-    * write options (see [[LakeSinkTable.newWriteBuilder]]). */
-  def readManifestProps(path: String): Seq[(String, String)] =
-    manifestEntries(path, "tblprops").map(e => e(0) -> e.drop(1).mkString("\u0001"))
-
-  /** Stored column DEFAULTs: (logical name, declared SQL, writer-token of
-    * the folded value) in definition order. The token feeds the scanner's
-    * EXISTS-default fill (files written before the column existed — or by
-    * a legal subset writer — read the default instead of null; an
-    * EXPLICIT null in a file stays null); the SQL feeds the engine's
-    * CURRENT-default INSERT filling through [[LakeSinkTable.columns]].
-    * Defaults are immutable per column (ALTER COLUMN SET DEFAULT is
-    * refused), so live defaults are historically exact for snapshots. */
-  def readManifestDefaults(path: String): Seq[(String, String, String)] =
-    manifestEntries(path, "defaults").map(e => (e(0), e(1), e(2)))
-
-  private def renamesBody(renames: Map[String, Seq[String]]): String =
-    renames.toSeq.sortBy(_._1)
-      .map { case (l, ps) => s"$l=${ps.mkString("|")}" }.mkString(";")
-
-  private def parseRenames(body: String): Map[String, Seq[String]] =
-    body.split(";").iterator.map(_.trim).filter(_.nonEmpty).map { e =>
-      val i = e.indexOf('=')
-      e.substring(0, i) -> e.substring(i + 1).split("\\|").toSeq.filter(_.nonEmpty)
-    }.toMap
-
-  /** Evolution state from a JSON blob holding optional `renames`/`dropped`
-    * fields (the manifest or a version record): (physical→logical alias
-    * map, ignored physical names). */
-  private[sources] def evolutionOf(json: String, where: String): (Map[String, String], Set[String]) = {
-    val (renames, dropped) = renamesOf(json, where)
-    (renames.flatMap { case (logical, phys) => phys.map(_ -> logical) }, dropped.toSet)
-  }
-
-  private def renamesOf(json: String, where: String): (Map[String, Seq[String]], Seq[String]) =
-    (jsonFieldOpt(json, "renames", where).map(parseRenames).getOrElse(Map.empty),
-      jsonFieldOpt(json, "dropped", where).toSeq
-        .flatMap(_.split(",")).map(_.trim).filter(_.nonEmpty))
-
-  /** The live table's evolution state: (physical→logical aliases, ignored
-    * physical names). Empty for never-evolved tables. */
-  def readManifestEvolution(path: String): (Map[String, String], Set[String]) = {
-    val p = manifestPath(path)
-    if (!Files.isRegularFile(p)) return (Map.empty, Set.empty)
-    evolutionOf(new String(Files.readAllBytes(p), StandardCharsets.UTF_8),
-      s"manifest at $p")
-  }
-
-  /** The full rename history (logical → physical alias list) — the DDL
-    * fold state [[GraftCatalog.alterTable]] evolves. */
-  def readManifestRenames(path: String): (Map[String, Seq[String]], Seq[String]) = {
-    val p = manifestPath(path)
-    if (!Files.isRegularFile(p)) return (Map.empty, Seq.empty)
-    renamesOf(new String(Files.readAllBytes(p), StandardCharsets.UTF_8), s"manifest at $p")
-  }
-
   /** Manifest policy at commit: a TRUNCATING write owns the table and
     * replaces the manifest; an APPEND must leave an existing manifest
     * untouched — the table's logical schema is the source of truth, and a
@@ -986,22 +843,19 @@ private[graft] object LakeSinkFiles {
     * an added column — both would corrupt later reads of older files).
     * Appends against an existing manifest must write a SUBSET of its
     * columns under the same partition layout; anything else fails the
-    * commit (Spark then aborts, discarding the staged files). */
+    * commit (Spark then aborts, discarding the staged files). Returns the
+    * manifest the commit stands on, for its [[recordVersion]]. */
   def reconcileManifest(path: String, schema: StructType, partCols: Seq[String],
-      replace: Boolean): Unit =
-    reconcileManifest(path, schema, partCols, replace, mergeSchema = false)
-
-  def reconcileManifest(path: String, schema: StructType, partCols: Seq[String],
-      replace: Boolean, mergeSchema: Boolean): Unit =
-    (if (replace) None else readManifest(path)) match {
+      replace: Boolean, mergeSchema: Boolean): LakeManifest = {
+    val old = LakeManifest.read(path)
+    (if (replace) None else old) match {
       case None =>
         // a truncating overwrite REPLACES schema/partitioning/evolution
         // state (and clears partColsHistory — every pre-evolution file
         // was just retired), but the table's CHECK constraints are data-
         // quality DDL and must SURVIVE a routine data refresh (the Delta
         // contract; every other manifest writer preserves them too).
-        // Read before the overwrite below — the old manifest still holds.
-        val kept = readManifestConstraints(path)
+        val prior = old.getOrElse(LakeManifest.Empty)
         // …but only if they still RESOLVE against the replacing schema:
         // a path-based overwrite skips the engine's constraint injection,
         // so a schema that drops a constrained column would otherwise
@@ -1009,7 +863,7 @@ private[graft] object LakeSinkFiles {
         // every later catalog-routed write with an unresolved-column
         // analysis error. Refuse the overwrite loudly instead
         // (case-insensitive, matching Spark's resolution).
-        kept.foreach { case (n, sql) =>
+        prior.constraints.foreach { case (n, sql) =>
           val refs = org.apache.spark.sql.catalyst.parser.CatalystSqlParser
             .parseExpression(sql).collect {
               case a: org.apache.spark.sql.catalyst.analysis.UnresolvedAttribute =>
@@ -1022,44 +876,46 @@ private[graft] object LakeSinkFiles {
               s"${missing.mkString(",")} referenced by CHECK constraint $n " +
               "— DROP CONSTRAINT first or keep the column")
         }
-        writeManifest(path, schema, partCols, constraints = kept,
-          tableProps = readManifestProps(path),
-          // defaults are PER-COLUMN state: keep those whose column
-          // survives the replacing schema (a dropped column's default is
-          // meaningless, unlike a CHECK, which references and refuses)
-          defaults = readManifestDefaults(path)
-            .filter(d => schema.fieldNames.contains(d._1)))
-      case Some((existing, exParts)) =>
-        require(exParts == partCols,
+        // defaults are PER-COLUMN state: keep those whose column survives
+        // the replacing schema (a dropped column's default is
+        // meaningless, unlike a CHECK, which references and refuses)
+        val m = LakeManifest(schema, partCols, constraints = prior.constraints,
+          props = prior.props, defaults = prior.defaultsOf(schema))
+        LakeManifest.write(path, m)
+        m
+      case Some(existing) =>
+        require(existing.partCols == partCols,
           s"LakeSink: append partitioning ${partCols.mkString(",")} does not " +
-            s"match the table's ${exParts.mkString(",")}")
-        val unknown = schema.fieldNames.toSet -- existing.fieldNames.toSet
+            s"match the table's ${existing.partCols.mkString(",")}")
+        val unknown = schema.fieldNames.toSet -- existing.schema.fieldNames.toSet
         if (unknown.nonEmpty && mergeSchema) {
           // the Delta `mergeSchema` contract: a superset append AUTO-adds
           // the new columns (nullable — pre-evolution files null-fill on
           // read) through the SAME evolution state ALTER TABLE ADD
           // COLUMNS maintains; rename-alias / dropped names stay refused
           // (the one ambiguity name-based evolution cannot represent)
-          val (ren, drp) = readManifestRenames(path)
-          val taken = ren.values.flatten.toSet ++ drp
+          val taken = existing.renames.values.flatten.toSet ++ existing.dropped
           val reused = unknown.intersect(taken)
           require(reused.isEmpty,
             s"LakeSink: mergeSchema cannot reuse names ${reused.mkString(",")} " +
               "(rename alias or dropped) — a table rewrite is required")
-          val merged = StructType(existing.fields ++
+          val merged = StructType(existing.schema.fields ++
             schema.fields.filter(f => unknown.contains(f.name))
               .map(_.copy(nullable = true)))
           // validate the evolved schema serializes before committing it
           LakeSink.serializers(LakeSink.dataSchema(merged, partCols))
-          writeManifest(path, merged, partCols, ren, drp,
-            readManifestConstraints(path), readManifestPartHistory(path),
-            readManifestProps(path), readManifestDefaults(path))
-        } else require(unknown.isEmpty,
-          s"LakeSink: appended columns ${unknown.mkString(",")} are not in the " +
-            "table schema — evolve it first (ALTER TABLE ... ADD COLUMNS) " +
-            "or append with .option(\"mergeSchema\", \"true\")")
-      // existing manifest preserved
+          val m = existing.copy(schema = merged)
+          LakeManifest.write(path, m)
+          m
+        } else {
+          require(unknown.isEmpty,
+            s"LakeSink: appended columns ${unknown.mkString(",")} are not in the " +
+              "table schema — evolve it first (ALTER TABLE ... ADD COLUMNS) " +
+              "or append with .option(\"mergeSchema\", \"true\")")
+          existing // preserved
+        }
     }
+  }
 
   /** Extract one escaped string field from a flat JSON object written with
     * [[LakeSink.jsonEscape]] — the shared scanner behind the schema
@@ -1083,18 +939,6 @@ private[graft] object LakeSinkFiles {
       i += 1
     }
     b.toString
-  }
-
-  /** Read back (full schema, partition columns); None when the directory
-    * holds no committed lake table. */
-  def readManifest(path: String): Option[(StructType, Seq[String])] = {
-    if (path == null) return None
-    val p = manifestPath(path)
-    if (!Files.isRegularFile(p)) return None
-    val json = new String(Files.readAllBytes(p), StandardCharsets.UTF_8)
-    val schema = StructType.fromDDL(jsonField(json, "schema", s"manifest at $p"))
-    val parts = LakePart.split(jsonField(json, "partitionCols", s"manifest at $p"))
-    Some((schema, parts))
   }
 
   /** Render a flat JSON object of escaped string fields — the shape of
@@ -1248,13 +1092,14 @@ private[graft] object LakeSinkFiles {
     * (the pre-r11 superset/subset behavior, never lost bytes); the next
     * uncontended commit re-converges the chain to walk-free arithmetic.
     * The peer's files then carry no facts in our record: readers scan
-    * them (never a guess) until ANALYZE backfills them. */
-  def recordVersion(path: String): Long =
-    recordVersion(path, Seq.empty, Seq.empty)
-
-  def recordVersion(path: String, adds: Seq[String], removes: Seq[String],
-      facts: LakeFacts = LakeFacts()): Long = {
-    val (schema, partCols) = readManifest(path).getOrElse(
+    * them (never a guess) until ANALYZE backfills them.
+    *
+    * The record snapshots `manifest` — the one the committing operation
+    * just reconciled or wrote — or, when none is given, the live one. */
+  def recordVersion(path: String, adds: Seq[String] = Seq.empty,
+      removes: Seq[String] = Seq.empty, facts: LakeFacts = LakeFacts(),
+      manifest: Option[LakeManifest] = None): Long = {
+    val m = manifest.orElse(LakeManifest.read(path)).getOrElse(
       throw new IllegalStateException(
         s"LakeSink: recording a version at $path before any manifest"))
     val v = reserveVersion(path)
@@ -1271,7 +1116,7 @@ private[graft] object LakeSinkFiles {
       case _ =>
         // bootstrap (first record) or a peer mid-commit: walk the tree
         val root = Paths.get(path)
-        LakeSinkPartitions.listCommitted(path, partCols)
+        LakeSinkPartitions.listCommitted(path, m.partCols)
           .map { case (p, _) => root.relativize(p).toString }.sorted
     }
     val relSet = rels.toSet
@@ -1280,11 +1125,9 @@ private[graft] object LakeSinkFiles {
     val deletes = LakeSinkDeletes.read(path).filter { case (r, _) => relSet.contains(r) }
     // schema-evolution state rides into the record: snapshot reads decode
     // old files under the aliases of THEIR commit
-    val (renames, droppedCols) = readManifestRenames(path)
     writeRecord(path, v,
-      Seq("schema" -> schema.toDDL, "partitionCols" -> partCols.mkString(",")) ++
-        (if (renames.nonEmpty) Seq("renames" -> renamesBody(renames)) else Nil) ++
-        (if (droppedCols.nonEmpty) Seq("dropped" -> droppedCols.mkString(",")) else Nil),
+      Seq("schema" -> m.schema.toDDL, "partitionCols" -> m.partCols.mkString(",")) ++
+        LakeManifest.evolutionFields(m.renames, m.dropped),
       deletes, (base.map(_.facts).getOrElse(LakeFacts()) ++ facts).only(relSet),
       rels, None)
     v
@@ -1337,10 +1180,10 @@ private[graft] object LakeSinkFiles {
     listVersions(path).lastOption match {
       case Some(v) => snapshot(path, v)
       case None =>
-        val (schema, partCols) = readManifest(path).getOrElse((new StructType(), Seq.empty))
+        val m = LakeManifest.read(path).getOrElse(LakeManifest.Empty)
         val root = Paths.get(path)
-        new LakeSnapshot(None, schema, partCols,
-          LakeSinkPartitions.listCommitted(path, partCols)
+        new LakeSnapshot(None, m.schema, m.partCols,
+          LakeSinkPartitions.listCommitted(path, m.partCols)
             .map { case (p, _) => root.relativize(p).toString }.sorted,
           "", s"unrecorded table at $path")
     }
@@ -1535,9 +1378,11 @@ private[graft] final class LakeSnapshot(val version: Option[Long],
     .flatMap(LakeFacts.lines).map { case (k, cs) => k -> cs.split(",").toSeq.filter(_.nonEmpty) }
     .toMap
   def facts: LakeFacts = LakeFacts(counts, stats, sorted)
+  /** The manifest's (renames, dropped) evolution state AT this commit. */
+  lazy val (renames, dropped) = LakeManifest.renamesOf(record, where)
   /** (physical → logical aliases, ignored physical names) AT this commit. */
-  lazy val evolution: (Map[String, String], Set[String]) =
-    LakeSinkFiles.evolutionOf(record, where)
+  def evolution: (Map[String, String], Set[String]) =
+    LakeManifest.evolution(renames, dropped)
   /** The same record restricted to a subset of its files (CDF legs). */
   def narrow(rels: Seq[String]): LakeSnapshot =
     new LakeSnapshot(version, schema, partCols, rels, record, where)
@@ -1642,10 +1487,10 @@ private[graft] class LakeSinkBatchWrite(schema: StructType, path: String,
         else LakeSinkFiles.retire(path, leftovers)
       }
     LakeSinkFiles.promote(path, staged)
-    LakeSinkFiles.reconcileManifest(path, schema, partCols,
+    val m = LakeSinkFiles.reconcileManifest(path, schema, partCols,
       replace = mode == LakeTruncate, mergeSchema = mergeSchema)
     LakeSinkFiles.recordVersion(path, staged, removed ++ txnRetired,
-      LakeFacts.of(committed, sortCols))
+      LakeFacts.of(committed, sortCols), Some(m))
     // the txn marker is written LAST, via temp + atomic move: a crash
     // anywhere earlier leaves no marker, and the replay's deterministic
     // names re-converge the partial state before committing it
@@ -1697,12 +1542,13 @@ private[graft] class LakeSinkStreamingWrite(schema: StructType, path: String,
       LakeSinkFiles.discard(path, staged)
     } else {
       LakeSinkFiles.promote(path, staged)
-      LakeSinkFiles.reconcileManifest(path, schema, partCols, replace = false,
+      val m = LakeSinkFiles.reconcileManifest(path, schema, partCols, replace = false,
         mergeSchema = mergeSchema)
       // an epoch that staged nothing (a no-data batch) changes no file:
       // its record would copy the previous one, so only the marker lands
       if (staged.nonEmpty)
-        LakeSinkFiles.recordVersion(path, staged, Seq.empty, LakeFacts.of(committed))
+        LakeSinkFiles.recordVersion(path, staged, Seq.empty, LakeFacts.of(committed),
+          Some(m))
       // marker via temp + atomic move: a crash can't leave a marker for
       // an epoch whose files never promoted
       val tmp = LakeSinkFiles.commitsDir(path).resolve(s".$qtag$epochId.tmp")

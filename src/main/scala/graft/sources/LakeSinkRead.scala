@@ -40,8 +40,7 @@ private[sources] class LakeSinkScanBuilder(fullSchema: StructType, path: String,
     allowAgg: Boolean = true,
     triggerLimits: (Option[Int], Option[Long], Option[Long]) = (None, None, None),
     includePositions: Map[String, Array[Long]] = Map.empty,
-    onPlannedDeletes: Map[String, Array[Long]] => Unit = _ => (),
-    evolution: Option[(Map[String, String], Set[String])] = None) extends ScanBuilder
+    onPlannedDeletes: Map[String, Array[Long]] => Unit = _ => ()) extends ScanBuilder
     with SupportsPushDownRequiredColumns with SupportsPushDownFilters
     with SupportsPushDownAggregates {
   import org.apache.spark.sql.connector.expressions.NamedReference
@@ -52,6 +51,13 @@ private[sources] class LakeSinkScanBuilder(fullSchema: StructType, path: String,
   private var dataFilters: Array[Filter] = Array.empty
   private var aggPushed: Option[(Seq[Array[Any]], StructType, String)] = None
   private lazy val snap: LakeSnapshot = snapshot.getOrElse(LakeSinkFiles.latest(path))
+  // the live manifest, read once per builder: its column DEFAULTs and
+  // partition-spec history serve time travel too, its evolution state
+  // only live reads — a snapshot decodes under its own commit's aliases
+  private lazy val manifest: LakeManifest =
+    LakeManifest.read(path).getOrElse(LakeManifest.Empty)
+  private lazy val evolution: (Map[String, String], Set[String]) =
+    snapshot.fold(manifest.evolution)(_.evolution)
   // memoized metaRows: the engine calls supportCompletePushDown then
   // pushAggregation with the SAME Aggregation on one single-threaded
   // builder — without the cache each call re-folds the facts of every
@@ -139,8 +145,7 @@ private[sources] class LakeSinkScanBuilder(fullSchema: StructType, path: String,
     // needs it: a plain count(*) never touches the stats)
     val dels = snap.deletes
     // pre-rename files' stats entries carry PHYSICAL names — translate
-    val aliasMap = evolution
-      .getOrElse(LakeSinkFiles.readManifestEvolution(path))._1
+    val aliasMap = evolution._1
     def hasVector(rels: Seq[String]): Boolean = rels.exists(dels.contains)
 
     def countOf(rels: Seq[String]): Option[Any] = {
@@ -284,7 +289,7 @@ private[sources] class LakeSinkScanBuilder(fullSchema: StructType, path: String,
     case None =>
       new LakeSinkScan(fullSchema, required, path, partCols, partFilters,
         dataFilters, onPlanned, snap, snapshot.isDefined, triggerLimits,
-        includePositions, onPlannedDeletes, evolution)
+        includePositions, onPlannedDeletes, manifest, evolution)
   }
 }
 
@@ -436,7 +441,10 @@ private[sources] class LakeSinkScan(fullSchema: StructType, required: StructType
     triggerLimits: (Option[Int], Option[Long], Option[Long]),
     includePositions: Map[String, Array[Long]],
     onPlannedDeletes: Map[String, Array[Long]] => Unit,
-    evolution: Option[(Map[String, String], Set[String])])
+    // the live manifest the builder read, and the evolution state this
+    // scan decodes under (the snapshot's own for time travel)
+    manifest: LakeManifest,
+    evolution: (Map[String, String], Set[String]))
     extends Scan with Batch with SupportsReportStatistics
     with SupportsRuntimeFiltering
     with SupportsReportPartitioning
@@ -469,7 +477,7 @@ private[sources] class LakeSinkScan(fullSchema: StructType, required: StructType
   // prior partition specs of an evolved table (LakeMaintenance
   // .evolvePartitionSpec): pre-evolution files live under OLD-spec dirs
   private lazy val historicSpecs: Seq[Seq[String]] =
-    LakeSinkFiles.readManifestPartHistory(path).map(LakePart.split)
+    manifest.partHistory.map(LakePart.split)
 
   private lazy val spjActive: Boolean =
     partCols.nonEmpty &&
@@ -540,8 +548,7 @@ private[sources] class LakeSinkScan(fullSchema: StructType, required: StructType
     val lists = recorded.map(_.get).distinct
     if (lists.length != 1) return none
     // names were logical AT WRITE TIME — resolve renames to the live name
-    val aliases = evolution
-      .getOrElse(LakeSinkFiles.readManifestEvolution(path))._1
+    val aliases = evolution._1
     val cols = lists.head.map(c => aliases.getOrElse(c, c))
     // every ordering column must survive pruning (the engine resolves
     // these refs against readSchema — the DPP filterAttributes lesson)
@@ -678,8 +685,7 @@ private[sources] class LakeSinkScan(fullSchema: StructType, required: StructType
       // nothing a historical query plans on
       if (timeTravel) return out
       val blobs = snap.stats
-      val aliasMap = evolution
-        .getOrElse(LakeSinkFiles.readManifestEvolution(path))._1
+      val aliasMap = evolution._1
       val decoded = planned.map(p =>
         blobs.get(relOf(p)).map(LakeSinkStats.decode(_, fullSchema, aliasMap)))
       if (decoded.isEmpty || decoded.exists(_.isEmpty)) return out
@@ -818,8 +824,7 @@ private[sources] class LakeSinkScan(fullSchema: StructType, required: StructType
       if (effData.isEmpty) kept
       else {
         val blobs = snap.stats
-        val aliasMap = evolution
-          .getOrElse(LakeSinkFiles.readManifestEvolution(path))._1
+        val aliasMap = evolution._1
         kept.filter { case (p, kvs) =>
           val fs = blobs.get(relOf(p))
             .map(LakeSinkStats.decode(_, fullSchema, aliasMap))
@@ -879,12 +884,11 @@ private[sources] class LakeSinkScan(fullSchema: StructType, required: StructType
 
   override def createReaderFactory(): PartitionReaderFactory = {
     // evolution state resolved at PLANNING on the driver (snapshot scans
-    // carry their version's; live scans read the manifest) and shipped to
+    // carry their version's; live scans the manifest's) and shipped to
     // executors inside the factory
-    val (aliases, ignored) =
-      evolution.getOrElse(LakeSinkFiles.readManifestEvolution(path))
+    val (aliases, ignored) = evolution
     new LakeSinkReaderFactory(fullSchema, required, partCols, aliases, ignored,
-      LakeSinkDefaults.internalMap(path, LakeSink.dataSchema(fullSchema, partCols)))
+      LakeSinkDefaults.internalMap(manifest.defaults, LakeSink.dataSchema(fullSchema, partCols)))
   }
 
   override def toMicroBatchStream(checkpointLocation: String):
@@ -1019,9 +1023,10 @@ private[sources] class LakeSinkMicroBatchStream(fullSchema: StructType,
   }
 
   override def createReaderFactory(): PartitionReaderFactory = {
-    val (aliases, ignored) = LakeSinkFiles.readManifestEvolution(path)
+    val m = LakeManifest.read(path).getOrElse(LakeManifest.Empty)
+    val (aliases, ignored) = m.evolution
     new LakeSinkReaderFactory(fullSchema, required, partCols, aliases, ignored,
-      LakeSinkDefaults.internalMap(path, LakeSink.dataSchema(fullSchema, partCols)))
+      LakeSinkDefaults.internalMap(m.defaults, LakeSink.dataSchema(fullSchema, partCols)))
   }
   override def commit(end: Offset): Unit = ()
   override def stop(): Unit = ()
@@ -1486,7 +1491,7 @@ private[sources] class LakeSinkDeltaWriter(schema: StructType, path: String,
   * lists physical names a DROP COLUMN left behind in old files — their
   * values are skipped, any other unknown field still fails loudly. */
 /** Decoding side of column DEFAULT values (see
-  * [[LakeSinkFiles.readManifestDefaults]]): the stored token is the exact
+  * [[LakeManifest.defaults]]): the stored token is the exact
   * writer encoding of the folded default, so the one-field typed parse
   * below is its inverse — zero new codec rules. */
 private[sources] object LakeSinkDefaults {
@@ -1504,8 +1509,7 @@ private[sources] object LakeSinkDefaults {
     * generation — do not participate; a NULL default ≡ the plain
     * null-fill and is dropped too). Driver-side: the result is captured
     * by reader factories and shipped to executors. */
-  def internalMap(path: String, schema: StructType): Map[String, Any] = {
-    val ds = LakeSinkFiles.readManifestDefaults(path)
+  def internalMap(ds: Seq[(String, String, String)], schema: StructType): Map[String, Any] = {
     if (ds.isEmpty) return Map.empty
     ds.iterator.flatMap { case (n, _, tok) =>
       schema.fields.find(_.name == n).flatMap { f =>

@@ -43,7 +43,7 @@ private[graft] class LakeSinkSnapshotTable(snap: LakeSnapshot, path: String,
   // pre-rename names with no aliasing at all
   override def newScanBuilder(options: CaseInsensitiveStringMap): ScanBuilder =
     new LakeSinkScanBuilder(schema, path, snap.partCols, snapshot = Some(snap),
-      includePositions = includePositions, evolution = Some(snap.evolution))
+      includePositions = includePositions)
 }
 
 /** Version-log read surfaces beyond plain time travel. */
@@ -177,8 +177,9 @@ object LakeMaintenance {
     * partitions' files survive bit-identically (spec-pinned). */
   def compact(spark: SparkSession, path: String, targetBytes: Option[Long],
       partitions: Map[String, String]): (Int, Int, Int) = {
-    val (tblSchema, partCols) = LakeSinkFiles.readManifest(path).getOrElse(
+    val m = LakeManifest.read(path).getOrElse(
       throw new IllegalArgumentException(s"LakeMaintenance: no lake table at $path"))
+    val (tblSchema, partCols) = (m.schema, m.partCols)
     val root = Paths.get(path)
     // planning reads the latest record once: files, vectors and facts
     val snap = LakeSinkFiles.latest(path)
@@ -219,12 +220,12 @@ object LakeMaintenance {
     val dataSchema = LakeSink.dataSchema(tblSchema, partCols)
     // evolution state captured driver-side: the materialize parser must
     // decode pre-rename physical names in old files (shipped to executors)
-    val (evoAliases, evoIgnored) = LakeSinkFiles.readManifestEvolution(path)
+    val (evoAliases, evoIgnored) = m.evolution
     // column DEFAULTs too: a pre-evolution file's rows READ the default
     // for a field they lack, so the materialize path's FRESH stats
     // trackers must see the filled value — recording nulls=rows would
     // poison count(col) pushdown for the rewritten file
-    val evoDefaults = LakeSinkDefaults.internalMap(path, dataSchema)
+    val evoDefaults = LakeSinkDefaults.internalMap(m.defaults, dataSchema)
     // one merge task per compacted partition directory; a group whose
     // originals carry delete vectors takes the MATERIALIZE path: survivor
     // lines are copied AND re-parsed through fresh stats/count trackers,
@@ -538,8 +539,9 @@ object LakeMaintenance {
     require(cols.nonEmpty && cols.size <= 8,
       s"zorder: 1..8 cluster columns, got ${cols.size}")
     require(nFiles > 0, "zorder: nFiles must be positive")
-    val (schema, partCols) = LakeSinkFiles.readManifest(path).getOrElse(
+    val m = LakeManifest.read(path).getOrElse(
       throw new IllegalArgumentException(s"LakeMaintenance: no lake table at $path"))
+    val (schema, partCols) = (m.schema, m.partCols)
     require(partCols.isEmpty,
       "zorder: partitioned tables cluster within partitions — unsupported; " +
         "compact() handles per-partition file counts")
@@ -625,8 +627,9 @@ object LakeMaintenance {
     require(cols.nonEmpty && cols.size <= 8,
       s"zorder: 1..8 cluster columns, got ${cols.size}")
     require(nFiles > 0, "zorder: nFiles must be positive")
-    val (schema, partCols) = LakeSinkFiles.readManifest(path).getOrElse(
+    val m = LakeManifest.read(path).getOrElse(
       throw new IllegalArgumentException(s"LakeMaintenance: no lake table at $path"))
+    val (schema, partCols) = (m.schema, m.partCols)
     require(partCols.nonEmpty,
       "zorder: a partition scope needs a partitioned table")
     val parsed = LakePart.parseAll(partCols)
@@ -657,8 +660,7 @@ object LakeMaintenance {
     // any column the scope's originals carried (at their max bloom size)
     // as write options on the temp lake — without this the rewrite would
     // silently strip the stats the table was configured for (review r13)
-    val zDecoded = decodeStats(snap, dirGroups.flatMap(_._2), schema,
-      LakeSinkFiles.readManifestEvolution(path)._1)
+    val zDecoded = decodeStats(snap, dirGroups.flatMap(_._2), schema, m.evolution._1)
     val zBloom: Map[String, Int] = zDecoded.values.flatten.collect {
       case (n, cs) if cs.bloom.isDefined => n -> cs.bloom.get.length * 8
     }.groupBy(_._1).map { case (n, ms) => n -> ms.map(_._2).max }
@@ -781,9 +783,9 @@ object LakeMaintenance {
     * rows were never validated against checks added after v. */
   def clone(spark: SparkSession, srcPath: String, dstPath: String,
       versionAsOf: Option[Long]): Int = {
-    require(LakeSinkFiles.readManifest(srcPath).isDefined,
-      s"LakeMaintenance: no lake table at $srcPath")
-    require(LakeSinkFiles.readManifest(dstPath).isEmpty,
+    val src = LakeManifest.read(srcPath).getOrElse(
+      throw new IllegalArgumentException(s"LakeMaintenance: no lake table at $srcPath"))
+    require(LakeManifest.read(dstPath).isEmpty,
       s"LakeMaintenance: clone destination $dstPath already holds a table")
     LakeSinkFiles.ensureDirs(dstPath)
     val srcRoot = Paths.get(srcPath)
@@ -794,18 +796,6 @@ object LakeMaintenance {
     val snap = versionAsOf.map(LakeSinkFiles.snapshot(srcPath, _))
       .getOrElse(LakeSinkFiles.latest(srcPath))
     val files = snap.files.sorted
-    val (schema, partCols, renames, dropped) = versionAsOf match {
-      case Some(_) =>
-        // invert the per-version alias map back to the manifest form
-        val (aliases, ignored) = snap.evolution
-        (snap.schema, snap.partCols,
-          aliases.toSeq.groupBy(_._2).map { case (l, ps) => l -> ps.map(_._1) },
-          ignored.toSeq)
-      case None =>
-        val (sch, pc) = LakeSinkFiles.readManifest(srcPath).get
-        val (ren, drp) = LakeSinkFiles.readManifestRenames(srcPath)
-        (sch, pc, ren, drp)
-    }
     files.foreach { rel =>
       val live = srcRoot.resolve(rel)
       val from =
@@ -827,21 +817,22 @@ object LakeMaintenance {
     if (snap.deletes.nonEmpty)
       LakeSinkDeletes.update(dstPath,
         snap.deletes.map { case (k, v) => k -> v.toSeq }, Seq.empty)
-    LakeSinkFiles.writeManifest(dstPath, schema, partCols, renames, dropped,
-      if (versionAsOf.isEmpty) LakeSinkFiles.readManifestConstraints(srcPath)
-      else Seq.empty,
-      // partition-spec HISTORY travels on BOTH forms: a version whose
-      // file list spans spec generations needs it so SPJ stands down and
-      // temporal pruning matches each file's own generation (a superset
-      // history is safe — consumers match what they need; review r13)
-      LakeSinkFiles.readManifestPartHistory(srcPath),
-      // operational config travels with the table on BOTH clone forms;
-      // defaults filter to the cloned schema (a version clone may predate
-      // a defaulted column)
-      LakeSinkFiles.readManifestProps(srcPath),
-      LakeSinkFiles.readManifestDefaults(srcPath)
-        .filter(d => schema.fieldNames.contains(d._1)))
-    LakeSinkFiles.recordVersion(dstPath, files, Seq.empty, snap.facts)
+    // partition-spec HISTORY travels on BOTH forms: a version whose file
+    // list spans spec generations needs it so SPJ stands down and temporal
+    // pruning matches each file's own generation (a superset history is
+    // safe — consumers match what they need). Operational
+    // config (props) travels too; defaults filter to the cloned schema (a
+    // version clone may predate a defaulted column)
+    val m = versionAsOf match {
+      case Some(_) =>
+        // schema, spec and evolution state are the version's own
+        src.copy(schema = snap.schema, partCols = snap.partCols,
+          renames = snap.renames, dropped = snap.dropped,
+          constraints = Seq.empty, defaults = src.defaultsOf(snap.schema))
+      case None => src
+    }
+    LakeManifest.write(dstPath, m)
+    LakeSinkFiles.recordVersion(dstPath, files, Seq.empty, snap.facts, Some(m))
     files.size
   }
 
@@ -1057,31 +1048,23 @@ object LakeMaintenance {
     // 3. manifest back to the target's schema + evolution state (the
     // retired post-target files are the only ones the rollback could
     // disagree with)
-    val (aliases, ignored) = target.evolution
     // the pre-restore ACTIVE spec joins the history when the target's
     // spec differs — post-target files may still exist... they retire in
     // step 2, but the returned files were written under the TARGET's
     // spec, so the target's recorded partCols become active again; any
     // specs the live history carried stay recorded (harmless supersets)
-    val liveHist = LakeSinkFiles.readManifestPartHistory(path)
-    val (_, livePartCols) = LakeSinkFiles.readManifest(path)
-      .map { case (sc, pc) => (sc, pc) }.getOrElse((sch, partCols))
-    val hist = (liveHist ++
-      (if (livePartCols != partCols && livePartCols.nonEmpty)
-        Seq(livePartCols.mkString(",")) else Seq.empty)).distinct
+    val current = LakeManifest.read(path).getOrElse(LakeManifest.Empty)
+    val hist = (current.partHistory ++
+      (if (current.partCols != partCols && current.partCols.nonEmpty)
+        Seq(current.partCols.mkString(",")) else Seq.empty)).distinct
       .filterNot(_ == partCols.mkString(","))
-    LakeSinkFiles.writeManifest(path, sch, partCols,
-      renames = aliases.groupBy(_._2).map { case (l, m) => l -> m.keys.toSeq.sorted },
-      dropped = ignored.toSeq.sorted,
-      // constraint DDL is orthogonal to the data rollback — the live
-      // constraint set survives a restore (matching Delta's RESTORE)
-      constraints = LakeSinkFiles.readManifestConstraints(path),
-      partHistory = hist,
-      // operational config is likewise orthogonal to the rollback;
-      // defaults filter to the restored schema
-      tableProps = LakeSinkFiles.readManifestProps(path),
-      defaults = LakeSinkFiles.readManifestDefaults(path)
-        .filter(d => sch.fieldNames.contains(d._1)))
+    // constraint DDL and operational config are orthogonal to the data
+    // rollback — the live sets survive a restore (matching Delta's
+    // RESTORE); defaults filter to the restored schema
+    val m = current.copy(schema = sch, partCols = partCols,
+      renames = target.renames, dropped = target.dropped, partHistory = hist,
+      defaults = current.defaultsOf(sch))
+    LakeManifest.write(path, m)
     // 4. delete vectors: EXACTLY the target's state for its files — first
     // clear every live entry for them (update removes AFTER unioning
     // adds, so a single clear+add call would strip the adds too), then
@@ -1091,7 +1074,7 @@ object LakeMaintenance {
     if (vDels.nonEmpty) LakeSinkDeletes.update(path, vDels, Seq.empty)
     // 5. facts SET from the target's record (files are immutable, so
     // re-stating still-live files' facts is idempotent)
-    LakeSinkFiles.recordVersion(path, returned, removed, target.facts)
+    LakeSinkFiles.recordVersion(path, returned, removed, target.facts, Some(m))
     (returned.size, removed.size)
   }
 
@@ -1120,8 +1103,9 @@ object LakeMaintenance {
     *
     * Returns the number of prior specs now in the history. */
   def evolvePartitionSpec(path: String, newPartCols: Seq[String]): Int = {
-    val (schema, oldParts) = LakeSinkFiles.readManifest(path).getOrElse(
+    val live = LakeManifest.read(path).getOrElse(
       throw new IllegalArgumentException(s"LakeMaintenance: no lake table at $path"))
+    val (schema, oldParts) = (live.schema, live.partCols)
     def requireHidden(spec: Seq[String], which: String): Unit =
       LakePart.parseAll(spec).find(_.isIdentity).foreach { p =>
         throw new UnsupportedOperationException(
@@ -1136,17 +1120,14 @@ object LakeMaintenance {
     // validate source columns + types BEFORE committing the manifest
     LakeSink.dataSchema(schema, newPartCols)
     LakeSink.partitionExtractors(schema, newPartCols)
-    val (ren, drp) = LakeSinkFiles.readManifestRenames(path)
-    val hist = (LakeSinkFiles.readManifestPartHistory(path) ++
+    val hist = (live.partHistory ++
       (if (oldParts.nonEmpty) Seq(oldParts.mkString(",")) else Seq.empty))
       .distinct.filterNot(_ == newPartCols.mkString(","))
-    LakeSinkFiles.writeManifest(path, schema, newPartCols, ren, drp,
-      LakeSinkFiles.readManifestConstraints(path), hist,
-      LakeSinkFiles.readManifestProps(path),
-      LakeSinkFiles.readManifestDefaults(path))
+    val m = live.copy(partCols = newPartCols, partHistory = hist)
+    LakeManifest.write(path, m)
     // a spec change is a version transition: snapshots at or before it
     // keep the pre-evolution spec (recordVersion snapshots the manifest)
-    LakeSinkFiles.recordVersion(path)
+    LakeSinkFiles.recordVersion(path, manifest = Some(m))
     hist.size
   }
 
@@ -1192,8 +1173,9 @@ object LakeMaintenance {
       ndvColsIn: Seq[String] = Seq.empty, histColsIn: Seq[String] = Seq.empty,
       bloomColsIn: Seq[String] = Seq.empty,
       bloomBits: Int = LakeSinkStats.DefaultBloomBits): (Int, Int) = {
-    val (tblSchema, partCols) = LakeSinkFiles.readManifest(path).getOrElse(
+    val m = LakeManifest.read(path).getOrElse(
       throw new IllegalArgumentException(s"LakeMaintenance: no lake table at $path"))
+    val (tblSchema, partCols) = (m.schema, m.partCols)
     val dataSchema = LakeSink.dataSchema(tblSchema, partCols)
     // validation mirrors the writer's (LakeSinkWrite) so the two paths
     // cannot disagree on what a column may carry — fail before any read.
@@ -1234,8 +1216,8 @@ object LakeMaintenance {
     }
     val snap = LakeSinkFiles.latest(path)
     val rels = snap.files
-    val (evoAliases, evoIgnored) = LakeSinkFiles.readManifestEvolution(path)
-    val evoDefaults = LakeSinkDefaults.internalMap(path, dataSchema)
+    val (evoAliases, evoIgnored) = m.evolution
+    val evoDefaults = LakeSinkDefaults.internalMap(m.defaults, dataSchema)
     val decoded = decodeStats(snap, rels, tblSchema, evoAliases)
     // a file needs work when: it has no stats at all; a requested
     // column's ENTRY or PART is missing (an entry can be missing because
@@ -1330,7 +1312,7 @@ object LakeMaintenance {
 
   /** Total committed data files of a lake table (maintenance metric). */
   def committedFileCount(path: String): Int = {
-    val (_, partCols) = LakeSinkFiles.readManifest(path).getOrElse(return 0)
-    LakeSinkFiles.listLive(path, partCols).size
+    val m = LakeManifest.read(path).getOrElse(return 0)
+    LakeSinkFiles.listLive(path, m.partCols).size
   }
 }

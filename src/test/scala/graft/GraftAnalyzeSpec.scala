@@ -1,11 +1,10 @@
 package graft
 
-import java.nio.file.Files
-
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
-import graft.sources.{GraftCatalog, LakeMaintenance, LakeSinkFiles, LakeSinkStats}
+import graft.operators.TempLakes
+import graft.sources.{GraftCatalog, LakeMaintenance, LakeManifest, LakeSinkFiles, LakeSinkStats}
 
 /** ANALYZE stats backfill ([[graft.sources.LakeMaintenance.analyze]] and
   * its two SQL surfaces: the rerouted native `ANALYZE TABLE … COMPUTE
@@ -23,12 +22,9 @@ import graft.sources.{GraftCatalog, LakeMaintenance, LakeSinkFiles, LakeSinkStat
   */
 class GraftAnalyzeSpec extends GraftSpec {
 
-  private def tmp(prefix: String): String =
-    Files.createTempDirectory(prefix).toString
-
   private def withLake[T](body: String => T): T = {
     spark.conf.set("spark.sql.catalog.graft", classOf[GraftCatalog].getName)
-    val lake = tmp("graft_analyze_lake")
+    val lake = TempLakes.dir("graft_analyze_lake")
     spark.conf.set("spark.sql.catalog.graft.lake", lake)
     body(lake)
   }
@@ -60,8 +56,8 @@ class GraftAnalyzeSpec extends GraftSpec {
 
   /** Decoded live stats ledger of a lake table (current-name keys). */
   private def decodedLedger(path: String): Map[String, LakeSinkStats.FileStats] = {
-    val (schema, _) = LakeSinkFiles.readManifest(path).get
-    val (aliases, _) = LakeSinkFiles.readManifestEvolution(path)
+    val m = LakeManifest.read(path).get
+    val (schema, (aliases, _)) = (m.schema, m.evolution)
     LakeSinkStats.readBlobs(path).map { case (rel, blob) =>
       rel -> LakeSinkStats.decode(blob, schema, aliases)
     }

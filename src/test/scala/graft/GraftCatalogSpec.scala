@@ -5,6 +5,7 @@ import java.nio.file.{Files, Paths}
 import org.apache.spark.sql.{AnalysisException, DataFrame}
 import org.apache.spark.sql.functions._
 
+import graft.operators.TempLakes
 import graft.sources.{GraftCatalog, LakeSinkFiles}
 
 /** The DSv2 catalog surface ([[graft.sources.GraftCatalog]]) + the READ
@@ -14,9 +15,6 @@ import graft.sources.{GraftCatalog, LakeSinkFiles}
   * catalog, and the error contract for missing tables/namespaces.
   */
 class GraftCatalogSpec extends GraftSpec {
-
-  private def tmp(prefix: String): String =
-    Files.createTempDirectory(prefix).toString
 
   private def withCatalog[T](lake: String = null)(body: => T): T = {
     spark.conf.set("spark.sql.catalog.graft", classOf[GraftCatalog].getName)
@@ -66,7 +64,7 @@ class GraftCatalogSpec extends GraftSpec {
   }
 
   test("listTables / listNamespaces / missing table + namespace errors") {
-    val lake = tmp("graft_cat_list")
+    val lake = TempLakes.dir("graft_cat_list")
     withCatalog(lake) {
       val sfTables = spark.sql("SHOW TABLES IN graft.sf").collect()
         .map(_.getString(1)).toSet
@@ -82,7 +80,7 @@ class GraftCatalogSpec extends GraftSpec {
   }
 
   test("lake namespace: CTAS writes through LakeSink, reads back by name, drop removes") {
-    val lake = tmp("graft_cat_ctas")
+    val lake = TempLakes.dir("graft_cat_ctas")
     withCatalog(lake) {
       spark.sql(
         """CREATE TABLE graft.lake.asia_nations AS
@@ -103,7 +101,7 @@ class GraftCatalogSpec extends GraftSpec {
   }
 
   test("lake namespace: INSERT INTO appends; RENAME moves the directory") {
-    val lake = tmp("graft_cat_insert")
+    val lake = TempLakes.dir("graft_cat_insert")
     withCatalog(lake) {
       spark.sql("CREATE TABLE graft.lake.vals AS SELECT 1L AS v")
       spark.sql("INSERT INTO graft.lake.vals SELECT 2L AS v")
@@ -115,14 +113,14 @@ class GraftCatalogSpec extends GraftSpec {
   }
 
   test("connector read without manifest fails with a useful message") {
-    val empty = tmp("graft_cat_nomanifest")
+    val empty = TempLakes.dir("graft_cat_nomanifest")
     val e = intercept[Exception](
       spark.read.format("graft.sources.LakeSink").load(empty).collect())
     assert(e.getMessage.contains("_graft_schema.json"), e.getMessage)
   }
 
   test("manifest-driven connector read round-trips all supported types bit-exactly") {
-    val out = tmp("graft_read_types")
+    val out = TempLakes.dir("graft_read_types")
     val src = graft.operators.Telemetry.twin(spark).filter(col("id") < 500L)
     src.write.format("graft.sources.LakeSink").mode("overwrite").save(out)
     val back = spark.read.format("graft.sources.LakeSink").load(out)
@@ -133,7 +131,7 @@ class GraftCatalogSpec extends GraftSpec {
 
   test("partitioned lake: equality filter on a partition column prunes input files") {
     import spark.implicits._
-    val out = tmp("graft_read_prune")
+    val out = TempLakes.dir("graft_read_prune")
     (0 until 40).map(i => (i.toLong, i % 4)).toDF("v", "b")
       .repartition(2)
       .write.format("graft.sources.LakeSink").option("partitionCols", "b")
@@ -154,7 +152,7 @@ class GraftCatalogSpec extends GraftSpec {
 
   test("in-flight staging files are invisible to the connector reader") {
     import spark.implicits._
-    val out = tmp("graft_read_staging")
+    val out = TempLakes.dir("graft_read_staging")
     Seq(1L, 2L).toDF("v").write.format("graft.sources.LakeSink")
       .mode("overwrite").save(out)
     // simulate a concurrent writer mid-flight: bytes in _staging
@@ -166,7 +164,7 @@ class GraftCatalogSpec extends GraftSpec {
 
   test("DELETE FROM: partition equality is metadata-only; row predicates rewrite") {
     import spark.implicits._
-    val lake = tmp("graft_cat_delete")
+    val lake = TempLakes.dir("graft_cat_delete")
     withCatalog(lake) {
       (0 until 30).map(i => (i.toLong, i % 3)).toDF("v", "b")
         .writeTo("graft.lake.deltest").partitionedBy($"b").create()
@@ -189,7 +187,7 @@ class GraftCatalogSpec extends GraftSpec {
 
   test("MERGE INTO / UPDATE rewrite lake tables correctly") {
     import spark.implicits._
-    val lake = tmp("graft_cat_merge")
+    val lake = TempLakes.dir("graft_cat_merge")
     withCatalog(lake) {
       spark.sql("CREATE TABLE graft.lake.m AS SELECT id AS k, id * 10 AS v FROM range(10)")
       spark.sql("CREATE OR REPLACE TEMP VIEW graft_m_src AS " +
@@ -212,7 +210,7 @@ class GraftCatalogSpec extends GraftSpec {
 
   test("MERGE WITH SCHEMA EVOLUTION: a superset source auto-adds columns via the manifest") {
     import spark.implicits._
-    val lake = tmp("graft_cat_mergeevo")
+    val lake = TempLakes.dir("graft_cat_mergeevo")
     withCatalog(lake) {
       spark.sql("CREATE TABLE graft.lake.me AS SELECT id AS k, id * 10 AS v FROM range(10)")
       spark.sql("CREATE OR REPLACE TEMP VIEW graft_me_src AS " +
@@ -245,7 +243,7 @@ class GraftCatalogSpec extends GraftSpec {
 
   test("row-level UPDATE with a partition predicate rewrites ONLY that partition's files") {
     import spark.implicits._
-    val lake = tmp("graft_cat_group")
+    val lake = TempLakes.dir("graft_cat_group")
     withCatalog(lake) {
       (0 until 40).map(i => (i.toLong, i % 2)).toDF("v", "b")
         .writeTo("graft.lake.grp").partitionedBy($"b").create()
@@ -274,7 +272,7 @@ class GraftCatalogSpec extends GraftSpec {
 
   test("ALTER TABLE ADD COLUMNS: old files null-fill, new writes carry the column") {
     import spark.implicits._
-    val lake = tmp("graft_cat_evolve")
+    val lake = TempLakes.dir("graft_cat_evolve")
     withCatalog(lake) {
       spark.sql("CREATE TABLE graft.lake.evo AS SELECT 1L AS v")
       spark.sql("ALTER TABLE graft.lake.evo ADD COLUMNS (tag STRING)")
@@ -297,7 +295,7 @@ class GraftCatalogSpec extends GraftSpec {
 
   test("RENAME/DROP COLUMN: metadata-only, old files alias, snapshots keep old names") {
     import spark.implicits._
-    val lake = tmp("graft_cat_evolve2")
+    val lake = TempLakes.dir("graft_cat_evolve2")
     withCatalog(lake) {
       Seq((1L, "en", "keepA"), (2L, "de", "keepB")).toDF("id", "lang", "x")
         .writeTo("graft.lake.ren").create() // v1: physical names id/lang/x
@@ -371,7 +369,7 @@ class GraftCatalogSpec extends GraftSpec {
 
   test("ALTER COLUMN TYPE widening: metadata-only, stats pushdown folds both generations") {
     import spark.implicits._
-    val lake = tmp("graft_cat_widen")
+    val lake = TempLakes.dir("graft_cat_widen")
     withCatalog(lake) {
       Seq(1, 2, 3).toDF("k").writeTo("graft.lake.wid").create() // v1: k INT
       val filesBefore = dataFilesOf(s"$lake/wid")
@@ -407,13 +405,13 @@ class GraftCatalogSpec extends GraftSpec {
 
   test("streaming read tails a lake table incrementally across checkpointed drains") {
     import spark.implicits._
-    val lake = tmp("graft_cat_tail")
-    val ckpt = tmp("graft_cat_tail_ckpt")
+    val lake = TempLakes.dir("graft_cat_tail")
+    val ckpt = TempLakes.dir("graft_cat_tail_ckpt")
     withCatalog(lake) {
       spark.sql("CREATE TABLE graft.lake.tail AS SELECT id AS v FROM range(5)")
       // the drained output goes through LakeSink too (memory sinks refuse
       // checkpoint recovery), so the whole tail is lake → stream → lake
-      val outDir = tmp("graft_cat_tail_out")
+      val outDir = TempLakes.dir("graft_cat_tail_out")
       def drain(): Seq[Long] = {
         val q = spark.readStream.table("graft.lake.tail")
           .writeStream.format("graft.sources.LakeSink")
@@ -436,7 +434,7 @@ class GraftCatalogSpec extends GraftSpec {
 
   test("streaming read admission: maxFiles/maxRows per trigger bound each micro-batch") {
     import spark.implicits._
-    val lake = tmp("graft_cat_adm")
+    val lake = TempLakes.dir("graft_cat_adm")
     withCatalog(lake) {
       // 5 single-file commits of 10 rows each (REPARTITION(1): one task,
       // one committed file per statement)
@@ -446,13 +444,13 @@ class GraftCatalogSpec extends GraftSpec {
         s"INSERT INTO graft.lake.adm SELECT /*+ REPARTITION(1) */ id AS v " +
           s"FROM range(${i * 100}, ${i * 100 + 10})"))
       def drain(opts: (String, String)*): Seq[org.apache.spark.sql.streaming.StreamingQueryProgress] = {
-        val outDir = tmp("graft_cat_adm_out")
+        val outDir = TempLakes.dir("graft_cat_adm_out")
         var r = spark.readStream
         opts.foreach { case (k, v) => r = r.option(k, v) }
         val q = r.table("graft.lake.adm")
           .writeStream.format("graft.sources.LakeSink")
           .option("path", outDir)
-          .option("checkpointLocation", tmp("graft_cat_adm_ckpt"))
+          .option("checkpointLocation", TempLakes.dir("graft_cat_adm_ckpt"))
           .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
           .start()
         q.awaitTermination()
@@ -481,7 +479,7 @@ class GraftCatalogSpec extends GraftSpec {
 
   test("metadata table .deletes lists merge-on-read vectors until compaction clears them") {
     import spark.implicits._
-    val lake = tmp("graft_cat_mdel")
+    val lake = TempLakes.dir("graft_cat_mdel")
     withCatalog(lake) {
       spark.sql(
         "CREATE TABLE graft.lake.md AS SELECT /*+ REPARTITION(2) */ id AS v FROM range(20)")
@@ -504,7 +502,7 @@ class GraftCatalogSpec extends GraftSpec {
 
   test("metadata tables: .files / .history / .partitions answer from commit metadata") {
     import spark.implicits._
-    val lake = tmp("graft_cat_meta")
+    val lake = TempLakes.dir("graft_cat_meta")
     withCatalog(lake) {
       (0 until 30).map(i => (i.toLong, i % 3)).toDF("v", "b")
         .repartition(2).writeTo("graft.lake.meta").partitionedBy($"b").create() // v1
@@ -568,7 +566,7 @@ class GraftCatalogSpec extends GraftSpec {
   }
 
   test("storage-partitioned join: two same-partitioned lake tables join with zero shuffles") {
-    val lake = tmp("graft_cat_spj")
+    val lake = TempLakes.dir("graft_cat_spj")
     withCatalog(lake) {
       import spark.implicits._
       (0 until 600).map(i => (i.toLong, i % 6, s"a$i")).toDF("id", "p", "a")
@@ -629,7 +627,7 @@ class GraftCatalogSpec extends GraftSpec {
   }
 
   test("bucket(n, col) transform: bucketed lake tables SPJ-join on the SOURCE key, zero shuffles") {
-    val lake = tmp("graft_cat_bspj")
+    val lake = TempLakes.dir("graft_cat_bspj")
     withCatalog(lake) {
       import spark.implicits._
       // high-cardinality key: identity dirs would need one dir per value —
@@ -699,7 +697,7 @@ class GraftCatalogSpec extends GraftSpec {
   }
 
   test("sortBy + bucket writes: SPJ merge join plans ZERO exchanges and ZERO sorts") {
-    val lake = tmp("graft_cat_sspj")
+    val lake = TempLakes.dir("graft_cat_sspj")
     withCatalog(lake) {
       import spark.implicits._
       def mk(name: String, sorted: Boolean, rows: Seq[(Long, Long)]): Unit = {
@@ -775,7 +773,7 @@ class GraftCatalogSpec extends GraftSpec {
   }
 
   test("compaction preserves sortedness: claimed groups k-way merge and re-declare") {
-    val lake = tmp("graft_cat_csort")
+    val lake = TempLakes.dir("graft_cat_csort")
     withCatalog(lake) {
       import spark.implicits._
       // two sortBy commits per table → 2 claimed files per bucket dir
@@ -885,7 +883,7 @@ class GraftCatalogSpec extends GraftSpec {
   }
 
   test("days(ts) hidden partitioning: UTC day dirs, ts-predicate dir pruning, round trip") {
-    val lake = tmp("graft_cat_days")
+    val lake = TempLakes.dir("graft_cat_days")
     withCatalog(lake) {
       // 3 UTC days x 4 rows, written through the catalog
       spark.sql(
@@ -932,7 +930,7 @@ class GraftCatalogSpec extends GraftSpec {
   }
 
   test("hours/months/years transforms: dir naming, round trip, NULL refused") {
-    val lake = tmp("graft_cat_temporal")
+    val lake = TempLakes.dir("graft_cat_temporal")
     withCatalog(lake) {
       import org.apache.spark.sql.functions.{hours, months, years}
       val df = spark.sql(
@@ -971,7 +969,7 @@ class GraftCatalogSpec extends GraftSpec {
   }
 
   test("days(ts) SPJ: day-partitioned lake tables join on the timestamp with zero shuffles") {
-    val lake = tmp("graft_cat_dspj")
+    val lake = TempLakes.dir("graft_cat_dspj")
     withCatalog(lake) {
       spark.sql(
         """CREATE TABLE graft.lake.dsl PARTITIONED BY (days(ts)) AS
@@ -1034,7 +1032,7 @@ class GraftCatalogSpec extends GraftSpec {
 
   test("staged RTAS is atomic: a mid-write failure leaves the original table intact") {
     import spark.implicits._
-    val lake = tmp("graft_cat_rtas")
+    val lake = TempLakes.dir("graft_cat_rtas")
     withCatalog(lake) {
       spark.sql("CREATE TABLE graft.lake.rt AS SELECT id AS v FROM range(5)")
       val before = canon(spark.table("graft.lake.rt"))
@@ -1087,7 +1085,7 @@ class GraftCatalogSpec extends GraftSpec {
 
   test("REPLACE crash between the two commit renames: loadTable rolls the old table back") {
     import spark.implicits._
-    val lake = tmp("graft_cat_crash")
+    val lake = TempLakes.dir("graft_cat_crash")
     withCatalog(lake) {
       spark.sql("CREATE TABLE graft.lake.cr AS SELECT id AS v FROM range(4)")
       val before = canon(spark.table("graft.lake.cr"))
@@ -1131,7 +1129,7 @@ class GraftCatalogSpec extends GraftSpec {
   }
 
   test("CHECK constraints: writes enforce, violating append aborts with zero mutation") {
-    val lake = tmp("graft_cat_cons")
+    val lake = TempLakes.dir("graft_cat_cons")
     withCatalog(lake) {
       spark.sql(
         """CREATE TABLE graft.lake.cn
@@ -1176,7 +1174,7 @@ class GraftCatalogSpec extends GraftSpec {
 
   test("TBLPROPERTIES: stored, shown, evolved; graft.* become default write options") {
     import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType}
-    val lake = tmp("graft_cat_props")
+    val lake = TempLakes.dir("graft_cat_props")
     withCatalog(lake) {
       spark.sql("""CREATE TABLE graft.lake.tp (id BIGINT, v STRING)
                    TBLPROPERTIES ('team'='ml', 'graft.ndvColumns'='id',
@@ -1288,7 +1286,7 @@ class GraftCatalogSpec extends GraftSpec {
       spark.sql("COMMENT ON TABLE graft.lake.tp IS 'telemetry rollups'")
       // SHOW TBLPROPERTIES hides engine-RESERVED keys (comment among
       // them) — assert the STORED manifest and the DESCRIBE surface
-      assert(graft.sources.LakeSinkFiles.readManifestProps(s"$lake/tp")
+      assert(graft.sources.LakeManifest.read(s"$lake/tp").get.props
         .toMap.get("comment").contains("telemetry rollups"),
         "COMMENT ON TABLE must store in the manifest")
       val descC = spark.sql("DESCRIBE EXTENDED graft.lake.tp").collect()
@@ -1308,7 +1306,7 @@ class GraftCatalogSpec extends GraftSpec {
 
   test("CALL graft.system.*: the whole maintenance cycle from pure SQL") {
     import spark.implicits._
-    val lake = tmp("graft_cat_proc")
+    val lake = TempLakes.dir("graft_cat_proc")
     withCatalog(lake) {
       // small-file spray across two partitions
       (0 until 40).map(i => (i.toLong, i % 2, s"v$i")).toDF("id", "p", "v")
@@ -1423,7 +1421,7 @@ class GraftCatalogSpec extends GraftSpec {
   }
 
   test("SHOW CREATE TABLE / DESCRIBE EXTENDED round-trip the full DDL surface") {
-    val lake = tmp("graft_cat_sct")
+    val lake = TempLakes.dir("graft_cat_sct")
     withCatalog(lake) {
       spark.sql("""CREATE TABLE graft.lake.sct
                    (id BIGINT, ts TIMESTAMP, v DOUBLE DEFAULT 1.5)

@@ -1,10 +1,9 @@
 package graft
 
-import java.nio.file.Files
-
 import org.apache.spark.sql.{AnalysisException, DataFrame}
 import org.apache.spark.sql.functions._
 
+import graft.operators.TempLakes
 import graft.sources.GraftCatalog
 
 /** Stored SQL views through the graft catalog — Spark 4.1's native
@@ -19,9 +18,6 @@ import graft.sources.GraftCatalog
   */
 class GraftViewSpec extends GraftSpec {
 
-  private def tmp(prefix: String): String =
-    Files.createTempDirectory(prefix).toString
-
   private def withCatalog[T](lake: String)(body: => T): T = {
     spark.conf.set("spark.sql.catalog.graft", classOf[GraftCatalog].getName)
     spark.conf.set("spark.sql.catalog.graft.ns.sf", sfTiny)
@@ -34,7 +30,7 @@ class GraftViewSpec extends GraftSpec {
 
   test("CREATE VIEW: view-composed query equals its inline text; nesting; aliases") {
     import spark.implicits._
-    val lake = tmp("graft_view_basic")
+    val lake = TempLakes.dir("graft_view_basic")
     withCatalog(lake) {
       (1 to 100).map(i => (i.toLong, i % 7, s"u$i")).toDF("id", "grp", "name")
         .writeTo("graft.lake.base").create()
@@ -76,7 +72,7 @@ class GraftViewSpec extends GraftSpec {
 
   test("SHOW VIEWS, IF NOT EXISTS, OR REPLACE, DROP semantics") {
     import spark.implicits._
-    val lake = tmp("graft_view_ddl")
+    val lake = TempLakes.dir("graft_view_ddl")
     withCatalog(lake) {
       (1 to 10).map(i => (i.toLong, s"x$i")).toDF("id", "v")
         .writeTo("graft.lake.t").create()
@@ -115,7 +111,7 @@ class GraftViewSpec extends GraftSpec {
 
   test("views and tables share one name space; cycles refuse") {
     import spark.implicits._
-    val lake = tmp("graft_view_names")
+    val lake = TempLakes.dir("graft_view_names")
     withCatalog(lake) {
       (1 to 5).map(i => (i.toLong, i * 2L)).toDF("id", "d")
         .writeTo("graft.lake.tbl").create()
@@ -153,7 +149,7 @@ class GraftViewSpec extends GraftSpec {
 
   test("evolution contract: added base columns flow, renamed base columns fail loudly") {
     import spark.implicits._
-    val lake = tmp("graft_view_evol")
+    val lake = TempLakes.dir("graft_view_evol")
     withCatalog(lake) {
       (1 to 20).map(i => (i.toLong, i % 3)).toDF("id", "grp")
         .writeTo("graft.lake.ev").create()
@@ -185,7 +181,7 @@ class GraftViewSpec extends GraftSpec {
 
   test("alias arity mismatch refuses at CREATE time") {
     import spark.implicits._
-    val lake = tmp("graft_view_arity")
+    val lake = TempLakes.dir("graft_view_arity")
     withCatalog(lake) {
       (1 to 5).map(i => (i.toLong, i * 2L)).toDF("id", "d")
         .writeTo("graft.lake.t").create()
@@ -202,7 +198,7 @@ class GraftViewSpec extends GraftSpec {
 
   test("view properties, comment, ALTER SET/UNSET, RENAME VIEW") {
     import spark.implicits._
-    val lake = tmp("graft_view_props")
+    val lake = TempLakes.dir("graft_view_props")
     withCatalog(lake) {
       (1 to 5).map(i => (i.toLong, s"v$i")).toDF("id", "v")
         .writeTo("graft.lake.t").create()
@@ -254,7 +250,7 @@ class GraftViewSpec extends GraftSpec {
 
   test("SHOW CREATE TABLE / DESCRIBE on stored views emit the view surface") {
     import spark.implicits._
-    val lake = tmp("graft_view_sct")
+    val lake = TempLakes.dir("graft_view_sct")
     withCatalog(lake) {
       (1 to 10).map(i => (i.toLong, s"v$i")).toDF("id", "v")
         .writeTo("graft.lake.t").create()
@@ -292,7 +288,7 @@ class GraftViewSpec extends GraftSpec {
   }
 
   test("views over parquet-namespace tables and mixed-source joins") {
-    val lake = tmp("graft_view_pq")
+    val lake = TempLakes.dir("graft_view_pq")
     withCatalog(lake) {
       spark.sql("""CREATE VIEW graft.lake.big_orders AS
                    SELECT o_orderkey, o_totalprice FROM graft.sf.orders

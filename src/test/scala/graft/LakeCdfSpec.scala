@@ -6,7 +6,7 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.Trigger
 
-import graft.operators.{DedupLsh, TextOps}
+import graft.operators.{DedupLsh, TempLakes, TextOps}
 import graft.sources.{GraftCatalog, LakeVersions}
 
 /** Streaming change-data feed over the lake version log
@@ -17,12 +17,9 @@ import graft.sources.{GraftCatalog, LakeVersions}
   */
 class LakeCdfSpec extends GraftSpec {
 
-  private def tmp(prefix: String): String =
-    Files.createTempDirectory(prefix).toString
-
   private def withLake[T](body: String => T): T = {
     spark.conf.set("spark.sql.catalog.graft", classOf[GraftCatalog].getName)
-    val lake = tmp("graft_cdf_lake")
+    val lake = TempLakes.dir("graft_cdf_lake")
     spark.conf.set("spark.sql.catalog.graft.lake", lake)
     body(lake)
   }
@@ -38,7 +35,7 @@ class LakeCdfSpec extends GraftSpec {
     opts.foreach { case (k, v) => r = r.option(k, v) }
     val q = r.load(path)
       .writeStream.format("memory").queryName(mem)
-      .option("checkpointLocation", tmp("graft_cdf_ckpt"))
+      .option("checkpointLocation", TempLakes.dir("graft_cdf_ckpt"))
       .trigger(Trigger.AvailableNow())
       .start()
     q.awaitTermination()
@@ -221,8 +218,8 @@ class LakeCdfSpec extends GraftSpec {
   test("checkpointed CDF drains are exactly-once across a kill/restart") {
     withLake { lake =>
       threeRows(0).writeTo("graft.lake.tail").create() // v1
-      val ckpt = tmp("graft_cdf_tail_ckpt")
-      val outDir = tmp("graft_cdf_tail_out")
+      val ckpt = TempLakes.dir("graft_cdf_tail_ckpt")
+      val outDir = TempLakes.dir("graft_cdf_tail_out")
       // drains land in a lake table (memory sinks refuse checkpoint
       // recovery): the whole pipe is version log → CDF stream → lake
       def drain(): Seq[String] = {
@@ -352,8 +349,8 @@ class LakeCdfSpec extends GraftSpec {
         .localCheckpoint(true)
       d.filter($"h" <= 7).select($"doc_id", $"fp")
         .writeTo("graft.lake.d58s").create() // v1: the historical store
-      val ckpt = tmp("graft_cdf_d58_ckpt")
-      val outDir = tmp("graft_cdf_d58_out")
+      val ckpt = TempLakes.dir("graft_cdf_d58_ckpt")
+      val outDir = TempLakes.dir("graft_cdf_d58_out")
       def drain(): Long = {
         val q = spark.readStream.format("graft.sources.LakeSink")
           .option("readChangeFeed", "true")

@@ -9,6 +9,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType}
 import org.apache.spark.unsafe.types.UTF8String
 
+import graft.operators.TempLakes
 import graft.sources.{GraftCatalog, LakeMaintenance, LakeSinkCommit, LakeSinkDeletes,
   LakeSinkFiles, LakeSinkStreamingWrite, LakeSinkStreamingWriterFactory}
 
@@ -25,7 +26,7 @@ class LakeCommitInvariantSpec extends GraftSpec {
 
   private def withLake[T](body: String => T): T = {
     spark.conf.set("spark.sql.catalog.graft", classOf[GraftCatalog].getName)
-    val lake = Files.createTempDirectory("graft_invariant_lake").toString
+    val lake = TempLakes.dir("graft_invariant_lake")
     spark.conf.set("spark.sql.catalog.graft.lake", lake)
     body(lake)
   }
@@ -89,7 +90,7 @@ class LakeCommitInvariantSpec extends GraftSpec {
         val ms = MemoryStream[(Long, String)]
         ms.addData((1L, "a"), (2L, "b"))
         val q = ms.toDF().toDF("id", "v").writeStream
-          .option("checkpointLocation", Files.createTempDirectory("graft_inv_ck").toString)
+          .option("checkpointLocation", TempLakes.dir("graft_inv_ck"))
           .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
           .toTable("graft.lake.se")
         q.awaitTermination()

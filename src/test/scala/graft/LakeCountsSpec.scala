@@ -1,10 +1,9 @@
 package graft
 
-import java.nio.file.Files
-
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
+import graft.operators.TempLakes
 import graft.sources.{GraftCatalog, LakeMaintenance, LakeSinkFiles}
 
 /** The `_graft_counts.json` row-count ledger + COUNT pushdown
@@ -19,12 +18,9 @@ import graft.sources.{GraftCatalog, LakeMaintenance, LakeSinkFiles}
   */
 class LakeCountsSpec extends GraftSpec {
 
-  private def tmp(prefix: String): String =
-    Files.createTempDirectory(prefix).toString
-
   private def withLake[T](body: String => T): T = {
     spark.conf.set("spark.sql.catalog.graft", classOf[GraftCatalog].getName)
-    val lake = tmp("graft_cnt_lake")
+    val lake = TempLakes.dir("graft_cnt_lake")
     spark.conf.set("spark.sql.catalog.graft.lake", lake)
     body(lake)
   }
@@ -177,7 +173,7 @@ class LakeCountsSpec extends GraftSpec {
       val q = spark.readStream.format("graft.sources.TelemetrySource")
         .option("rows", "200").option("rowsPerBatch", "50").load()
         .writeStream
-        .option("checkpointLocation", tmp("graft_cnt_ckpt"))
+        .option("checkpointLocation", TempLakes.dir("graft_cnt_ckpt"))
         .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
         .toTable("graft.lake.c6")
       q.awaitTermination()

@@ -4,6 +4,7 @@ import java.nio.file.Files
 
 import org.apache.spark.sql.functions._
 
+import graft.operators.TempLakes
 import graft.sources.GraftCatalog
 
 /** Column DEFAULT values on lake tables — Spark 4.1's
@@ -17,9 +18,6 @@ import graft.sources.GraftCatalog
   */
 class LakeDefaultsSpec extends GraftSpec {
 
-  private def tmp(prefix: String): String =
-    Files.createTempDirectory(prefix).toString
-
   private def withCatalog[T](lake: String)(body: => T): T = {
     spark.conf.set("spark.sql.catalog.graft", classOf[GraftCatalog].getName)
     spark.conf.set("spark.sql.catalog.graft.lake", lake)
@@ -28,7 +26,7 @@ class LakeDefaultsSpec extends GraftSpec {
 
   test("CREATE with DEFAULT: engine fills missing INSERT columns; subset appends read the default") {
     import spark.implicits._
-    val lake = tmp("graft_def_create")
+    val lake = TempLakes.dir("graft_def_create")
     withCatalog(lake) {
       spark.sql("""CREATE TABLE graft.lake.d1
                    (id BIGINT, tag STRING DEFAULT 'n/a', score INT DEFAULT 7)""")
@@ -55,7 +53,7 @@ class LakeDefaultsSpec extends GraftSpec {
 
   test("ADD COLUMN DEFAULT: pre-evolution rows read the default; explicit null stays null; CDF legs carry it") {
     import spark.implicits._
-    val lake = tmp("graft_def_add")
+    val lake = TempLakes.dir("graft_def_add")
     withCatalog(lake) {
       (1L to 4L).toDF("id").writeTo("graft.lake.d2").create() // v1: no tag
       spark.sql("ALTER TABLE graft.lake.d2 ADD COLUMN tag STRING DEFAULT 'legacy'")
@@ -87,7 +85,7 @@ class LakeDefaultsSpec extends GraftSpec {
 
   test("defaults survive compaction, rename, widening; interact soundly with the ledgers") {
     import spark.implicits._
-    val lake = tmp("graft_def_maint")
+    val lake = TempLakes.dir("graft_def_maint")
     withCatalog(lake) {
       (1L to 8L).toDF("id").repartition(2).writeTo("graft.lake.d3")
         .option("distributionMode", "none").create()
@@ -117,7 +115,7 @@ class LakeDefaultsSpec extends GraftSpec {
 
   test("refusals: SET DEFAULT, partition-column default; DROP clears it") {
     import spark.implicits._
-    val lake = tmp("graft_def_refuse")
+    val lake = TempLakes.dir("graft_def_refuse")
     withCatalog(lake) {
       spark.sql("CREATE TABLE graft.lake.d4 (id BIGINT, tag STRING DEFAULT 'a')")
       val e1 = intercept[Exception](
@@ -130,20 +128,20 @@ class LakeDefaultsSpec extends GraftSpec {
       // DROP COLUMN clears the stored default; a re-added column under a
       // NEW name starts clean (name reuse itself is refused elsewhere)
       spark.sql("ALTER TABLE graft.lake.d4 DROP COLUMN tag")
-      assert(graft.sources.LakeSinkFiles
-        .readManifestDefaults(s"$lake/d4").isEmpty)
+      assert(graft.sources.LakeManifest
+        .read(s"$lake/d4").get.defaults.isEmpty)
       // non-foldable defaults refuse at DDL (engine-side): rand() is not
       // a constant — must not reach the manifest
       val e3 = intercept[Exception](spark.sql(
         "CREATE TABLE graft.lake.d6 (id BIGINT, r DOUBLE DEFAULT rand())"))
       assert(e3 != null)
       assert(!Files.isDirectory(java.nio.file.Paths.get(s"$lake/d6")) ||
-        graft.sources.LakeSinkFiles.readManifest(s"$lake/d6").isEmpty)
+        graft.sources.LakeManifest.read(s"$lake/d6").isEmpty)
     }
   }
 
   test("typed defaults round-trip: timestamp, date, double, boolean") {
-    val lake = tmp("graft_def_types")
+    val lake = TempLakes.dir("graft_def_types")
     withCatalog(lake) {
       spark.sql("""CREATE TABLE graft.lake.d7 (
                      id BIGINT,

@@ -1,21 +1,18 @@
 package graft
 
-import java.nio.file.Files
 import org.apache.spark.sql.functions._
-import graft.operators.Telemetry
+import graft.operators.{Telemetry, TempLakes}
 import graft.sources.LakeIO
 import graft.streaming.StreamOps
 
 class LakeIOSpec extends GraftSpec {
-
-  private def tmp(p: String): String = Files.createTempDirectory(p).toString
 
   test("CSV sink/scan round trip preserves the historical table (S6/S7)") {
     import spark.implicits._
     val hist = Telemetry.twin(spark)
       .select($"ts".as("timestamp"), $"machine_id".as("machineId"),
         $"temperature", $"vibration", $"is_anomaly")
-    val dir = tmp("graft-csv")
+    val dir = TempLakes.dir("graft-csv")
     LakeIO.writeCsv(hist, dir)
     val back = LakeIO.readCsv(spark, dir)
     assert(back.count() == 10000L)
@@ -25,7 +22,7 @@ class LakeIOSpec extends GraftSpec {
   }
 
   test("CSV scan drops malformed rows but keeps the load alive") {
-    val dir = tmp("graft-badcsv")
+    val dir = TempLakes.dir("graft-badcsv")
     java.nio.file.Files.writeString(java.nio.file.Paths.get(dir, "part.csv"),
       """timestamp,machineId,temperature,vibration,is_anomaly
         |2026-01-01 00:00:00+00:00,NC_Machine_AC,68.0,1.8,0
@@ -40,7 +37,7 @@ class LakeIOSpec extends GraftSpec {
 
   test("partitioned lake write prunes partitions on read (S5 layout)") {
     import spark.implicits._
-    val dir = tmp("graft-lake")
+    val dir = TempLakes.dir("graft-lake")
     LakeIO.writePartitionedLake(Tables.events(spark, sfTiny), dir)
     val pruned = LakeIO.readLake(spark, dir)
       .filter($"date" === "2024-01-02")
@@ -53,13 +50,13 @@ class LakeIOSpec extends GraftSpec {
 
   test("dynamic partition pruning: a dim-side filter prunes fact partitions at runtime") {
     import spark.implicits._
-    val dir = tmp("graft-lake-dpp")
+    val dir = TempLakes.dir("graft-lake-dpp")
     LakeIO.writePartitionedLake(Tables.events(spark, sfTiny), dir)
     val fact = LakeIO.readLake(spark, dir)
     // dim carries the selective predicate; the fact's partition filter is
     // only knowable at runtime from the dim's surviving rows — exactly the
     // star-join shape DPP exists for (at 100 TB: skip whole date dirs)
-    val dimDir = tmp("graft-lake-dppdim")
+    val dimDir = TempLakes.dir("graft-lake-dppdim")
     Tables.events(spark, sfTiny)
       .select(to_date($"ts").as("date")).distinct()
       .withColumn("flag", (dayofmonth($"date") <= 2).cast("int"))
@@ -77,7 +74,7 @@ class LakeIOSpec extends GraftSpec {
     import spark.implicits._
     import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
     import org.apache.spark.sql.execution.exchange.ShuffleExchangeLike
-    val dir = tmp("graft-bucketed")
+    val dir = TempLakes.dir("graft-bucketed")
     val orders = Tables.orders(spark, sfTiny).select($"o_orderkey", $"o_totalprice")
     val lines = Tables.lineitem(spark, sfTiny).select($"l_orderkey", $"l_quantity")
     LakeIO.writeBucketed(orders, spark, "graft_b_orders", s"$dir/o", "o_orderkey", 4)
@@ -111,7 +108,7 @@ class LakeIOSpec extends GraftSpec {
   }
 
   test("JSON error side channel splits good and bad records (P2/S5 errors)") {
-    val dir = tmp("graft-json")
+    val dir = TempLakes.dir("graft-json")
     java.nio.file.Files.writeString(java.nio.file.Paths.get(dir, "data.json"),
       """{"machineId":"m1","temperature":67.0,"vibration":1.3,"timestamp":1754980000}
         |this is not json
@@ -125,7 +122,7 @@ class LakeIOSpec extends GraftSpec {
 
   test("ORC sink/scan round trip with filter pushdown into the ORC scan") {
     import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("graft_orc").toString
+    val dir = TempLakes.dir("graft_orc")
     val src = graft.Tables.orders(spark, sfTiny)
       .select($"o_orderkey", $"o_orderstatus", $"o_totalprice")
     LakeIO.writeOrc(src, dir)
@@ -201,8 +198,8 @@ class LakeIOSpec extends GraftSpec {
 
   test("TelemetrySource streams in micro-batches and drains to the batch row set") {
     import spark.implicits._
-    val out = java.nio.file.Files.createTempDirectory("graft_tsrc_stream").toString
-    val ckpt = java.nio.file.Files.createTempDirectory("graft_tsrc_ckpt").toString
+    val out = TempLakes.dir("graft_tsrc_stream")
+    val ckpt = TempLakes.dir("graft_tsrc_ckpt")
     val q = spark.readStream.format("graft.sources.TelemetrySource")
       .option("rows", "400").option("rowsPerBatch", "150").load()
       .writeStream.format("parquet").option("path", out)
@@ -220,8 +217,8 @@ class LakeIOSpec extends GraftSpec {
 
   test("TelemetrySource offsets recover: kill/restart yields each id exactly once") {
     import spark.implicits._
-    val out = java.nio.file.Files.createTempDirectory("graft_tsrc_rec").toString
-    val ckpt = java.nio.file.Files.createTempDirectory("graft_tsrc_rec_ckpt").toString
+    val out = TempLakes.dir("graft_tsrc_rec")
+    val ckpt = TempLakes.dir("graft_tsrc_rec_ckpt")
     def start(avail: Long) = spark.readStream.format("graft.sources.TelemetrySource")
       .option("rows", avail.toString).option("rowsPerBatch", "100").load()
       .writeStream.format("parquet").option("path", out)
@@ -448,8 +445,8 @@ class LakeIOSpec extends GraftSpec {
 
   test("TelemetrySource drains under Trigger.AvailableNow exactly once") {
     import spark.implicits._
-    val out = java.nio.file.Files.createTempDirectory("graft_tsrc_an").toString
-    val ckpt = java.nio.file.Files.createTempDirectory("graft_tsrc_an_ckpt").toString
+    val out = TempLakes.dir("graft_tsrc_an")
+    val ckpt = TempLakes.dir("graft_tsrc_an_ckpt")
     val q = spark.readStream.format("graft.sources.TelemetrySource")
       .option("rows", "450").option("rowsPerBatch", "200").load()
       .writeStream.format("parquet").option("path", out)
@@ -467,7 +464,7 @@ class LakeIOSpec extends GraftSpec {
 
   test("JSON-lines sink round-trips through the error-channel reader with zero errors") {
     import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("graft_jsonl").toString
+    val dir = TempLakes.dir("graft_jsonl")
     val src = spark.createDataFrame(Seq(
       ("m1", 67.3, 1.4, 1754980000L), ("m2", 88.0, 3.4, 1754980003L)))
       .toDF("machineId", "temperature", "vibration", "timestamp")

@@ -6,7 +6,8 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
-import graft.sources.{LakeSink, LakeSinkCommit, LakeSinkFiles, LakeSinkStreamingWrite}
+import graft.operators.TempLakes
+import graft.sources.{LakeManifest, LakeSink, LakeSinkCommit, LakeSinkFiles, LakeSinkStreamingWrite}
 
 /** The DSv2 WRITE-path contract ([[graft.sources.LakeSink]]): batch
   * commit, task/job abort leaving no partial files, truncate-on-overwrite,
@@ -14,9 +15,6 @@ import graft.sources.{LakeSink, LakeSinkCommit, LakeSinkFiles, LakeSinkStreaming
   * the write-side mirror of StreamRecoverySpec.
   */
 class LakeSinkSpec extends GraftSpec {
-
-  private def tmp(prefix: String): String =
-    Files.createTempDirectory(prefix).toString
 
   private def partFiles(dir: String): Seq[String] = {
     val d = Paths.get(dir)
@@ -47,7 +45,7 @@ class LakeSinkSpec extends GraftSpec {
     df.collect().map(_.toString).sorted.toSeq
 
   test("batch commit: committed lake equals the input, staging drained, _SUCCESS written") {
-    val out = tmp("graft_sink_batch")
+    val out = TempLakes.dir("graft_sink_batch")
     val src = graft.operators.Telemetry.twin(spark).filter(col("id") < 1000L)
     src.write.format("graft.sources.LakeSink").mode("append").save(out)
     assert(Files.exists(Paths.get(out, "_SUCCESS")))
@@ -60,7 +58,7 @@ class LakeSinkSpec extends GraftSpec {
 
   test("mergeSchema append auto-adds new columns; a superset append without it refuses") {
     import spark.implicits._
-    val out = tmp("graft_sink_merge")
+    val out = TempLakes.dir("graft_sink_merge")
     Seq((1L, "a"), (2L, "b")).toDF("id", "v")
       .write.format("graft.sources.LakeSink").mode("append").save(out)
     // superset append WITHOUT the option: refused at commit, table intact
@@ -89,7 +87,7 @@ class LakeSinkSpec extends GraftSpec {
 
   test("overwrite truncates previously committed part files") {
     import spark.implicits._
-    val out = tmp("graft_sink_trunc")
+    val out = TempLakes.dir("graft_sink_trunc")
     Seq(1L, 2L, 3L).toDF("v").write.format("graft.sources.LakeSink")
       .mode("append").save(out)
     Seq(10L, 20L).toDF("v").write.format("graft.sources.LakeSink")
@@ -102,7 +100,7 @@ class LakeSinkSpec extends GraftSpec {
 
   test("job abort leaves NO partial files: neither destination nor staging") {
     import spark.implicits._
-    val out = tmp("graft_sink_abort")
+    val out = TempLakes.dir("graft_sink_abort")
     val poison = spark.range(1000).as[Long]
       .map { i => if (i == 777L) throw new RuntimeException("graft-poison"); i }
       .toDF("v")
@@ -119,7 +117,7 @@ class LakeSinkSpec extends GraftSpec {
 
   test("unsupported column type fails at planning, before any task writes") {
     import spark.implicits._
-    val out = tmp("graft_sink_badtype")
+    val out = TempLakes.dir("graft_sink_badtype")
     val err = intercept[Exception] {
       Seq((1L, Seq(1, 2))).toDF("v", "arr").write
         .format("graft.sources.LakeSink").mode("append").save(out)
@@ -133,7 +131,7 @@ class LakeSinkSpec extends GraftSpec {
 
   test("speculative duplicate: two attempts of one (epoch, partition) leave exactly one file") {
     import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
-    val out = tmp("graft_sink_spec_dup")
+    val out = TempLakes.dir("graft_sink_spec_dup")
     LakeSinkFiles.ensureDirs(out)
     val schema = StructType(Seq(StructField("v", LongType)))
     val factory = new graft.sources.LakeSinkStreamingWriterFactory(schema, out)
@@ -177,8 +175,8 @@ class LakeSinkSpec extends GraftSpec {
 
   test("streaming kill/restart through the sink is exactly-once (no dup, no gap)") {
     import spark.implicits._
-    val out = tmp("graft_sink_stream")
-    val ckpt = tmp("graft_sink_stream_ckpt")
+    val out = TempLakes.dir("graft_sink_stream")
+    val ckpt = TempLakes.dir("graft_sink_stream_ckpt")
     // source horizon grows 100 ids per run with a kill between runs: each
     // restart must resume from the checkpointed offset AND must not
     // re-append epochs the sink already committed
@@ -203,7 +201,7 @@ class LakeSinkSpec extends GraftSpec {
   }
 
   test("partitioned write: Hive k=v layout, partition cols excluded from rows, discovery round-trip") {
-    val out = tmp("graft_sink_part")
+    val out = TempLakes.dir("graft_sink_part")
     val src = graft.operators.Telemetry.twin(spark).filter(col("id") < 2000L)
       .withColumn("hr", hour(col("ts")))
     src.write.format("graft.sources.LakeSink")
@@ -247,13 +245,13 @@ class LakeSinkSpec extends GraftSpec {
     // default: RequiresDistributionAndOrdering clusters by the partition
     // columns — 8 incoming tasks × 3 dirs would spray up to 24 small
     // files; the requested Exchange lands exactly one per directory
-    val out = tmp("graft_sink_cluster")
+    val out = TempLakes.dir("graft_sink_cluster")
     df.write.format("graft.sources.LakeSink").option("partitionCols", "p")
       .mode("append").save(out)
     assert(graft.sources.LakeMaintenance.committedFileCount(out) == 3,
       "clustered append must write one file per partition dir")
     // opt-out restores task-parallel writes (the many-small-files shape)
-    val out2 = tmp("graft_sink_nocluster")
+    val out2 = TempLakes.dir("graft_sink_nocluster")
     df.write.format("graft.sources.LakeSink").option("partitionCols", "p")
       .option("distributionMode", "none").mode("append").save(out2)
     assert(graft.sources.LakeMaintenance.committedFileCount(out2) > 3,
@@ -266,7 +264,7 @@ class LakeSinkSpec extends GraftSpec {
 
   test("sortBy write option orders rows within each written file (stats-tight layout)") {
     import spark.implicits._
-    val out = tmp("graft_sink_sortby")
+    val out = TempLakes.dir("graft_sink_sortby")
     val rnd = new scala.util.Random(7)
     rnd.shuffle((0 until 400).toList).map(_.toLong).toDF("id").repartition(4)
       .write.format("graft.sources.LakeSink").option("sortBy", "id")
@@ -285,7 +283,7 @@ class LakeSinkSpec extends GraftSpec {
 
   test("partitioned job abort sweeps the nested staging tree") {
     import spark.implicits._
-    val out = tmp("graft_sink_part_abort")
+    val out = TempLakes.dir("graft_sink_part_abort")
     val poison = spark.range(500).as[Long]
       .map { i => if (i == 321L) throw new RuntimeException("graft-poison"); i }
       .toDF("v").withColumn("g", pmod(col("v"), lit(4L)))
@@ -305,7 +303,7 @@ class LakeSinkSpec extends GraftSpec {
 
   test("NULL and path-unsafe partition values fail the task loudly") {
     import spark.implicits._
-    val out = tmp("graft_sink_part_null")
+    val out = TempLakes.dir("graft_sink_part_null")
     val withNull = Seq((1L, "a"), (2L, null)).toDF("v", "g")
     val err = intercept[Exception] {
       withNull.write.format("graft.sources.LakeSink")
@@ -326,8 +324,8 @@ class LakeSinkSpec extends GraftSpec {
 
   test("partitioned STREAMING write: exactly-once across restart with k=v layout intact") {
     import spark.implicits._
-    val out = tmp("graft_sink_part_stream")
-    val ckpt = tmp("graft_sink_part_stream_ckpt")
+    val out = TempLakes.dir("graft_sink_part_stream")
+    val ckpt = TempLakes.dir("graft_sink_part_stream_ckpt")
     // the full reference-sink semantics through the connector: streaming
     // telemetry, hour-partitioned lake layout, kill/restart exactly-once
     def run(avail: Long) = {
@@ -363,7 +361,7 @@ class LakeSinkSpec extends GraftSpec {
 
   test("a SECOND streaming query (fresh checkpoint) appends instead of silently discarding") {
     import spark.implicits._
-    val out = tmp("graft_sink_twoq")
+    val out = TempLakes.dir("graft_sink_twoq")
     // two INDEPENDENT streaming queries write to one lake table; both
     // restart their epochs at 0 — with epoch-only commit markers the
     // second query's epoch 0 would match the first query's marker and be
@@ -378,8 +376,8 @@ class LakeSinkSpec extends GraftSpec {
         .outputMode("append").start()
       q.awaitTermination()
     }
-    run(tmp("graft_sink_twoq_c1"))
-    run(tmp("graft_sink_twoq_c2"))
+    run(TempLakes.dir("graft_sink_twoq_c1"))
+    run(TempLakes.dir("graft_sink_twoq_c2"))
     val batch = spark.read.format("graft.sources.TelemetrySource")
       .option("rows", "100").load()
     val back = spark.read.schema(batch.schema)
@@ -396,7 +394,7 @@ class LakeSinkSpec extends GraftSpec {
   }
 
   test("a REDELIVERED epoch is discarded by the commit log, not re-promoted") {
-    val out = tmp("graft_sink_redeliver")
+    val out = TempLakes.dir("graft_sink_redeliver")
     LakeSinkFiles.ensureDirs(out)
     val schema = StructType(Seq(StructField("v", LongType)))
     val sw = new LakeSinkStreamingWrite(schema, out)
@@ -418,8 +416,8 @@ class LakeSinkSpec extends GraftSpec {
 
   test("streaming mergeSchema: a restarted query's new column evolves once, exactly-once held") {
     import spark.implicits._
-    val out = tmp("graft_sink_sevolve")
-    val ckpt = tmp("graft_sink_sevolve_ckpt")
+    val out = TempLakes.dir("graft_sink_sevolve")
+    val ckpt = TempLakes.dir("graft_sink_sevolve_ckpt")
     // one long-lived pipeline: run 1 writes the narrow schema; the
     // upstream then gains a column and the RESTARTED run (same
     // checkpoint) carries it — with mergeSchema the first committed
@@ -478,7 +476,7 @@ class LakeSinkSpec extends GraftSpec {
   }
 
   test("a REDELIVERED epoch never evolves the manifest; the next fresh epoch does") {
-    val out = tmp("graft_sink_sevolve_redeliver")
+    val out = TempLakes.dir("graft_sink_sevolve_redeliver")
     LakeSinkFiles.ensureDirs(out)
     val narrow = StructType(Seq(StructField("v", LongType)))
     val swA = new LakeSinkStreamingWrite(narrow, out)
@@ -486,7 +484,7 @@ class LakeSinkSpec extends GraftSpec {
       Files.write(LakeSinkFiles.stagingDir(out).resolve(name), content.getBytes)
     stage("part-e7-0.json.gz", "first")
     swA.commit(7L, Array(LakeSinkCommit(Seq("part-e7-0.json.gz"))))
-    assert(LakeSinkFiles.readManifest(out).get._1.fieldNames.toSeq == Seq("v"))
+    assert(LakeManifest.read(out).get.schema.fieldNames.toSeq == Seq("v"))
     // the query restarts EVOLVED and re-delivers epoch 7 (crash between
     // sink commit and checkpoint write): the marker discards the data,
     // and the manifest must stay untouched — the discarded epoch's rows
@@ -495,18 +493,18 @@ class LakeSinkSpec extends GraftSpec {
     val swB = new LakeSinkStreamingWrite(wide, out, mergeSchema = true)
     stage("part-e7-0.json.gz", "second")
     swB.commit(7L, Array(LakeSinkCommit(Seq("part-e7-0.json.gz"))))
-    assert(LakeSinkFiles.readManifest(out).get._1.fieldNames.toSeq == Seq("v"),
+    assert(LakeManifest.read(out).get.schema.fieldNames.toSeq == Seq("v"),
       "a redelivered epoch must not evolve the manifest")
     assert(new String(Files.readAllBytes(Paths.get(out, "part-e7-0.json.gz"))) == "first")
     // the next FRESH epoch carries the wider schema and evolves exactly once
     stage("part-e8-0.json.gz", "third")
     swB.commit(8L, Array(LakeSinkCommit(Seq("part-e8-0.json.gz"))))
-    assert(LakeSinkFiles.readManifest(out).get._1.fieldNames.toSeq == Seq("v", "w"))
+    assert(LakeManifest.read(out).get.schema.fieldNames.toSeq == Seq("v", "w"))
   }
 
   test("txnAppId/txnVersion: replayed appends no-op; crash-before-marker converges") {
     import spark.implicits._
-    val out = tmp("graft_sink_txn")
+    val out = TempLakes.dir("graft_sink_txn")
     def write(v: Long, rows: Seq[Long]): Unit =
       rows.toDF("id").repartition(2).write.format("graft.sources.LakeSink")
         .mode("append").option("txnAppId", "job_1")
@@ -555,7 +553,7 @@ class LakeSinkSpec extends GraftSpec {
 
   test("txn hardening: negative versions refuse; prefix sweeps and repartitioned replays are safe") {
     import spark.implicits._
-    val out = tmp("graft_sink_txnh")
+    val out = TempLakes.dir("graft_sink_txnh")
     def write(v: Long, parts: Int, rows: Seq[Long]): Unit =
       rows.toDF("id").repartition(parts).write.format("graft.sources.LakeSink")
         .mode("append").option("txnAppId", "loader")
@@ -597,8 +595,8 @@ class LakeSinkSpec extends GraftSpec {
   test("foreachBatch + txn: a crash between sink commit and checkpoint replays exactly once") {
     import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
     import org.apache.spark.sql.streaming.Trigger
-    val out = tmp("graft_sink_fbtxn")
-    val ckpt = tmp("graft_sink_fbtxn_ck")
+    val out = TempLakes.dir("graft_sink_fbtxn")
+    val ckpt = TempLakes.dir("graft_sink_fbtxn_ck")
     implicit val sqlCtx = spark.sqlContext
     import spark.implicits._
     val ms = MemoryStream[Long]
@@ -632,8 +630,8 @@ class LakeSinkSpec extends GraftSpec {
   test("streaming writes refuse txn options loudly (never silently dropped)") {
     import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
     import org.apache.spark.sql.streaming.Trigger
-    val out = tmp("graft_sink_stxn")
-    val ckpt = tmp("graft_sink_stxn_ck")
+    val out = TempLakes.dir("graft_sink_stxn")
+    val ckpt = TempLakes.dir("graft_sink_stxn_ck")
     implicit val sqlCtx = spark.sqlContext
     import spark.implicits._
     val ms = MemoryStream[Long]
@@ -656,12 +654,12 @@ class LakeSinkSpec extends GraftSpec {
     import spark.implicits._
     // EXPLICIT sortBy on a stream: loud refusal (epoch commits record no
     // sorted-ledger claims — the option's promise cannot hold)
-    val out1 = tmp("graft_sink_ssort")
+    val out1 = TempLakes.dir("graft_sink_ssort")
     val ms1 = MemoryStream[Long]
     ms1.addData(3L, 1L, 2L)
     val q1 = ms1.toDF().toDF("id").writeStream
       .format("graft.sources.LakeSink")
-      .option("checkpointLocation", tmp("graft_sink_ssort_ck"))
+      .option("checkpointLocation", TempLakes.dir("graft_sink_ssort_ck"))
       .option("sortBy", "id")
       .trigger(Trigger.AvailableNow())
       .start(out1)
@@ -672,7 +670,7 @@ class LakeSinkSpec extends GraftSpec {
     // lands (no refusal) and the configured-effect boundary is ASSERTED:
     // streamed files carry NO sorted claims (r13 lesson: assert the
     // outcome, not just execution success)
-    val lake = tmp("graft_sink_ssort_lake")
+    val lake = TempLakes.dir("graft_sink_ssort_lake")
     spark.conf.set("spark.sql.catalog.graft", "graft.sources.GraftCatalog")
     spark.conf.set("spark.sql.catalog.graft.lake", lake)
     spark.sql("""CREATE TABLE graft.lake.st (id BIGINT)
@@ -687,7 +685,7 @@ class LakeSinkSpec extends GraftSpec {
     ms2.addData(9L, 7L, 8L)
     val q2 = ms2.toDF().toDF("id").writeStream
       .format("graft.sources.LakeSink")
-      .option("checkpointLocation", tmp("graft_sink_ssort_ck2"))
+      .option("checkpointLocation", TempLakes.dir("graft_sink_ssort_ck2"))
       .trigger(Trigger.AvailableNow())
       .start(s"$lake/st")
     q2.awaitTermination()
@@ -699,7 +697,7 @@ class LakeSinkSpec extends GraftSpec {
   }
 
   test("streaming abort discards staged files for the epoch") {
-    val out = tmp("graft_sink_sabort")
+    val out = TempLakes.dir("graft_sink_sabort")
     LakeSinkFiles.ensureDirs(out)
     val schema = StructType(Seq(StructField("v", LongType)))
     val sw = new LakeSinkStreamingWrite(schema, out)

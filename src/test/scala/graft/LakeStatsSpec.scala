@@ -5,6 +5,7 @@ import java.nio.file.Files
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
+import graft.operators.TempLakes
 import graft.sources.{GraftCatalog, LakeMaintenance, LakeSinkStats}
 
 /** Per-file column [lo, hi] statistics ([[graft.sources.LakeSinkStats]]):
@@ -15,12 +16,9 @@ import graft.sources.{GraftCatalog, LakeMaintenance, LakeSinkStats}
   */
 class LakeStatsSpec extends GraftSpec {
 
-  private def tmp(prefix: String): String =
-    Files.createTempDirectory(prefix).toString
-
   private def withLake[T](body: String => T): T = {
     spark.conf.set("spark.sql.catalog.graft", classOf[GraftCatalog].getName)
-    val lake = tmp("graft_stat_lake")
+    val lake = TempLakes.dir("graft_stat_lake")
     spark.conf.set("spark.sql.catalog.graft.lake", lake)
     body(lake)
   }
@@ -141,7 +139,7 @@ class LakeStatsSpec extends GraftSpec {
         .repartition(4, col("g"))
         .writeStream.format("graft.sources.LakeSink")
         .option("path", s"$lake/sbl")
-        .option("checkpointLocation", tmp("graft_sbl_ckpt"))
+        .option("checkpointLocation", TempLakes.dir("graft_sbl_ckpt"))
         .option("bloomFilterColumns", "id")
         .option("bloomFilterBits", "8192")
         .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
@@ -161,7 +159,7 @@ class LakeStatsSpec extends GraftSpec {
           ($"value" * 2).as("w"))
         .writeStream.format("graft.sources.LakeSink")
         .option("path", s"$lake/sbl")
-        .option("checkpointLocation", tmp("graft_sbl_ckpt2"))
+        .option("checkpointLocation", TempLakes.dir("graft_sbl_ckpt2"))
         .option("mergeSchema", "true")
         .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
         .start()
@@ -509,7 +507,7 @@ class LakeStatsSpec extends GraftSpec {
         .writeTo("graft.lake.dpp").partitionedBy(col("p")).create()
       // the dim's selective predicate must SURVIVE to the optimizer (a
       // literal Seq constant-folds to a LocalRelation and DPP declines)
-      val dimDir = tmp("graft_dpp_dim")
+      val dimDir = TempLakes.dir("graft_dpp_dim")
       (0 until 10).map(i => (i, i % 5)).toDF("k", "m")
         .write.mode("overwrite").parquet(dimDir)
       val dim = spark.read.parquet(dimDir).filter(col("m") === 2)  // k in {2, 7}
@@ -529,7 +527,7 @@ class LakeStatsSpec extends GraftSpec {
       (0 until 800).map(i => (i.toLong, s"r$i")).toDF("id", "v")
         .repartitionByRange(8, col("id"))
         .writeTo("graft.lake.rts").create()
-      val dimDir = tmp("graft_rts_dim")
+      val dimDir = TempLakes.dir("graft_rts_dim")
       (0 until 800).map(i => (i.toLong, i % 40)).toDF("k", "m")
         .write.mode("overwrite").parquet(dimDir)
       val dim = spark.read.parquet(dimDir).filter(col("m") === 0 && col("k") < 100)

@@ -5,7 +5,8 @@ import java.nio.file.{Files, Paths}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
-import graft.sources.{GraftCatalog, LakeMaintenance, LakeSinkFiles}
+import graft.operators.TempLakes
+import graft.sources.{GraftCatalog, LakeMaintenance, LakeManifest, LakeSinkFiles}
 
 /** The versioned-lake tier: VERSION/TIMESTAMP AS OF time travel
   * ([[graft.sources.LakeSinkSnapshotTable]]), retire-instead-of-delete
@@ -14,12 +15,9 @@ import graft.sources.{GraftCatalog, LakeMaintenance, LakeSinkFiles}
   */
 class LakeVersionSpec extends GraftSpec {
 
-  private def tmp(prefix: String): String =
-    Files.createTempDirectory(prefix).toString
-
   private def withLake[T](body: String => T): T = {
     spark.conf.set("spark.sql.catalog.graft", classOf[GraftCatalog].getName)
-    val lake = tmp("graft_ver_lake")
+    val lake = TempLakes.dir("graft_ver_lake")
     spark.conf.set("spark.sql.catalog.graft.lake", lake)
     body(lake)
   }
@@ -114,7 +112,7 @@ class LakeVersionSpec extends GraftSpec {
       }
       assert(e.getMessage.contains("no recorded version") ||
         e.getMessage.contains("was vacuumed"), e.getMessage)
-      assert(LakeSinkFiles.readManifest(s"$lake/vcl2").isEmpty,
+      assert(LakeManifest.read(s"$lake/vcl2").isEmpty,
         "a refused clone must not leave a committed table")
       // the branch stays independently writable
       threeRows(9).writeTo("graft.lake.vcl").append()
@@ -132,7 +130,7 @@ class LakeVersionSpec extends GraftSpec {
         .toDF("id", "ts").writeTo("graft.lake.esrc").append()
       val vLast = LakeSinkFiles.listVersions(s"$lake/esrc").last
       LakeMaintenance.clone(spark, s"$lake/esrc", s"$lake/ecl", Some(vLast))
-      assert(LakeSinkFiles.readManifestPartHistory(s"$lake/ecl").nonEmpty,
+      assert(LakeManifest.read(s"$lake/ecl").get.partHistory.nonEmpty,
         "a version clone of an evolved table must carry the spec history")
       assert(canon(spark.table("graft.lake.ecl")) ==
         canon(spark.sql(s"SELECT * FROM graft.lake.esrc VERSION AS OF $vLast")))
@@ -581,8 +579,8 @@ class LakeVersionSpec extends GraftSpec {
     withLake { lake =>
       import org.apache.spark.sql.streaming.Trigger
       threeRows(0).writeTo("graft.lake.vh").create() // v1
-      val ckpt = tmp("graft_vh_ckpt")
-      val outDir = tmp("graft_vh_out")
+      val ckpt = TempLakes.dir("graft_vh_ckpt")
+      val outDir = TempLakes.dir("graft_vh_out")
       // drains land in a lake table — memory sinks refuse checkpoint
       // recovery (the LakeCdfSpec lesson)
       def drain(): Unit = {

@@ -1,6 +1,6 @@
 package graft
 
-import java.nio.file.Files
+import java.nio.file.{Files, Paths}
 import java.nio.file.attribute.PosixFilePermissions
 
 import scala.jdk.CollectionConverters._
@@ -12,6 +12,7 @@ import org.apache.hadoop.fs.{ChecksumException, FileAlreadyExistsException, Path
 import org.apache.spark.sql.execution.streaming.checkpointing.{CheckpointFileManager, FileSystemBasedCheckpointFileManager}
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 
+import graft.operators.TempLakes
 import graft.streaming.{LocalCheckpointFileManager, Scored, StreamOps}
 import LocalCheckpointFileManager.ConfKey
 
@@ -22,8 +23,6 @@ class LocalCheckpointSpec extends GraftSpec {
 
   private def hadoopConf(s: org.apache.spark.sql.SparkSession): Configuration =
     s.asInstanceOf[org.apache.spark.sql.classic.SparkSession].sessionState.newHadoopConf()
-
-  private def tmp(prefix: String): java.nio.file.Path = Files.createTempDirectory(prefix)
 
   private def manager(dir: java.nio.file.Path): CheckpointFileManager =
     CheckpointFileManager.create(new Path(dir.toUri), hadoopConf(spark))
@@ -57,10 +56,12 @@ class LocalCheckpointSpec extends GraftSpec {
   }
 
   test("graft sessions build the graft manager; an explicit class still wins") {
-    assert(manager(tmp("graft_ckpt_cls")).isInstanceOf[LocalCheckpointFileManager])
+    assert(manager(Paths.get(TempLakes.dir("graft_ckpt_cls")))
+      .isInstanceOf[LocalCheckpointFileManager])
     val own = spark.newSession()
     own.conf.set(ConfKey, classOf[FileSystemBasedCheckpointFileManager].getName)
-    assert(CheckpointFileManager.create(new Path(tmp("graft_ckpt_own").toUri), hadoopConf(own))
+    val ownDir = Paths.get(TempLakes.dir("graft_ckpt_own"))
+    assert(CheckpointFileManager.create(new Path(ownDir.toUri), hadoopConf(own))
       .getClass == classOf[FileSystemBasedCheckpointFileManager])
     // install never overrides a class set in the Hadoop conf (spark.hadoop.*)
     val c = new Configuration(false)
@@ -80,7 +81,7 @@ class LocalCheckpointSpec extends GraftSpec {
   }
 
   test("rename protocol: no overwrite of an existing file, cancel leaves no temp file") {
-    val dir = tmp("graft_ckpt_atomic")
+    val dir = Paths.get(TempLakes.dir("graft_ckpt_atomic"))
     val fm = manager(dir)
     val f = new Path(new Path(dir.toUri), "0")
     val out = fm.createAtomic(f, overwriteIfPossible = false)
@@ -94,7 +95,7 @@ class LocalCheckpointSpec extends GraftSpec {
     over.write(Array[Byte](6))
     over.close()
     assert(fm.open(f).readAllBytes().toSeq == Seq[Byte](6))
-    val fresh = tmp("graft_ckpt_cancel")
+    val fresh = Paths.get(TempLakes.dir("graft_ckpt_cancel"))
     val cancelled = manager(fresh).createAtomic(new Path(new Path(fresh.toUri), "1"),
       overwriteIfPossible = false)
     cancelled.write(Array[Byte](5))
@@ -104,7 +105,7 @@ class LocalCheckpointSpec extends GraftSpec {
   }
 
   test("files written by Spark's default manager read back, and the reverse") {
-    val dir = tmp("graft_ckpt_compat")
+    val dir = Paths.get(TempLakes.dir("graft_ckpt_compat"))
     val root = new Path(dir.toUri)
     val stockConf = new Configuration(hadoopConf(spark))
     stockConf.unset(ConfKey)
@@ -129,7 +130,7 @@ class LocalCheckpointSpec extends GraftSpec {
   }
 
   test("checkpoint files keep their .crc sidecar, verified on read, and their modes") {
-    val ckpt = tmp("graft_ckpt_crc")
+    val ckpt = Paths.get(TempLakes.dir("graft_ckpt_crc"))
     assert(alertStream(ckpt.toString, 3) == 3)
     Seq("offsets", "commits").foreach { log =>
       val dir = ckpt.resolve(log)
@@ -163,7 +164,7 @@ class LocalCheckpointSpec extends GraftSpec {
     rec.enable("jdk.ProcessStart").withStackTrace()
     val jfr = Files.createTempFile("graft_ckpt", ".jfr")
     rec.start()
-    val batches = try alertStream(tmp("graft_ckpt_jfr").toString, 3) finally {
+    val batches = try alertStream(TempLakes.dir("graft_ckpt_jfr"), 3) finally {
       rec.stop()
       rec.dump(jfr)
       rec.close()

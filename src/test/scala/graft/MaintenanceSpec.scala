@@ -1,9 +1,9 @@
 package graft
 
-import java.nio.file.Files
 import org.apache.spark.ml.PipelineModel
 import org.apache.spark.sql.functions._
 import graft.ml.Maintenance
+import graft.operators.TempLakes
 
 class MaintenanceSpec extends GraftSpec {
 
@@ -237,7 +237,7 @@ class MaintenanceSpec extends GraftSpec {
   }
 
   test("model save/load roundtrip preserves predictions (S8)") {
-    val dir = Files.createTempDirectory("graft-model").toString
+    val dir = TempLakes.dir("graft-model")
     val model = Maintenance.train(spark)
     model.write.overwrite().save(dir)
     val loaded = PipelineModel.load(dir)

@@ -1,17 +1,15 @@
 package graft
 
-import java.nio.file.Files
 import java.sql.Timestamp
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.Trigger
+import graft.operators.TempLakes
 import graft.streaming.{Scored, StreamOps}
 
 class StreamOpsSpec extends GraftSpec {
   import scala.language.implicitConversions
 
-  private def tmp(prefix: String): String =
-    Files.createTempDirectory(prefix).toString
 
   test("parseWire drops malformed records and keeps the stream alive (P2/P3)") {
     implicit val sqlCtx = spark.sqlContext
@@ -57,7 +55,7 @@ class StreamOpsSpec extends GraftSpec {
       ("NC_Machine_AC", 67.5, 1.3, 1754980000L),
       ("NC_Machine_BD", 85.0, 3.5, 1754980001L))
       .toDF("machineId", "temperature", "vibration", "timestamp")
-    val dir = tmp("wire_files")
+    val dir = TempLakes.dir("wire_files")
     StreamOps.toWire(batch).select($"value").write.mode("overwrite").text(dir)
     val in = spark.readStream.format("text").load(dir)
     val q = StreamOps.parseWire(in).writeStream
@@ -185,8 +183,8 @@ class StreamOpsSpec extends GraftSpec {
     in.addData(("m1", 67.0, 1.3, 1000L), ("m1", 67.0, 1.3, 1000L), ("m2", 68.0, 1.4, 1001L))
     val df = in.toDF().toDF("machineId", "temperature", "vibration", "sec")
       .withColumn("ts", timestamp_seconds(col("sec")))
-    val out = tmp("graft-compact")
-    val q = StreamOps.foreachBatchCompact(df, out, tmp("graft-compact-ckpt")).start()
+    val out = TempLakes.dir("graft-compact")
+    val q = StreamOps.foreachBatchCompact(df, out, TempLakes.dir("graft-compact-ckpt")).start()
     try {
       q.processAllAvailable()
       in.addData(("m1", 67.0, 1.3, 1000L), ("m3", 70.0, 1.5, 1002L)) // dup of batch 0 + new
@@ -252,8 +250,8 @@ class StreamOpsSpec extends GraftSpec {
     in.addData(("m1", 67.0, 1.3, 1754980000L), ("m1", 90.0, 3.7, 1754983600L))
     val df = in.toDF().toDF("machineId", "temperature", "vibration", "sec")
       .withColumn("ts", timestamp_seconds(col("sec")))
-    val out = tmp("graft-lake")
-    val q = StreamOps.bufferedLakeSink(df, out, tmp("graft-ckpt"),
+    val out = TempLakes.dir("graft-lake")
+    val q = StreamOps.bufferedLakeSink(df, out, TempLakes.dir("graft-ckpt"),
       Trigger.AvailableNow()).start()
     try q.awaitTermination(60000) finally q.stop()
     val files = java.nio.file.Files.walk(java.nio.file.Paths.get(out))

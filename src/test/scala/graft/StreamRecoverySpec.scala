@@ -6,7 +6,7 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import graft.operators.Telemetry
+import graft.operators.{Telemetry, TempLakes}
 import graft.streaming.{EventRec, StreamOps}
 
 /** The crash-recovery differential: the production property a streaming
@@ -27,9 +27,6 @@ import graft.streaming.{EventRec, StreamOps}
   * recorded), and asserts bit-equality with the oracle-green batch twin.
   */
 class StreamRecoverySpec extends GraftSpec {
-
-  private def tmp(prefix: String): String =
-    Files.createTempDirectory(prefix).toString
 
   /** events at sf0.001, ts-ordered. */
   private lazy val recs: Seq[EventRec] = {
@@ -67,8 +64,8 @@ class StreamRecoverySpec extends GraftSpec {
       "need an hour-group spanning the kill boundary")
 
     val in = MemoryStream[EventRec]
-    val out = tmp("graft-recover-rollup")
-    val ckpt = tmp("graft-recover-rollup-ckpt")
+    val out = TempLakes.dir("graft-recover-rollup")
+    val ckpt = TempLakes.dir("graft-recover-rollup-ckpt")
     def start() = StreamOps.hourlyRollup(in.toDF()).writeStream
       .foreachBatch { (batch: DataFrame, _: Long) =>
         batch.write.mode("overwrite").parquet(out)
@@ -108,8 +105,8 @@ class StreamRecoverySpec extends GraftSpec {
     assert(regressable, "need a post-restart event older than its key's pre-stop champion")
 
     val in = MemoryStream[EventRec]
-    val out = tmp("graft-recover-latest")
-    val ckpt = tmp("graft-recover-latest-ckpt")
+    val out = TempLakes.dir("graft-recover-latest")
+    val ckpt = TempLakes.dir("graft-recover-latest-ckpt")
     def start() = StreamOps.latestPerKey(in.toDS()).writeStream
       .foreachBatch { (batch: org.apache.spark.sql.Dataset[EventRec], bid: Long) =>
         batch.toDF().withColumn("batch_id", lit(bid))
@@ -185,8 +182,8 @@ class StreamRecoverySpec extends GraftSpec {
       "need a final sketch member that arrives only before the kill")
 
     val in = MemoryStream[EventRec]
-    val out = tmp("graft-recover-kmv")
-    val ckpt = tmp("graft-recover-kmv-ckpt")
+    val out = TempLakes.dir("graft-recover-kmv")
+    val ckpt = TempLakes.dir("graft-recover-kmv-ckpt")
     def start() = StreamOps.kmvStream(in.toDS()).writeStream
       .foreachBatch { (batch: org.apache.spark.sql.Dataset[KmvOut], bid: Long) =>
         batch.toDF().withColumn("batch_id", lit(bid))
@@ -231,8 +228,8 @@ class StreamRecoverySpec extends GraftSpec {
     val k = math.ceil(recs.size / 8.0).toInt
     val slices = recs.grouped(k).toSeq
     val in = MemoryStream[EventRec]
-    val out = tmp("graft-recover-sessions")
-    val ckpt = tmp("graft-recover-sessions-ckpt")
+    val out = TempLakes.dir("graft-recover-sessions")
+    val ckpt = TempLakes.dir("graft-recover-sessions-ckpt")
     def start() = StreamOps.sessionizeEvents(in.toDF()).writeStream
       .format("parquet").option("path", out)
       .option("checkpointLocation", ckpt)
@@ -313,8 +310,8 @@ class StreamRecoverySpec extends GraftSpec {
 
     val inR = MemoryStream[EventRec]
     val inA = MemoryStream[EventRec]
-    val out = tmp("graft-recover-join")
-    val ckpt = tmp("graft-recover-join-ckpt")
+    val out = TempLakes.dir("graft-recover-join")
+    val ckpt = TempLakes.dir("graft-recover-join-ckpt")
     def start() = {
       val readings = inR.toDF()
         .select($"user_id".as("machineId"), $"ts", $"value".as("temperature"))

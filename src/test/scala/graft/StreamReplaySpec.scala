@@ -1,12 +1,11 @@
 package graft
 
-import java.nio.file.Files
 import java.sql.Timestamp
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import graft.operators.{Analytics, Curation, Telemetry, TextOps}
+import graft.operators.{Analytics, Curation, Telemetry, TempLakes, TextOps}
 import graft.streaming.{EventRec, StreamOps, TokDoc}
 
 /** The streaming differential: replay the REAL events table through the
@@ -24,9 +23,6 @@ import graft.streaming.{EventRec, StreamOps, TokDoc}
   * batches — each test asserts that precondition explicitly before
   * comparing. */
 class StreamReplaySpec extends GraftSpec {
-
-  private def tmp(prefix: String): String =
-    Files.createTempDirectory(prefix).toString
 
   /** events at sf0.001 as ts-ordered records, sliced into n micro-batches. */
   private lazy val recs: Seq[EventRec] = {
@@ -61,7 +57,7 @@ class StreamReplaySpec extends GraftSpec {
       "slicing must split at least one hour-group across batches")
 
     val in = MemoryStream[EventRec]
-    val out = tmp("graft-replay-rollup")
+    val out = TempLakes.dir("graft-replay-rollup")
     // foreachBatch parquet sink, Complete mode: every trigger overwrites
     // with the full refreshed state; the final file set IS the rollup —
     // the same parquet-dump shape the Verify differential reads
@@ -108,7 +104,7 @@ class StreamReplaySpec extends GraftSpec {
     val alerts = inA.toDF().filter($"event_type" === "error")
       .select($"user_id".as("machineId"), $"ts",
         Telemetry.severityCol.as("severity"))
-    val out = tmp("graft-replay-interval")
+    val out = TempLakes.dir("graft-replay-interval")
     // append mode: inner stream-stream joins emit each match exactly once,
     // as soon as both sides have arrived — the parquet append accumulates
     // the full join result across triggers
@@ -143,7 +139,7 @@ class StreamReplaySpec extends GraftSpec {
     val alerts = inA.toDF().filter($"event_type" === "error")
       .select($"user_id".as("machineId"), $"ts",
         Telemetry.severityCol.as("severity"))
-    val out = tmp("graft-replay-left")
+    val out = TempLakes.dir("graft-replay-left")
     val q = StreamOps.joinWithAlerts(readings, alerts,
         Telemetry.LookbackSpark, "left_outer")
       .writeStream
@@ -679,7 +675,7 @@ class StreamReplaySpec extends GraftSpec {
     val in = MemoryStream[EventRec]
     val q = StreamOps.funnelStream(in.toDS()).writeStream.format("memory")
       .queryName("replay_funnel").outputMode("update")
-      .option("checkpointLocation", tmp("funnel-replay")).start()
+      .option("checkpointLocation", TempLakes.dir("funnel-replay")).start()
     try {
       rr.foreach { s => in.addData(s: _*); q.processAllAvailable() }
     } finally q.stop()
@@ -707,7 +703,7 @@ class StreamReplaySpec extends GraftSpec {
     val in = MemoryStream[String]
     val q = StreamOps.cmsSketchStream(in.toDS()).writeStream
       .format("memory").queryName("replay_cms").outputMode("update")
-      .option("checkpointLocation", tmp("cms-replay")).start()
+      .option("checkpointLocation", TempLakes.dir("cms-replay")).start()
     try {
       tokSlices.foreach { s => in.addData(s: _*); q.processAllAvailable() }
     } finally q.stop()
