@@ -1895,11 +1895,14 @@ object Telemetry {
     * ([[graft.sources.LakeMaintenance.zorder]] — the OPTIMIZE ZORDER BY
     * contract): the twin lands id-clustered (so a temperature/vibration
     * box filter can skip nothing), is z-order-rewritten on
-    * (temperature, vibration), and the query returns every row of an
-    * axis-aligned box — hash-equal to DuckDB evaluating the same box on
-    * the generator arithmetic, proving the full-table rewrite moved every
-    * row and invented none. LakeStatsSpec pins the plan-side payoff
-    * (post-zorder box scans skip most files; rows bit-identical).
+    * (temperature, vibration) — the whole unpartitioned table is one
+    * scope, its files replaced through the lake's rewrite commit
+    * ([[graft.sources.LakeSinkFiles.commitRewrite]]) — and the query
+    * returns every row of an axis-aligned box: hash-equal to DuckDB
+    * evaluating the same box on the generator arithmetic, proving the
+    * rewrite moved every row and invented none. LakeStatsSpec pins the
+    * plan-side payoff (post-zorder box scans skip most files; rows
+    * bit-identical; stats coverage kept).
     *
     * Scale shape: the rewrite is one full shuffle, amortized over every
     * subsequent selective read; the box read itself opens O(matching
@@ -3186,11 +3189,11 @@ object Telemetry {
   }
 
   /** t72 — PARTITION-SCOPED Z-ORDER under the differential (r13:
-    * [[graft.sources.LakeMaintenance.zorder]]'s `partitions` overload —
+    * [[graft.sources.LakeMaintenance.zorder]]'s `partitions` scope —
     * the `OPTIMIZE … WHERE … ZORDER BY` compose): events land
     * day-partitioned (`days(ts)`), then ONE day's directory is
-    * z-clustered on (user_id, value) through compaction's commit
-    * protocol — untouched days' files survive bit-identically, ledgers
+    * z-clustered on (user_id, value) through the rewrite commit
+    * compaction shares — untouched days' files survive bit-identically, ledgers
     * hand off per directory, the pre-rewrite snapshot stays readable
     * (LakeStatsSpec pins the byte-identity, the skip-rate improvement,
     * and the identity-column/unknown-key refusals). The aggregate below

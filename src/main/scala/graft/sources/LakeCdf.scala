@@ -1,6 +1,6 @@
 package graft.sources
 
-import java.nio.file.{Files, Paths}
+import java.nio.file.Paths
 import java.util
 
 import org.apache.spark.sql.connector.catalog.{SupportsRead, Table, TableCapability}
@@ -122,18 +122,10 @@ private[graft] object LakeCdf {
       .filter(_.isIdentity).map(_.dirKey).toSet
     def base(rel: String, deletes: Array[Long],
         includeOnly: Option[Array[Long]]): LakeSinkInputPartition = {
-      // live-first, retired-second resolution (a removed file was retired
-      // by its rewrite; vacuuming it makes this range unreadable — loud)
-      val live = root.resolve(rel)
-      val p =
-        if (Files.isRegularFile(live)) live
-        else {
-          val r = LakeSinkFiles.retiredDir(path).resolve(rel)
-          require(Files.isRegularFile(r),
-            s"LakeSink CDF: changed file $rel of version $v was vacuumed from $path")
-          r
-        }
-      val kvs = LakeSinkPartitions.kvsOf(root, live, partCols)
+      // a removed file was retired by its rewrite; vacuuming it makes
+      // this range unreadable — loud
+      val p = LakeSinkFiles.resolve(path, rel, s"version $v's CDF file")
+      val kvs = LakeSinkPartitions.kvsOf(root, root.resolve(rel), partCols)
         .filter { case (k, _) => identityKeys.contains(k) }
       LakeSinkInputPartition(p.toString, kvs, deletes, includeOnly)
     }

@@ -75,7 +75,7 @@ private[graft] object LakeMetadataTables {
         LakeSinkFiles.listVersions(path).map { v =>
           val (_, _, files) = LakeSinkFiles.readVersion(path, v)
           val mtimeMicros = Files.getLastModifiedTime(
-            LakeSinkFiles.versionsDir(path).resolve(f"v$v%09d")).toMillis * 1000L
+            LakeSinkFiles.versionsDir(path).resolve(LakeSinkFiles.versionName(v))).toMillis * 1000L
           Array[Any](
             java.lang.Long.valueOf(v),
             java.lang.Long.valueOf(mtimeMicros),

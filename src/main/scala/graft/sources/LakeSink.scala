@@ -1003,8 +1003,8 @@ private[graft] object LakeSinkFiles {
   }
 
   /** Conflict detection for commits whose retire set was planned EARLIER
-    * than the commit itself (ReplaceData's scan-recorded group files,
-    * compaction's group listing): a concurrent commit that rewrote any of
+    * than the commit itself (every [[commitRewrite]], merge-on-read DML's
+    * planned files): a concurrent commit that rewrote any of
     * those files makes this commit's foundation stale — replacing rows
     * that are no longer where the plan saw them would silently duplicate
     * (or lose) data. Called BEFORE any mutation, so the loser aborts
@@ -1020,6 +1020,48 @@ private[graft] object LakeSinkFiles {
           "this commit planned to replace were rewritten by a concurrent " +
           s"commit (first: ${missing.head}); aborting before any mutation — " +
           "re-run to plan against the current table state")
+  }
+
+  /** The one commit of every rewrite (ReplaceData, compaction, Z-order):
+    * `staged` files replace `originals` (RELATIVE names, planned from a
+    * record whose delete vectors `plannedDels` the rewrite's content was
+    * filtered with). Conflict checks run BEFORE any mutation: a concurrent
+    * commit rewrote an original ([[requireAllLive]]), or a concurrent
+    * merge-on-read DELETE added vectors to one without touching it
+    * ([[LakeSinkDeletes.requireUnchanged]] — a rewrite from the stale
+    * vector set would resurrect the concurrently-deleted rows). The loser
+    * discards its staged files and rethrows, the table untouched.
+    * Otherwise the staged files promote, the originals RETIRE (recorded
+    * versions stay readable until VACUUM) and one version records `facts`
+    * for the new files. Returns the recorded version. */
+  def commitRewrite(path: String, originals: Seq[String],
+      plannedDels: Map[String, Array[Long]], staged: Seq[String],
+      facts: LakeFacts, who: String): Long = {
+    val root = Paths.get(path)
+    val files = originals.map(rel => root.resolve(rel).toString)
+    try {
+      requireAllLive(path, files, who)
+      LakeSinkDeletes.requireUnchanged(path, originals, plannedDels, who)
+    } catch { case e: java.util.ConcurrentModificationException =>
+      discard(path, staged)
+      throw e
+    }
+    promote(path, staged)
+    recordVersion(path, staged, retire(path, files), facts)
+  }
+
+  /** A recorded file's bytes: the live tree first, then `_graft_retired/`
+    * (a rewrite moved it there — also a commit landing while a reader
+    * plans the record before it). A name found in neither was vacuumed:
+    * fail loudly rather than read a silently partial snapshot. */
+  def resolve(path: String, rel: String, what: String): Path = {
+    val live = Paths.get(path).resolve(rel)
+    if (Files.isRegularFile(live)) live
+    else {
+      val r = retiredDir(path).resolve(rel)
+      require(Files.isRegularFile(r), s"LakeSink: $what $rel was vacuumed from $path")
+      r
+    }
   }
 
   private[graft] def versionName(v: Long): String = f"v$v%09d"

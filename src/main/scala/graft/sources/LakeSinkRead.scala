@@ -373,7 +373,7 @@ private[sources] object LakeSinkPartitions {
       import java.nio.file.FileVisitResult
       override def preVisitDirectory(dir: Path,
           attrs: java.nio.file.attribute.BasicFileAttributes): FileVisitResult =
-        // dot-dirs are maintenance scratch (a crashed scoped-zorder's
+        // dot-dirs are maintenance scratch (a crashed zorder's
         // `.zorder-*` temp lake) — their part files are NOT this table's
         if (hidden.exists(dir.startsWith(_)) ||
             (dir != root && dir.getFileName.toString.startsWith(".")))
@@ -603,26 +603,16 @@ private[sources] class LakeSinkScan(fullSchema: StructType, required: StructType
       (if (timeTravel) s" snapshot=${snap.files.length}files" else "")
   override def toBatch: Batch = this
 
-  /** Every read plans its record's file list, each name resolved
-    * live-first then against `_graft_retired/` (a rewrite moved it there
-    * — also a commit landing while a live read plans the record before
-    * it); a name found in neither was vacuumed — fail loudly rather than
-    * return a silently partial snapshot. Resolved once per scan. */
+  /** Every read plans its record's file list, each name resolved by
+    * [[LakeSinkFiles.resolve]] (live, else retired, else vacuumed — a
+    * loud failure). Resolved once per scan. */
   private lazy val resolvedFiles: Seq[(Path, Seq[(String, String)])] = {
     val root = Paths.get(path)
     snap.files.map { rel =>
-      val live = root.resolve(rel)
-      val p =
-        if (Files.isRegularFile(live)) live
-        else {
-          val r = LakeSinkFiles.retiredDir(path).resolve(rel)
-          require(Files.isRegularFile(r),
-            s"LakeSink: recorded file $rel was vacuumed from $path")
-          r
-        }
       // partition values decode from the RELATIVE name (shared by the
       // live and retired locations)
-      (p, LakeSinkPartitions.kvsOf(root, root.resolve(rel), partCols))
+      (LakeSinkFiles.resolve(path, rel, "recorded file"),
+        LakeSinkPartitions.kvsOf(root, root.resolve(rel), partCols))
     }
   }
 
@@ -1187,43 +1177,17 @@ private[sources] class LakeSinkPartitionReader(file: String,
     else Left(dataSchema.fieldIndex(f.name))
   }
 
-  private val in = new BufferedReader(new InputStreamReader(
-    new GZIPInputStream(Files.newInputStream(Paths.get(file))),
-    StandardCharsets.UTF_8))
-  private var line: String = _
-  // physical position (line index) of the CURRENT row; delete vectors /
-  // include lists advance over it with sorted-cursor pointers
-  private var pos = -1L
-  private var delIdx = 0
-  private var incIdx = 0
+  private val lines = new LakeLineCursor(Paths.get(file), deletes, includeOnly)
 
-  override def next(): Boolean = {
-    while (true) {
-      line = in.readLine()
-      if (line == null) return false
-      pos += 1
-      includeOnly match {
-        case Some(inc) =>
-          // CDF delete-leg mode: emit EXACTLY the listed positions
-          while (incIdx < inc.length && inc(incIdx) < pos) incIdx += 1
-          if (incIdx >= inc.length) return false // past the last wanted row
-          if (inc(incIdx) == pos) return true
-        case None =>
-          while (delIdx < deletes.length && deletes(delIdx) < pos) delIdx += 1
-          if (delIdx >= deletes.length || deletes(delIdx) != pos) return true
-        // else: vector hides this row — keep scanning
-      }
-    }
-    false // unreachable
-  }
+  override def next(): Boolean = lines.next()
 
   override def get(): InternalRow = {
-    parser.parse(line, parsed)
+    parser.parse(lines.line, parsed)
     val vals = new Array[Any](extract.length)
     var i = 0
     while (i < extract.length) {
       vals(i) = extract(i) match {
-        case Left(-1) => java.lang.Long.valueOf(pos)
+        case Left(-1) => java.lang.Long.valueOf(lines.pos)
         case Left(j)  => parsed(j)
         case Right(v) => v
       }
@@ -1232,7 +1196,52 @@ private[sources] class LakeSinkPartitionReader(file: String,
     new GenericInternalRow(vals)
   }
 
+  override def close(): Unit = lines.close()
+}
+
+/** The one reader of a committed gzip JSON-lines file (scans, compaction,
+  * ANALYZE): `next()` advances to the next visible line, exposed as `line`
+  * with its physical position `pos` (the line index — the address delete
+  * vectors use). Positions in `deletes` (sorted) are skipped; with
+  * `includeOnly` (CDF row-level legs, sorted) only the listed positions
+  * surface and reading stops after the last. Sorted-pointer advances: no
+  * allocation per row beyond the line itself. */
+private[sources] final class LakeLineCursor(file: Path,
+    deletes: Array[Long] = Array.empty,
+    includeOnly: Option[Array[Long]] = None) extends java.io.Closeable {
+  private val in = new BufferedReader(new InputStreamReader(
+    LakeLineCursor.open(file), StandardCharsets.UTF_8))
+  private val include = includeOnly.isDefined
+  private val marks = includeOnly.getOrElse(deletes)
+  private var mi = 0
+  private var cur: String = _
+  private var at = -1L
+
+  def line: String = cur
+  def pos: Long = at
+
+  def next(): Boolean = {
+    while (!include || mi < marks.length) {
+      cur = in.readLine()
+      if (cur == null) return false
+      at += 1
+      while (mi < marks.length && marks(mi) < at) mi += 1
+      // a listed line surfaces in include mode and hides otherwise
+      if ((mi < marks.length && marks(mi) == at) == include) {
+        if (include) mi += 1
+        return true
+      }
+    }
+    false // past the last listed line
+  }
+
   override def close(): Unit = in.close()
+}
+
+private[sources] object LakeLineCursor {
+  /** A committed file's decompressed bytes — every gzip member in turn. */
+  def open(file: Path): java.io.InputStream =
+    new GZIPInputStream(Files.newInputStream(file), 1 << 13)
 }
 
 /** Group-based row-level operations (MERGE INTO / UPDATE / row-level
@@ -1292,13 +1301,12 @@ private[sources] class LakeSinkRowLevelOperation(schema: StructType,
     }
 }
 
-/** ReplaceData commit: stage like any batch write, then promote the
-  * replacements and drop the operation's recorded group files. The
-  * recorded group set is validated against the LIVE tree first
-  * ([[LakeSinkFiles.requireAllLive]]) — a concurrent commit (compaction,
-  * another DML) that rewrote any planned file makes this commit's
-  * foundation stale; it aborts loudly with zero mutations instead of
-  * silently duplicating the rewritten rows. */
+/** ReplaceData commit: stage like any batch write, then replace the
+  * operation's recorded group files through [[LakeSinkFiles.commitRewrite]]
+  * — a concurrent commit (compaction, another DML) that rewrote a planned
+  * file or vectored one makes this commit's foundation stale; it aborts
+  * loudly with zero mutations instead of silently duplicating the
+  * rewritten rows or resurrecting deleted ones. */
 private[graft] class LakeSinkReplaceBatchWrite(schema: StructType,
     path: String, partCols: Seq[String], writeId: String,
     oldFiles: () => Seq[String],
@@ -1309,28 +1317,16 @@ private[graft] class LakeSinkReplaceBatchWrite(schema: StructType,
     new LakeSinkWriterFactory(schema, path, s"b$writeId", partCols)
   override def commit(messages: Array[WriterCommitMessage]): Unit = {
     val committed = messages.collect { case c: LakeSinkCommit => c }.toSeq
-    // conflict checks BEFORE any mutation: loser aborts, table untouched.
-    // Two independent races: a concurrent commit REWROTE a planned file
-    // (requireAllLive), or a concurrent merge-on-read DELETE added
-    // vectors to one WITHOUT touching it (requireUnchanged — the rewrite
-    // would otherwise resurrect the concurrently-deleted rows)
-    try {
-      LakeSinkFiles.requireAllLive(path, oldFiles(), "row-level rewrite")
-      val root = Paths.get(path)
-      LakeSinkDeletes.requireUnchanged(path,
-        oldFiles().map(f => root.relativize(Paths.get(f)).toString),
-        plannedDels(), "row-level rewrite")
-    } catch { case e: java.util.ConcurrentModificationException =>
-      LakeSinkFiles.discard(path, committed.flatMap(_.staged))
+    val root = Paths.get(path)
+    // a stale plan aborts with the table untouched; the sweep catches
+    // staged files of task attempts that sent no message
+    try LakeSinkFiles.commitRewrite(path,
+      oldFiles().map(f => root.relativize(Paths.get(f)).toString), plannedDels(),
+      committed.flatMap(_.staged), LakeFacts.of(committed), "row-level rewrite")
+    catch { case e: java.util.ConcurrentModificationException =>
       LakeSinkFiles.sweep(path, s"b$writeId")
       throw e
     }
-    LakeSinkFiles.promote(path, committed.flatMap(_.staged))
-    // RETIRE (not delete) the replaced group files: pre-command snapshots
-    // in the version log stay readable until VACUUM
-    val removed = LakeSinkFiles.retire(path, oldFiles())
-    LakeSinkFiles.recordVersion(path, committed.flatMap(_.staged), removed,
-      LakeFacts.of(committed))
     Files.write(Paths.get(path, "_SUCCESS"), Array.empty[Byte])
   }
   override def abort(messages: Array[WriterCommitMessage]): Unit = {

@@ -514,6 +514,18 @@ private[graft] object LakeSinkStats {
       t
     }
 
+  /** Feed one row, in file-schema ordinals, to a file's trackers. */
+  def observe(ts: Array[Option[ColTracker]], row: InternalRow): Unit = {
+    var c = 0
+    while (c < ts.length) {
+      if (ts(c).isDefined) {
+        if (row.isNullAt(c)) ts(c).get.nullSeen()
+        else ts(c).get.update(row, c)
+      }
+      c += 1
+    }
+  }
+
   /** Fold a file's trackers into the per-file blob (entries joined by
     * EntrySep; a column whose tracker died is simply absent). */
   def blobOf(ts: Array[Option[ColTracker]]): String =

@@ -1,11 +1,14 @@
 package graft.sources
 
-import java.io.{BufferedInputStream, BufferedOutputStream, FileOutputStream}
+import java.io.{BufferedOutputStream, FileOutputStream}
 import java.nio.file.{Files, Path, Paths, StandardCopyOption}
 import java.util
-import java.util.zip.{GZIPInputStream, GZIPOutputStream}
+import java.util.zip.GZIPOutputStream
 
 import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.expressions.{Ascending, BoundReference, GenericInternalRow,
+  InterpretedOrdering, SortOrder}
 import org.apache.spark.sql.connector.catalog.{SupportsRead, Table, TableCapability}
 import org.apache.spark.sql.connector.expressions.Transform
 import org.apache.spark.sql.connector.read.ScanBuilder
@@ -150,9 +153,17 @@ object LakeMaintenance {
     * a Spark job — one task per output bin streams its files'
     * decompressed JSON lines into one staged gzip (row bytes are copied
     * verbatim, so reads hash-identically before and after — t40 pins
-    * this under the DuckDB differential); the driver then promotes the
-    * staged replacements, RETIRES the originals (recorded versions stay
-    * readable), and records the post-compaction version.
+    * this under the DuckDB differential); the driver then commits the
+    * staged replacements through [[LakeSinkFiles.commitRewrite]] (the
+    * originals RETIRE, recorded versions stay readable).
+    *
+    * `partitions` scopes the rewrite to matching partition DIRECTORIES
+    * (the `OPTIMIZE … WHERE` contract): keys are partition dir keys
+    * (`p`, `ts_day`, `id_bucket` — what SHOW PARTITIONS prints), values
+    * the dir values; a directory compacts only when it carries EVERY
+    * listed pair. Real schedules compact yesterday's partition after its
+    * stream closes instead of rewriting the whole table — untouched
+    * partitions' files survive bit-identically (spec-pinned).
     *
     * Returns (partitions compacted, files in, files out).
     *
@@ -161,22 +172,8 @@ object LakeMaintenance {
     * protocol as any other lake commit. Readers racing the commit see the
     * promote→retire window (same documented window as ReplaceData);
     * snapshot readers are unaffected. */
-  def compact(spark: SparkSession, path: String): (Int, Int, Int) =
-    compact(spark, path, None)
-
-  def compact(spark: SparkSession, path: String,
-      targetBytes: Option[Long]): (Int, Int, Int) =
-    compact(spark, path, targetBytes, Map.empty)
-
-  /** `partitions` scopes the rewrite to matching partition DIRECTORIES
-    * (the `OPTIMIZE … WHERE` contract): keys are partition dir keys
-    * (`p`, `ts_day`, `id_bucket` — what SHOW PARTITIONS prints), values
-    * the dir values; a directory compacts only when it carries EVERY
-    * listed pair. Real schedules compact yesterday's partition after its
-    * stream closes instead of rewriting the whole table — untouched
-    * partitions' files survive bit-identically (spec-pinned). */
-  def compact(spark: SparkSession, path: String, targetBytes: Option[Long],
-      partitions: Map[String, String]): (Int, Int, Int) = {
+  def compact(spark: SparkSession, path: String, targetBytes: Option[Long] = None,
+      partitions: Map[String, String] = Map.empty): (Int, Int, Int) = {
     val m = LakeManifest.read(path).getOrElse(
       throw new IllegalArgumentException(s"LakeMaintenance: no lake table at $path"))
     val (tblSchema, partCols) = (m.schema, m.partCols)
@@ -226,36 +223,18 @@ object LakeMaintenance {
     // trackers must see the filled value — recording nulls=rows would
     // poison count(col) pushdown for the rewritten file
     val evoDefaults = LakeSinkDefaults.internalMap(m.defaults, dataSchema)
-    // one merge task per compacted partition directory; a group whose
-    // originals carry delete vectors takes the MATERIALIZE path: survivor
-    // lines are copied AND re-parsed through fresh stats/count trackers,
-    // so the rewrite fully restores metadata pushdown (the facts of a
-    // vector-free group carry over arithmetically — no parse needed).
-    // Bloom coverage survives the rewrite: a column any original carried
-    // a filter for is re-tracked at the originals' max size (the
-    // vector-free fold ORs the original filters instead — see
-    // LakeSinkStats.mergeBlobs)
-    // ONE decode pass per original feeds every coverage map (the stats
-    // decode dominates metadata cost at many files — review r13)
+    // one merge task per output bin; a group whose originals carry delete
+    // vectors takes the MATERIALIZE path: survivor lines are copied AND
+    // re-parsed through fresh stats/count trackers, so the rewrite fully
+    // restores metadata pushdown (the facts of a vector-free group carry
+    // over arithmetically — no parse needed). The trackers re-declare the
+    // group's stats coverage (the vector-free fold merges the original
+    // parts instead — see LakeSinkStats.mergeBlobs); ONE decode pass per
+    // original feeds every group's coverage (the stats decode dominates
+    // metadata cost at many files — review r13)
     val decodedByRel = decodeStats(snap, groups.flatMap(_._2), tblSchema, evoAliases)
-    val groupBloomCols: Seq[Map[String, Int]] = groups.map { case (_, rels) =>
-      rels.flatMap(r => decodedByRel.get(r).toSeq.flatMap(_.toSeq.collect {
-        case (n, cs) if cs.bloom.isDefined => n -> cs.bloom.get.length * 8
-      })).groupBy(_._1).map { case (n, ms) => n -> ms.map(_._2).max }
-    }
-    // NDV coverage likewise: re-track any column an original carried
-    // registers for (the vector-free fold maxes them arithmetically)
-    val groupNdvCols: Seq[Set[String]] = groups.map { case (_, rels) =>
-      rels.flatMap(r => decodedByRel.get(r).toSeq.flatMap(_.toSeq.collect {
-        case (n, cs) if cs.ndv.isDefined => n
-      })).toSet
-    }
-    // histogram coverage likewise (the vector-free fold sums buckets)
-    val groupHistCols: Seq[Set[String]] = groups.map { case (_, rels) =>
-      rels.flatMap(r => decodedByRel.get(r).toSeq.flatMap(_.toSeq.collect {
-        case (n, cs) if cs.hist.isDefined => n
-      })).toSet
-    }
+    val groupCover: Seq[Coverage] =
+      groups.map { case (_, rels) => coverage(rels.flatMap(decodedByRel.get)) }
     // SORTEDNESS preservation: when EVERY input of a group carries the
     // SAME sort claim, the merge is a K-WAY MERGE on the claimed
     // key instead of a concatenation, and the output re-declares the
@@ -277,168 +256,46 @@ object LakeMaintenance {
         } else None
       }
     val staged: Seq[(String, Option[(Long, String)])] = spark.sparkContext
-      .parallelize(
-        groups.zip(groupBloomCols).zip(groupNdvCols).zip(groupHistCols)
-          .zip(groupSorted).zipWithIndex,
-        groups.size)
-      .map { case ((((((dirRel, rels), gBloom), gNdv), gHist), gSort), i) =>
+      .parallelize(groups.zip(groupCover).zip(groupSorted).zipWithIndex, groups.size)
+      .map { case ((((dirRel, rels), cover), gSort), i) =>
         val prefix = if (dirRel.isEmpty) "" else s"$dirRel/"
         val stagedRel = s"${prefix}part-c$tag-$i.json.gz"
         val out = LakeSinkFiles.stagingDir(path).resolve(s"$stagedRel.inprogress")
         Option(out.getParent).foreach(Files.createDirectories(_))
+        val files = rels.sorted
         val materialize = rels.exists(dels.contains)
         val trackers =
-          if (materialize) LakeSinkStats.trackers(dataSchema, gBloom, gNdv, gHist)
+          if (materialize) LakeSinkStats.trackers(dataSchema, cover.bloom, cover.ndv, cover.hist)
           else Array.empty[Option[LakeSinkStats.ColTracker]]
-        val parser =
-          if (materialize)
-            new JsonLineParser(dataSchema, evoAliases, evoIgnored, evoDefaults)
-          else null
-        val parsed = new Array[Any](dataSchema.length)
-        val row = new org.apache.spark.sql.catalyst.expressions.GenericInternalRow(parsed)
-        var liveRows = 0L
         val os = new GZIPOutputStream(new BufferedOutputStream(
           new FileOutputStream(out.toFile)))
-        try {
-          val buf = new Array[Byte](1 << 16)
-          gSort match {
-            case Some((_, liveCols)) =>
-              // K-WAY MERGE on the claimed key: inputs are individually
-              // sorted (sound by the claims' construction), so merging
-              // by a comparator that REFINES Spark's sort order keeps
-              // the output Spark-sorted; ties break by file index for
-              // determinism. Per-line key parse is the price — paid only
-              // when compacting sortBy tables.
-              val keyIdx = liveCols.map(dataSchema.fieldIndex).toArray
-              val keyTypes = keyIdx.map(dataSchema.fields(_).dataType)
-              def cmpVal(dt: org.apache.spark.sql.types.DataType,
-                  a: Any, b: Any): Int =
-                if (a == null && b == null) 0
-                else if (a == null) -1 // ascending ⇒ NULLS FIRST (writer's order)
-                else if (b == null) 1
-                else dt match {
-                  case org.apache.spark.sql.types.LongType |
-                       org.apache.spark.sql.types.TimestampType =>
-                    java.lang.Long.compare(a.asInstanceOf[Long], b.asInstanceOf[Long])
-                  case org.apache.spark.sql.types.IntegerType |
-                       org.apache.spark.sql.types.DateType =>
-                    java.lang.Integer.compare(a.asInstanceOf[Int], b.asInstanceOf[Int])
-                  case org.apache.spark.sql.types.DoubleType =>
-                    java.lang.Double.compare(a.asInstanceOf[Double], b.asInstanceOf[Double])
-                  case org.apache.spark.sql.types.FloatType =>
-                    java.lang.Float.compare(a.asInstanceOf[Float], b.asInstanceOf[Float])
-                  case org.apache.spark.sql.types.BooleanType =>
-                    java.lang.Boolean.compare(a.asInstanceOf[Boolean], b.asInstanceOf[Boolean])
-                  case org.apache.spark.sql.types.StringType =>
-                    a.asInstanceOf[org.apache.spark.unsafe.types.UTF8String]
-                      .compareTo(b.asInstanceOf[org.apache.spark.unsafe.types.UTF8String])
-                  case other => throw new UnsupportedOperationException(
-                    s"LakeSink compaction: unorderable sort-key type $other")
-                }
-              final class Cursor(val fileIdx: Int, rel: String) {
-                private val vec = dels.getOrElse(rel, Array.empty[Long])
-                private val in = new java.io.BufferedReader(new java.io.InputStreamReader(
-                  new GZIPInputStream(new BufferedInputStream(
-                    Files.newInputStream(Paths.get(path).resolve(rel)))),
-                  java.nio.charset.StandardCharsets.UTF_8))
-                private val myParser =
-                  new JsonLineParser(dataSchema, evoAliases, evoIgnored, evoDefaults)
-                val parsedArr = new Array[Any](dataSchema.length)
-                val rowView = new org.apache.spark.sql.catalyst.expressions.GenericInternalRow(parsedArr)
-                var line: String = _
-                private var pos = -1L
-                private var di = 0
-                def advance(): Boolean = {
-                  while (true) {
-                    line = in.readLine()
-                    if (line == null) { in.close(); return false }
-                    pos += 1
-                    while (di < vec.length && vec(di) < pos) di += 1
-                    if (di >= vec.length || vec(di) != pos) {
-                      myParser.parse(line, parsedArr)
-                      return true
-                    }
-                  }
-                  false // unreachable
-                }
-                def close(): Unit = in.close()
-              }
-              val cmp = new java.util.Comparator[Cursor] {
-                override def compare(x: Cursor, y: Cursor): Int = {
-                  var k = 0
-                  while (k < keyIdx.length) {
-                    val c = cmpVal(keyTypes(k),
-                      x.parsedArr(keyIdx(k)), y.parsedArr(keyIdx(k)))
-                    if (c != 0) return c
-                    k += 1
-                  }
-                  java.lang.Integer.compare(x.fileIdx, y.fileIdx)
-                }
-              }
-              val heap = new java.util.PriorityQueue[Cursor](rels.size.max(1), cmp)
-              val cursors = rels.sorted.zipWithIndex
-                .map { case (rel, fi) => new Cursor(fi, rel) }
-              try {
-                cursors.foreach(c => if (c.advance()) heap.add(c))
-                while (!heap.isEmpty) {
-                  val c = heap.poll()
-                  os.write((c.line + "\n").getBytes(
-                    java.nio.charset.StandardCharsets.UTF_8))
-                  liveRows += 1
-                  if (materialize) {
-                    var t = 0
-                    while (t < trackers.length) {
-                      if (trackers(t).isDefined) {
-                        if (c.rowView.isNullAt(t)) trackers(t).get.nullSeen()
-                        else trackers(t).get.update(c.rowView, t)
-                      }
-                      t += 1
-                    }
-                  }
-                  if (c.advance()) heap.add(c)
-                }
-              } finally cursors.foreach(c =>
-                try c.close() catch { case _: java.io.IOException => () })
-            case None => rels.sorted.foreach { rel =>
-              if (materialize) {
-                val vec = dels.getOrElse(rel, Array.empty[Long])
-                val in = new java.io.BufferedReader(new java.io.InputStreamReader(
-                  new GZIPInputStream(new BufferedInputStream(
-                    Files.newInputStream(Paths.get(path).resolve(rel)))),
-                  java.nio.charset.StandardCharsets.UTF_8))
-                try {
-                  var pos = 0L
-                  var di = 0
-                  var line = in.readLine()
-                  while (line != null) {
-                    while (di < vec.length && vec(di) < pos) di += 1
-                    if (di >= vec.length || vec(di) != pos) {
-                      os.write((line + "\n").getBytes(
-                        java.nio.charset.StandardCharsets.UTF_8))
-                      liveRows += 1
-                      parser.parse(line, parsed)
-                      var c = 0
-                      while (c < trackers.length) {
-                        if (trackers(c).isDefined) {
-                          if (row.isNullAt(c)) trackers(c).get.nullSeen()
-                          else trackers(c).get.update(row, c)
-                        }
-                        c += 1
-                      }
-                    }
-                    pos += 1
-                    line = in.readLine()
-                  }
-                } finally in.close()
-              } else { // fast path: verbatim gzip-member byte copy
-                val is = new GZIPInputStream(new BufferedInputStream(
-                  Files.newInputStream(Paths.get(path).resolve(rel))))
-                try {
-                  var n = is.read(buf)
-                  while (n >= 0) { if (n > 0) os.write(buf, 0, n); n = is.read(buf) }
-                } finally is.close()
-              }
+        val liveRows = try {
+          if (!materialize && gSort.isEmpty) {
+            // vector-free concatenation: each member's bytes verbatim
+            files.foreach { rel =>
+              val in = LakeLineCursor.open(Paths.get(path).resolve(rel))
+              try in.transferTo(os) finally in.close()
             }
+            0L
+          } else {
+            // the K-WAY MERGE orders by Spark's own ascending (nulls
+            // first) order on the claimed key — the order the `sortBy`
+            // writers produced, so the output stays Spark-sorted
+            val key = gSort.map { case (_, liveCols) =>
+              new InterpretedOrdering(liveCols.map { c =>
+                val k = dataSchema.fieldIndex(c)
+                SortOrder(BoundReference(k, dataSchema(k).dataType, nullable = true),
+                  Ascending)
+              })
+            }
+            val w = new java.io.BufferedWriter(
+              new java.io.OutputStreamWriter(os, java.nio.charset.StandardCharsets.UTF_8))
+            val n = mergeLines(files.map(Paths.get(path).resolve(_)),
+              files.map(dels.getOrElse(_, Array.empty[Long])), key,
+              new JsonLineParser(dataSchema, evoAliases, evoIgnored, evoDefaults),
+              dataSchema.length, trackers, w)
+            w.flush()
+            n
           }
         } finally os.close()
         Files.move(out, LakeSinkFiles.stagingDir(path).resolve(stagedRel),
@@ -451,27 +308,6 @@ object LakeMaintenance {
     // vectors): exact live-row count + re-derived stats blob
     val fresh: Map[String, (Long, String)] =
       staged.collect { case (n, Some(cs)) => n -> cs }.toMap
-    // conflict checks BEFORE any mutation: compaction's group listing AND
-    // its vector snapshot are minutes stale by now. Two independent
-    // races: a concurrent commit REWROTE an original (appends never
-    // conflict; DML/another compaction does — requireAllLive), or a
-    // concurrent merge-on-read DELETE added vectors to one WITHOUT
-    // touching it (requireUnchanged against the `dels` snapshot the
-    // materialize pass filtered with — rewriting survivors from the
-    // stale vector set would silently resurrect the concurrently-deleted
-    // rows, and retire()'s vector consolidation would drop their fresh
-    // vector entries). Loser aborts loudly, table untouched, staged
-    // merges swept.
-    try {
-      LakeSinkFiles.requireAllLive(path,
-        groups.flatMap(_._2).map(rel => root.resolve(rel).toString), "compaction")
-      LakeSinkDeletes.requireUnchanged(path, groups.flatMap(_._2), dels,
-        "compaction")
-    } catch { case e: java.util.ConcurrentModificationException =>
-      LakeSinkFiles.discard(path, stagedNames)
-      throw e
-    }
-    LakeSinkFiles.promote(path, stagedNames)
     // merged facts per output file (staged in group order):
     //  - row counts: a MATERIALIZED group records its exact recount; a
     //    vector-free group carries the sum of the originals' counts
@@ -500,41 +336,106 @@ object LakeMaintenance {
             .map(name -> _).toMap,
           sc.map { case (recorded, _) => name -> recorded }.toMap)
     }.foldLeft(LakeFacts())(_ ++ _)
-    val removed = LakeSinkFiles.retire(path, groups.flatMap(_._2).map(rel =>
-      root.resolve(rel).toString))
-    LakeSinkFiles.recordVersion(path, stagedNames, removed, merged)
+    // the group listing AND the vector snapshot the materialize pass
+    // filtered with are minutes stale by now: commitRewrite checks both
+    // before any mutation (appends never conflict)
+    LakeSinkFiles.commitRewrite(path, groups.flatMap(_._2), dels, stagedNames,
+      merged, "compaction")
     (groups.size, groups.map(_._2.size).sum, stagedNames.size)
   }
 
+  /** Copy the visible lines of `files` (each filtered by its delete
+    * vector) to `out`, feeding every row to `trackers`: a K-WAY MERGE on
+    * `key` when given (inputs are individually sorted by it — sound by
+    * the sort claims' construction — and ties break by file index for
+    * determinism), else the concatenation, which is the same merge
+    * ordered by file index alone, one file open at a time. Returns the
+    * rows written. */
+  private def mergeLines(files: Seq[Path], vectors: Seq[Array[Long]],
+      key: Option[Ordering[InternalRow]], parser: JsonLineParser, width: Int,
+      trackers: Array[Option[LakeSinkStats.ColTracker]], out: java.io.Writer): Long = {
+    final class Input(val idx: Int) {
+      val lines = new LakeLineCursor(files(idx), vectors(idx))
+      val row = new GenericInternalRow(width)
+      def next(): Boolean = lines.next() && { parser.parse(lines.line, row.values); true }
+    }
+    val order: java.util.Comparator[Input] = key match {
+      case Some(k) => (x, y) => {
+        val c = k.compare(x.row, y.row)
+        if (c != 0) c else Integer.compare(x.idx, y.idx)
+      }
+      case None => (x, y) => Integer.compare(x.idx, y.idx)
+    }
+    val heap = new java.util.PriorityQueue[Input](files.size.max(1), order)
+    val opened = scala.collection.mutable.ArrayBuffer.empty[Input]
+    // a keyed merge holds every input open, a concatenation one at a time
+    def fill(): Unit =
+      while (opened.size < files.size && (key.isDefined || heap.isEmpty)) {
+        val in = new Input(opened.size)
+        opened += in
+        if (in.next()) heap.add(in) else in.lines.close()
+      }
+    var rows = 0L
+    try {
+      fill()
+      while (!heap.isEmpty) {
+        val in = heap.poll()
+        out.write(in.lines.line)
+        out.write('\n')
+        rows += 1
+        LakeSinkStats.observe(trackers, in.row)
+        if (in.next()) heap.add(in) else { in.lines.close(); fill() }
+      }
+    } finally opened.foreach(_.lines.close())
+    rows
+  }
+
   /** Z-ORDER rewrite (the Delta `OPTIMIZE … ZORDER BY` / Iceberg
-    * sort-order-rewrite contract): cluster an UNPARTITIONED lake table on
-    * the interleaved-bit order of up to 8 numeric/timestamp columns so
-    * each rewritten file covers a tight axis-aligned box in every
-    * dimension — which is exactly what makes the per-file [lo, hi] stats
+    * sort-order-rewrite contract): cluster a lake table's rows on the
+    * interleaved-bit order of up to 8 numeric/timestamp columns so each
+    * rewritten file covers a tight axis-aligned box in every dimension —
+    * which is exactly what makes the per-file [lo, hi] stats
     * ([[LakeSinkStats]]) selective: a multi-dimensional box filter then
     * opens O(matching files) instead of every file (a 1-D sort gets this
     * for its one column only; bit interleaving shares the win across all
     * of them).
     *
-    * Mechanics: one pass computes per-dimension [min, max]; each row maps
-    * to an 8-bit equal-width bucket per dimension (NULL → bucket 0);
-    * buckets interleave into a single z-value; `repartitionByRange` on
-    * the z-value plus a within-partition sort gives `nFiles` output
-    * tasks, each writing one file over a contiguous z-range — committed
-    * through the ordinary truncating-overwrite protocol (the pre-rewrite
-    * snapshot stays readable until VACUUM; the write itself records the
-    * new files' facts). Equal-width buckets keep the bucketing
-    * a broadcast-free scalar expression; skewed dimensions only loosen
-    * per-file boxes, never correctness, and the range partitioner still
-    * balances ROWS per file by sampling the z-values.
+    * Scope: an unpartitioned table is ONE scope, its whole file list. A
+    * partitioned table needs `partitions` (dir keys → dir values —
+    * compact's WHERE contract, the `OPTIMIZE … WHERE … ZORDER BY`
+    * compose) and rewrites ONLY the matching directories, each into at
+    * most `nFiles` files of its own (z bounds are directory-local, so
+    * each partition's boxes stay tight); untouched partitions' files
+    * survive bit-identically. Identity partition columns are refused as z
+    * dimensions (constant within their directory); the temporal/bucket
+    * transforms' SOURCE columns (`ts` under `days(ts)`) are exactly the
+    * useful ones.
     *
-    * Returns (files before, files after).
+    * Mechanics, per scope directory: one pass computes per-dimension
+    * [min, max]; each row maps to an 8-bit equal-width bucket per
+    * dimension (NULL → bucket 0); buckets interleave into a single
+    * z-value; `repartitionByRange` on the z-value plus a within-partition
+    * sort gives `nFiles` output tasks, each writing one file over a
+    * contiguous z-range into a table-local temp lake that re-declares the
+    * originals' bloom, NDV and histogram coverage. Equal-width buckets
+    * keep the bucketing a broadcast-free scalar expression; skewed
+    * dimensions only loosen per-file boxes, never correctness, and the
+    * range partitioner still balances ROWS per file by sampling the
+    * z-values. The commit is [[LakeSinkFiles.commitRewrite]]: a
+    * concurrent rewrite or merge-on-read DELETE of an original aborts
+    * loudly with the staged files swept; otherwise delete vectors
+    * MATERIALIZE into the rewrite, the originals retire (the pre-rewrite
+    * snapshot stays readable until VACUUM), and the manifest — schema
+    * evolution included — is untouched.
     *
-    * 100 TB story: the rewrite is a full-table shuffle ONCE, after which
-    * every selective read skips; this is the standard amortization
-    * argument for clustering a lake table that serves point/box lookups. */
-  def zorder(spark: SparkSession, path: String, cols: Seq[String],
-      nFiles: Int): (Int, Int) = {
+    * Returns (files before, files after) within the scope.
+    *
+    * 100 TB story: the rewrite is a shuffle of the scope ONCE, after which
+    * every selective read skips; you z-order yesterday's partition when
+    * its stream closes — one partition-sized shuffle, not a table-sized
+    * one, and the rest of the table is not even listed. */
+  def zorder(spark: SparkSession, path: String, cols: Seq[String], nFiles: Int,
+      partitions: Map[String, String] = Map.empty): (Int, Int) = {
     import org.apache.spark.sql.functions._
     require(cols.nonEmpty && cols.size <= 8,
       s"zorder: 1..8 cluster columns, got ${cols.size}")
@@ -542,65 +443,111 @@ object LakeMaintenance {
     val m = LakeManifest.read(path).getOrElse(
       throw new IllegalArgumentException(s"LakeMaintenance: no lake table at $path"))
     val (schema, partCols) = (m.schema, m.partCols)
-    require(partCols.isEmpty,
-      "zorder: partitioned tables cluster within partitions — unsupported; " +
-        "compact() handles per-partition file counts")
+    if (partitions.isEmpty)
+      require(partCols.isEmpty,
+        "zorder: partitioned tables cluster within partitions — give a scope; " +
+          "compact() handles per-partition file counts")
+    else require(partCols.nonEmpty, "zorder: a partition scope needs a partitioned table")
+    val parsed = LakePart.parseAll(partCols)
+    val idCols = parsed.filter(_.isIdentity).map(_.name).toSet
     cols.foreach { c =>
       val f = schema.fields.find(_.name == c).getOrElse(
         throw new IllegalArgumentException(s"zorder: no column $c"))
+      require(!idCols.contains(c),
+        s"zorder: $c is an identity partition column — constant within " +
+          "its directory, nothing to cluster")
       require(f.dataType match {
         case LongType | IntegerType | DoubleType | FloatType | TimestampType => true
         case _ => false
       }, s"zorder: column $c of type ${f.dataType} is not orderable-numeric")
     }
-    val before = committedFileCount(path)
-    val df = spark.read.format(classOf[LakeSink].getName).load(path)
-    // one aggregate for every dimension's [lo, hi]
-    val loHi = df.agg(
-      lit(1).as("_one"),
-      cols.flatMap(c => Seq(min(col(c).cast("double")).as(s"lo_$c"),
-        max(col(c).cast("double")).as(s"hi_$c"))): _*).collect()(0)
+    val dirKeys = parsed.map(_.dirKey).toSet
+    partitions.keys.foreach(k => require(dirKeys.contains(k),
+      s"zorder: $k is not a partition dir key of ${partCols.mkString(",")}"))
+    val root = Paths.get(path)
+    val snap = LakeSinkFiles.latest(path)
+    val dirGroups =
+      if (partCols.isEmpty) Seq("" -> snap.files).filter(_._2.nonEmpty)
+      else scopedDirs(snap, partitions)
+    require(dirGroups.nonEmpty || partitions.isEmpty,
+      s"zorder: no partition directory matches $partitions")
+    val originals = dirGroups.flatMap(_._2)
+    if (originals.isEmpty) return (0, 0)
+    val vNow = snap.version.getOrElse(
+      throw new IllegalStateException(s"zorder: no committed version at $path"))
+    val cover = coverage(decodeStats(snap, originals, schema, m.evolution._1).values)
     val k = cols.size
-    val z = cols.zipWithIndex.map { case (c, d) =>
-      val lo = Option(loHi.getAs[Any](s"lo_$c")).fold(0.0)(_.asInstanceOf[Double])
-      val hi = Option(loHi.getAs[Any](s"hi_$c")).fold(0.0)(_.asInstanceOf[Double])
-      val width = if (hi > lo) (hi - lo) / 256.0 else 1.0
-      val bucket = when(col(c).isNull, lit(0)).otherwise(
-        least(lit(255), greatest(lit(0),
-          floor((col(c).cast("double") - lit(lo)) / lit(width)).cast("int"))))
-      // interleave: bit b of dimension d lands at position b*k + d
-      (0 until 8).map(b =>
-        shiftright(bucket, b).bitwiseAND(lit(1)).cast("long") * lit(1L << (b * k + d)))
-        .reduce(_ + _)
-    }.reduce(_ + _)
-    val clustered = df.withColumn("__graft_z", z)
-      .repartitionByRange(nFiles, col("__graft_z"))
-      .sortWithinPartitions("__graft_z")
-      .drop("__graft_z")
-    clustered.write.format(classOf[LakeSink].getName)
-      .mode("overwrite").save(path)
-    (before, committedFileCount(path))
+    val stagedNames = scala.collection.mutable.ArrayBuffer.empty[String]
+    var addFacts = LakeFacts()
+    dirGroups.zipWithIndex.foreach { case ((_, rels), di) =>
+      // snapshot-read exactly this directory's files at the CURRENT
+      // version — its recorded vectors apply, so the rewrite
+      // materializes survivors (commitRewrite guards the race)
+      val df = spark.read.format(classOf[LakeSink].getName)
+        .option("versionAsOf", vNow.toString)
+        .option("snapshotFiles", rels.mkString("\n")).load(path)
+      // one aggregate for every dimension's [lo, hi]
+      val loHi = df.agg(
+        lit(1).as("_one"),
+        cols.flatMap(c => Seq(min(col(c).cast("double")).as(s"lo_$c"),
+          max(col(c).cast("double")).as(s"hi_$c"))): _*).collect()(0)
+      val z = cols.zipWithIndex.map { case (c, d) =>
+        val lo = Option(loHi.getAs[Any](s"lo_$c")).fold(0.0)(_.asInstanceOf[Double])
+        val hi = Option(loHi.getAs[Any](s"hi_$c")).fold(0.0)(_.asInstanceOf[Double])
+        val width = if (hi > lo) (hi - lo) / 256.0 else 1.0
+        val bucket = when(col(c).isNull, lit(0)).otherwise(
+          least(lit(255), greatest(lit(0),
+            floor((col(c).cast("double") - lit(lo)) / lit(width)).cast("int"))))
+        // interleave: bit b of dimension d lands at position b*k + d
+        (0 until 8).map(b =>
+          shiftright(bucket, b).bitwiseAND(lit(1)).cast("long") * lit(1L << (b * k + d)))
+          .reduce(_ + _)
+      }.reduce(_ + _)
+      // write the clustered directory through the ordinary sink into a
+      // table-local temp lake (same filesystem — staging moves are
+      // renames), under the SAME partition spec so rows land back in
+      // their own k=v directory; distributionMode=none keeps the
+      // z-range tasks as the file layout. Dot-prefixed so the table's
+      // tree walks skip it even if a crash strands it (listCommitted
+      // skips dot-dirs; VACUUM sweeps it); removed in finally
+      val tmpT = root.resolve(s".zorder-$di-${java.util.UUID.randomUUID.toString.take(8)}")
+      try {
+        var w = df.withColumn("__graft_z", z)
+          .repartitionByRange(nFiles, col("__graft_z"))
+          .sortWithinPartitions("__graft_z")
+          .drop("__graft_z")
+          .write.format(classOf[LakeSink].getName).mode("append")
+          .option("partitionCols", partCols.mkString(","))
+          .option("distributionMode", "none")
+        if (cover.bloom.nonEmpty)
+          w = w.option("bloomFilterColumns", cover.bloom.keys.toSeq.sorted.mkString(","))
+            .option("bloomFilterBits", cover.bloom.values.max.toString)
+        if (cover.ndv.nonEmpty)
+          w = w.option("ndvColumns", cover.ndv.toSeq.sorted.mkString(","))
+        if (cover.hist.nonEmpty)
+          w = w.option("histogramColumns", cover.hist.toSeq.sorted.mkString(","))
+        w.save(tmpT.toString)
+        // the temp lake's record carries the rewritten files' facts
+        val tmpSnap = LakeSinkFiles.latest(tmpT.toString)
+        tmpSnap.files.foreach { rel =>
+          val dest = LakeSinkFiles.stagingDir(path).resolve(rel)
+          Option(dest.getParent).foreach(Files.createDirectories(_))
+          Files.move(tmpT.resolve(rel), dest, StandardCopyOption.REPLACE_EXISTING)
+          stagedNames += rel
+        }
+        addFacts = addFacts ++ tmpSnap.facts
+      } finally {
+        if (Files.exists(tmpT)) {
+          val it = Files.walk(tmpT).sorted(java.util.Comparator.reverseOrder()).iterator()
+          while (it.hasNext) Files.deleteIfExists(it.next())
+        }
+      }
+    }
+    LakeSinkFiles.commitRewrite(path, originals, snap.deletes, stagedNames.toSeq,
+      addFacts, "zorder")
+    (originals.size, stagedNames.size)
   }
 
-  /** Partition-scoped Z-ORDER (the `OPTIMIZE … WHERE … ZORDER BY`
-    * compose): rewrite ONLY the partition directories matching
-    * `partitions` (dir keys → dir values — compact's WHERE contract),
-    * z-clustering each matching directory's rows on `cols` into at most
-    * `nFiles` files PER DIRECTORY (z bounds are directory-local, so each
-    * partition's boxes stay tight). Untouched partitions' files survive
-    * bit-identically; the commit is compaction's protocol —
-    * requireAllLive + delete-vector requireUnchanged before any
-    * mutation, then promote/retire/recordVersion — so snapshots stay
-    * readable, vectors MATERIALIZE into the rewrite, and a concurrent
-    * rewrite aborts loudly with the staged files swept. Identity
-    * partition columns are refused as z dimensions (constant within
-    * their directory); the temporal/bucket transforms' SOURCE columns
-    * (`ts` under `days(ts)`) are exactly the useful ones. Returns
-    * (files before, files after) within the scope.
-    *
-    * 100 TB story: you z-order yesterday's partition when its stream
-    * closes — one partition-sized shuffle, not a table-sized one; the
-    * rest of the table is not even listed. */
   /** The record's files grouped by partition DIRECTORY (sorted), kept
     * when the directory carries every `partitions` (dir key → value) pair
     * — the `… WHERE` scope compaction and Z-order share. */
@@ -620,130 +567,21 @@ object LakeMaintenance {
     rels.distinct.flatMap(r => snap.stats.get(r).map(b =>
       r -> LakeSinkStats.decode(b, schema, aliases))).toMap
 
-  def zorder(spark: SparkSession, path: String, cols: Seq[String],
-      nFiles: Int, partitions: Map[String, String]): (Int, Int) = {
-    if (partitions.isEmpty) return zorder(spark, path, cols, nFiles)
-    import org.apache.spark.sql.functions._
-    require(cols.nonEmpty && cols.size <= 8,
-      s"zorder: 1..8 cluster columns, got ${cols.size}")
-    require(nFiles > 0, "zorder: nFiles must be positive")
-    val m = LakeManifest.read(path).getOrElse(
-      throw new IllegalArgumentException(s"LakeMaintenance: no lake table at $path"))
-    val (schema, partCols) = (m.schema, m.partCols)
-    require(partCols.nonEmpty,
-      "zorder: a partition scope needs a partitioned table")
-    val parsed = LakePart.parseAll(partCols)
-    val idCols = parsed.filter(_.isIdentity).map(_.name).toSet
-    cols.foreach { c =>
-      val f = schema.fields.find(_.name == c).getOrElse(
-        throw new IllegalArgumentException(s"zorder: no column $c"))
-      require(!idCols.contains(c),
-        s"zorder: $c is an identity partition column — constant within " +
-          "its directory, nothing to cluster")
-      require(f.dataType match {
-        case LongType | IntegerType | DoubleType | FloatType | TimestampType => true
-        case _ => false
-      }, s"zorder: column $c of type ${f.dataType} is not orderable-numeric")
-    }
-    val dirKeys = parsed.map(_.dirKey).toSet
-    partitions.keys.foreach(k => require(dirKeys.contains(k),
-      s"zorder: $k is not a partition dir key of ${partCols.mkString(",")}"))
-    val root = Paths.get(path)
-    val snap = LakeSinkFiles.latest(path)
-    val dels = snap.deletes
-    val dirGroups = scopedDirs(snap, partitions)
-    require(dirGroups.nonEmpty,
-      s"zorder: no partition directory matches $partitions")
-    val vNow = snap.version.getOrElse(
-      throw new IllegalStateException(s"zorder: no committed version at $path"))
-    // bloom/NDV coverage survives the rewrite like compact's: re-declare
-    // any column the scope's originals carried (at their max bloom size)
-    // as write options on the temp lake — without this the rewrite would
-    // silently strip the stats the table was configured for (review r13)
-    val zDecoded = decodeStats(snap, dirGroups.flatMap(_._2), schema, m.evolution._1)
-    val zBloom: Map[String, Int] = zDecoded.values.flatten.collect {
-      case (n, cs) if cs.bloom.isDefined => n -> cs.bloom.get.length * 8
-    }.groupBy(_._1).map { case (n, ms) => n -> ms.map(_._2).max }
-    val zNdv: Set[String] = zDecoded.values.flatten.collect {
-      case (n, cs) if cs.ndv.isDefined => n
-    }.toSet
-    val k = cols.size
-    val originals = dirGroups.flatMap(_._2)
-    val stagedNames = scala.collection.mutable.ArrayBuffer.empty[String]
-    var addFacts = LakeFacts()
-    dirGroups.zipWithIndex.foreach { case ((_, rels), di) =>
-      // snapshot-read exactly this directory's files at the CURRENT
-      // version — its recorded vectors apply, so the rewrite
-      // materializes survivors (requireUnchanged below guards the race)
-      val df = spark.read.format(classOf[LakeSink].getName)
-        .option("versionAsOf", vNow.toString)
-        .option("snapshotFiles", rels.mkString("\n")).load(path)
-      val loHi = df.agg(
-        lit(1).as("_one"),
-        cols.flatMap(c => Seq(min(col(c).cast("double")).as(s"lo_$c"),
-          max(col(c).cast("double")).as(s"hi_$c"))): _*).collect()(0)
-      val z = cols.zipWithIndex.map { case (c, d) =>
-        val lo = Option(loHi.getAs[Any](s"lo_$c")).fold(0.0)(_.asInstanceOf[Double])
-        val hi = Option(loHi.getAs[Any](s"hi_$c")).fold(0.0)(_.asInstanceOf[Double])
-        val width = if (hi > lo) (hi - lo) / 256.0 else 1.0
-        val bucket = when(col(c).isNull, lit(0)).otherwise(
-          least(lit(255), greatest(lit(0),
-            floor((col(c).cast("double") - lit(lo)) / lit(width)).cast("int"))))
-        (0 until 8).map(b =>
-          shiftright(bucket, b).bitwiseAND(lit(1)).cast("long") * lit(1L << (b * k + d)))
-          .reduce(_ + _)
-      }.reduce(_ + _)
-      // write the clustered directory through the ordinary sink into a
-      // table-local temp lake (same filesystem — staging moves are
-      // renames), under the SAME partition spec so rows land back in
-      // their own k=v directory; distributionMode=none keeps the
-      // z-range tasks as the file layout
-      // dot-prefixed so the parent table's tree walks skip it even if a
-      // crash strands it (listCommitted skips dot-dirs); swept in finally
-      val tmpT = root.resolve(s".zorder-$di-${java.util.UUID.randomUUID.toString.take(8)}")
-      try {
-        var w = df.withColumn("__graft_z", z)
-          .repartitionByRange(nFiles, col("__graft_z"))
-          .sortWithinPartitions("__graft_z")
-          .drop("__graft_z")
-          .write.format(classOf[LakeSink].getName).mode("append")
-          .option("partitionCols", partCols.mkString(","))
-          .option("distributionMode", "none")
-        if (zBloom.nonEmpty)
-          w = w.option("bloomFilterColumns", zBloom.keys.toSeq.sorted.mkString(","))
-            .option("bloomFilterBits", zBloom.values.max.toString)
-        if (zNdv.nonEmpty)
-          w = w.option("ndvColumns", zNdv.toSeq.sorted.mkString(","))
-        w.save(tmpT.toString)
-        // the temp lake's record carries the rewritten files' facts
-        val tmpSnap = LakeSinkFiles.latest(tmpT.toString)
-        tmpSnap.files.foreach { rel =>
-          val dest = LakeSinkFiles.stagingDir(path).resolve(rel)
-          Option(dest.getParent).foreach(Files.createDirectories(_))
-          Files.move(tmpT.resolve(rel), dest, StandardCopyOption.REPLACE_EXISTING)
-          stagedNames += rel
-        }
-        addFacts = addFacts ++ tmpSnap.facts
-      } finally {
-        if (Files.exists(tmpT)) {
-          val it = Files.walk(tmpT).sorted(java.util.Comparator.reverseOrder()).iterator()
-          while (it.hasNext) Files.deleteIfExists(it.next())
-        }
-      }
-    }
-    try {
-      LakeSinkFiles.requireAllLive(path,
-        originals.map(rel => root.resolve(rel).toString), "zorder")
-      LakeSinkDeletes.requireUnchanged(path, originals, dels, "zorder")
-    } catch { case e: java.util.ConcurrentModificationException =>
-      LakeSinkFiles.discard(path, stagedNames.toSeq)
-      throw e
-    }
-    LakeSinkFiles.promote(path, stagedNames.toSeq)
-    val removed = LakeSinkFiles.retire(path,
-      originals.map(rel => root.resolve(rel).toString))
-    LakeSinkFiles.recordVersion(path, stagedNames.toSeq, removed, addFacts)
-    (originals.size, stagedNames.size)
+  /** Stats coverage beyond bounds: bloom columns with their filter size,
+    * NDV and histogram columns. */
+  private case class Coverage(bloom: Map[String, Int], ndv: Set[String], hist: Set[String])
+
+  /** The coverage some files' recorded stats carry — the union, blooms
+    * at their largest size. A rewrite re-declares its originals' coverage,
+    * so routine maintenance never strips the stats any write or ANALYZE
+    * gave a file; ANALYZE extends each file's own. */
+  private def coverage(files: Iterable[LakeSinkStats.FileStats]): Coverage = {
+    val cs = files.flatten
+    Coverage(
+      cs.collect { case (n, c) if c.bloom.isDefined => n -> c.bloom.get.length * 8 }
+        .groupMapReduce(_._1)(_._2)(math.max),
+      cs.collect { case (n, c) if c.ndv.isDefined => n }.toSet,
+      cs.collect { case (n, c) if c.hist.isDefined => n }.toSet)
   }
 
   /** SHALLOW CLONE (the Delta `CREATE TABLE … SHALLOW CLONE` role): a
@@ -768,45 +606,33 @@ object LakeMaintenance {
     * count.
     *
     * 100 TB story: cloning is O(#live files) driver-side metadata ops
-    * and ZERO data bytes — the branch-for-experiment primitive. */
-  def clone(spark: SparkSession, srcPath: String, dstPath: String): Int =
-    clone(spark, srcPath, dstPath, None)
-
-  /** `versionAsOf = Some(v)` clones the source's RECORDED version v
+    * and ZERO data bytes — the branch-for-experiment primitive.
+    *
+    * `versionAsOf = Some(v)` clones the source's RECORDED version v
     * instead of the live state (branch-from-history): the file list,
-    * schema, delete vectors, and facts are the version
-    * record's own, names resolve live-first then `_graft_retired/`
-    * (a vacuumed file refuses loudly — no silently partial clone), and
-    * the clone's links pin the historical inodes so a LATER source
-    * vacuum cannot take the branch down either. Snapshot clones omit
-    * CHECK constraints — they are the LIVE table's data contract, and v's
-    * rows were never validated against checks added after v. */
+    * schema, delete vectors, and facts are the version record's own,
+    * names resolve through [[LakeSinkFiles.resolve]] (a vacuumed file
+    * refuses loudly — no silently partial clone), and the clone's links
+    * pin the historical inodes so a LATER source vacuum cannot take the
+    * branch down either. Snapshot clones omit CHECK constraints — they
+    * are the LIVE table's data contract, and v's rows were never
+    * validated against checks added after v. */
   def clone(spark: SparkSession, srcPath: String, dstPath: String,
-      versionAsOf: Option[Long]): Int = {
+      versionAsOf: Option[Long] = None): Int = {
     val src = LakeManifest.read(srcPath).getOrElse(
       throw new IllegalArgumentException(s"LakeMaintenance: no lake table at $srcPath"))
     require(LakeManifest.read(dstPath).isEmpty,
       s"LakeMaintenance: clone destination $dstPath already holds a table")
     LakeSinkFiles.ensureDirs(dstPath)
-    val srcRoot = Paths.get(srcPath)
     val dstRoot = Paths.get(dstPath)
-    val retired = LakeSinkFiles.retiredDir(srcPath)
     // files, vectors and facts come from ONE record: the requested
     // version's, or the latest for a live clone
     val snap = versionAsOf.map(LakeSinkFiles.snapshot(srcPath, _))
       .getOrElse(LakeSinkFiles.latest(srcPath))
     val files = snap.files.sorted
     files.foreach { rel =>
-      val live = srcRoot.resolve(rel)
-      val from =
-        if (Files.isRegularFile(live)) live
-        else {
-          val r = retired.resolve(rel)
-          require(Files.isRegularFile(r),
-            s"LakeMaintenance: clone source file $rel of version " +
-              s"${versionAsOf.getOrElse("live")} was vacuumed from $srcPath")
-          r
-        }
+      val from = LakeSinkFiles.resolve(srcPath, rel,
+        s"clone source (version ${versionAsOf.getOrElse("live")}) file")
       val to = dstRoot.resolve(rel)
       Option(to.getParent).foreach(Files.createDirectories(_))
       try Files.createLink(to, from)
@@ -854,27 +680,23 @@ object LakeMaintenance {
     * 100 TB story: vacuum cost is O(retired files) deletes + a set
     * membership against the horizon's recorded manifests — the standard
     * expire-snapshots shape; the horizon bounds both storage held for
-    * time travel and the work to reclaim it. */
-  def vacuum(path: String): (Int, Int) = vacuum(path, None)
-
-  def vacuum(path: String, keepLast: Option[Int]): (Int, Int) =
-    vacuum(path, keepLast, None)
-
-  /** `olderThanMillis` is the RETAIN form real schedules run (Delta's
+    * time travel and the work to reclaim it.
+    *
+    * `olderThanMillis` is the RETAIN form real schedules run (Delta's
     * `VACUUM … RETAIN n HOURS`): a version record drops only when its
     * commit instant (record mtime, the `timestampAsOf` convention) is
     * before the cutoff — AND it is not among the `keepLast` newest (the
     * newest record never drops). The two horizons compose: a record
     * survives if EITHER keeps it. */
-  def vacuum(path: String, keepLast: Option[Int],
-      olderThanMillis: Option[Long]): (Int, Int) = {
+  def vacuum(path: String, keepLast: Option[Int] = None,
+      olderThanMillis: Option[Long] = None): (Int, Int) = {
     val versions = LakeSinkFiles.listVersions(path)
     val keepN = math.max(keepLast.getOrElse(1), 1)
     val ageKept: Set[Long] = olderThanMillis match {
       case None => Set.empty
       case Some(cutoff) => versions.filter { v =>
         Files.getLastModifiedTime(
-          LakeSinkFiles.versionsDir(path).resolve(f"v$v%09d")).toMillis >= cutoff
+          LakeSinkFiles.versionsDir(path).resolve(LakeSinkFiles.versionName(v))).toMillis >= cutoff
       }.toSet
     }
     // TAGGED versions are part of every keep-set: the tag's record AND
@@ -911,7 +733,7 @@ object LakeMaintenance {
       }
     }
     drop.foreach { v =>
-      Files.deleteIfExists(LakeSinkFiles.versionsDir(path).resolve(f"v$v%09d"))
+      Files.deleteIfExists(LakeSinkFiles.versionsDir(path).resolve(LakeSinkFiles.versionName(v)))
     }
     // crashed reservations (zero-length version markers whose commit never
     // finished) are garbage with no readable history behind them — but
@@ -936,7 +758,7 @@ object LakeMaintenance {
           Files.deleteIfExists(p)
       }
     }
-    // a hard-killed scoped zorder strands its `.zorder-*` temp lake under
+    // a hard-killed zorder strands its `.zorder-*` temp lake under
     // the table root (dot-dirs are invisible to every reader by design —
     // review r13); same age gate, the rewrite is minutes of work at most
     val rootDir = Paths.get(path)
@@ -1029,16 +851,16 @@ object LakeMaintenance {
     // mid-loop would leave earlier files moved back with no version
     // recorded, and a retry would then trip the live-collision guard,
     // leaving the version unrestorable without manual cleanup
-    returned.foreach { rel =>
-      require(Files.isRegularFile(LakeSinkFiles.retiredDir(path).resolve(rel)),
+    val moves = returned.map(rel =>
+      (rel, LakeSinkFiles.retiredDir(path).resolve(rel), root.resolve(rel)))
+    moves.foreach { case (rel, from, to) =>
+      require(Files.isRegularFile(from),
         s"LakeMaintenance.restore: file $rel of version $version was " +
           s"vacuumed from $path — its bytes are gone, the version is not restorable")
-      require(!Files.exists(root.resolve(rel)),
+      require(!Files.exists(to),
         s"LakeMaintenance.restore: live name collision for $rel")
     }
-    returned.foreach { rel =>
-      val from = LakeSinkFiles.retiredDir(path).resolve(rel)
-      val to = root.resolve(rel)
+    moves.foreach { case (_, from, to) =>
       Option(to.getParent).foreach(Files.createDirectories(_))
       Files.move(from, to)
     }
@@ -1258,46 +1080,27 @@ object LakeMaintenance {
     // file must not LOSE parts another write gave it (the compaction
     // materialize rule); a REQUESTED bloom column always takes the
     // requested size (resize semantics), other columns keep theirs
-    val jobs: Seq[(String, Map[String, Int], Set[String], Set[String])] =
-      needy.map { rel =>
-        val d = decoded.getOrElse(rel, Map.empty: LakeSinkStats.FileStats)
-        val bl = d.collect {
-          case (n, cs) if cs.bloom.isDefined => n -> cs.bloom.get.length * 8
-        } ++ bloomCols.map(_ -> bloomBits)
-        val nd = d.collect { case (n, cs) if cs.ndv.isDefined => n }.toSet ++ ndvCols
-        val hs = d.collect { case (n, cs) if cs.hist.isDefined => n }.toSet ++ histCols
-        (rel, bl.toMap, nd, hs)
-      }
+    val jobs: Seq[(String, Coverage)] = needy.map { rel =>
+      val c = coverage(decoded.get(rel))
+      rel -> Coverage(c.bloom ++ bloomCols.map(_ -> bloomBits), c.ndv ++ ndvCols,
+        c.hist ++ histCols)
+    }
     // one linear pass per needy file, one task each (compaction's layout)
     val fresh: Seq[(String, (Long, String))] = spark.sparkContext
       .parallelize(jobs, jobs.size)
-      .map { case (rel, bl, nd, hs) =>
-        val trackers = LakeSinkStats.trackers(dataSchema, bl, nd, hs)
+      .map { case (rel, cover) =>
+        val trackers = LakeSinkStats.trackers(dataSchema, cover.bloom, cover.ndv,
+          cover.hist)
         val parser = new JsonLineParser(dataSchema, evoAliases, evoIgnored,
           evoDefaults)
-        val parsed = new Array[Any](dataSchema.length)
-        val row = new org.apache.spark.sql.catalyst.expressions.GenericInternalRow(parsed)
+        val row = new GenericInternalRow(dataSchema.length)
         var rows = 0L
-        val in = new java.io.BufferedReader(new java.io.InputStreamReader(
-          new GZIPInputStream(new BufferedInputStream(
-            Files.newInputStream(Paths.get(path).resolve(rel)))),
-          java.nio.charset.StandardCharsets.UTF_8))
-        try {
-          var line = in.readLine()
-          while (line != null) {
-            parser.parse(line, parsed)
-            rows += 1
-            var c = 0
-            while (c < trackers.length) {
-              if (trackers(c).isDefined) {
-                if (row.isNullAt(c)) trackers(c).get.nullSeen()
-                else trackers(c).get.update(row, c)
-              }
-              c += 1
-            }
-            line = in.readLine()
-          }
-        } finally in.close()
+        val lines = new LakeLineCursor(Paths.get(path).resolve(rel))
+        try while (lines.next()) {
+          parser.parse(lines.line, row.values)
+          rows += 1
+          LakeSinkStats.observe(trackers, row)
+        } finally lines.close()
         rel -> ((rows, LakeSinkStats.blobOf(trackers)))
       }.collect().toSeq
     // amend the LATEST record in place (no new version): it keeps only

@@ -120,7 +120,7 @@ class LakeCommitInvariantSpec extends GraftSpec {
       spark.sql("DELETE FROM graft.lake.md WHERE id = 11")
       LakeMaintenance.compact(spark, s"$lake/md")
       assertInvariant(lake, "md")
-      // z-order: whole table (an overwrite) and partition-scoped
+      // z-order: whole table and partition-scoped, both a rewrite commit
       LakeMaintenance.zorder(spark, s"$lake/ow", Seq("id"), 2)
       assertInvariant(lake, "ow")
       LakeMaintenance.zorder(spark, s"$lake/ap", Seq("id"), 2, Map("p" -> "0"))

@@ -6,7 +6,7 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 import graft.operators.TempLakes
-import graft.sources.{GraftCatalog, LakeMaintenance, LakeSinkStats}
+import graft.sources.{GraftCatalog, LakeMaintenance, LakeSinkFiles, LakeSinkStats}
 
 /** Per-file column [lo, hi] statistics ([[graft.sources.LakeSinkStats]]):
   * commit-time collection, stats-based FILE SKIPPING under residual data
@@ -543,6 +543,22 @@ class LakeStatsSpec extends GraftSpec {
     }
   }
 
+  /** Every one of `rels` (files of the table's latest record) still
+    * carries the coverage the zorder specs write with: a 2048-bit bloom
+    * on `id`, NDV registers on `x`, a histogram on `y`. */
+  private def assertCoverage(path: String, rels: Seq[String]): Unit = {
+    val snap = LakeSinkFiles.latest(path)
+    assert(rels.nonEmpty)
+    rels.foreach { rel =>
+      val cs = snap.stats.get(rel).map(LakeSinkStats.decode(_, snap.schema))
+        .getOrElse(fail(s"$rel: no recorded stats"))
+      assert(cs.get("id").flatMap(_.bloom).map(_.length * 8).contains(2048),
+        s"$rel: the rewrite must keep the 2048-bit bloom on id")
+      assert(cs.get("x").exists(_.ndv.isDefined), s"$rel: the rewrite must keep x's NDV")
+      assert(cs.get("y").exists(_.hist.isDefined), s"$rel: the rewrite must keep y's histogram")
+    }
+  }
+
   test("zorder clusters two dimensions: a box filter skips most files, rows unchanged") {
     withLake { lake =>
       import spark.implicits._
@@ -550,7 +566,10 @@ class LakeStatsSpec extends GraftSpec {
       // covers the FULL y range, so a y filter alone can skip nothing
       val grid = (0 until 4096).map { i => (i.toLong, (i / 64).toLong, (i % 64).toLong) }
         .toDF("id", "x", "y")
-      grid.repartitionByRange(8, col("id")).writeTo("graft.lake.zo").create()
+      // per-write stats coverage the rewrite must carry over
+      grid.repartitionByRange(8, col("id")).writeTo("graft.lake.zo")
+        .option("bloomFilterColumns", "id").option("bloomFilterBits", "2048")
+        .option("ndvColumns", "x").option("histogramColumns", "y").create()
       val box = col("x").between(0, 15) && col("y").between(0, 15)
       val beforeRows = spark.table("graft.lake.zo").filter(box)
         .collect().map(_.toString).sorted.toSeq
@@ -560,6 +579,7 @@ class LakeStatsSpec extends GraftSpec {
 
       val (fin, fout) = LakeMaintenance.zorder(spark, s"$lake/zo", Seq("x", "y"), 8)
       assert(fin == 8 && fout == 8, s"zorder rewrote $fin->$fout files")
+      assertCoverage(s"$lake/zo", LakeSinkFiles.latest(s"$lake/zo").files)
       assert(spark.table("graft.lake.zo").collect().map(_.toString).sorted.toSeq == all,
         "zorder must not change a row")
       val q = spark.table("graft.lake.zo").filter(box)
@@ -567,10 +587,42 @@ class LakeStatsSpec extends GraftSpec {
       assert(skippedOf(plan) >= 4,
         s"z-ordered files must make the 1/16-area box skip most files:\n$plan")
       assert(q.collect().map(_.toString).sorted.toSeq == beforeRows)
-      // pre-rewrite snapshot still readable (overwrite retires, not deletes)
+      // pre-rewrite snapshot still readable (the rewrite retires, not deletes)
       val vs = graft.sources.LakeSinkFiles.listVersions(s"$lake/zo")
       assert(spark.sql(s"SELECT * FROM graft.lake.zo VERSION AS OF ${vs.init.last}")
         .count() == 4096)
+    }
+  }
+
+  test("whole-table zorder on an evolved table: live and pre-zorder snapshot rows unchanged") {
+    withLake { lake =>
+      import spark.implicits._
+      def canon(df: DataFrame): Seq[String] = df.collect().map(_.toString).sorted.toSeq
+      val path = s"$lake/ze"
+      (0 until 64).map(i => (i.toLong, (i / 8).toLong, (i % 8).toLong)).toDF("id", "x", "y")
+        .repartitionByRange(4, col("id")).writeTo("graft.lake.ze").create()
+      spark.sql("ALTER TABLE graft.lake.ze RENAME COLUMN y TO w")
+      spark.sql("ALTER TABLE graft.lake.ze ADD COLUMN tag STRING DEFAULT 'old'")
+      spark.sql("INSERT INTO graft.lake.ze VALUES (64, 8, 0, 'new'), (65, 8, 1, NULL)")
+      val live = canon(spark.table("graft.lake.ze"))
+      val vBefore = LakeSinkFiles.listVersions(path).last
+      def atBefore = canon(spark.sql(s"SELECT * FROM graft.lake.ze VERSION AS OF $vBefore"))
+      val snapBefore = atBefore
+      assert(snapBefore == live)
+      val nBefore = LakeSinkFiles.latest(path).files.size
+      val (fin, fout) = LakeMaintenance.zorder(spark, path, Seq("x", "w"), 2)
+      assert(fin == nBefore && fout == 2, s"zorder rewrote $fin->$fout files")
+      assert(canon(spark.table("graft.lake.ze")) == live, "zorder must not change a live row")
+      assert(atBefore == snapBefore, "the pre-zorder version must read as before")
+      // the rewrite keeps the table's evolution state: the rename alias
+      // and the default still serve the pre-rename snapshot and new writes
+      val m = graft.sources.LakeManifest.read(path).get
+      assert(m.renames.nonEmpty && m.defaults.map(_._1) == Seq("tag"), m.toString)
+      val v1 = spark.sql("SELECT * FROM graft.lake.ze VERSION AS OF 1")
+      assert(v1.columns.toSeq == Seq("id", "x", "y") && v1.count() == 64)
+      spark.sql("INSERT INTO graft.lake.ze (id, x, w) VALUES (66, 9, 2)")
+      assert(spark.table("graft.lake.ze").filter(col("id") === 66)
+        .select("tag").collect().head.getString(0) == "old")
     }
   }
 
@@ -585,7 +637,9 @@ class LakeStatsSpec extends GraftSpec {
       }.toDF("p", "id", "x", "y")
       grid.repartitionByRange(8, col("p"), col("id"))
         .writeTo("graft.lake.zp").partitionedBy(col("p"))
-        .option("distributionMode", "none").create()
+        .option("distributionMode", "none")
+        .option("bloomFilterColumns", "id").option("bloomFilterBits", "2048")
+        .option("ndvColumns", "x").option("histogramColumns", "y").create()
       def files(p: Int): Seq[(String, Seq[Byte])] = {
         val d = java.nio.file.Paths.get(s"$lake/zp/p=$p")
         val it = Files.list(d).iterator()
@@ -607,6 +661,8 @@ class LakeStatsSpec extends GraftSpec {
       val (fin, fout) = LakeMaintenance.zorder(spark, s"$lake/zp",
         Seq("x", "y"), 4, Map("p" -> "1"))
       assert(fin >= 2 && fout >= 2, s"scope rewrote $fin->$fout files")
+      assertCoverage(s"$lake/zp",
+        LakeSinkFiles.latest(s"$lake/zp").files.filter(_.startsWith("p=1/")))
       // untouched partition: files BYTE-identical
       assert(files(0) == p0Before, "p=0 must survive bit-identically")
       // rows unchanged table-wide
