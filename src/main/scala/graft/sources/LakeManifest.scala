@@ -91,8 +91,7 @@ private[graft] object LakeManifest {
     def opt(k: String, present: Boolean, v: => String) =
       if (present) Seq(k -> v) else Seq.empty
     val json = LakeSinkFiles.renderFields(
-      Seq("schema" -> m.schema.toDDL, "partitionCols" -> m.partCols.mkString(",")) ++
-        evolutionFields(m.renames, m.dropped) ++
+      layoutFields(m) ++
         opt("constraints", m.constraints.nonEmpty,
           list(m.constraints.map { case (n, sql) => Seq(n, sql) })) ++
         opt("partColsHistory", m.partHistory.nonEmpty, m.partHistory.mkString(";")) ++
@@ -105,16 +104,20 @@ private[graft] object LakeManifest {
       StandardCopyOption.ATOMIC_MOVE)
   }
 
-  /** The optional `renames`/`dropped` fields — shared by the manifest and
-    * the version records, which snapshot the evolution state. */
-  private[sources] def evolutionFields(renames: Map[String, Seq[String]],
-      dropped: Seq[String]): Seq[(String, String)] =
-    (if (renames.isEmpty) Nil
-    else Seq("renames" -> renames.toSeq.sortBy(_._1)
-      .map { case (l, ps) => s"$l=${ps.mkString("|")}" }.mkString(";"))) ++
-      (if (dropped.isEmpty) Nil else Seq("dropped" -> dropped.mkString(",")))
+  /** The schema, partitioning and optional `renames`/`dropped` fields —
+    * shared by the manifest and the version records, which snapshot the
+    * evolution state. Column defaults live in the `defaults` field: a
+    * frame's CURRENT_DEFAULT metadata would render as `DEFAULT …`, which
+    * `StructType.fromDDL` rejects (EXISTS_DEFAULT never renders). */
+  private[sources] def layoutFields(m: LakeManifest): Seq[(String, String)] =
+    Seq("schema" -> StructType(m.schema.fields.map(_.clearCurrentDefaultValue())).toDDL,
+      "partitionCols" -> m.partCols.mkString(",")) ++
+      (if (m.renames.isEmpty) Nil
+      else Seq("renames" -> m.renames.toSeq.sortBy(_._1)
+        .map { case (l, ps) => s"$l=${ps.mkString("|")}" }.mkString(";"))) ++
+      (if (m.dropped.isEmpty) Nil else Seq("dropped" -> m.dropped.mkString(",")))
 
-  /** [[evolutionFields]] read back from a manifest or version record. */
+  /** [[layoutFields]]' evolution state read back from a manifest or version record. */
   private[sources] def renamesOf(json: String,
       where: String): (Map[String, Seq[String]], Seq[String]) =
     (LakeSinkFiles.jsonFieldOpt(json, "renames", where).map { body =>

@@ -1167,11 +1167,8 @@ private[graft] object LakeSinkFiles {
     val deletes = LakeSinkDeletes.read(path).filter { case (r, _) => relSet.contains(r) }
     // schema-evolution state rides into the record: snapshot reads decode
     // old files under the aliases of THEIR commit
-    writeRecord(path, v,
-      Seq("schema" -> m.schema.toDDL, "partitionCols" -> m.partCols.mkString(",")) ++
-        LakeManifest.evolutionFields(m.renames, m.dropped),
-      deletes, (base.map(_.facts).getOrElse(LakeFacts()) ++ facts).only(relSet),
-      rels, None)
+    writeRecord(path, v, LakeManifest.layoutFields(m), deletes,
+      (base.map(_.facts).getOrElse(LakeFacts()) ++ facts).only(relSet), rels, None)
     v
   }
 

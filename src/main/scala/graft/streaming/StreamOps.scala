@@ -102,8 +102,8 @@ case class HllEstimate(key: String, n_rows: Long, estimate: Double)
   *   - P1/P2/P3 JSON round trip + malformed-drop
   *     (`realtime_inference.py:101-114`): to_json / from_json PERMISSIVE +
   *     null-filter — the stream survives bad records.
-  *   - S4 router (`phase2-iot-kinesis.yaml:61-66`): identity select +
-  *     repartition by machineId (per-key ordering at the shuffle boundary).
+  *   - S4 router (`phase2-iot-kinesis.yaml:61-66`): the IoT rule's
+  *     `SELECT *`; each keyed operator downstream brings its own exchange.
   *   - S5 Firehose sink (`phase3-kinesis-s3.yaml:84-89`): 300-s
   *     processing-time trigger, gzip, time-bucketed partition paths,
   *     checkpointed (at-least-once, matching Firehose semantics).
@@ -146,19 +146,19 @@ object StreamOps {
       col("machineId"), col("temperature"),
       col("vibration"), col("timestamp"))).as("value"))
 
-  /** P2/P3 — parse, validate, drop malformed; stream stays alive. */
+  /** P2/P3 — parse each frame once, validate, drop malformed; the stream
+    * stays alive. A null or unparseable frame inlines to a row of nulls,
+    * which the temperature/vibration null filter drops. */
   def parseWire(df: DataFrame): DataFrame =
-    df.select(from_json(col("value"), telemetrySchema).as("p"))
-      .filter(col("p").isNotNull &&
-        col("p.temperature").isNotNull && col("p.vibration").isNotNull)
-      .select(col("p.machineId").as("machineId"),
-        col("p.temperature").as("temperature"),
-        col("p.vibration").as("vibration"),
-        timestamp_seconds(col("p.timestamp")).as("ts"))
+    // the Generate is a barrier: the optimizer inlines from_json into pushed filters
+    df.select(inline(array(from_json(col("value"), telemetrySchema))))
+      .filter(col("temperature").isNotNull && col("vibration").isNotNull)
+      .select(col("machineId"), col("temperature"), col("vibration"),
+        timestamp_seconds(col("timestamp")).as("ts"))
 
-  /** S4 — router: identity projection + per-key partitioning. */
-  def route(df: DataFrame): DataFrame =
-    df.select(col("*")).repartition(col("machineId"))
+  /** S4 — router: the IoT rule's identity projection. Key co-location is
+    * left to each keyed operator's own exchange. */
+  def route(df: DataFrame): DataFrame = df.select(col("*"))
 
   /** M5 + P6 — threshold scoring + alert classification. */
   def score(df: DataFrame): DataFrame = {

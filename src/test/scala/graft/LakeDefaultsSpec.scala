@@ -140,6 +140,31 @@ class LakeDefaultsSpec extends GraftSpec {
     }
   }
 
+  test("truncating path overwrite with a frame read from a defaulted table stays readable") {
+    import spark.implicits._
+    val lake = TempLakes.dir("graft_def_overwrite")
+    withCatalog(lake) {
+      spark.sql("CREATE TABLE graft.lake.d8 (id BIGINT, tag STRING DEFAULT 'a')")
+      spark.sql("INSERT INTO graft.lake.d8 VALUES (1, 'x'), (2, NULL)")
+      spark.sql("INSERT INTO graft.lake.d8 (id) VALUES (3)")
+      def rows: Seq[(Long, String)] = spark.table("graft.lake.d8").orderBy("id")
+        .collect().map(r => r.getLong(0) -> (if (r.isNullAt(1)) null else r.getString(1))).toSeq
+      val before = rows
+      assert(before == Seq(1L -> "x", 2L -> null, 3L -> "a"), before.toString)
+      // the frame's fields carry the table's CURRENT/EXISTS_DEFAULT
+      // metadata; the manifest must not render it into its schema DDL
+      spark.table("graft.lake.d8").write.format("graft.sources.LakeSink")
+        .mode("overwrite").save(s"$lake/d8")
+      assert(rows == before, rows.toString)
+      spark.sql("INSERT INTO graft.lake.d8 (id) VALUES (4)")
+      assert(rows == before :+ (4L -> "a"), rows.toString)
+      // a subset append still reads the EXISTS default
+      Seq(5L).toDF("id").write.format("graft.sources.LakeSink")
+        .mode("append").save(s"$lake/d8")
+      assert(spark.table("graft.lake.d8").filter($"id" === 5).head().getString(1) == "a")
+    }
+  }
+
   test("typed defaults round-trip: timestamp, date, double, boolean") {
     val lake = TempLakes.dir("graft_def_types")
     withCatalog(lake) {

@@ -277,6 +277,55 @@ class PlanShapeSpec extends GraftSpec {
     assert(countShuffles(graft.operators.Advanced.q44MergeUpsert(spark, sfTiny)) <= 3)
   }
 
+  // -- the live path: the benchmark's two telemetry_stream chains ----------
+
+  test("live path: one JSON parse per plan, one exchange per keyed operator") {
+    import org.apache.spark.sql.catalyst.expressions.JsonToStructs
+    import org.apache.spark.sql.execution.streaming.runtime.{MemoryStream, StreamingQueryWrapper}
+    import org.apache.spark.sql.streaming.StreamingQuery
+    import graft.streaming.{Scored, StreamOps}
+    implicit val ctx: org.apache.spark.sql.SQLContext = spark.sqlContext
+    import spark.implicits._
+    val dir = graft.operators.TempLakes.dir("graft_live_plan")
+    val (lakeIn, alertIn) = (MemoryStream[String], MemoryStream[String])
+    def scored(in: MemoryStream[String]): DataFrame =
+      StreamOps.score(StreamOps.dedupQos1(StreamOps.route(StreamOps.parseWire(in.toDF()))))
+    def start(df: DataFrame, name: String): StreamingQuery =
+      df.writeStream.format("graft.sources.LakeSink")
+        .option("path", s"$dir/$name").option("checkpointLocation", s"$dir/cp_$name")
+        .outputMode("append").start()
+    // the last execution must be the data batch, not the watermark-only
+    // batch that would follow it
+    val key = "spark.sql.streaming.noDataMicroBatches.enabled"
+    val prev = spark.conf.getOption(key)
+    spark.conf.set(key, "false")
+    val lake = start(scored(lakeIn), "lake")
+    val alerts = start(StreamOps.alertTransitions(
+      scored(alertIn).select($"machineId", $"ts", $"severity").as[Scored]).toDF(), "alerts")
+    try {
+      val frames = Seq(
+        """{"machineId":"m1","temperature":85.0,"vibration":3.5,"timestamp":1754980000}""",
+        """{"machineId":"m1","temperature":85.0,"vibration":3.5,"timestamp":1754980000}""",
+        """{"machineId":"m2","temperature":66.1,"vibration":"high","timestamp":1754980001}""",
+        "not json {")
+      lakeIn.addData(frames); alertIn.addData(frames)
+      lake.processAllAvailable(); alerts.processAllAvailable()
+      def plan(q: StreamingQuery): SparkPlan =
+        q.asInstanceOf[StreamingQueryWrapper].streamingQuery.lastExecution.executedPlan
+      def shuffles(p: SparkPlan): Int = p.collect { case x: ShuffleExchangeLike => x }.size
+      def parses(p: SparkPlan): Int =
+        p.collect { case n => n.expressions.map(_.collect { case j: JsonToStructs => j }.size).sum }.sum
+      // (lake exchanges, alert exchanges, lake parses, alert parses): the
+      // dedup's (machineId, ts) exchange, plus the machineId exchange of the
+      // alert chain's group state; one from_json per plan
+      val (l, a) = (plan(lake), plan(alerts))
+      assert((shuffles(l), shuffles(a), parses(l), parses(a)) == ((1, 2, 1, 1)), s"$l\n$a")
+    } finally {
+      lake.stop(); alerts.stop()
+      prev.fold(spark.conf.unset(key))(spark.conf.set(key, _))
+    }
+  }
+
   // -- the partial-aggregate fan-out (Skew.fanOut) -------------------------
 
   private val fanOutQueries = Seq[Harness.Query](

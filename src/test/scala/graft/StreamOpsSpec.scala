@@ -1,6 +1,7 @@
 package graft
 
 import java.sql.Timestamp
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.Trigger
@@ -28,6 +29,60 @@ class StreamOpsSpec extends GraftSpec {
       val rows = spark.table("parsed").collect()
       assert(rows.length == 2, rows.mkString("; "))
     } finally q.stop()
+  }
+
+  /** parseWire as it read while it filtered on fields of the parsed
+    * struct (one re-parse per predicate after optimization): the semantic
+    * reference for the single-parse form. */
+  private def parseWireRef(df: DataFrame): DataFrame =
+    df.select(from_json(col("value"), StreamOps.telemetrySchema).as("p"))
+      .filter(col("p").isNotNull &&
+        col("p.temperature").isNotNull && col("p.vibration").isNotNull)
+      .select(col("p.machineId").as("machineId"),
+        col("p.temperature").as("temperature"),
+        col("p.vibration").as("vibration"),
+        timestamp_seconds(col("p.timestamp")).as("ts"))
+
+  private val wireCorpus: Seq[String] = Seq(
+    """{"machineId":"m0","temperature":67.3,"vibration":1.4,"timestamp":1754980000}""",
+    // the benchmark generator's three malformed kinds
+    "not json {",
+    """{"machineId":"m1","vibration":1.3,"timestamp":1754980001}""",
+    """{"machineId":"m1","temperature":66.1,"vibration":"high","timestamp":1754980001}""",
+    null, "",
+    """{"temperature":70.0,"vibration":1.3,"timestamp":1754980002}""", // no machineId: kept
+    """{"machineId":"m3","temperature":70.0,"vibration":1.3}""", // no timestamp: kept, ts null
+    """{"machineId":"m4","temperature":"hot","vibration":1.4,"timestamp":1754980004}""",
+    """{"machineId":"m5","temperature":81,"vibration":3.2,"timestamp":1754980005,"fw":"1.2"}""",
+    """{"machineId":"m6","temperature":70.0,"vibration":1.3,"timestamp":1754980006,"meta":{"zone":{"id":3}}}""",
+    """{"machineId":{"id":"m7"},"temperature":70.0,"vibration":1.3,"timestamp":1754980007}""",
+    """[{"machineId":"m8","temperature":70.0,"vibration":1.3,"timestamp":1754980008}]""",
+    """[{"machineId":"m9","temperature":70.0,"vibration":1.3,"timestamp":1754980009},{"machineId":"m9"}]""")
+
+  private def rowsOf(df: DataFrame): Seq[String] = df.collect().map(_.toString).toSeq.sorted
+
+  test("parseWire keeps the reference's rows, in batch and through a streaming pass") {
+    implicit val sqlCtx = spark.sqlContext
+    import spark.implicits._
+    val batch = wireCorpus.toDF("value")
+    val rows = StreamOps.parseWire(batch).collect()
+    val got = rows.map(_.toString).toSeq.sorted
+    assert(got == rowsOf(parseWireRef(batch)), got.mkString("; "))
+    assert(rows.exists(_.isNullAt(0)), "a frame without machineId must be kept")
+    assert(rows.exists(r => r.getString(0) == "m3" && r.isNullAt(3)),
+      "a frame without timestamp must be kept with a null ts")
+    assert(!rows.exists(r => Set("m1", "m4").contains(r.getString(0))))
+    val in = MemoryStream[String]
+    in.addData(wireCorpus)
+    val qs = Seq("wire_new" -> StreamOps.parseWire _, "wire_ref" -> parseWireRef _).map {
+      case (name, parse) => parse(in.toDF()).writeStream
+        .format("memory").queryName(name).outputMode("append").start()
+    }
+    try {
+      qs.foreach(_.processAllAvailable())
+      assert(rowsOf(spark.table("wire_new")) == got)
+      assert(rowsOf(spark.table("wire_ref")) == got)
+    } finally qs.foreach(_.stop())
   }
 
   test("round trip: simulator batch → toWire → parseWire preserves records (P1)") {
@@ -90,6 +145,52 @@ class StreamOpsSpec extends GraftSpec {
     try {
       q.processAllAvailable()
       assert(spark.table("deduped").count() == 3)
+    } finally q.stop()
+  }
+
+  test("observed live-path counters: ingested = valid + malformed, valid = unique + duplicate") {
+    implicit val sqlCtx = spark.sqlContext
+    import spark.implicits._
+    // seeded frames: reading k is machine k % 10 at second k / 10, so every
+    // reading has its own dedup key; redeliveries of earlier readings and
+    // the benchmark generator's three malformed kinds are mixed in
+    val rng = new scala.util.Random(42L)
+    val sent = scala.collection.mutable.ArrayBuffer.empty[String]
+    var malformed, dups = 0L
+    def frames(n: Int): Seq[String] = Seq.fill(n) {
+      val u = rng.nextDouble()
+      if (u < 0.05 && sent.nonEmpty) { dups += 1; sent(rng.nextInt(sent.size)) }
+      else if (u < 0.10) {
+        malformed += 1
+        val ts = 1754980000L + sent.size / 10
+        rng.nextInt(3) match {
+          case 0 => "not json {"
+          case 1 => s"""{"machineId":"m${rng.nextInt(10)}","vibration":1.3,"timestamp":$ts}"""
+          case _ => s"""{"machineId":"m${rng.nextInt(10)}","temperature":66.1,"vibration":"high","timestamp":$ts}"""
+        }
+      } else {
+        val k = sent.size
+        sent += s"""{"machineId":"m${k % 10}","temperature":${65 + rng.nextInt(20)}.5,""" +
+          s""""vibration":1.${rng.nextInt(9)},"timestamp":${1754980000L + k / 10}}"""
+        sent.last
+      }
+    }
+    val in = MemoryStream[String]
+    val parsed = StreamOps.parseWire(in.toDF().observe("ingested", count(lit(1)).as("rows")))
+      .observe("valid", count(lit(1)).as("rows"))
+    val q = StreamOps.dedupQos1(parsed).observe("unique", count(lit(1)).as("rows"))
+      .writeStream.format("memory").queryName("live_counters").outputMode("append").start()
+    try {
+      for (_ <- 0 until 3) { in.addData(frames(200)); q.processAllAvailable() }
+      def total(name: String): Long = q.recentProgress
+        .flatMap(p => Option(p.observedMetrics.get(name))).map(_.getAs[Long]("rows")).sum
+      val (ingested, valid, unique) = (total("ingested"), total("valid"), total("unique"))
+      assert(malformed > 0 && dups > 0)
+      assert(ingested == 600L)
+      assert(ingested == valid + malformed, s"ingested $ingested, valid $valid, malformed $malformed")
+      assert(valid == unique + dups, s"valid $valid, unique $unique, duplicates $dups")
+      assert(unique == sent.size.toLong)
+      assert(spark.table("live_counters").count() == unique)
     } finally q.stop()
   }
 

@@ -2,7 +2,7 @@
 # Interleaved A/B of the benchmark (perfbench/run.py, untraced): the
 # committed files of <parent-rev> against this checkout's working tree.
 #
-#   tools/bench_ab.sh <parent-rev> <workload> <pairs> <first-seed> [seconds]
+#   tools/bench_ab.sh <parent-rev> <workload> <pairs> <first-seed> [seconds] [claimed-metric]
 #
 # Pair i runs both sides on seed <first-seed>+i, and the side that runs
 # first alternates from pair to pair, so a drift in machine speed weighs on
@@ -10,13 +10,15 @@
 # temporary directory; each side compiles into its own .bench_build, and
 # perfbench/ is only read. Every run's JSON line goes to stdout as it
 # finishes; then, per end-to-end metric of BENCHMARK.json, each side's
-# median and quartiles and the number of pairs this checkout won.
+# median and quartiles, the number of pairs this checkout won and a
+# verdict: the claimed metric (if named) against the gain rule, every
+# other metric against its bound (tools/ab_common.sh).
 set -uo pipefail
 if [ $# -lt 4 ]; then
-  sed -n '2,13p' "$0"
+  sed -n '2,15p' "$0"
   exit 2
 fi
-rev=$1 workload=$2 pairs=$3 seed0=$4 secs=${5:-16}
+rev=$1 workload=$2 pairs=$3 seed0=$4 secs=${5:-16} claim=${6:-}
 . "$(dirname "$0")/ab_common.sh"
 ab_export "$rev" || exit 1
 runs="$tmp/runs.jsonl"
@@ -38,4 +40,4 @@ for ((i = 0; i < pairs; i++)); do
   fi
 done
 
-ab_summary "$runs" "$rev" "$root/BENCHMARK.json"
+ab_summary "$runs" "$rev" "$root/BENCHMARK.json" $claim
