@@ -39,10 +39,13 @@ object Harness {
     if (keys.nonEmpty) all.view.filterKeys(keys.toSet).toMap else all
   }
 
-  /** Bench's per-rep hygiene: drop cached plans and the RDD blocks a
-    * previous run left behind, then give their removal a GC window. The
-    * unpersist is non-blocking: a blocking one intermittently stalls
-    * 15-50 s in local mode. */
+  /** The one owner of a query's cached intermediates. A query returns
+    * its lazy plan over the frames it cached, and they live until this
+    * runs: Bench, Verify, Profile and the probes call it before each
+    * query, the specs after each suite. It drops every cached plan and
+    * the RDD blocks a previous run left behind, then gives their removal
+    * a GC window. The unpersist is non-blocking: a blocking one
+    * intermittently stalls 15-50 s in local mode. */
   def clean(spark: SparkSession): Unit = {
     spark.catalog.clearCache()
     spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(blocking = false))

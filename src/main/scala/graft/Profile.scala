@@ -9,8 +9,8 @@ import org.apache.spark.scheduler.{SparkListener, SparkListenerStageCompleted}
   * stage prints its name and, in braces, the operation scopes of its RDDs
   * (e.g. `{Exchange, WholeStageCodegen (2)}`), which map stages back to
   * the SQL operators without the UI. The name alone is the call site that
-  * submitted the job (e.g. "localCheckpoint at Similarity.scala:1999"),
-  * except for stages AQE submits, which read
+  * submitted the job: the noop write that runs the query reads
+  * "save at Profile.scala:…", and stages AQE submits read
   * "$anonfun$withThreadLocalCaptured$2 at CompletableFuture.java:…". */
 object Profile {
   private case class St(name: String, scopes: Seq[String], ms: Long, tasks: Int,

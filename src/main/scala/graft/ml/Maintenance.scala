@@ -729,14 +729,11 @@ object Maintenance {
           col("s.ml").as(s"ml$i"), col("s.mr").as(s"mr$i"))
       state = state.crossJoin(broadcast(best))
     }
-    val out = t.crossJoin(broadcast(state))
+    t.crossJoin(broadcast(state))
       .select(col("id"), col("is_anomaly"),
         r(expr(gbtF(GbtRounds)), 6).as("score"))
       .withColumn("gbt_prediction", (col("score") >= 0.5).cast("int"))
       .orderBy(col("id"))
-      .localCheckpoint(true)
-    t.unpersist(blocking = false)
-    out
   }
 
   val ml13Sql: String = {

@@ -601,15 +601,12 @@ object Advanced {
       .groupBy($"ttype".as("touch_type"))
       .agg(r(dsum(lit(1.0) / $"nt".cast("double")), 6).as("linear_credit"),
         rsum($"value" / $"nt".cast("double"), 2).as("linear_revenue"))
-    val out = last.join(lin, Seq("touch_type"), "full_outer")
+    last.join(lin, Seq("touch_type"), "full_outer")
       .select($"touch_type", coalesce($"n_last", lit(0L)).as("n_last"),
         coalesce($"last_revenue", lit(0.0)).as("last_revenue"),
         coalesce($"linear_credit", lit(0.0)).as("linear_credit"),
         coalesce($"linear_revenue", lit(0.0)).as("linear_revenue"))
       .orderBy($"touch_type")
-      .localCheckpoint(true)
-    joined.unpersist(blocking = false)
-    out
   }
 
   val q63Sql: String =
@@ -993,7 +990,7 @@ object Advanced {
     val th = cust.agg(cuts($"rec".cast("double"), "rc").head,
       (cuts($"rec".cast("double"), "rc").tail ++
         cuts($"freq".cast("double"), "fc") ++ cuts($"mon", "mc")): _*)
-    val out = cust.crossJoin(broadcast(th))
+    cust.crossJoin(broadcast(th))
       .select($"o_custkey", $"freq", $"mon",
         expr(quintSql("CAST(rec AS DOUBLE)", "rc")).as("r_q"),
         expr(quintSql("CAST(freq AS DOUBLE)", "fc")).as("f_q"),
@@ -1002,9 +999,6 @@ object Advanced {
       .agg(count(lit(1)).as("n_customers"),
         ravg($"freq", 6).as("avg_orders"), ravg($"mon", 2).as("avg_monetary"))
       .orderBy($"r_q", $"f_q", $"m_q")
-      .localCheckpoint(true)
-    cust.unpersist(blocking = false)
-    out
   }
 
   val t20Sql: String =

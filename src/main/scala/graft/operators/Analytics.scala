@@ -252,13 +252,10 @@ object Analytics {
     val est = when($"v" > 0 && raw <= lit(2.5 * HllM),
         lit(HllM.toDouble) * log(lit(HllM.toDouble) / $"v".cast("double")))
       .otherwise(raw)
-    val out = sk.join(days, "di")
+    sk.join(days, "di")
       .select($"di".as("day"), $"window_days", $"v".as("zero_regs"),
         r(est, 2).as("mau_est"))
       .orderBy($"day")
-      .localCheckpoint(true)
-    Seq(daily, days).foreach(_.unpersist(blocking = false))
-    out
   }
 
   val q82Sql: String = {
@@ -342,14 +339,11 @@ object Analytics {
       .agg(max($"h").as("kth_hash"), count(lit(1)).as("m"))
     val est = when($"m" < KmvK, $"n_exact".cast("double"))
       .otherwise(lit(KmvNum) / $"kth_hash".cast("double"))
-    val out = cnt.join(kth, "event_type")
+    cnt.join(kth, "event_type")
       .select($"event_type", $"n_exact", $"kth_hash", r(est, 2).as("kmv_estimate"))
       .withColumn("rel_err",
         r(abs($"kmv_estimate" - $"n_exact") / $"n_exact", 4))
       .orderBy($"event_type")
-      .localCheckpoint(true)
-    du.unpersist(blocking = false)
-    out
   }
 
   val q45Sql: String =
@@ -562,15 +556,12 @@ object Analytics {
         .groupBy($"wd".as("di"))
         .agg(countDistinct($"user_id").as(name))
     val dau = ud.groupBy($"di").agg(countDistinct($"user_id").as("dau"))
-    val out = dau
+    dau
       .join(windowed(7, "wau"), Seq("di"))
       .join(windowed(28, "mau"), Seq("di"))
       .select($"di", $"dau", $"wau", $"mau",
         r($"dau".cast("double") / $"mau".cast("double"), 6).as("stickiness"))
       .orderBy($"di")
-      .localCheckpoint(true)
-    ud.unpersist(blocking = false)
-    out
   }
 
   val q74Sql: String =
@@ -605,7 +596,7 @@ object Analytics {
     import s.implicits._
     val li = Tables.lineitem(s, dir)
       .select($"l_orderkey", $"l_partkey", $"l_suppkey").cache()
-    val out = Seq(("l_orderkey", $"l_orderkey"), ("l_partkey", $"l_partkey"),
+    Seq(("l_orderkey", $"l_orderkey"), ("l_partkey", $"l_partkey"),
       ("l_suppkey", $"l_suppkey")).map { case (name, c) =>
       li.groupBy(c.as("k")).agg(count(lit(1)).as("n"))
         .agg(lit(name).as("join_key"),
@@ -622,9 +613,6 @@ object Analytics {
       .select($"join_key", $"n_keys", $"n_rows", $"max_rows", $"p99_rows",
         $"mean_rows", $"skew_factor")
       .orderBy($"join_key")
-      .localCheckpoint(true)
-    li.unpersist(blocking = false)
-    out
   }
 
   val q75Sql: String = {
@@ -1085,14 +1073,11 @@ object Analytics {
       $"x", $"f".as("fa"))
     val b = grid.select($"source".as("source_b"), $"n".as("n_b"),
       $"x", $"f".as("fb"))
-    val out = a.join(b, Seq("x")).filter($"source_a" < $"source_b")
+    a.join(b, Seq("x")).filter($"source_a" < $"source_b")
       .groupBy($"source_a", $"source_b")
       .agg(min($"n_a").as("n_a"), min($"n_b").as("n_b"),
         r(max(abs($"fa" - $"fb")), 6).as("ks_stat"))
       .orderBy($"source_a", $"source_b")
-      .localCheckpoint(true)
-    cnt.unpersist(blocking = false)
-    out
   }
 
   val q51Sql: String =
@@ -1173,7 +1158,7 @@ object Analytics {
       $"x", $"c".as("ca"), $"cum".as("cuma"))
     val b = grid.select($"source".as("source_b"), $"n".as("n_b"),
       $"x", $"c".as("cb"), $"cum".as("cumb"))
-    val out = a.join(b, Seq("x")).filter($"source_a" < $"source_b")
+    a.join(b, Seq("x")).filter($"source_a" < $"source_b")
       .withColumn("w", $"ca" + $"cb")
       .withColumn("dn", $"n_b" * $"cuma" - $"n_a" * $"cumb")
       .withColumn("term", r(expr(CvmTerm), 10))
@@ -1183,9 +1168,6 @@ object Analytics {
       .select($"source_a", $"source_b", $"n_a", $"n_b",
         r(expr(CvmT), 6).as("cvm_stat"))
       .orderBy($"source_a", $"source_b")
-      .localCheckpoint(true)
-    cnt.unpersist(blocking = false)
-    out
   }
 
   val q117Sql: String =
@@ -1275,7 +1257,7 @@ object Analytics {
       $"x", $"c".as("ca"), $"cum".as("cuma"))
     val b = grid.select($"source".as("source_b"), $"n".as("n_b"),
       $"x", $"c".as("cb"), $"cum".as("cumb"))
-    val out = a.join(b, Seq("x")).filter($"source_a" < $"source_b")
+    a.join(b, Seq("x")).filter($"source_a" < $"source_b")
       .withColumn("w", $"ca" + $"cb")
       .withColumn("nn", $"n_a" + $"n_b")
       .withColumn("bp", ($"cuma" + $"cumb") * 2 - $"w")
@@ -1289,9 +1271,6 @@ object Analytics {
       .select($"source_a", $"source_b", $"n_a", $"n_b",
         r(expr(AdStat), 6).as("ad_stat"))
       .orderBy($"source_a", $"source_b")
-      .localCheckpoint(true)
-    cnt.unpersist(blocking = false)
-    out
   }
 
   val q121Sql: String =
@@ -1358,7 +1337,7 @@ object Analytics {
       .agg(count(lit(1)).as("n_hours"), ravg($"x", 6).as("mean_x"))
     val w = Window.partitionBy($"event_type").orderBy($"hx")
       .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    val out = hourly.join(broadcast(mu), Seq("event_type"))
+    hourly.join(broadcast(mu), Seq("event_type"))
       .withColumn("s", sum($"x" - $"mean_x").over(w))
       .withColumn("abs_s", abs($"s"))
       .groupBy($"event_type")
@@ -1367,9 +1346,6 @@ object Analytics {
       .select($"event_type", $"n_hours", $"mean_x",
         $"b.hx".as("cp_hour"), r($"b.abs_s", 6).as("cusum_max"))
       .orderBy($"event_type")
-      .localCheckpoint(true)
-    hourly.unpersist(blocking = false)
-    out
   }
 
   val q56Sql: String =
@@ -1516,7 +1492,7 @@ object Analytics {
       .groupBy($"event_type")
       .agg(count(lit(1)).as("n_pairs"),
         r(percentile($"slope", lit(0.5)), 6).as("ts_slope"))
-    val out = daily.join(broadcast(slopes), Seq("event_type"))
+    daily.join(broadcast(slopes), Seq("event_type"))
       .withColumn("resid", expr("y - ts_slope * CAST(di AS DOUBLE)"))
       .groupBy($"event_type")
       .agg(count(lit(1)).as("n_days"), min($"n_pairs").as("n_pairs"),
@@ -1524,9 +1500,6 @@ object Analytics {
         r(percentile($"resid", lit(0.5)), 6).as("ts_intercept"))
       .select($"event_type", $"n_days", $"n_pairs", $"ts_slope", $"ts_intercept")
       .orderBy($"event_type")
-      .localCheckpoint(true)
-    daily.unpersist(blocking = false)
-    out
   }
 
   val q55Sql: String =
@@ -1598,7 +1571,7 @@ object Analytics {
       .agg(sum($"t" * ($"t" - 1) * (lit(2) * $"t" + 5)).as("tsum"),
         sum(expr("(t * (t - 1)) div 2")).as("n1"))
     val cnt = daily.groupBy($"event_type").agg(count(lit(1)).as("n"))
-    val out = cnt.join(sv, "event_type").join(ties, "event_type")
+    cnt.join(sv, "event_type").join(ties, "event_type")
       .withColumn("n0", expr("(n * (n - 1)) div 2"))
       .filter(expr(MkVar) > 0 && $"n0" > $"n1")
       .select($"event_type", $"n".as("n_days"), $"s_stat",
@@ -1609,9 +1582,6 @@ object Analytics {
             r(expr(s"(CAST(s_stat AS DOUBLE) + 1.0) / sqrt($MkVar)"), 6))
           .otherwise(0.0).as("z"))
       .orderBy($"event_type")
-      .localCheckpoint(true)
-    daily.unpersist(blocking = false)
-    out
   }
 
   val q80Sql: String =
@@ -1755,7 +1725,7 @@ object Analytics {
       .agg(nLnN($"nl").as("sl"))
     val ss = cells.groupBy($"source").agg(sum($"o").as("ns"))
       .agg(nLnN($"ns").as("ss"))
-    val out = jl.crossJoin(broadcast(sl)).crossJoin(broadcast(ss))
+    jl.crossJoin(broadcast(sl)).crossJoin(broadcast(ss))
       .select($"n0".as("n_docs"), $"n0".cast("double").as("nn"),
         $"sl", $"ss", $"sj")
       .select($"n_docs",
@@ -1764,9 +1734,6 @@ object Analytics {
         r(expr(s"$MiHl + $MiHs - $MiHj"), 6).as("mi"),
         r(expr(s"CASE WHEN $MiHl > 0.0 AND $MiHs > 0.0 THEN ($MiHl + $MiHs - $MiHj) / sqrt($MiHl * $MiHs) ELSE 0.0 END"), 6)
           .as("nmi"))
-      .localCheckpoint(true)
-    cells.unpersist(blocking = false)
-    out
   }
 
   val q54Sql: String = {
@@ -1812,7 +1779,7 @@ object Analytics {
     import s.implicits._
     val ud = act.distinct().cache()
     val firsts = ud.groupBy($"user_id").agg(min($"d").as("first_d"))
-    val perDay = ud.join(firsts, "user_id")
+    ud.join(firsts, "user_id")
       .groupBy($"d")
       .agg(count(lit(1)).as("n_active"),
         count(when($"first_d" === $"d", 1)).as("n_new"))
@@ -1822,9 +1789,6 @@ object Analytics {
         Window.orderBy($"d").rowsBetween(Window.unboundedPreceding, Window.currentRow)))
       .select($"d", $"n_active", $"n_new", $"n_returning", $"cum_users")
       .orderBy($"d")
-      .localCheckpoint(true)
-    ud.unpersist(blocking = false)
-    perDay
   }
 
   val q65Sql: String =
@@ -1871,7 +1835,7 @@ object Analytics {
         $"user_id" === $"u2" && $"event_type" =!= $"cons")
       .groupBy($"event_type".as("ante"), $"cons")
       .agg(count(lit(1)).as("n_both"))
-    val out = both
+    both
       .join(broadcast(marg.select($"event_type".as("ante"), $"n_t".as("n_a"))), "ante")
       .join(broadcast(marg.select($"event_type".as("cons"), $"n_t".as("n_b"))), "cons")
       .crossJoin(broadcast(nu))
@@ -1881,9 +1845,6 @@ object Analytics {
         r(($"n_both".cast("double") * $"nn") /
           ($"n_a".cast("double") * $"n_b".cast("double")), 6).as("lift"))
       .orderBy($"ante", $"cons")
-      .localCheckpoint(true)
-    ut.unpersist(blocking = false)
-    out
   }
 
   val q64Sql: String =
@@ -1939,7 +1900,7 @@ object Analytics {
       .groupBy($"event_type")
       .agg(min($"med").as("med"),
         r(percentile(abs($"x" - $"med"), lit(0.5)), 6).as("mad"))
-    val out = h.join(broadcast(mad), "event_type")
+    h.join(broadcast(mad), "event_type")
       .withColumn("mz",
         when($"mad" > 0, lit(0.6745) * ($"x" - $"med") / $"mad"))
       .withColumn("rk", row_number().over(Window.partitionBy($"event_type")
@@ -1948,9 +1909,6 @@ object Analytics {
       .select($"event_type", $"rk".cast("long").as("rk"), $"hx", $"x",
         r($"mz", 6).as("mz"), (abs($"mz") > 3.5).cast("int").as("is_outlier"))
       .orderBy($"event_type", $"rk")
-      .localCheckpoint(true)
-    h.unpersist(blocking = false)
-    out
   }
 
   val q62Sql: String =
@@ -2469,13 +2427,10 @@ object Analytics {
         $"nh".as("n_obs"), r($"eh", 6).as("effect"))
       .unionByName(dow.select($"event_type", lit("dow").as("kind"),
         $"dow".as("idx"), $"nd".as("n_obs"), r($"ed", 6).as("effect")))
-    val out = eff.join(broadcast(fitted), "event_type")
+    eff.join(broadcast(fitted), "event_type")
       .select($"event_type", $"kind", $"idx", $"n_obs", $"effect",
         $"var_total", $"var_resid", $"r2")
       .orderBy($"event_type", $"kind", $"idx")
-      .localCheckpoint(true)
-    cells.unpersist(blocking = false)
-    out
   }
 
   val q59Sql: String =
@@ -2880,7 +2835,7 @@ object Analytics {
       $"x", $"c".as("ca"))
     val b = grid.select($"source".as("source_b"), $"n".as("n_b"),
       $"x", $"c".as("cb"), $"cum".as("cumb"))
-    val out = a.join(b, Seq("x")).filter($"source_a" < $"source_b")
+    a.join(b, Seq("x")).filter($"source_a" < $"source_b")
       .groupBy($"source_a", $"source_b")
       .agg(min($"n_a").as("n_a"), min($"n_b").as("n_b"),
         // 2U = Σ cA·(2·(#B below) + #B tied) — exact BIGINT
@@ -2896,9 +2851,6 @@ object Analytics {
         ($"u2" / 2.0).as("u_stat"),
         r(expr(MwZ), 6).as("z"))
       .orderBy($"source_a", $"source_b")
-      .localCheckpoint(true)
-    cnt.unpersist(blocking = false)
-    out
   }
 
   val q52Sql: String =
@@ -2953,7 +2905,7 @@ object Analytics {
     val l24 = h.select($"event_type", ($"hx" + 24).as("hx"), $"x".as("lag24_x"))
     val w = Window.partitionBy($"event_type").orderBy($"hx")
       .rangeBetween(-23, 0)
-    val out = h.join(l1, Seq("event_type", "hx"), "left")
+    h.join(l1, Seq("event_type", "hx"), "left")
       .join(l24, Seq("event_type", "hx"), "left")
       .withColumn("nz24", count($"x").over(w))
       .withColumn("s24", sum($"x".cast("decimal(38,10)")).over(w).cast("double"))
@@ -2961,9 +2913,6 @@ object Analytics {
         r($"x" - $"lag1_x", 6).as("d1"),
         r($"s24" / $"nz24".cast("double"), 6).as("ma24_x"), $"nz24")
       .orderBy($"event_type", $"hx")
-      .localCheckpoint(true)
-    h.unpersist(blocking = false)
-    out
   }
 
   val q67Sql: String =
@@ -3020,7 +2969,8 @@ object Analytics {
     * on (they cannot drift): a cached (source, x) count table, the
     * pooled 2·midrank value axis `pc(x, t, r2)`, and the per-source
     * rank sums `per(source, n, r2sum)` — every column an exact integer.
-    * The CALLER unpersists the returned count table. */
+    * The count table comes back cached: q116 frees it once its tie sum
+    * is pinned, q66's plan reads it until `Harness.clean`. */
   private[graft] def kwRankTables(metric: DataFrame)
       : (DataFrame, DataFrame, DataFrame) = {
     val s = metric.sparkSession
@@ -3056,7 +3006,7 @@ object Analytics {
       sum($"n").as("n_total"), count(lit(1)).as("n_groups"),
       dsum(expr(term)).as("s2"))
     val ttg = pc.agg(sum($"t" * $"t" * $"t" - $"t").as("ttl"))
-    val out = per
+    per
       .crossJoin(broadcast(glob)).crossJoin(broadcast(ttg))
       .select($"source", $"n",
         r($"r2sum".cast("double") / 2.0 / $"n".cast("double"), 6)
@@ -3068,9 +3018,6 @@ object Analytics {
         r(expr(KwH), 6).as("h"), r(expr(KwHAdj), 6).as("h_adj"),
         r(expr(KwEta2), 6).as("eta2"))
       .orderBy($"source")
-      .localCheckpoint(true)
-    cnt.unpersist(blocking = false)
-    out
   }
 
   /** The cnt/pc/per CTE text q66 and q116 share verbatim (the
@@ -3228,7 +3175,7 @@ object Analytics {
     val ranked = docs
       .join(rankTable("x"), Seq("lang", "x"))
       .join(rankTable("y"), Seq("lang", "y"))
-    val out = ranked.groupBy($"lang")
+    ranked.groupBy($"lang")
       .agg(count(lit(1)).as("n_docs"),
         m($"x").as("sx"), m($"x" * $"x").as("sxx"),
         m($"y").as("sy"), m($"y" * $"y").as("syy"),
@@ -3243,9 +3190,6 @@ object Analytics {
         r(expr(pearsonOf("")), 6).as("pearson_r"),
         r(expr(pearsonOf("r")), 6).as("spearman_rho"))
       .orderBy($"lang")
-      .localCheckpoint(true)
-    docs.unpersist(blocking = false)
-    out
   }
 
   val q79Sql: String = {
@@ -3322,7 +3266,7 @@ object Analytics {
       .crossJoin(broadcast(nn))
       .select($"lang", $"source", coalesce($"o", lit(0L)).as("o"),
         expr("CAST(rl AS DOUBLE) * cs / nn").as("e"), $"nn")
-    val out = cells
+    cells
       .agg(min($"nn").as("n_docs"),
         countDistinct($"lang").as("n_langs"),
         countDistinct($"source").as("n_sources"),
@@ -3334,9 +3278,6 @@ object Analytics {
           ($"n_docs".cast("double") * least($"n_langs" - 1, $"n_sources" - 1))), 6)
           .as("cramers_v"))
       .orderBy($"dof")
-      .localCheckpoint(true)
-    obs.unpersist(blocking = false)
-    out
   }
 
   val q50Sql: String = {
@@ -3403,16 +3344,13 @@ object Analytics {
       $"n0".cast("double").as("na"), $"sx".as("sxa"), $"sxx".as("sxxa"))
     val b = mom.select($"source".as("source_b"), $"n0".as("nb0"),
       $"n0".cast("double").as("nb2"), $"sx".as("sxb"), $"sxx".as("sxxb"))
-    val out = a.crossJoin(b).filter($"source_a" < $"source_b")
+    a.crossJoin(b).filter($"source_a" < $"source_b")
       .select($"source_a", $"source_b", $"na0".as("n_a"), $"nb0".as("n_b"),
         r(expr("sxa / na"), 6).as("mean_a"),
         r(expr("sxb / nb2"), 6).as("mean_b"),
         r(expr(WT), 6).as("t_stat"),
         r(expr(WDf), 6).as("df"))
       .orderBy($"source_a", $"source_b")
-      .localCheckpoint(true)
-    mom.unpersist(blocking = false)
-    out
   }
 
   val q49Sql: String = {
@@ -3979,14 +3917,11 @@ object Analytics {
     val ci = bm.groupBy($"lang")
       .agg(r(percentile($"mb", lit(0.05)), 6).as("boot_lo"),
         r(percentile($"mb", lit(0.95)), 6).as("boot_hi"))
-    val out = docs.groupBy($"lang")
+    docs.groupBy($"lang")
       .agg(count(lit(1)).as("n_docs"), r(davg($"x"), 6).as("mean_x"))
       .join(ci, "lang")
       .select($"lang", $"n_docs", $"mean_x", $"boot_lo", $"boot_hi")
       .orderBy($"lang")
-      .localCheckpoint(true)
-    docs.unpersist(blocking = false)
-    out
   }
 
   val q48Sql: String = {
@@ -4124,7 +4059,7 @@ object Analytics {
       .cache()
     val lags = AcfLags.toDF("lag")
     val b = hourly.select($"event_type".as("et2"), $"hx".as("hx2"), $"x".as("y"))
-    val out = hourly
+    hourly
       .crossJoin(broadcast(lags))
       .join(b, $"et2" === $"event_type" && $"hx2" === $"hx" + $"lag" * 3600)
       .groupBy($"event_type", $"lag")
@@ -4136,9 +4071,6 @@ object Analytics {
         $"n0".cast("double").as("n"), $"sx", $"sxx", $"sy", $"syy", $"sxy")
       .select($"event_type", $"lag", $"n_pairs", r(expr(acf), 6).as("acf"))
       .orderBy($"event_type", $"lag")
-      .localCheckpoint(true)
-    hourly.unpersist(blocking = false)
-    out
   }
 
   val q47Sql: String = {
@@ -4280,7 +4212,7 @@ object Analytics {
     val hourly = hourly0.cache() // both sides of the lag join
     val lags = XcorrLags.toDF("lag")
     val b = hourly.select($"event_type".as("type_b"), $"hx".as("hx2"), $"x".as("y"))
-    val out = hourly
+    hourly
       .crossJoin(broadcast(lags))
       .join(b, $"type_b" =!= $"event_type" && $"hx2" === $"hx" + $"lag" * 3600)
       .groupBy($"event_type", $"type_b", $"lag")
@@ -4293,9 +4225,6 @@ object Analytics {
       .select($"event_type".as("type_a"), $"type_b", $"lag",
         $"n0".as("n_pairs"), r(expr(xc), 6).as("xcorr"))
       .orderBy($"type_a", $"type_b", $"lag")
-      .localCheckpoint(true)
-    hourly.unpersist(blocking = false)
-    out
   }
 
   val q83Sql: String = {
@@ -4470,7 +4399,7 @@ object Analytics {
     val rb = wj.groupBy($"n", $"sy", $"sm", $"syy", $"smm", $"sym")
       .agg(count(lit(1)).as("nj"), dsum($"rj").as("s1"))
       .withColumn("rbar", $"s1" / $"nj".cast("double"))
-    val out = wj.select($"rj")
+    wj.select($"rj")
       .crossJoin(broadcast(rb))
       .withColumn("d2", r(($"rj" - $"rbar") * ($"rj" - $"rbar"), 12))
       .groupBy($"n", $"nj", $"sy", $"sm", $"syy", $"smm", $"sym", $"rbar")
@@ -4484,9 +4413,6 @@ object Analytics {
           $"rhat" * $"rhat" * $"smm".cast("double")) /
           ($"sm".cast("double") * $"sm".cast("double"))), 6).as("se_delta"))
       .orderBy($"n_users")
-      .localCheckpoint(true)
-    pu.unpersist(blocking = false)
-    out
   }
 
   val q91Sql: String =
@@ -4583,7 +4509,7 @@ object Analytics {
           struct(lit("y_causes_x").as("direction"),
             $"xt".as("w"), $"x".as("u"), $"y".as("v")))).as("d"))
       .select($"d.direction", $"d.w", $"d.u", $"d.v")
-    val out = pairs.groupBy($"direction")
+    pairs.groupBy($"direction")
       .agg(count(lit(1)).as("n_pairs"),
         m($"u").as("su"), m($"v").as("sv"), m($"w").as("sw"),
         m($"u" * $"u").as("suu"), m($"v" * $"v").as("svv"),
@@ -4593,9 +4519,6 @@ object Analytics {
       .withColumn("n", $"n_pairs".cast("double"))
       .select($"direction", $"n_pairs", r(expr(GrF), 6).as("f_stat"))
       .orderBy($"direction")
-      .localCheckpoint(true)
-    hourly.unpersist(blocking = false)
-    out
   }
 
   lazy val q114Sql: String = {

@@ -15,24 +15,6 @@ import TextOps.{toks, toksSql}
   */
 object Corpus {
 
-  /** Materialize two INDEPENDENT eagerly-checkpointed frames concurrently.
-    * The paired-classifier evals (ml22/ml24/ml27) each run ml05's and
-    * ml07's full plans, and both builders end in an eager localCheckpoint
-    * — serial calls serialize the two materializations even though
-    * neither saturates the cluster (measured: ml22 ≈ t(ml05) + t(ml07)
-    * exactly; the predictions were never computed twice, the latency was
-    * the serial barrier). Concurrent job submission from two driver
-    * threads is the standard Spark fix — wall-clock drops toward
-    * max(t_a, t_b) with ZERO plan/hash change. */
-  private def inParallel[A, B](fa: => A, fb: => B): (A, B) = {
-    import scala.concurrent.{Await, Future}
-    import scala.concurrent.duration.Duration
-    import scala.concurrent.ExecutionContext.Implicits.global
-    val f1 = Future(fa)
-    val f2 = Future(fb)
-    (Await.result(f1, Duration.Inf), Await.result(f2, Duration.Inf))
-  }
-
   /** d08 — TF-IDF: top-3 terms per document by tf·ln(N/df), lowercased
     * whitespace tokens. Plan shape: one explode→groupBy for tf (shuffle on
     * (doc, term)), one groupBy for df (shuffle on term), a shuffle join
@@ -261,7 +243,7 @@ object Corpus {
       DedupLsh.shingleDocs(surv.select($"doc_id", $"text")))
     val clusters = dedupClusters(s, pairs, surv.select($"doc_id"))
     val sampleRate = when($"lang" === "en", 50L).otherwise(90L)
-    val out = clusters
+    clusters
       .filter($"doc_id" === $"cluster_id") // canonical per near-dup cluster
       .join(surv, "doc_id")
       // coalesce(lang, ''): concat_ws SKIPS nulls while DuckDB's || is
@@ -272,10 +254,6 @@ object Corpus {
       .select($"doc_id", $"lang", $"quality", $"cluster_size",
         size(toks($"text")).as("n_tokens"))
       .orderBy($"doc_id")
-      // eager snapshot so the survivor cache can be freed inside the query
-      .localCheckpoint(true)
-    surv.unpersist(blocking = false)
-    out
   }
 
   val d13Sql: String =
@@ -331,19 +309,11 @@ object Corpus {
     val p = cb.withColumn("w1", substring_index($"bg", " ", 1))
       .join(cu, "w1")
       .select($"bg", log($"nb".cast("double") / $"nu").as("logp"))
-    val out = big.join(p, "bg")
+    big.join(p, "bg")
       .groupBy($"doc_id")
       .agg(count(lit(1)).as("n_bigrams"),
         r(dsum($"logp") / count(lit(1)), 6).as("avg_logp"))
       .orderBy($"doc_id")
-      // eager snapshot of the (per-doc, tiny) result lets the bigram
-      // cache be freed inside the query — a long-lived session otherwise
-      // accumulates the exploded-bigram blocks until external hygiene
-      // runs (the Verify/Bench harnesses clear caches per query, but a
-      // library caller shouldn't have to)
-      .localCheckpoint(true)
-    big.unpersist(blocking = false)
-    out
   }
 
   val d10Sql: String =
@@ -521,15 +491,12 @@ object Corpus {
       .select($"w",
         (log(($"ctgt" + lit(1L)).cast("double") / ($"ntgt" + $"v")) -
           log(($"craw" + lit(1L)).cast("double") / ($"nraw" + $"v"))).as("lr"))
-    val out = inst.join(p, "w")
+    inst.join(p, "w")
       .groupBy($"doc_id")
       .agg(count(lit(1)).as("n_tokens"),
         r(dsum($"lr") / count(lit(1)), 6).as("dsir_score"))
       .withColumn("selected", ($"dsir_score" >= 0.0).cast("int"))
       .orderBy($"doc_id")
-      .localCheckpoint(true)
-    inst.unpersist(blocking = false)
-    out
   }
 
   val d25Sql: String = {
@@ -609,15 +576,12 @@ object Corpus {
     val cuts = ce.agg(
       r(percentile($"ce", lit(1.0 / 3)), 6).as("t1"),
       r(percentile($"ce", lit(2.0 / 3)), 6).as("t2"))
-    val out = ce.crossJoin(broadcast(cuts))
+    ce.crossJoin(broadcast(cuts))
       .select($"doc_id", $"n_bigrams", $"ce",
         when($"ce" <= $"t1", "head")
           .when($"ce" <= $"t2", "middle")
           .otherwise("tail").as("bucket"))
       .orderBy($"doc_id")
-      .localCheckpoint(true)
-    big.unpersist(blocking = false)
-    out
   }
 
   val d26Sql: String = {
@@ -730,7 +694,7 @@ object Corpus {
       .crossJoin(broadcast(tot))
       .select($"doc_id", $"true_lang", $"cand_lang",
         r(log($"dl".cast("double") / $"dt") + $"llsum", 6).as("score"))
-    val out = sc
+    sc
       .groupBy($"doc_id", $"true_lang")
       .agg(min(struct((-$"score").as("ns"), $"cand_lang".as("l"))).as("b"))
       .select($"doc_id", $"true_lang".as("lang"), $"b.l".as("pred_lang"),
@@ -745,9 +709,6 @@ object Corpus {
       // downstream panel consumers pay 1-task stages.
       .repartition(1)
       .sortWithinPartitions($"doc_id")
-      .localCheckpoint(true)
-    cnt.unpersist(blocking = false)
-    out
   }
 
   /** ml05's train-doc total over its per-lang counts `pri(lang, dl)` — 0
@@ -842,12 +803,12 @@ object Corpus {
     * lang appearing as truth or prediction — support, predicted count,
     * true positives, precision/recall/F1 — plus the `_micro` accuracy row.
     *
-    * Scale shape: ml05's plan (already linear, checkpoint-materialized)
-    * followed by two map-side-combinable aggregations over the ≤|test|
-    * prediction rows and an L-row full-outer join — the report itself is
-    * free at any corpus size. */
+    * Scale shape: ml05's plan (already linear, cached once: the report
+    * reads it in three branches) followed by two map-side-combinable
+    * aggregations over the ≤|test| prediction rows and an L-row
+    * full-outer join — the report itself is free at any corpus size. */
   def ml08ClassifierEval(s: SparkSession, dir: String): DataFrame =
-    classifierEval(ml05NaiveBayes(s, dir))
+    classifierEval(ml05NaiveBayes(s, dir).cache()) // three eval branches
 
   /** The evaluation tail shared by ml08's and ml10's oracles: expects a
     * CTE `pred(lang, pred_lang, correct)` in scope and emits the
@@ -932,13 +893,12 @@ object Corpus {
     * the ≤128-row budget + the eval's L-row aggregations. */
   def ml27EnsembleEval(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
-    val (nb0, (knn0, heur0)) = inParallel(ml05NaiveBayes(s, dir),
-      inParallel(ml07KnnClassify(s, dir), TextOps.d03LangId(s, dir)))
-    val nb = nb0
+    val nb = ml05NaiveBayes(s, dir)
       .select($"doc_id", coalesce($"lang", lit("")).as("lang"), $"pred_lang".as("pa"))
-    val knn = knn0.select($"doc_id", $"pred_lang".as("pb"))
-    val heur = heur0.select($"doc_id", $"predicted_lang".as("pc"))
-    classifierEval(majorityVote(nb.join(knn, "doc_id").join(heur, "doc_id")))
+    val knn = ml07KnnClassify(s, dir).select($"doc_id", $"pred_lang".as("pb"))
+    val heur = TextOps.d03LangId(s, dir).select($"doc_id", $"predicted_lang".as("pc"))
+    // classifierEval reads the votes in three branches: cache them once
+    classifierEval(majorityVote(nb.join(knn, "doc_id").join(heur, "doc_id")).cache())
   }
 
   /** The vote applied to (lang, pa, pb, pc) rows → (lang, pred_lang,
@@ -983,9 +943,8 @@ object Corpus {
     * — "do these classifiers have equal error rates?" asked ONCE with
     * the correct paired statistic instead of three pairwise tests
     * (χ²_{k−1} under H₀; McNemar IS Cochran's Q at k = 2). Integer
-    * marginals end-to-end; the three classifier plans run concurrently
-    * (ml22/ml27's inParallel lesson — the work is independent, only the
-    * driver serializes it). One row.
+    * marginals end-to-end; the three classifier plans are independent
+    * stages of the one job, which Spark schedules concurrently. One row.
     *
     * Scale shape: the classifiers' own budgeted plans + one equi-join on
     * the ≤128-doc test set + a single global aggregate. */
@@ -1011,11 +970,9 @@ object Corpus {
     * throughout; the classifier plans dominate (ml27's shape). */
   def ml37FleissKappa(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
-    val (nb0, (knn0, heur0)) = inParallel(ml05NaiveBayes(s, dir),
-      inParallel(ml07KnnClassify(s, dir), TextOps.d03LangId(s, dir)))
-    val nb = nb0.select($"doc_id", $"pred_lang".as("pa"))
-    val knn = knn0.select($"doc_id", $"pred_lang".as("pb"))
-    val heur = heur0.select($"doc_id", $"predicted_lang".as("pc"))
+    val nb = ml05NaiveBayes(s, dir).select($"doc_id", $"pred_lang".as("pa"))
+    val knn = ml07KnnClassify(s, dir).select($"doc_id", $"pred_lang".as("pb"))
+    val heur = TextOps.d03LangId(s, dir).select($"doc_id", $"predicted_lang".as("pc"))
     fleissKappa(nb.join(knn, "doc_id").join(heur, "doc_id"))
   }
 
@@ -1027,7 +984,7 @@ object Corpus {
     val nik = j
       .select($"doc_id", explode(array($"pa", $"pb", $"pc")).as("label"))
       .groupBy($"doc_id", $"label").agg(count(lit(1)).as("nik"))
-      .localCheckpoint(true) // feeds the item AND category moments
+      .cache() // feeds the item AND category moments
     val items = nik.agg(countDistinct($"doc_id").as("n_docs"),
       sum($"nik" * $"nik").as("s2"))
     val cats = nik.groupBy($"label").agg(sum($"nik").as("ck"))
@@ -1095,11 +1052,9 @@ object Corpus {
     * aggregations; the classifier plans dominate. */
   def ml38KrippendorffAlpha(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
-    val (nb0, (knn0, heur0)) = inParallel(ml05NaiveBayes(s, dir),
-      inParallel(ml07KnnClassify(s, dir), TextOps.d03LangId(s, dir)))
-    val nb = nb0.select($"doc_id", $"pred_lang".as("pa"))
-    val knn = knn0.select($"doc_id", $"pred_lang".as("pb"))
-    val heur = heur0.select($"doc_id", $"predicted_lang".as("pc"))
+    val nb = ml05NaiveBayes(s, dir).select($"doc_id", $"pred_lang".as("pa"))
+    val knn = ml07KnnClassify(s, dir).select($"doc_id", $"pred_lang".as("pb"))
+    val heur = TextOps.d03LangId(s, dir).select($"doc_id", $"predicted_lang".as("pc"))
     krippendorffAlpha(nb.join(knn, "doc_id").join(heur, "doc_id"))
   }
 
@@ -1111,7 +1066,7 @@ object Corpus {
     val nik = j
       .select($"doc_id", explode(array($"pa", $"pb", $"pc")).as("label"))
       .groupBy($"doc_id", $"label").agg(count(lit(1)).as("nik"))
-      .localCheckpoint(true) // feeds the item AND category moments
+      .cache() // feeds the item AND category moments
     val items = nik.agg(countDistinct($"doc_id").as("n_docs"),
       sum($"nik" * $"nik").as("s2"))
     val cats = nik.groupBy($"label").agg(sum($"nik").as("ck"))
@@ -1172,9 +1127,8 @@ object Corpus {
     * bootstrap is one ×32 explode of the ≤128-doc panel. */
   def ml39PairedBootstrap(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
-    val (nb0, knn0) = inParallel(ml05NaiveBayes(s, dir), ml07KnnClassify(s, dir))
-    val nb = nb0.select($"doc_id", $"correct".cast("long").as("c1"))
-    val knn = knn0.select($"doc_id", $"correct".cast("long").as("c2"))
+    val nb = ml05NaiveBayes(s, dir).select($"doc_id", $"correct".cast("long").as("c1"))
+    val knn = ml07KnnClassify(s, dir).select($"doc_id", $"correct".cast("long").as("c2"))
     pairedBootstrap(nb.join(knn, "doc_id")
       .select($"doc_id", ($"c1" - $"c2").as("d")))
   }
@@ -1184,7 +1138,7 @@ object Corpus {
   private[graft] def pairedBootstrap(panel: DataFrame): DataFrame = {
     val s = panel.sparkSession
     import s.implicits._
-    val docs = panel.localCheckpoint(true) // feeds replicates + the point estimate
+    val docs = panel.cache() // feeds replicates + the point estimate
     val reps = docs
       .select($"doc_id", $"d",
         explode(sequence(lit(0), lit(Analytics.BootB - 1))).as("b"))
@@ -1244,12 +1198,10 @@ object Corpus {
 
   def ml34CochranQ(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
-    val (nb0, (knn0, heur0)) = inParallel(ml05NaiveBayes(s, dir),
-      inParallel(ml07KnnClassify(s, dir), TextOps.d03LangId(s, dir)))
-    val nb = nb0.select($"doc_id",
+    val nb = ml05NaiveBayes(s, dir).select($"doc_id",
       coalesce($"lang", lit("")).as("lang"), $"correct".as("c1"))
-    val knn = knn0.select($"doc_id", $"correct".as("c2"))
-    val heur = heur0.select($"doc_id", $"predicted_lang".as("pc"))
+    val knn = ml07KnnClassify(s, dir).select($"doc_id", $"correct".as("c2"))
+    val heur = TextOps.d03LangId(s, dir).select($"doc_id", $"predicted_lang".as("pc"))
     cochranQ(nb.join(knn, "doc_id").join(heur, "doc_id")
       .select($"c1", $"c2", ($"lang" === $"pc").cast("int").as("c3")))
   }
@@ -1314,9 +1266,8 @@ object Corpus {
     * on the ≤128-row budget and a single global aggregate. */
   def ml22Mcnemar(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
-    val (nb0, knn0) = inParallel(ml05NaiveBayes(s, dir), ml07KnnClassify(s, dir))
-    val nb = nb0.select($"doc_id", $"correct".as("c_nb"))
-    val knn = knn0.select($"doc_id", $"correct".as("c_knn"))
+    val nb = ml05NaiveBayes(s, dir).select($"doc_id", $"correct".as("c_nb"))
+    val knn = ml07KnnClassify(s, dir).select($"doc_id", $"correct".as("c_knn"))
     nb.join(knn, "doc_id")
       .agg(count(lit(1)).as("n_pairs"),
         sum(($"c_nb" * $"c_knn").cast("long")).as("both_right"),
@@ -1381,7 +1332,7 @@ object Corpus {
       .agg(count(lit(1)).as("n_errors"))
       .cache() // feeds the total and the top-k
     val tot = cells.agg(sum($"n_errors").as("tot_err"))
-    val out = cells
+    cells
       .orderBy($"n_errors".desc, $"true_lang".asc, $"pred_lang".asc)
       .limit(10)
       .crossJoin(broadcast(tot))
@@ -1392,9 +1343,6 @@ object Corpus {
         r($"n_errors".cast("double") / $"tot_err".cast("double"), 6)
           .as("err_share"))
       .orderBy($"rk")
-      .localCheckpoint(true)
-    cells.unpersist(blocking = false)
-    out
   }
 
   lazy val ml26Sql: String =
@@ -1443,8 +1391,12 @@ object Corpus {
     * Scale shape: one uniform (true, pred) count, a ≤|langs|²-row cell
     * table, driver-sized algebra. */
   def ml36Mcc(s: SparkSession, dir: String): DataFrame =
+    // mccOf's diagonal filter reaches below its shared cell count, so the
+    // predictions feed two plan branches; materialized first, as a lazy
+    // read ran 58 stages for the parent's 34 and a `cache()` still read
+    // 3.44 → 3.95 s at sf0.1 (4 cores, 5 pairs, 1 won)
     mccOf(ml05NaiveBayes(s, dir).select(col("lang").as("true_lang"),
-      col("pred_lang")))
+      col("pred_lang")).localCheckpoint(true))
 
   /** ml36's core over (true_lang, pred_lang) prediction rows — exposed
     * for the hand-computed confusion spec. */
@@ -1543,9 +1495,8 @@ object Corpus {
     * the ≤128-row budget, then label-cardinality marginal tables. */
   def ml24CohenKappa(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
-    val (nb0, knn0) = inParallel(ml05NaiveBayes(s, dir), ml07KnnClassify(s, dir))
-    val nb = nb0.select($"doc_id", $"pred_lang".as("pa"))
-    val knn = knn0.select($"doc_id", $"pred_lang".as("pb"))
+    val nb = ml05NaiveBayes(s, dir).select($"doc_id", $"pred_lang".as("pa"))
+    val knn = ml07KnnClassify(s, dir).select($"doc_id", $"pred_lang".as("pb"))
     cohenKappa(nb.join(knn, "doc_id").select($"pa", $"pb"))
   }
 
@@ -1554,7 +1505,7 @@ object Corpus {
   private[graft] def cohenKappa(pairs: DataFrame): DataFrame = {
     val s = pairs.sparkSession
     import s.implicits._
-    val pp = pairs.localCheckpoint(true) // 3 consumers of two full classifier plans
+    val pp = pairs.cache() // 3 consumers of two full classifier plans
     val ag = pp.agg(count(lit(1)).as("n_pairs"),
       sum(when($"pa" === $"pb", 1L).otherwise(0L)).as("n_agree"))
     val ma = pp.groupBy($"pa".as("l")).agg(count(lit(1)).as("na"))
@@ -1681,14 +1632,11 @@ object Corpus {
             (min(col(s"w$j")) + davg(expr(s"(y - p) * f$j")))
               .as(s"w$j")): _*)
     val wT = (1 to QlrIters).foldLeft(w0)((w, _) => step(w))
-    val out = f.crossJoin(broadcast(wT))
+    f.crossJoin(broadcast(wT))
       .select($"doc_id", $"y".cast("int").as("label"),
         r(expr(qlrP), 6).as("score"))
       .withColumn("keep", ($"score" >= 0.5).cast("int"))
       .orderBy($"doc_id")
-      .localCheckpoint(true)
-    f.unpersist(blocking = false)
-    out
   }
 
   /** ml06's DuckDB CTE block (hashed features, z-scoring, the unrolled GD
@@ -1839,7 +1787,7 @@ object Corpus {
     * the global cumulative window runs over a bounded relation; the
     * decile counts are one map-side-combinable pass. */
   def ml17RocAuc(s: SparkSession, dir: String): DataFrame =
-    rocAuc(ml06QualityClassifier(s, dir))
+    rocAuc(ml06QualityClassifier(s, dir).cache()) // the grid and the deciles
 
   /** ml17's core over a scored (label ∈ {0,1}, score) frame — exposed so
     * the spec can plant separable and tied score columns with
@@ -1951,7 +1899,9 @@ object Corpus {
     * (≤ 10⁶ + 1 distinct 6-dp scores) with two cumulative windows over
     * it — corpus-scale work is a single aggregation pass. */
   def ml32AucDelong(s: SparkSession, dir: String): DataFrame =
-    delongAuc(ml06QualityClassifier(s, dir))
+    // materialized before the AUC: with `cache()` instead this key read
+    // 4.75 → 5.39 s at sf0.1 (4 cores, 5 pairs, 0 won)
+    delongAuc(ml06QualityClassifier(s, dir).localCheckpoint(true))
 
   /** ml32's core over a scored (label ∈ {0,1}, score) frame — exposed so
     * the spec can plant separable and interleaved frames with
@@ -2056,7 +2006,7 @@ object Corpus {
       .cache() // feeds the per-lang totals and the global prior
     val ct = cf.groupBy($"lang").agg(sum($"n").as("nt"), sum($"sy").as("st"))
     val all = cf.agg(sum($"n").as("n_all"), sum($"sy").as("sy_all"))
-    val out = cf.join(broadcast(ct), Seq("lang"))
+    cf.join(broadcast(ct), Seq("lang"))
       .crossJoin(broadcast(all))
       .select($"lang", $"fold", $"n".as("n_in_fold"),
         ($"nt" - $"n").as("n_oof"), ($"st" - $"sy").as("sum_oof"),
@@ -2066,9 +2016,6 @@ object Corpus {
         r(expr(TeRaw), 6).as("enc_raw"),
         r(expr(TeSmooth), 6).as("enc_smooth"))
       .orderBy($"lang", $"fold")
-      .localCheckpoint(true)
-    cf.unpersist(blocking = false)
-    out
   }
 
   val ml18Sql: String = {
@@ -2153,15 +2100,13 @@ object Corpus {
         r(log(($"npair" * $"t").cast("double") / ($"nw" * $"nc").cast("double")), 6)
           .as("ppmi"))
       .filter($"ppmi" > 0.0)
-    val out = sc
+    sc
       .withColumn("rk", row_number().over(
         Window.partitionBy($"w").orderBy($"ppmi".desc, $"c".asc)))
       .filter($"rk" <= PpmiTopPerWord)
       .orderBy($"w", $"rk")
       .limit(PpmiLimit)
-      .localCheckpoint(true)
-    cp.unpersist(blocking = false)
-    out.select($"w", $"rk", $"c", $"npair", $"ppmi")
+      .select($"w", $"rk", $"c", $"npair", $"ppmi")
   }
 
   val d33Sql: String =
@@ -2232,13 +2177,10 @@ object Corpus {
         min(struct($"rk", $"w".as("tw"), $"cnt".as("tc"))).as("t1"))
       .select($"lang", $"t1.tw".as("top_term"), $"t1.tc".as("top_cnt"),
         r(slope, 6).as("zipf_slope"))
-    val out = tot.join(fit, "lang")
+    tot.join(fit, "lang")
       .select($"lang", $"n_tokens", $"vocab_size", $"top_term", $"top_cnt",
         $"zipf_slope")
       .orderBy($"lang")
-      .localCheckpoint(true)
-    tc.unpersist(blocking = false)
-    out
   }
 
   val d36Sql: String = {
@@ -2328,14 +2270,10 @@ object Corpus {
         dsum($"y").as("sy"), dsum($"x" * $"y").as("sxy"))
       .select(r(slope, 6).as("heaps_beta"),
         r(($"sy" - slope * $"sx") / $"n", 6).as("heaps_lnk"))
-    val out = pts.crossJoin(broadcast(fit))
+    pts.crossJoin(broadcast(fit))
       .select($"k", $"cum_docs", $"cum_tokens", $"vocab",
         $"heaps_beta", $"heaps_lnk")
       .orderBy($"k")
-      .localCheckpoint(true)
-    tokd.unpersist(blocking = false)
-    pts.unpersist(blocking = false)
-    out
   }
 
   val d40Sql: String = {
@@ -2417,7 +2355,7 @@ object Corpus {
     val te = t.filter($"split" === "test")
       .groupBy($"w").agg(count(lit(1)).as("tc"))
     val grid = ks.toDF("k_vocab")
-    val out = te.join(broadcast(vocab), Seq("w"), "left")
+    te.join(broadcast(vocab), Seq("w"), "left")
       .crossJoin(broadcast(grid))
       .groupBy($"k_vocab")
       .agg(sum($"tc").as("test_tokens"),
@@ -2432,9 +2370,6 @@ object Corpus {
         r($"covered_types".cast("double") / $"test_types".cast("double"), 6)
           .as("type_coverage"))
       .orderBy($"k_vocab")
-      .localCheckpoint(true)
-    t.unpersist(blocking = false)
-    out
   }
 
   val d52Sql: String = {
@@ -2500,7 +2435,7 @@ object Corpus {
     val bySrc = cells.groupBy($"src").agg(sum($"o").as("n_src"))
     val byDec = cells.groupBy($"decile").agg(sum($"o").as("n_dec"))
     val tot = cells.agg(sum($"o").cast("double").as("nn"))
-    val chi = cells
+    cells
       .join(broadcast(bySrc), "src").join(broadcast(byDec), "decile")
       .crossJoin(broadcast(tot))
       .withColumn("e", $"n_dec".cast("double") * $"n_src".cast("double") / $"nn")
@@ -2515,9 +2450,6 @@ object Corpus {
       .select($"decile", $"n_docs", $"chi2", $"b.src".as("top_source"),
         r((-$"b.no").cast("double") / $"n_docs".cast("double"), 6).as("top_share"))
       .orderBy($"decile")
-      .localCheckpoint(true)
-    cells.unpersist(blocking = false)
-    chi
   }
 
   val d43Sql: String =
@@ -2586,7 +2518,7 @@ object Corpus {
     val nt = cw.agg(sum($"nw").as("ntot"))
     val p = $"np".cast("double") / $"nsrc".cast("double")
     val q = $"nw".cast("double") / $"ntot".cast("double")
-    val out = cs.join(cw, "w").join(broadcast(ns), "src")
+    cs.join(cw, "w").join(broadcast(ns), "src")
       .crossJoin(broadcast(nt))
       .select($"src", $"nsrc", p.as("p"), q.as("q"))
       .withColumn("m", ($"p" + $"q") / lit(2.0))
@@ -2598,9 +2530,6 @@ object Corpus {
         r(lit(0.5) * $"tsum" +
           lit(0.5) * expr(s"CAST($Ln2 AS DOUBLE)") * (lit(1.0) - $"qcov"), 6).as("jsd"))
       .orderBy($"source")
-      .localCheckpoint(true)
-    cs.unpersist(blocking = false)
-    out
   }
 
   val d41Sql: String =
@@ -2866,7 +2795,7 @@ object Corpus {
       .rowsBetween(Window.unboundedPreceding, Window.currentRow)
     val wAll = Window.orderBy($"decile")
       .rowsBetween(Window.unboundedPreceding, Window.unboundedFollowing)
-    val out = sc.crossJoin(broadcast(th))
+    sc.crossJoin(broadcast(th))
       .select((lit(11L) - expr(decBucketSql("score", "d"))).as("decile"), $"y")
       .groupBy($"decile")
       .agg(count(lit(1)).as("n"), sum($"y").as("n_pos"))
@@ -2878,9 +2807,6 @@ object Corpus {
       .select($"decile", $"n", $"n_pos", $"cum_n", $"cum_pos",
         r(expr(GCap), 6).as("capture"), r(expr(GLift), 6).as("lift"))
       .orderBy($"decile")
-      .localCheckpoint(true)
-    sc.unpersist(blocking = false)
-    out
   }
 
   val ml25Sql: String =
@@ -3005,8 +2931,7 @@ object Corpus {
     // sparse vector per doc: (doc, token) counts + the full-vector L2
     // norm. The count table feeds both the tf rows and the norm
     // aggregation — cached so the corpus explode runs once per split
-    // (invariant 5), freed after the small output materializes (d10's
-    // pattern).
+    // (invariant 5).
     // r14 perf: ONE pinned doc_id fan-out at the top of each split, and
     // every downstream step rides it exchange-free. Before: the tf count
     // table arrived hashed by (doc_id, lang, w) and AQE coalesced its
@@ -3046,7 +2971,7 @@ object Corpus {
         r($"dot" / ($"qnrm" * $"tnrm"), 6).as("cosine"))
     // probe-side window: bounded by budget × candidates (e01's shape)
     val w = Window.partitionBy($"qid").orderBy($"cosine".desc, $"tid".asc)
-    val out = cos.withColumn("rk", row_number().over(w)).filter($"rk" <= k)
+    cos.withColumn("rk", row_number().over(w)).filter($"rk" <= k)
       .groupBy($"qid", $"tl", $"nl")
       .agg(count(lit(1)).as("cnt"), min($"rk").as("br"))
       .groupBy($"qid", $"tl")
@@ -3063,10 +2988,6 @@ object Corpus {
       // (wide exchange, so the pair-join stage above stays 32-way).
       .repartition(1)
       .sortWithinPartitions($"doc_id")
-      .localCheckpoint(true)
-    trC.unpersist(blocking = false)
-    teC.unpersist(blocking = false)
-    out
   }
 
   /** ml07's DuckDB CTE block (split, sparse tf, inverted-index cosine,
@@ -3112,7 +3033,7 @@ object Corpus {
     * CTE-sharing discipline, so the parametric and non-parametric
     * classifiers carry comparable per-round quality numbers). */
   def ml10KnnEval(s: SparkSession, dir: String): DataFrame =
-    classifierEval(ml07KnnClassify(s, dir))
+    classifierEval(ml07KnnClassify(s, dir).cache()) // three eval branches
 
   val ml10Sql: String =
     s"""WITH $ml07Ctes,
@@ -3198,7 +3119,7 @@ object Corpus {
       .join(c2.select($"bg".as("bg2"), $"c".as("c2big")), Seq("bg2"), "left")
       .join(c1.select($"w".as("ctx1"), $"c".as("c1ctx")), Seq("ctx1"), "left")
       .crossJoin(broadcast(nt))
-    val out = jn
+    jn
       .select($"doc_id", $"lang", expr(sbLvlExpr).as("lvl"),
         expr(sbLogpExpr).as("logp"))
       .groupBy($"lang")
@@ -3209,9 +3130,6 @@ object Corpus {
         count(when($"lvl" === 1, 1)).as("n_uni"),
         r(dsum($"logp") / count(lit(1)), 6).as("avg_logp"))
       .orderBy($"lang")
-      .localCheckpoint(true)
-    Seq(trd, c1, c2).foreach(_.unpersist(blocking = false))
-    out
   }
 
   val d37Sql: String =

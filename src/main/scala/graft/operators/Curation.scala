@@ -306,7 +306,7 @@ object Curation {
       .select($"doc_id", $"h", gramsCol(LeakN).as("gs"))
       .cache()
     val trainG = g0.filter($"h" <= 7).select(explode($"gs").as("tg")).distinct()
-    val out = g0.filter($"h" === 9)
+    g0.filter($"h" === 9)
       .select($"doc_id", size($"gs").as("n_ngrams"), explode_outer($"gs").as("g"))
       .join(trainG, $"g" === $"tg", "left")
       .groupBy($"doc_id", $"n_ngrams")
@@ -315,9 +315,6 @@ object Curation {
         contamRatioCol.as("leak_ratio"))
       .withColumn("leaked", ($"leak_ratio" >= LeakTau).cast("int"))
       .orderBy($"doc_id")
-      .localCheckpoint(true)
-    g0.unpersist(blocking = false)
-    out
   }
 
   val d35Sql: String = {
@@ -379,7 +376,7 @@ object Curation {
         col("x.g") === col("y.g") && col("x.source") =!= col("y.source"))
       .groupBy(col("x.source").as("src_a"), col("y.source").as("src_b"))
       .agg(count(lit(1)).as("n_shared0"))
-    val out = pairs
+    pairs
       .join(broadcast(tot.select($"source".as("src_a"),
         $"n_grams".as("n_grams_a"))), Seq("src_a"))
       .join(shared, Seq("src_a", "src_b"), "left")
@@ -388,9 +385,6 @@ object Curation {
         r(coalesce($"n_shared0", lit(0L)).cast("double") /
           $"n_grams_a".cast("double"), 6).as("containment"))
       .orderBy($"src_a", $"src_b")
-      .localCheckpoint(true)
-    Seq(g0, sg).foreach(_.unpersist(blocking = false))
-    out
   }
 
   val d46Sql: String =
@@ -471,15 +465,12 @@ object Curation {
           (log(($"n_test" + 1).cast("double")) - log(($"tte" + PsiBins).cast("double")))))
       .cache() // feeds the per-bin output and the per-feature total
     val tot = terms.groupBy($"feature").agg(r(dsum($"term"), 6).as("psi"))
-    val out = terms
+    terms
       .join(broadcast(tot), Seq("feature"))
       .select($"feature", $"bin", $"n_train", $"n_test",
         r($"p", 6).as("p_train"), r($"q", 6).as("p_test"),
         r($"term", 6).as("psi_term"), $"psi")
       .orderBy($"feature", $"bin")
-      .localCheckpoint(true)
-    Seq(feats, terms).foreach(_.unpersist(blocking = false))
-    out
   }
 
   val ml19Sql: String = {
@@ -573,14 +564,11 @@ object Curation {
     val hl = log($"nn".cast("double")) - $"sl" / $"nn".cast("double")
     val mi = log($"nn".cast("double")) - $"sl" / $"nn".cast("double") -
       $"sb" / $"nn".cast("double") + $"sbl" / $"nn".cast("double")
-    val out = sb.join(sl, "feature").join(sbl, "feature")
+    sb.join(sl, "feature").join(sbl, "feature")
       .select($"feature", $"nn".as("n_docs"),
         r(hl, 6).as("h_label"), r(mi, 6).as("mi"),
         when(r(hl, 6) === 0.0, lit(0.0)).otherwise(r(mi / hl, 6)).as("ig_ratio"))
       .orderBy($"feature")
-      .localCheckpoint(true)
-    Seq(f0, cells).foreach(_.unpersist(blocking = false))
-    out
   }
 
   val ml20Sql: String = {
@@ -651,16 +639,13 @@ object Curation {
       .groupBy($"user_id").agg(count(lit(1)).as("ns"))
       .filter($"ns" === 2)
       .agg(count(lit(1)).as("n_overlap_users"))
-    val out = tagged.groupBy($"split")
+    tagged.groupBy($"split")
       .agg(count(lit(1)).as("n_events"),
         countDistinct($"user_id").as("n_users"),
         r(min($"x"), 6).as("min_ts"), r(max($"x"), 6).as("max_ts"),
         r(max($"tau"), 6).as("boundary"))
       .crossJoin(broadcast(overlap))
       .orderBy($"split")
-      .localCheckpoint(true)
-    Seq(ev, tagged).foreach(_.unpersist(blocking = false))
-    out
   }
 
   val s06Sql: String =
@@ -796,7 +781,7 @@ object Curation {
         when($"n_ngrams" > 0,
           r($"n_novel".cast("double") / $"n_ngrams", 6)).otherwise(lit(0.0))
           .as("doc_novelty"))
-    val out = perDoc.groupBy($"source")
+    perDoc.groupBy($"source")
       .agg(count(lit(1)).as("n_docs"),
         sum($"n_ngrams").as("n_grams"),
         sum($"n_novel").as("n_novel"),
@@ -807,9 +792,6 @@ object Curation {
           .as("novelty_ratio"),
         $"mean_doc_novelty")
       .orderBy($"source")
-      .localCheckpoint(true)
-    g0.unpersist(blocking = false)
-    out
   }
 
   val d39Sql: String =
@@ -1074,8 +1056,7 @@ object Curation {
     * standalone query uses ([[contamHits]], [[repetitionStats]],
     * [[mixRates]], [[packSequences]]), so the composition inherits their
     * semantics and scale stories by construction. The tokenized-clean-
-    * corpus cache feeds every stage and is freed in-query via the d13
-    * localCheckpoint pattern.
+    * corpus cache feeds every stage.
     *
     * Why n=5 grams (vs d16's trigrams): on this ~30-word vocabulary the
     * trigram space saturates as the benchmark grows (measured at sf0.1:
@@ -1101,12 +1082,8 @@ object Curation {
       .join(calm, Seq("doc_id"), "left_semi")
     val mixed = surv.join(broadcast(mixRates(s, surv)), $"source" === $"src")
       .filter(mixAccept)
-    val out = packSequences(s, mixed
+    packSequences(s, mixed
       .select($"doc_id", $"lang", size($"tk").as("n_tok")))
-      // eager snapshot so the token cache can be freed inside the query
-      .localCheckpoint(true)
-    tk.unpersist(blocking = false)
-    out
   }
 
   val d23Sql: String =

@@ -511,15 +511,12 @@ object DedupLsh {
       .join(coll, Seq("doc_a", "doc_b"), "left")
       .withColumn("coll", coalesce($"cf", lit(0)))
       .withColumn("jacc_bin", least(lit(9), floor($"jacc" * 10.0).cast("int")))
-    val out = pairs.groupBy($"jacc_bin")
+    pairs.groupBy($"jacc_bin")
       .agg(count(lit(1)).as("n_pairs"), sum($"coll").cast("long").as("n_collide"))
       .withColumn("emp_p",
         r($"n_collide".cast("double") / $"n_pairs".cast("double"), 6))
       .withColumn("theory_p", r(scurveTheoryCol($"jacc_bin"), 6))
       .orderBy($"jacc_bin")
-      .localCheckpoint(true)
-    Seq(smp, bands).foreach(_.unpersist(blocking = false))
-    out
   }
 
   val m05Sql: String =

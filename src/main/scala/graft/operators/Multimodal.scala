@@ -284,7 +284,7 @@ object Multimodal {
       .cache()
     val first = chunks.groupBy($"chunk_md5")
       .agg(min(struct($"doc_id", $"chunk_id")).as("f"))
-    val out = chunks.join(first, "chunk_md5")
+    chunks.join(first, "chunk_md5")
       .withColumn("is_dup",
         ($"doc_id" =!= $"f.doc_id" || $"chunk_id" =!= $"f.chunk_id").cast("int"))
       .groupBy($"doc_id")
@@ -295,9 +295,6 @@ object Multimodal {
         r(sum(when($"is_dup" === 1, $"clen").otherwise(0)).cast("double") /
           sum($"clen"), 6).as("dup_ratio"))
       .orderBy($"doc_id")
-      .localCheckpoint(true)
-    chunks.unpersist(blocking = false)
-    out
   }
 
   val x06Sql: String =
@@ -374,7 +371,7 @@ object Multimodal {
       posexplode(array((0 until 4).map(j =>
         shiftright($"ph", 16 * j).bitwiseAND(lit(65535L))): _*))
         .as(Seq("band", "bv")))
-    val out = bands.as("a")
+    bands.as("a")
       .join(bands.as("b"),
         col("a.band") === col("b.band") && col("a.bv") === col("b.bv") &&
           col("a.doc_id") < col("b.doc_id"))
@@ -386,9 +383,6 @@ object Multimodal {
       .select($"doc_a", $"doc_b", $"hd",
         ($"hd" === 0).cast("int").as("is_exact"))
       .orderBy($"doc_a", $"doc_b")
-      .localCheckpoint(true)
-    ph.unpersist(blocking = false)
-    out
   }
 
   val x07Sql: String = {
@@ -548,7 +542,7 @@ object Multimodal {
     val keep = fr.groupBy($"fh").agg(count(lit(1)).as("dfc"))
       .filter($"dfc" <= FrameDfCap).select($"fh")
     val fr2 = fr.join(keep, "fh")
-    val out = fr2.as("a")
+    fr2.as("a")
       .join(fr2.as("b"), col("a.fh") === col("b.fh") &&
         col("a.doc_id") < col("b.doc_id"))
       .select(col("a.doc_id").as("doc_a"), col("b.doc_id").as("doc_b"))
@@ -560,9 +554,6 @@ object Multimodal {
           least($"n_frames_a", $"n_frames_b").cast("double"), 6).as("containment"))
       .orderBy(desc_nulls_last("containment"), $"doc_a", $"doc_b")
       .limit(20)
-      .localCheckpoint(true)
-    fr.unpersist(blocking = false)
-    out
   }
 
   val x10Sql: String =

@@ -1003,10 +1003,7 @@ object Similarity {
       .withColumn("hd", bit_count($"qb".bitwiseXOR($"cb")))
       .withColumn("hrank", row_number().over(w))
       .filter($"hrank" <= RerankDepth)
-    val out = rerankTop5(c, short).orderBy($"query_id", $"rank")
-      .localCheckpoint(true)
-    c.unpersist(blocking = false)
-    out
+    rerankTop5(c, short).orderBy($"query_id", $"rank")
   }
 
   /** e17's binary-sketch CTE block (expects `n` in scope), ending in
@@ -1105,7 +1102,7 @@ object Similarity {
       coalesce(lit(1.0) / (kD + $"r1".cast("double")), lit(0.0)) +
         coalesce(lit(1.0) / (kD + $"r2".cast("double")), lit(0.0))
     val wf = Window.partitionBy($"query_id").orderBy($"rrf0".desc, $"neighbor_id".asc)
-    val out = sys1.join(sys2, Seq("query_id", "neighbor_id"), "full_outer")
+    sys1.join(sys2, Seq("query_id", "neighbor_id"), "full_outer")
       .withColumn("rrf0", rrfRaw)
       .withColumn("frank", row_number().over(wf))
       .filter($"frank" <= 5)
@@ -1114,9 +1111,6 @@ object Similarity {
         coalesce($"r1", lit(0)).as("cos_rank"),
         coalesce($"r2", lit(0)).as("ham_rank"))
       .orderBy($"query_id", $"frank")
-      .localCheckpoint(true)
-    c.unpersist(blocking = false)
-    out
   }
 
   val e34Sql: String =
@@ -1661,7 +1655,7 @@ object Similarity {
       .join(asg.select($"vec_id", $"cid"), Seq("vec_id"))
       .filter($"ocid" =!= $"cid")
       .groupBy($"vec_id").agg(min($"d").as("bd"))
-    val out = asg.join(bd, Seq("vec_id"))
+    asg.join(bd, Seq("vec_id"))
       .withColumn("sil", r(expr(SilExpr), 6))
       .groupBy($"cid")
       .agg(count(lit(1)).as("n_vecs"),
@@ -1669,9 +1663,6 @@ object Similarity {
         ravg($"sil", 6).as("mean_sil"))
       .select($"cid".as("cluster"), $"n_vecs", $"mean_a", $"mean_b", $"mean_sil")
       .orderBy($"cluster")
-      .localCheckpoint(true)
-    Seq(asg, cents, c).foreach(_.unpersist(blocking = false))
-    out
   }
 
   val e21Sql: String =
@@ -1734,13 +1725,10 @@ object Similarity {
       .agg(max(struct($"rij", (-$"ocid").as("nocid"))).as("w"))
       .select($"cid", $"w.rij".as("db_ratio"),
         (-$"w.nocid").cast("int").as("vs_cluster"))
-    val out = disp.join(worst, Seq("cid"))
+    disp.join(worst, Seq("cid"))
       .select($"cid".as("cluster"), $"n_vecs", $"si".as("dispersion"),
         $"vs_cluster", $"db_ratio")
       .orderBy($"cluster")
-      .localCheckpoint(true)
-    Seq(disp, cents, c).foreach(_.unpersist(blocking = false))
-    out
   }
 
   val e27Sql: String =
@@ -2089,13 +2077,10 @@ object Similarity {
       .repartition(s.sessionState.conf.numShufflePartitions, $"vec_id")
       .cache()
     val v = pcaLoadings(cx.select($"vec_id", $"i", $"cx"), PcaIters)
-    val out = cx.join(broadcast(v), $"i" === $"j")
+    cx.join(broadcast(v), $"i" === $"j")
       .groupBy($"vec_id", $"label")
       .agg(r(dsum($"cx" * $"vj"), 6).as("pc1"))
       .orderBy($"vec_id")
-      .localCheckpoint(true)
-    cx.unpersist(blocking = false)
-    out
   }
 
   /** e18's whole eigenproblem as a CTE block (centered explode,
@@ -2386,7 +2371,7 @@ object Similarity {
       .agg(r(davg($"x"), 6).as("mu"))
       .cache() // feeds the norm and the dot grid
     val cn = cen.groupBy($"cl").agg(sqrt(dsum($"mu" * $"mu")).as("cnrm"))
-    val out = test
+    test
       .select($"query_id", $"tl", $"qnrm", posexplode($"qv").as(Seq("i", "x")))
       .join(broadcast(cen), "i")
       .groupBy($"query_id", $"tl", $"qnrm", $"cl")
@@ -2399,9 +2384,6 @@ object Similarity {
         $"b.l".as("pred_label"), (-$"b.nc").as("cosine"),
         ($"tl" === $"b.l").cast("int").as("correct"))
       .orderBy($"vec_id")
-      .localCheckpoint(true)
-    cen.unpersist(blocking = false)
-    out
   }
 
   val e30Sql: String =
@@ -2467,9 +2449,7 @@ object Similarity {
           r(percentile($"hits" / lit(5.0), lit(0.5)), 6).as("p50_recall5"))
         .select(lit(m).as("m_dims"), $"n_queries", $"avg_recall5", $"p50_recall5")
     }
-    val out = parts.reduce(_ unionByName _).orderBy($"m_dims").localCheckpoint(true)
-    Seq(c, exact5).foreach(_.unpersist(blocking = false))
-    out
+    parts.reduce(_ unionByName _).orderBy($"m_dims")
   }
 
   val e20Sql: String = {
@@ -2552,9 +2532,7 @@ object Similarity {
         .select(lit(p.toLong).as("nprobe"), $"n_queries", $"avg_recall5",
           $"p50_recall5")
     }
-    val out = parts.reduce(_ unionByName _).orderBy($"nprobe").localCheckpoint(true)
-    Seq(c, cand, exact5).foreach(_.unpersist(blocking = false))
-    out
+    parts.reduce(_ unionByName _).orderBy($"nprobe")
   }
 
   val e24Sql: String = {
@@ -2615,14 +2593,11 @@ object Similarity {
       .select($"nn",
         r(sqrt($"s2" / $"k" - ($"s1" / $"k") * ($"s1" / $"k")) / ($"s1" / $"k"), 6).as("cv"),
         r($"mx" / $"nn", 6).as("max_share"))
-    val out = lists.crossJoin(broadcast(tot))
+    lists.crossJoin(broadcast(tot))
       .select($"cid".cast("long").as("cid"), $"n_vectors",
         r($"n_vectors".cast("double") / $"nn", 6).as("share"),
         $"cv", $"max_share")
       .orderBy($"cid")
-      .localCheckpoint(true)
-    Seq(c, lists).foreach(_.unpersist(blocking = false))
-    out
   }
 
   val e25Sql: String =
@@ -2760,14 +2735,11 @@ object Similarity {
         $"cosine".as("neg_cosine"))
     val pos = ranked.filter($"same")
       .select($"query_id", $"neighbor_id".as("pos_id"), $"cosine".as("pos_cosine"))
-    val out = neg.join(pos, Seq("query_id"), "left")
+    neg.join(pos, Seq("query_id"), "left")
       .select($"query_id", $"q_label", $"rank", $"neg_id", $"neg_label",
         $"neg_cosine", $"pos_id", $"pos_cosine",
         r($"pos_cosine" - $"neg_cosine", 6).as("margin"))
       .orderBy($"query_id", $"rank")
-      .localCheckpoint(true)
-    ranked.unpersist(blocking = false)
-    out
   }
 
   val e22Sql: String =
@@ -2848,7 +2820,7 @@ object Similarity {
       .withColumn("srk", row_number().over(Window
         .partitionBy($"label", $"salt").orderBy($"d2".desc, $"vec_id".asc)))
       .filter($"srk" <= 3)
-    val out = cand
+    cand
       .withColumn("rk", row_number().over(Window.partitionBy($"label")
         .orderBy($"d2".desc, $"vec_id".asc)))
       .filter($"rk" <= 3)
@@ -2858,9 +2830,6 @@ object Similarity {
         $"n_vectors", r(expr(CoZ), 6).as("z"))
       .withColumn("is_outlier", ($"z" > 3.0).cast("int"))
       .orderBy($"label", $"rk")
-      .localCheckpoint(true)
-    d2f.unpersist(blocking = false)
-    out
   }
 
   val e26Sql: String =

@@ -736,7 +736,7 @@ object Telemetry {
     val top = per.orderBy($"downtime_s".desc, $"user_id".asc).limit(20)
     val w = Window.orderBy($"downtime_s".desc, $"user_id".asc)
       .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    val out = top.crossJoin(broadcast(tot))
+    top.crossJoin(broadcast(tot))
       .filter($"tot_down" > 0)
       .withColumn("cum_down", sum($"downtime_s").over(w))
       .select(row_number().over(
@@ -745,9 +745,6 @@ object Telemetry {
         r($"downtime_s".cast("double") / $"tot_down".cast("double"), 6).as("share"),
         r($"cum_down".cast("double") / $"tot_down".cast("double"), 6).as("cum_share"))
       .orderBy($"rk")
-      .localCheckpoint(true)
-    per.unpersist(blocking = false)
-    out
   }
 
   val t28Sql: String =
@@ -818,12 +815,9 @@ object Telemetry {
       .cache() // feeds sigma and the scored ranking
     val sg = fr.groupBy($"event_type")
       .agg(sqrt(davg($"resid" * $"resid")).as("sigma"))
-    val out = fr.join(broadcast(sg), "event_type")
+    fr.join(broadcast(sg), "event_type")
       .select($"event_type", $"hx", $"hod", $"dow", $"y",
         $"fitted", $"resid", $"sigma")
-      .localCheckpoint(true)
-    Seq(h, fr).foreach(_.unpersist(blocking = false))
-    out
   }
 
   /** t29's core over an explicit (event_type, hx, y) hourly series —
@@ -937,7 +931,7 @@ object Telemetry {
         expr(LrEa).as("ea"),
         when(expr(LrN) > 1.0, expr(LrV)).otherwise(lit(0.0)).as("v"))
       .agg(sum($"da").as("oa"), dsum($"ea").as("easum"), dsum($"v").as("vsum"))
-    val out = tot.crossJoin(broadcast(st))
+    tot.crossJoin(broadcast(st))
       .filter($"vsum" > 0)
       .select($"n_sessions_a", $"n_sessions_b", $"events_a", $"events_b",
         r($"oa".cast("double") - $"easum", 6).as("o_minus_e"),
@@ -945,9 +939,6 @@ object Telemetry {
         r(($"oa".cast("double") - $"easum") / sqrt($"vsum"), 6).as("z"),
         r((($"oa".cast("double") - $"easum") / sqrt($"vsum")) *
           (($"oa".cast("double") - $"easum") / sqrt($"vsum")), 6).as("chi2"))
-      .localCheckpoint(true)
-    at.unpersist(blocking = false)
-    out
   }
 
   val t30Sql: String =
@@ -1203,7 +1194,7 @@ object Telemetry {
       .withColumn("gap", $"tu" - lag($"tu", 1).over(w))
       .cache() // feeds the per-user aggregate and the corpus clock
     val clock = gaps.agg(max($"tu").as("t_end"))
-    val out = gaps.crossJoin(broadcast(clock))
+    gaps.crossJoin(broadcast(clock))
       .groupBy($"user_id")
       .agg(count(lit(1)).as("n_events"),
         count($"gap").as("n_gaps"),
@@ -1220,9 +1211,6 @@ object Telemetry {
         ($"max_gap_us".cast("double") > lit(4.0) * $"mean_gap_us").cast("int").as("gappy"),
         ($"silent_us".cast("double") > lit(2.0) * $"mean_gap_us").cast("int").as("stale"))
       .orderBy($"user_id")
-      .localCheckpoint(true)
-    gaps.unpersist(blocking = false)
-    out
   }
 
   val t22Sql: String =
@@ -1296,7 +1284,7 @@ object Telemetry {
       .cache() // feeds both tot and the candidate join
     val tot = pre.groupBy($"event_type")
       .agg(count(lit(1)).as("tt"), sum($"xi").as("st"))
-    val out = pre.join(broadcast(tot), "event_type")
+    pre.join(broadcast(tot), "event_type")
       .filter($"k" < $"tt")
       .withColumn("gain", r(expr(CpGain), 6))
       .withColumn("rk", row_number().over(Window.partitionBy($"event_type")
@@ -1309,9 +1297,6 @@ object Telemetry {
         r(expr(s"($CpMeanR) - ($CpMeanL)"), 6).as("shift"),
         $"gain")
       .orderBy($"event_type")
-      .localCheckpoint(true)
-    pre.unpersist(blocking = false)
-    out
   }
 
   val t23Sql: String =
@@ -2216,7 +2201,7 @@ object Telemetry {
        ORDER BY scope"""
 
   /** Run `body` with session confs pinned, restoring them afterwards —
-    * `body` must materialize (e.g. `localCheckpoint(true)`) whatever plans
+    * `body` must materialize (e.g. by an eager checkpoint) whatever plans
     * under the pins, since restoring must not replan it. Captures the
     * EXPLICIT setting only: `getOption` surfaces a conf's REGISTERED
     * DEFAULT (true for `v2.bucketing.enabled` on this engine), so a naive

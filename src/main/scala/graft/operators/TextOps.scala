@@ -625,7 +625,7 @@ object TextOps {
       .groupBy($"source", $"fp").agg(count(lit(1)).as("nd"))
       .filter($"nd" >= BoilerK)
       .select($"source", $"fp", lit(1).as("bf"))
-    val out = units.join(rep, Seq("source", "fp"), "left")
+    units.join(rep, Seq("source", "fp"), "left")
       .groupBy($"source")
       .agg(count(lit(1)).as("n_units"),
         sum(coalesce($"bf", lit(0))).cast("long").as("n_boiler_units"),
@@ -633,9 +633,6 @@ object TextOps {
       .withColumn("boiler_share",
         r($"n_boiler_units".cast("double") / $"n_units".cast("double"), 6))
       .orderBy($"source")
-      .localCheckpoint(true)
-    units.unpersist(blocking = false)
-    out
   }
 
   val d50Sql: String =
@@ -685,8 +682,8 @@ object TextOps {
       .limit(500)
 
   /** The unlimited SNM pair set (J ≥ 0.5, distinct) — shared by d54's
-    * report and d55's audit; checkpointed so callers reuse it without
-    * re-running the neighborhood join. */
+    * report and d55's audit. A caller that reads it twice caches it
+    * (d55/d56 cache their stratum-filtered pair set). */
   private[graft] def snmPairsAll(docs: DataFrame): DataFrame = {
     val s = docs.sparkSession
     import s.implicits._
@@ -713,7 +710,7 @@ object TextOps {
       .withColumn("gb", explode(array(expr(s"rn2 div $SnmW"),
         expr(s"rn2 div $SnmW - 1"))))
     val inter = size(array_intersect($"ta", $"tb"))
-    val out = a.join(b, $"blk2" === $"blk" && $"gb" === $"ga" &&
+    a.join(b, $"blk2" === $"blk" && $"gb" === $"ga" &&
         $"rn2" > $"rn" && $"rn2" <= $"rn" + SnmW)
       .select(least($"ida", $"idb").as("doc_a"),
         greatest($"ida", $"idb").as("doc_b"),
@@ -721,9 +718,6 @@ object TextOps {
           (size($"ta") + size($"tb") - inter), 6).as("jaccard"))
       .filter($"jaccard" >= 0.5)
       .distinct()
-      .localCheckpoint(true)
-    keyed.unpersist(blocking = false)
-    out
   }
 
   /** The SNM CTE block (sort keys → per-block ranks → windowed candidate
@@ -805,6 +799,7 @@ object TextOps {
       .join(kept.select($"doc_id".as("doc_a")), Seq("doc_a"), "left_semi")
       .join(kept.select($"doc_id".as("doc_b")), Seq("doc_b"), "left_semi")
       .select($"doc_a", $"doc_b")
+      .cache() // the audit counts it and joins it with the truth pairs
     val ex = nearDupPairsOver(docs
         .join(kept, Seq("doc_id"), "left_semi")
         .select($"doc_id", $"lang", array_distinct(toks($"text")).as("ts")))
@@ -910,6 +905,7 @@ object TextOps {
       .join(ids.select($"doc_id".as("doc_a")), Seq("doc_a"), "left_semi")
       .join(ids.select($"doc_id".as("doc_b")), Seq("doc_b"), "left_semi")
       .select($"doc_a", $"doc_b")
+      .cache() // the audit counts it and joins it with the truth pairs
     val ex = nearDupPairsOver(docs
         .join(ids, Seq("doc_id"), "left_semi")
         .select($"doc_id", $"lang", array_distinct(toks($"text")).as("ts")))
@@ -2112,7 +2108,7 @@ object TextOps {
       .select(col("a.doc_id").as("doc_a"), col("b.doc_id").as("doc_b"))
       .distinct()
     val inter = size(array_intersect($"sha", $"shb"))
-    val out = cands
+    cands
       .join(sh.select($"doc_id".as("doc_a"), $"sh".as("sha"), $"ns".as("nsa")), "doc_a")
       .join(sh.select($"doc_id".as("doc_b"), $"sh".as("shb"), $"ns".as("nsb")), "doc_b")
       .select($"doc_a", $"doc_b", $"nsa", $"nsb",
@@ -2120,9 +2116,6 @@ object TextOps {
       .filter($"containment" >= ContainTau)
       .orderBy($"containment".desc, $"doc_a", $"doc_b")
       .limit(500)
-      .localCheckpoint(true)
-    sh.unpersist(blocking = false)
-    out
   }
 
   val d30Sql: String = {
@@ -2381,17 +2374,13 @@ object TextOps {
       .distinct()
       .groupBy($"theta").agg(count(lit(1)).as("n_docs_flagged"))
     val tot = docs.agg(count(lit(1)).as("n_docs"))
-    val out = th.join(np, Seq("theta"), "left").join(nd, Seq("theta"), "left")
+    th.join(np, Seq("theta"), "left").join(nd, Seq("theta"), "left")
       .crossJoin(broadcast(tot))
       .select($"theta", coalesce($"n_pairs", lit(0L)).as("n_pairs"),
         coalesce($"n_docs_flagged", lit(0L)).as("n_docs_flagged"),
         r(coalesce($"n_docs_flagged", lit(0L)).cast("double") /
           $"n_docs".cast("double"), 6).as("flagged_share"))
       .orderBy($"theta")
-      .localCheckpoint(true)
-    pr.unpersist(blocking = false)
-    cand.unpersist(blocking = false)
-    out
   }
 
   /** The sweep tail in SQL, appended after a CTE block ending in

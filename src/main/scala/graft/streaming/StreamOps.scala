@@ -170,7 +170,6 @@ object StreamOps {
         lit(" vib="), format_number(col("vibration"), 2)))
   }
 
-  /** QoS-1 dedup: at-least-once duplicates dropped within the watermark. */
   /** Corpus exact-dedup on ingest: first-arrival survivor per normalized
     * text fingerprint (d04's `normFp`, the SHARED builder — so the stream
     * twin cannot drift from the oracle-green batch dedup). When documents
@@ -187,6 +186,7 @@ object StreamOps {
       .dropDuplicates("fp")
       .drop("fp")
 
+  /** QoS-1 dedup: at-least-once duplicates dropped within the watermark. */
   def dedupQos1(df: DataFrame, watermark: String = "10 minutes"): DataFrame =
     df.withWatermark("ts", watermark).dropDuplicates("machineId", "ts")
 

@@ -20,6 +20,11 @@ abstract class GraftSpec extends AnyFunSuite with BeforeAndAfterAll {
   def sfTiny: String = GraftSpec.sfTiny
   def sfSmall: String = GraftSpec.sfSmall
 
+  /** Queries leave their intermediates cached until `Harness.clean`, so
+    * each suite drops them before the next one shares the session. */
+  override def afterAll(): Unit =
+    try Harness.clean(spark) finally super.afterAll()
+
   /** The highest job id the session has started, once job-start events
     * have settled. They reach the status store asynchronously, so wait
     * until the value is stable across two polls. The MAX id, not the

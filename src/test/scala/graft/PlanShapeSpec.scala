@@ -1,7 +1,7 @@
 package graft
 
 import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.execution.SparkPlan
+import org.apache.spark.sql.execution.{LogicalRDD, SparkPlan}
 import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
 import org.apache.spark.sql.execution.exchange.{BroadcastExchangeLike, ShuffleExchangeLike}
 import graft.operators.{Relational, Skew, Telemetry, TextOps}
@@ -374,5 +374,32 @@ class PlanShapeSpec extends GraftSpec {
     val after = settledJobId
     assert(after - before <= fanOutQueries.size * perRead,
       s"construction launched ${after - before} job(s); only table reads allowed")
+  }
+
+  // the classifier panel, then one query per operator file whose function
+  // used to end in an eager checkpoint
+  private val lazyKeys = Seq("ml22_mcnemar", "ml24_cohen_kappa", "ml27_ensemble_eval",
+    "ml34_cochran_q", "ml37_fleiss_kappa", "ml38_krippendorff_alpha",
+    "ml39_paired_bootstrap", "q63_attribution", "q51_ks_test", "d33_ppmi_contexts",
+    "d35_split_leakage", "m05_lsh_scurve", "ml13_gbt_stumps", "x07_phash_neardup",
+    "e24_nprobe_sweep", "t28_downtime_pareto", "d54_sorted_neighborhood")
+
+  test("lazy queries: building the panel and a query per operator file runs only table reads") {
+    val queries = Harness.select(lazyKeys)
+    val before = settledJobId
+    val built = lazyKeys.map(k => k -> queries(k)(spark, sfTiny))
+    val after = settledJobId
+    // a parquet read runs one footer job, named for its call site in Tables
+    val tracker = spark.sparkContext.statusTracker
+    def stages(job: Int): Seq[String] = tracker.getJobInfo(job).toSeq
+      .flatMap(_.stageIds.toSeq).map(id => tracker.getStageInfo(id).fold("?")(_.name))
+    val other = (before + 1 to after).map(stages)
+      .filterNot(st => st.nonEmpty && st.forall(_.startsWith("parquet at Tables.scala")))
+    assert(other.size == 0,
+      s"job(s) beyond table reads, by call site: ${other.flatten.distinct.mkString(", ")}")
+    val pinned = built.collect {
+      case (k, df) if df.queryExecution.logical.collectFirst { case r: LogicalRDD => r }.nonEmpty => k
+    }
+    assert(pinned.size == 0, s"plans that scan a LogicalRDD: ${pinned.mkString(", ")}")
   }
 }
